@@ -637,18 +637,19 @@ object Dedup {
   }
 
   /** Bucketed-catalog-table write shared by the persisted dedup indexes
-    * (MinHash band/shingle tables, SimHash chunk table). Overwrite clears
-    * stale metadata AND files first (see [[dropStaleTable]]); Append
-    * reuses the table's own bucket spec — Spark validates it matches.
+    * (MinHash band/shingle tables, the SimHash family's key table).
+    * Overwrite clears stale metadata AND files first (see
+    * [[dropStaleTable]]); Append reuses the table's own bucket spec —
+    * Spark validates it matches.
     *
     * SINGLE-WRITER CONTRACT (the table-layout twin of
     * [[Similarity.compactPartitionedDir]]'s): every Append-mode call —
     * i.e. EVERY `appendTo*Index` entry point and every
-    * `*IncrementalFold` across the eight bucketed index families
-    * (exact, minhash band+shingle, simhash64/128/combo, vector-LSH
-    * band+vec, passages, lines) funnels through here — fails fast while
-    * a [[compactBucketedIndexTable]] of the same table holds the
-    * [[CompactLock]] sentinel, because an append landing between the
+    * `*IncrementalFold` of the bucketed index families (exact, minhash
+    * band+shingle, SimHash under each of its three key schemes,
+    * vector-LSH band+vec, passages, lines) funnels through here — fails
+    * fast while a [[compactBucketedIndexTable]] of the same table holds
+    * the [[CompactLock]] sentinel, because an append landing between the
     * compactor's snapshot read and its catalog rename swap would be
     * silently discarded by the swap. Overwrite-mode writes are exempt:
     * they are fresh builds (or the compactor's own tmp-table write),
@@ -853,7 +854,7 @@ object Dedup {
       .drop("_brank", "_bn")
   }
 
-  /** The (_chunk, _val)-keyed form used by the three simhash families. */
+  /** The (_chunk, _val)-keyed form used by the SimHash index family. */
   private def capChunkBuckets(
       chunked: DataFrame,
       maxBucket: Int,
@@ -908,7 +909,7 @@ object Dedup {
       .drop("_rank", "_n")
   }
 
-  /** The (_chunk, _val)-keyed form used by the three simhash families. */
+  /** The (_chunk, _val)-keyed form used by the SimHash index family. */
   private def admittedAgainstIndex(
       chunked: DataFrame,
       table: String,
@@ -928,38 +929,30 @@ object Dedup {
     compactBucketedIndexTable(
       spark, idx.fpTable, idx.buckets, Seq("_fp"), _.distinct())
 
-  /** Compact a SimHash index (membership rows are unique per doc — a
-    * small-file merge that also re-applies the bucket cap, healing any
-    * legacy uncapped table into the capped-write contract).
+  /** Compact a SimHash index of any key scheme (membership rows are
+    * unique per doc — a small-file merge that also re-applies the bucket
+    * cap, healing any legacy uncapped table into the capped-write
+    * contract).
     */
   def compactSimHashIndex(
       spark: org.apache.spark.sql.SparkSession,
-      idx: SimHashIndex
+      idx: SimHashFamilyIndex
   ): Unit =
     compactBucketedIndexTable(
       spark, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      capChunkBuckets(_, idx.maxBucket, Seq("_simhash")))
+      capChunkBuckets(_, idx.maxBucket, idx.keys.hashCols))
 
-  /** Compact a 128-bit SimHash index (small-file merge + cap re-apply). */
+  /** [[compactSimHashIndex]] for a 128-bit index. */
   def compactSimHash128Index(
       spark: org.apache.spark.sql.SparkSession,
       idx: SimHash128Index
-  ): Unit =
-    compactBucketedIndexTable(
-      spark, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      capChunkBuckets(_, idx.maxBucket, Seq("_sh0", "_sh1")))
+  ): Unit = compactSimHashIndex(spark, idx)
 
-  /** Compact a combination-keyed SimHash index (small-file merge + cap
-    * re-apply) — the eighth index family's wrapper, same crash-safe swap
-    * and gates as every other wrapper on [[compactBucketedIndexTable]].
-    */
+  /** [[compactSimHashIndex]] for a combination-keyed index. */
   def compactSimHashComboIndex(
       spark: org.apache.spark.sql.SparkSession,
       idx: SimHashComboIndex
-  ): Unit =
-    compactBucketedIndexTable(
-      spark, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      capChunkBuckets(_, idx.maxBucket, Seq("_simhash")))
+  ): Unit = compactSimHashIndex(spark, idx)
 
   /** Compact a MinHash index after many appends: membership and shingle
     * rows are unique per doc under the disjoint-delta append contract —
@@ -1287,6 +1280,14 @@ object Dedup {
   }
 
   // -------------------------------------------------------------- SimHash
+  //
+  // ONE index family with three key schemes. Pigeonhole blocking
+  // (`maxHamming + 1` chunks, one chunk per key) is Manku et al.'s
+  // combination blocking with subset size t = 1, and the 64-bit
+  // fingerprint is the one-word case of the 128-bit one — so every verb
+  // below (batch pairs, hot-bucket audit, write, append, incremental
+  // probe, fold, compact) has one body, parameterized by a [[SimHashKeys]]
+  // value; the 128-bit and combination entry points delegate to it.
 
   /** 64-bit SimHash over distinct tokens: per-bit majority vote of token
     * hashes, packed into a long. Computed by the compiled
@@ -1295,6 +1296,155 @@ object Dedup {
     */
   def simHash(text: Column): Column =
     graft.functions.HashExpressions.simhash64(text)
+
+  /** 128-bit SimHash fingerprint as Array[Long](2) — the wide-radius
+    * escape hatch: random doc pairs sit at expected Hamming ~64 (vs ~32
+    * on 64 bits), so radii around 10 are still far in the tail and
+    * pigeonhole chunks stay 11-12 bits wide instead of degenerating to
+    * 5-6. Computed by the compiled
+    * [[graft.functions.HashExpressions.SimHash128]] expression
+    * (two independent token hashes, one pass, codegen).
+    */
+  def simHash128(text: Column): Column =
+    graft.functions.HashExpressions.simhash128(text)
+
+  /** Per-chunk (bit widths, bit offsets) splitting a `bits`-bit
+    * fingerprint into `chunks` blocks, the bits spread as evenly as
+    * possible (the first `bits % chunks` blocks are one bit wider).
+    */
+  private[graft] def chunkLayout(bits: Int, chunks: Int): (Seq[Int], Seq[Int]) = {
+    val widths =
+      (0 until chunks).map(c => bits / chunks + (if (c < bits % chunks) 1 else 0))
+    (widths, widths.scanLeft(0)(_ + _).init)
+  }
+
+  private[graft] def chunkMask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
+
+  /** All C(blocks, t) block-index subsets of size `t`, lexicographic.
+    * Order matters: the lowest-matching-key emission conjunction assumes
+    * key index == position in this sequence.
+    */
+  private[graft] def combinationSubsets(blocks: Int, t: Int): Seq[Seq[Int]] =
+    (0 until blocks).combinations(t).map(_.toSeq).toSeq
+
+  /** The key scheme of the SimHash index family: a `words` × 64-bit
+    * fingerprint split into `blocks` blocks ([[chunkLayout]]), one bucket
+    * key per C(blocks, blocks − maxHamming) block subset. A pair within
+    * Hamming ≤ maxHamming differs in at most maxHamming blocks, so it
+    * agrees entirely on at least one subset — recall is exact while no
+    * bucket exceeds the cap. `blocks = maxHamming + 1` is pigeonhole
+    * blocking (one block per key); larger `blocks` is Manku, Jain & Das
+    * Sarma's combination blocking ("Detecting Near-Duplicates for Web
+    * Crawling", WWW'07 §3): keys ~64·t/blocks bits wide instead of
+    * ~64/(maxHamming+1), at C(blocks, t) probe rows per doc.
+    *
+    * This value is the only code that knows the carried fingerprint
+    * columns, the bit layout, each key's value, the lowest-matching-key
+    * conjunction and the Hamming distance. Keys are pure plan-time
+    * functions of the carried words, so the conjunction recomputes every
+    * key inline in codegen from primitive LONG columns (an Array[Long]
+    * fingerprint was measured 55× slower on this hot join path).
+    */
+  private[graft] final case class SimHashKeys(words: Int, maxHamming: Int, blocks: Int) {
+    require(
+      maxHamming >= 0 && blocks > maxHamming && blocks <= 64 * words,
+      s"need 0 ≤ maxHamming < blocks ≤ ${64 * words}, " +
+        s"got maxHamming=$maxHamming blocks=$blocks")
+    val (widths, offsets) = chunkLayout(64 * words, blocks)
+    val subsets: Seq[Seq[Int]] = combinationSubsets(blocks, blocks - maxHamming)
+    // each probe row carries one key and the emission conjunction has
+    // one term per key — cap both before the plan explodes
+    require(
+      subsets.length <= 512,
+      s"C($blocks, ${blocks - maxHamming}) = ${subsets.length} combination " +
+        "keys — too many probe rows/plan terms; pick blocks closer to maxHamming")
+
+    /** Fingerprint columns carried by every keyed row and index table. */
+    val hashCols: Seq[String] = if (words == 1) Seq("_simhash") else Seq("_sh0", "_sh1")
+
+    /** `maxBucket`, checked: a cap below 2 admits no pair. */
+    def pairCap(maxBucket: Int): Int = {
+      require(maxBucket > 1, "maxBucket must allow at least one pair")
+      maxBucket
+    }
+
+    /** Bits [off, off+w) of the words carried under `prefix` (word 0 =
+      * bits 0-63); a block straddling the word boundary splices the high
+      * bits of word 0 with the low bits of word 1.
+      */
+    private def bits(prefix: String, off: Int, w: Int): Column = {
+      val word = hashCols.map(h => col(prefix + h))
+      val mask = lit(chunkMask(w))
+      if (off + w <= 64) shiftrightunsigned(word(0), off).bitwiseAND(mask)
+      else if (off >= 64) shiftrightunsigned(word(1), off - 64).bitwiseAND(mask)
+      else
+        shiftrightunsigned(word(0), off)
+          .bitwiseOR(shiftleft(word(1), 64 - off))
+          .bitwiseAND(mask)
+    }
+
+    /** Key `k`: the blocks of `subsets(k)` packed into consecutive low
+      * bits, computed from the words carried under `prefix`.
+      */
+    def key(k: Int, prefix: String = ""): Column = {
+      val vals = subsets(k).map(b => bits(prefix, offsets(b), widths(b)))
+      val shifts = subsets(k).map(widths).scanLeft(0)(_ + _)
+      vals.tail.zip(shifts.tail).foldLeft(vals.head) { case (acc, (v, s)) =>
+        acc.bitwiseOR(shiftleft(v, s))
+      }
+    }
+
+    /** Exactly-once emission conjunction: true iff NO key below the
+      * bucket's own `_chunk` matches between the `left` and `right` rows
+      * (the SimHash form of [[noLowerBandMatches]]).
+      */
+    def noLowerKeyMatches(left: String, right: String): Column =
+      (0 until subsets.length - 1)
+        .map { k =>
+          col(s"$left._chunk") <= lit(k) || key(k, s"$left.") =!= key(k, s"$right.")
+        }
+        .reduceOption(_ && _)
+        .getOrElse(lit(true))
+
+    /** Hamming distance between the `left` and `right` fingerprints. */
+    def hamming(left: String, right: String): Column =
+      hashCols
+        .map(h => bit_count(col(s"$left.$h").bitwiseXOR(col(s"$right.$h"))))
+        .reduce(_ + _)
+
+    /** `(_id, <hashCols>, _chunk, _val)`: one row per (doc, key), `_chunk`
+      * the key index and `_val` its value. `spread` round-robins the rows
+      * first so the hash compute gets every core when the input is one
+      * under-parallel scan split (corpus builds and batch paths); delta
+      * paths pass `spread = false` — a micro-batch arrives
+      * source-partitioned, and an Exchange per batch is a recurring cost.
+      */
+    def keyed(df: DataFrame, id: Column, text: Column, spread: Boolean = true): DataFrame = {
+      val base = df.select(id.as("_id"), text.as("_t"))
+      val spreadBase =
+        if (spread) base.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        else base
+      val withHash =
+        if (words == 1) spreadBase.select(col("_id"), simHash(col("_t")).as("_simhash"))
+        else
+          spreadBase
+            .select(col("_id"), simHash128(col("_t")).as("_h"))
+            .select(
+              col("_id"),
+              element_at(col("_h"), 1).as("_sh0"),
+              element_at(col("_h"), 2).as("_sh1"))
+      withHash.select(
+        (col("_id") +: hashCols.map(col)) :+
+          posexplode(array(subsets.indices.map(key(_)): _*)).as(Seq("_chunk", "_val")): _*)
+    }
+  }
+
+  private[graft] object SimHashKeys {
+
+    /** Pigeonhole blocking: `maxHamming + 1` chunks, one per key. */
+    def pigeonhole(words: Int, maxHamming: Int): SimHashKeys =
+      SimHashKeys(words, maxHamming, maxHamming + 1)
+  }
 
   /** SimHash near-dup pairs: block on `maxHamming + 1` bit-chunks of the
     * 64-bit hash — by pigeonhole, any pair within Hamming distance ≤
@@ -1310,7 +1460,8 @@ object Dedup {
     * chunks of 5-6 bits → 2^5-2^6 buckets per chunk), so large radii
     * over huge corpora inflate the candidate join; at 100 TB keep the
     * radius small or step up to [[simHashNearDupsCombination]] (Manku
-    * combination blocking: wider keys, more probes — the ≥10⁷-doc path).
+    * combination blocking: wider keys, more probes — the ≥10⁷-doc path)
+    * or [[simHashNearDups128]] (wide radii).
     *
     * The returned plan reads localCheckpoint blocks (the capped bucket
     * membership) — free them with [[graft.CacheUtil.release]] on the
@@ -1322,243 +1473,11 @@ object Dedup {
       idCol: String,
       maxHamming: Int = 3,
       maxBucket: Int = 10000
-  ): DataFrame = {
-    require(
-      maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 64), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    simHashPairsFromChunked(
-      simHashChunked(df, textCol, idCol, maxHamming),
-      maxHamming,
-      maxBucket
-    )
-  }
-
-  /** Verified pair emission from a (_id, _simhash, _chunk, _val) blocking
-    * table — the join half of [[simHashNearDups]], shared with the
-    * within-delta leg of [[simHashNearDupsIncremental]].
-    */
-  private def simHashPairsFromChunked(
-      chunked: DataFrame,
-      maxHamming: Int,
-      maxBucket: Int
-  ): DataFrame = {
-    val (widths, offsets) = chunkLayout(maxHamming + 1)
-    simHashPairsFromKeyed(
-      chunked,
-      maxHamming,
-      maxBucket,
-      maxHamming + 1,
-      (h, c) => shiftrightunsigned(h, offsets(c)).bitwiseAND(lit(chunkMask(widths(c))))
-    )
-  }
-
-  /** Verified pair emission from a generic (_id, _simhash, _chunk, _val)
-    * blocking table, where `_val` for key index `c` equals `keyVal(hash,
-    * c)` — shared by pigeonhole ([[simHashNearDups]]) and combination
-    * ([[simHashNearDupsCombination]]) blocking. `keyVal` must be a pure
-    * plan-time function of the carried hash so the lowest-matching-key
-    * emission conjunction can recompute every key from `_simhash`.
-    */
-  private def simHashPairsFromKeyed(
-      chunked: DataFrame,
-      maxHamming: Int,
-      maxBucket: Int,
-      numKeys: Int,
-      keyVal: (Column, Int) => Column
-  ): DataFrame = {
-    // Same two-step shape as [[minHashCandidates]] (see the full rationale
-    // there): (1) ONE job evaluates every SimHash once, groups by
-    // (chunk, value), caps each bucket at the `maxBucket` lowest members
-    // (sorted ⇒ deterministic), explodes the capped membership back to
-    // rows carrying (id, simhash), and localCheckpoints that small table;
-    // (2) a codegen'd self-equi-join on the bucket key with id_a < id_b
-    // generates pairs streaming, with hot buckets split by AQE skew-join
-    // handling, and verifies Hamming inline from the carried hashes — no
-    // second lookup join. (The r3/r4 nested-HOF expansion was interpreted,
-    // quadratic in per-bucket copies, and single-task per bucket — 199 s
-    // standalone at sf0.1 vs ~4 s for the join form.)
-    //
-    // Lowest-matching-chunk emission: a pair within the radius shares at
-    // least one chunk value but typically shares several (an identical
-    // pair shares all `maxHamming + 1`), so the naive join emits it once
-    // per shared chunk and needs a `distinct()` over EVERY verified pair —
-    // at sf0.1/h=10 that was an Exchange + two HashAggregates over 3.09 M
-    // rows for 31 k survivors. Instead the join condition also requires
-    // that NO chunk below the bucket's chunk matches: each chunk value is
-    // recomputed from the carried 64-bit hash at plan time (chunks ≤ 11 ⇒
-    // a small codegen'd conjunction, no extra columns), so every pair is
-    // emitted from exactly one (chunk, value) bucket and the distinct
-    // disappears. Caveat under an ACTIVE `maxBucket` cap: a pair whose
-    // lowest matching chunk was truncated is no longer recovered via a
-    // higher chunk — the cap's documented recall loss applies per-pair at
-    // its lowest chunk rather than across all chunks. Audit with
-    // [[hotSimHashBuckets]] and size the cap so it never triggers.
-    //
-    // Hot-bucket cap: at large radii the chunks are narrow (h=10 → 11
-    // chunks of 5-6 bits → ≤64 bucket values per chunk), so a 100 TB
-    // corpus NEEDS this cap — and should prefer small radii, where
-    // pigeonhole blocking keys are wide. [[hotSimHashBuckets]] audits
-    // what the cap truncates.
-    val members = cappedMultiMembers(
-      chunked.select(col("_chunk"), col("_val"), col("_id"), col("_simhash")),
-      maxBucket, Seq("_chunk", "_val"))
-      .localCheckpoint(true)
-    members
-      .as("a")
-      .join(
-        members.as("b"),
-        col("a._chunk") === col("b._chunk") &&
-          col("a._val") === col("b._val") &&
-          col("a._id") < col("b._id") &&
-          noLowerKeyMatches(numKeys, keyVal, "a", "b")
-      )
-      .select(
-        col("a._id").as("id_a"),
-        col("b._id").as("id_b"),
-        bit_count(col("a._simhash").bitwiseXOR(col("b._simhash")))
-          .as("hamming")
-      )
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** (_id, _simhash, _chunk, _val) pigeonhole blocking pipeline shared by
-    * the pair and audit paths: `maxHamming + 1` bit-chunks per hash.
-    */
-  private[graft] def simHashChunked(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int,
-      spread: Boolean = true
-  ): DataFrame = {
-    val chunks = maxHamming + 1
-    val (widths, offsets) = chunkLayout(chunks)
-    // `spread` (r19, guide-2.4): the round-robin repartition exists to
-    // give the per-row hash compute cores when the input is a single
-    // under-parallel scan split (the corpus BUILD/batch paths). The
-    // fold/append DELTA paths pass spread = false: a micro-batch arrives
-    // source-partitioned, and paying an Exchange + the keyless
-    // repartition's local sort per batch forever is the exact recurring
-    // cost the guide says to remove (measured: the fold's two biggest
-    // per-batch stage jobs were 32-task stages over a kilobyte delta).
-    val base = df.select(col(idCol).as("_id"), col(textCol).as("_t"))
-    val withSim =
-      (if (spread)
-         base.repartition(df.sparkSession.sparkContext.defaultParallelism)
-       else base)
-      .select(col("_id"), simHash(col("_t")).as("_simhash"))
-    withSim.select(
-      col("_id"),
-      col("_simhash"),
-      posexplode(
-        array((0 until chunks).map { c =>
-          shiftrightunsigned(col("_simhash"), offsets(c))
-            .bitwiseAND(lit(chunkMask(widths(c))))
-        }: _*)
-      ).as(Seq("_chunk", "_val"))
-    )
-  }
-
-  /** Per-chunk (bit widths, bit offsets) for splitting a 64-bit hash into
-    * `chunks` pigeonhole blocks, the 64 bits spread as evenly as possible.
-    */
-  private[graft] def chunkLayout(chunks: Int): (Seq[Int], Seq[Int]) = {
-    val baseWidth = 64 / chunks
-    val rem = 64 % chunks
-    val widths =
-      (0 until chunks).map(c => if (c < rem) baseWidth + 1 else baseWidth)
-    (widths, widths.scanLeft(0)(_ + _).init)
-  }
-
-  private[graft] def chunkMask(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
-
-  // ------------------------------------------------- 128-bit SimHash
-
-  /** 128-bit SimHash fingerprint as Array[Long](2) — the wide-radius
-    * escape hatch: random doc pairs sit at expected Hamming ~64 (vs ~32
-    * on 64 bits), so radii around 10 are still far in the tail and
-    * pigeonhole chunks stay 11-12 bits wide instead of degenerating to
-    * 5-6. Computed by the compiled
-    * [[graft.functions.HashExpressions.SimHash128]] expression
-    * (two independent token hashes, one pass, codegen).
-    */
-  def simHash128(text: Column): Column =
-    graft.functions.HashExpressions.simhash128(text)
-
-  /** Per-chunk (widths, offsets) spreading 128 bits as evenly as
-    * possible — the [[chunkLayout]] twin for the two-word fingerprint.
-    */
-  private[graft] def chunkLayout128(chunks: Int): (Seq[Int], Seq[Int]) = {
-    val baseWidth = 128 / chunks
-    val rem = 128 % chunks
-    val widths =
-      (0 until chunks).map(c => if (c < rem) baseWidth + 1 else baseWidth)
-    (widths, widths.scanLeft(0)(_ + _).init)
-  }
-
-  /** Extract bits [off, off+w) of the 128-bit fingerprint carried as TWO
-    * primitive LONG columns (word0 = bits 0-63). Chunks that straddle
-    * the word boundary splice the high bits of word0 with the low bits
-    * of word1; pure shift/mask Columns on primitives, so the whole
-    * conjunction stays inside whole-stage codegen (an Array[Long]
-    * fingerprint was measured 55× slower on this exact path — boxed
-    * element_at per candidate on a hot join is the interpreted-HOF
-    * mistake all over again).
-    */
-  private[graft] def chunkVal128(word0: Column, word1: Column, off: Int, w: Int): Column = {
-    val mask = lit(chunkMask(w))
-    if (off + w <= 64) shiftrightunsigned(word0, off).bitwiseAND(mask)
-    else if (off >= 64) shiftrightunsigned(word1, off - 64).bitwiseAND(mask)
-    else
-      shiftrightunsigned(word0, off)
-        .bitwiseOR(shiftleft(word1, 64 - off))
-        .bitwiseAND(mask)
-  }
-
-  /** (_id, _sh0, _sh1, _chunk, _val) pigeonhole blocking over the
-    * 128-bit fingerprint — the [[simHashChunked]] twin; the two words
-    * ride as primitive longs so verification and the exactly-once
-    * conjunction recompute everything inline in codegen.
-    */
-  private def simHashChunked128(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int,
-      spread: Boolean = true
-  ): DataFrame = {
-    val chunks = maxHamming + 1
-    val (widths, offsets) = chunkLayout128(chunks)
-    // see simHashChunked's `spread` note (r19)
-    val base = df.select(col(idCol).as("_id"), col(textCol).as("_t"))
-    val withSim =
-      (if (spread)
-         base.repartition(df.sparkSession.sparkContext.defaultParallelism)
-       else base)
-      .select(col("_id"), simHash128(col("_t")).as("_h"))
-      .select(
-        col("_id"),
-        element_at(col("_h"), 1).as("_sh0"),
-        element_at(col("_h"), 2).as("_sh1")
-      )
-    withSim.select(
-      col("_id"),
-      col("_sh0"),
-      col("_sh1"),
-      posexplode(
-        array((0 until chunks).map(c =>
-          chunkVal128(col("_sh0"), col("_sh1"), offsets(c), widths(c))): _*)
-      ).as(Seq("_chunk", "_val"))
-    )
-  }
+  ): DataFrame =
+    simHashPairs(df, textCol, idCol, SimHashKeys.pigeonhole(1, maxHamming), maxBucket)
 
   /** Wide-radius SimHash near-dup pairs on the 128-bit fingerprint:
-    * pigeonhole blocking on `maxHamming + 1` chunks of ~128/(h+1) bits,
-    * inline per-word `bit_count(xor)` verification, exactly-once
-    * lowest-matching-chunk emission — the 64-bit capped-bucket kernel
-    * ([[simHashPairsFromKeyed]]) re-expressed over two primitive words.
+    * pigeonhole blocking on `maxHamming + 1` chunks of ~128/(h+1) bits.
     *
     * Use this instead of [[simHashNearDups]] when the radius climbs
     * toward ~10: on 64 bits, h=10 chunks are 5-6 bits (≤64 bucket
@@ -1581,58 +1500,84 @@ object Dedup {
       idCol: String,
       maxHamming: Int = 20, // the 64-bit h=10 policy on the doubled scale — matches every other 128-bit entry point
       maxBucket: Int = 10000
-  ): DataFrame = {
-    require(
-      maxHamming >= 0 && maxHamming < 128,
-      s"maxHamming must be in [0, 128), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    simHash128PairsFromChunked(
-      simHashChunked128(df, textCol, idCol, maxHamming),
-      maxHamming,
-      maxBucket
-    )
-  }
+  ): DataFrame =
+    simHashPairs(df, textCol, idCol, SimHashKeys.pigeonhole(2, maxHamming), maxBucket)
 
-  /** Exactly-once emission conjunction for the two-word fingerprint —
-    * the [[noLowerChunkMatches]] twin, recomputing every chunk value
-    * from the carried `_sh0`/`_sh1` primitives.
+  /** SimHash near-dup pairs via Manku combination blocking ([[SimHashKeys]])
+    * over `blocks` > maxHamming blocks of the 64-bit fingerprint: keys of
+    * the C(blocks, t) subsets of size t = blocks − maxHamming.
+    *
+    * Why this exists next to [[simHashNearDups]]: pigeonhole blocking at
+    * h=3 uses 16-bit keys — random-collision candidate mass ≈ n²/2^15,
+    * fine to ~10⁷ docs but quadratic death at 10⁹+ (100 TB corpora). The
+    * default here (h=3, blocks=6, t=3) probes 20 keys/row of ~32 bits —
+    * collision mass ≈ 20·n²/2^33, ~13,000× fewer random candidates for
+    * 5× the probe rows. Use the pigeonhole form below ~10⁷ docs (fewer
+    * probe rows shuffle less and random collisions don't dominate yet);
+    * use this form above. Radii ≥ ~10 on 64 bits are intrinsically dense
+    * — no blocking discriminates; keep h ≤ 4 at scale (or move to a
+    * 128-bit fingerprint). Release the result's checkpoint blocks with
+    * [[graft.CacheUtil.release]].
     */
-  private def noLowerChunkMatches128(
-      chunks: Int,
-      left: String,
-      right: String
-  ): Column = {
-    val (widths, offsets) = chunkLayout128(chunks)
-    def key(a: String, c: Int) =
-      chunkVal128(col(s"$a._sh0"), col(s"$a._sh1"), offsets(c), widths(c))
-    (0 until chunks - 1)
-      .map { c =>
-        col(s"$left._chunk") <= lit(c) || key(left, c) =!= key(right, c)
-      }
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-  }
+  def simHashNearDupsCombination(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      maxHamming: Int = 3,
+      blocks: Int = 6,
+      maxBucket: Int = 10000
+  ): DataFrame =
+    simHashPairs(df, textCol, idCol, SimHashKeys(1, maxHamming, blocks), maxBucket)
 
-  /** 128-bit pair-wise Hamming verify over the carried word columns. */
-  private def hamming128(left: String, right: String): Column =
-    bit_count(col(s"$left._sh0").bitwiseXOR(col(s"$right._sh0"))) +
-      bit_count(col(s"$left._sh1").bitwiseXOR(col(s"$right._sh1")))
+  private def simHashPairs(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      keys: SimHashKeys,
+      maxBucket: Int
+  ): DataFrame =
+    simHashPairsFromKeyed(
+      keys.keyed(df, col(idCol), col(textCol)), keys, keys.pairCap(maxBucket))
 
-  /** Verified pair emission from a (_id, _sh0, _sh1, _chunk, _val)
-    * blocking table — the join half of [[simHashNearDups128]], shared
-    * with the within-delta leg of [[simHashNearDups128Incremental]].
-    * Same capped-bucket / lowest-matching-chunk shape as the 64-bit
-    * [[simHashPairsFromKeyed]], on two primitive words.
+  /** Verified pair emission from a `keys.keyed` blocking table — the join
+    * half of the batch emitters, shared with the within-delta leg of the
+    * incremental probes.
+    *
+    * Same two-step shape as [[minHashCandidates]] (see the full rationale
+    * there): (1) ONE job evaluates every SimHash once, groups by
+    * (key, value), caps each bucket at the `maxBucket` lowest members
+    * (sorted ⇒ deterministic), keeps the capped membership as rows
+    * carrying (id, fingerprint), and localCheckpoints that small table;
+    * (2) a codegen'd self-equi-join on the bucket key with id_a < id_b
+    * generates pairs streaming, with hot buckets split by AQE skew-join
+    * handling, and verifies Hamming inline from the carried words — no
+    * second lookup join. (The r3/r4 nested-HOF expansion was interpreted,
+    * quadratic in per-bucket copies, and single-task per bucket — 199 s
+    * standalone at sf0.1 vs ~4 s for the join form.)
+    *
+    * Lowest-matching-key emission: a pair within the radius shares at
+    * least one key but typically several (an identical pair shares all),
+    * so the naive join emits it once per shared key and needs a
+    * `distinct()` over EVERY verified pair — at sf0.1/h=10 that was an
+    * Exchange + two HashAggregates over 3.09 M rows for 31 k survivors.
+    * Instead the join condition also requires that NO key below the
+    * bucket's key matches ([[SimHashKeys.noLowerKeyMatches]]), so every
+    * pair is emitted from exactly one bucket and the distinct disappears.
+    * Caveat under an ACTIVE `maxBucket` cap: a pair whose lowest matching
+    * key was truncated is no longer recovered via a higher key — the
+    * cap's documented recall loss applies per-pair at its lowest key.
+    * Audit with the hot-bucket audits ([[hotSimHashBuckets]]) and size
+    * the cap so it never triggers; at large radii the chunks are narrow
+    * (h=10 → 11 chunks of 5-6 bits → ≤64 values per chunk), so a 100 TB
+    * corpus NEEDS the cap.
     */
-  private def simHash128PairsFromChunked(
-      chunked: DataFrame,
-      maxHamming: Int,
+  private def simHashPairsFromKeyed(
+      keyed: DataFrame,
+      keys: SimHashKeys,
       maxBucket: Int
   ): DataFrame = {
     val members = cappedMultiMembers(
-      chunked.select(
-        col("_chunk"), col("_val"), col("_id"), col("_sh0"), col("_sh1")),
+      keyed.select((Seq("_chunk", "_val", "_id") ++ keys.hashCols).map(col): _*),
       maxBucket, Seq("_chunk", "_val"))
       .localCheckpoint(true)
     members
@@ -1642,37 +1587,147 @@ object Dedup {
         col("a._chunk") === col("b._chunk") &&
           col("a._val") === col("b._val") &&
           col("a._id") < col("b._id") &&
-          noLowerChunkMatches128(maxHamming + 1, "a", "b")
+          keys.noLowerKeyMatches("a", "b")
       )
       .select(
         col("a._id").as("id_a"),
         col("b._id").as("id_b"),
-        hamming128("a", "b").as("hamming")
+        keys.hamming("a", "b").as("hamming")
       )
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= keys.maxHamming)
   }
 
-  /** Handle for a persisted 128-bit SimHash dedup index — the
-    * wide-radius member of the incremental family (MinHash d08,
-    * SimHash64 d09, vector-LSH d13, passages d18). Same self-contained
-    * single-table shape as [[SimHashIndex]]: (_chunk, _val) pigeonhole
-    * membership with both fingerprint words carried, so verification
-    * and exactly-once emission run inline from the table — no lookup
-    * join.
+  /** Audit view for [[simHashNearDups]]'s bucket cap: every (chunk, value)
+    * block larger than `maxBucket`, as `(chunk, value, bucket_size)` —
+    * the schema all three SimHash audits share.
+    */
+  def hotSimHashBuckets(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      maxHamming: Int = 3,
+      maxBucket: Int = 10000
+  ): DataFrame =
+    hotSimHashKeyBuckets(df, textCol, idCol, SimHashKeys.pigeonhole(1, maxHamming), maxBucket)
+
+  /** Audit for [[simHashNearDups128]]'s bucket cap (schema as
+    * [[hotSimHashBuckets]]).
+    */
+  def hotSimHash128Buckets(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      maxHamming: Int,
+      maxBucket: Int = 10000
+  ): DataFrame =
+    hotSimHashKeyBuckets(df, textCol, idCol, SimHashKeys.pigeonhole(2, maxHamming), maxBucket)
+
+  /** Audit for [[simHashNearDupsCombination]]'s bucket cap (schema as
+    * [[hotSimHashBuckets]]; `chunk` is the combination-key index).
+    */
+  def hotSimHashComboBuckets(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      maxHamming: Int = 3,
+      blocks: Int = 6,
+      maxBucket: Int = 10000
+  ): DataFrame =
+    hotSimHashKeyBuckets(df, textCol, idCol, SimHashKeys(1, maxHamming, blocks), maxBucket)
+
+  private def hotSimHashKeyBuckets(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      keys: SimHashKeys,
+      maxBucket: Int
+  ): DataFrame =
+    keys.keyed(df, col(idCol), col(textCol))
+      .groupBy(col("_chunk"), col("_val"))
+      .agg(count(lit(1)).as("bucket_size"))
+      .filter(col("bucket_size") > maxBucket)
+      .select(col("_chunk").as("chunk"), col("_val").as("value"), col("bucket_size"))
+
+  // ------------------------------------ incremental SimHash index family
+
+  /** Handle for a persisted SimHash dedup index: ONE bucketed catalog
+    * table holding the (_chunk, _val) key membership with the carried
+    * fingerprint words. Unlike [[MinHashIndex]] no second lookup table
+    * is needed — verification (`bit_count(xor) ≤ radius`) runs inline
+    * from the carried words, so the index is self-contained. The key
+    * scheme travels with the handle: the key space is a function of
+    * `maxHamming` (and `blocks`), and probing with different values would
+    * block on a disjoint (key, value) space. `maxBucket` travels too —
+    * buckets are capped at write time, and probing with a different cap
+    * would break the incremental == capped-batch contract.
+    */
+  sealed trait SimHashFamilyIndex {
+    def chunkTable: String
+    def maxHamming: Int
+    def buckets: Int
+    def maxBucket: Int
+    private[graft] def keys: SimHashKeys
+  }
+
+  /** 64-bit pigeonhole index (`<name>_chunks`, [[writeSimHashIndex]]). */
+  case class SimHashIndex(
+      chunkTable: String,
+      maxHamming: Int,
+      buckets: Int,
+      maxBucket: Int = 10000
+  ) extends SimHashFamilyIndex {
+    private[graft] def keys = SimHashKeys.pigeonhole(1, maxHamming)
+  }
+
+  /** 128-bit pigeonhole index (`<name>_chunks128`,
+    * [[writeSimHash128Index]]) — the wide-radius member.
     */
   case class SimHash128Index(
       chunkTable: String,
       maxHamming: Int,
       buckets: Int,
-      maxBucket: Int = 10000)
+      maxBucket: Int = 10000
+  ) extends SimHashFamilyIndex {
+    private[graft] def keys = SimHashKeys.pigeonhole(2, maxHamming)
+  }
 
-  /** Build and persist a 128-bit SimHash index for `df` under catalog
-    * table `<name>_chunks128`, bucketed by (_chunk, _val) so incremental
-    * probes read the corpus side with zero Exchange. Buckets are capped
-    * at the `maxBucket` lowest ids AT WRITE TIME ([[capChunkBuckets]]),
-    * so probes see exactly the membership the capped batch form would
-    * use; `maxBucket` travels with the handle — probing with a different
-    * cap would break the parity contract.
+  /** 64-bit combination-keyed index (`<name>_combo`,
+    * [[writeSimHashComboIndex]]) — the ≥10⁷-doc member: keys ~64·t/blocks
+    * bits wide, so random-collision candidate mass on a web-scale corpus
+    * stays output-bound where pigeonhole keys go quadratic, for
+    * C(blocks, t) stored rows per doc (20 at the h=3/blocks=6 default).
+    */
+  case class SimHashComboIndex(
+      chunkTable: String,
+      maxHamming: Int,
+      blocks: Int,
+      buckets: Int,
+      maxBucket: Int = 10000
+  ) extends SimHashFamilyIndex {
+    private[graft] def keys = SimHashKeys(1, maxHamming, blocks)
+  }
+
+  /** Build and persist a SimHash index for `df` under catalog table
+    * `<name>_chunks`, bucketed by (_chunk, _val) so incremental probes
+    * read the corpus side with zero Exchange. One pass evaluates each
+    * SimHash once (spread across cores first). Buckets are capped at the
+    * `maxBucket` lowest ids AT WRITE TIME ([[capChunkBuckets]]) so probes
+    * see exactly the membership the capped batch form would use.
+    */
+  def writeSimHashIndex(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      name: String,
+      maxHamming: Int = 3,
+      buckets: Int = 32,
+      maxBucket: Int = 10000
+  ): SimHashIndex =
+    writeSimHashFamily(
+      df, textCol, idCol, SimHashIndex(s"${name}_chunks", maxHamming, buckets, maxBucket))
+
+  /** Build and persist a 128-bit SimHash index under `<name>_chunks128`
+    * (as [[writeSimHashIndex]]).
     */
   def writeSimHash128Index(
       df: DataFrame,
@@ -1682,42 +1737,62 @@ object Dedup {
       maxHamming: Int = 20,
       buckets: Int = 32,
       maxBucket: Int = 10000
-  ): SimHash128Index = {
-    require(
-      maxHamming >= 0 && maxHamming < 128,
-      s"maxHamming must be in [0, 128), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val idx = SimHash128Index(s"${name}_chunks128", maxHamming, buckets, maxBucket)
+  ): SimHash128Index =
+    writeSimHashFamily(
+      df, textCol, idCol, SimHash128Index(s"${name}_chunks128", maxHamming, buckets, maxBucket))
+
+  /** Build and persist a combination-keyed SimHash index under
+    * `<name>_combo` (as [[writeSimHashIndex]]).
+    */
+  def writeSimHashComboIndex(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      name: String,
+      maxHamming: Int = 3,
+      blocks: Int = 6,
+      buckets: Int = 32,
+      maxBucket: Int = 10000
+  ): SimHashComboIndex =
+    writeSimHashFamily(
+      df, textCol, idCol,
+      SimHashComboIndex(s"${name}_combo", maxHamming, blocks, buckets, maxBucket))
+
+  private def writeSimHashFamily[I <: SimHashFamilyIndex](
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: I
+  ): I = {
+    val keys = idx.keys
     writeBucketedTable(
       capChunkBuckets(
-        simHashChunked128(df, textCol, idCol, maxHamming),
-        maxBucket,
-        Seq("_sh0", "_sh1")),
+        keys.keyed(df, col(idCol), col(textCol)), keys.pairCap(idx.maxBucket), keys.hashCols),
       idx.chunkTable,
-      buckets,
+      idx.buckets,
       Seq("_chunk", "_val"),
       org.apache.spark.sql.SaveMode.Overwrite
     )
     idx
   }
 
-  /** Fold a delta into an existing 128-bit index (after its pairs were
-    * emitted via [[simHashNearDups128Incremental]]) so the NEXT delta
-    * dedups against corpus ∪ this delta. Only rows the bucket cap admits
-    * ([[admittedAgainstIndex]]) are appended — exactly the membership the
-    * probe paired, keeping stored buckets ≤ `idx.maxBucket` forever.
+  /** Fold a delta into an existing SimHash index of any key scheme (after
+    * its pairs were emitted via [[simHashNearDupsIncremental]]) so the
+    * NEXT delta dedups against corpus ∪ this delta. Only rows the bucket
+    * cap admits ([[admittedAgainstIndex]]) are appended — exactly the
+    * membership the probe paired, keeping stored buckets ≤
+    * `idx.maxBucket` forever.
     */
-  def appendToSimHash128Index(
+  def appendToSimHashIndex(
       delta: DataFrame,
       textCol: String,
       idCol: String,
-      idx: SimHash128Index
+      idx: SimHashFamilyIndex
   ): Unit = {
     // materialize before writing: the admission plan reads the very
     // table the append inserts into
     val admitted = admittedAgainstIndex(
-      simHashChunked128(delta, textCol, idCol, idx.maxHamming, spread = false),
+      idx.keys.keyed(delta, col(idCol), col(textCol), spread = false),
       idx.chunkTable,
       idx.maxBucket
     ).localCheckpoint(true)
@@ -1731,16 +1806,41 @@ object Dedup {
     graft.CacheUtil.release(admitted)
   }
 
-  /** Incremental wide-radius SimHash near-dups: every pair within
-    * `idx.maxHamming` with at least one member in `delta` =
-    * (delta × corpus) via the bucketed chunk table ∪ (delta × delta)
-    * via the batch self-join. Scale shape mirrors
-    * [[simHashNearDupsIncremental]] exactly — delta chunked ONCE
-    * (localCheckpoint) and reused by both legs, zero corpus-side
-    * Exchange, exactly-once lowest-matching-chunk emission recomputed
-    * from the carried words, inline verification. Result is
-    * materialized and the delta-side blocks are released before
-    * returning.
+  /** [[appendToSimHashIndex]] for a 128-bit index. */
+  def appendToSimHash128Index(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHash128Index
+  ): Unit = appendToSimHashIndex(delta, textCol, idCol, idx)
+
+  /** [[appendToSimHashIndex]] for a combination-keyed index. */
+  def appendToSimHashComboIndex(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashComboIndex
+  ): Unit = appendToSimHashIndex(delta, textCol, idCol, idx)
+
+  /** Incremental SimHash near-dups against an index of any key scheme:
+    * every pair within `idx.maxHamming` with at least one member in
+    * `delta` = (delta × corpus) via the bucketed key table ∪
+    * (delta × delta) via the batch self-join. Corpus × corpus pairs were
+    * emitted when the corpus was indexed — union the calls' outputs for
+    * the full pair set.
+    *
+    * Scale shape mirrors [[minHashNearDupsIncremental]]: the delta is
+    * keyed ONCE (localCheckpoint) and reused by both legs; the corpus
+    * side of the cross join is a bucketed scan feeding the (_chunk, _val)
+    * equi-join with ZERO Exchange (only the delta shuffles, into the
+    * index's bucket partitioning). Exactly-once emission uses the same
+    * lowest-matching-key conjunction as the batch path, evaluated across
+    * the delta/corpus pair from the carried words; verification is inline
+    * `bit_count(xor)` — no lookup join at all. With combination keys a
+    * daily delta against a 10⁹-doc corpus joins on ~32-bit keys instead
+    * of 16-bit ones: random-collision candidate mass drops by the
+    * measured ~8600× (ComboBlockingProbe) for C(blocks, t)/(maxHamming+1)
+    * × more index rows.
     *
     * Bucket-cap contract (round-10): the index is pre-capped at write/
     * append/compact time ([[capChunkBuckets]]) and the delta side is
@@ -1748,129 +1848,180 @@ object Dedup {
     * ([[admittedAgainstIndex]]), so incremental == capped-batch holds
     * even on buckets OVER `idx.maxBucket` (gated with a planted over-cap
     * bucket), under the monotone-id daily-crawl contract. Audit what the
-    * cap truncates with [[hotSimHash128Buckets]] — at radius 20 the
-    * 11-12-bit chunks make hot buckets the expected failure mode on
-    * skewed corpora.
+    * cap truncates with the hot-bucket audits at build time.
+    *
+    * Result is materialized (localCheckpoint) and the delta-side blocks
+    * are released before returning.
     */
+  def simHashNearDupsIncremental(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashFamilyIndex
+  ): DataFrame = {
+    val lazyPairs =
+      simHashPairsIncrementalLazy(delta, textCol, idCol, idx)
+    val out = lazyPairs.localCheckpoint(true)
+    // releasing the lazy plan frees BOTH delta-side checkpoints it reads
+    // (the admitted delta membership and the capped within-delta members)
+    graft.CacheUtil.release(lazyPairs)
+    out
+  }
+
+  /** [[simHashNearDupsIncremental]] against a 128-bit index. */
   def simHashNearDups128Incremental(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       idx: SimHash128Index
-  ): DataFrame = {
-    val lazyPairs =
-      simHash128PairsIncrementalLazy(delta, textCol, idCol, idx)
-    val out = lazyPairs.localCheckpoint(true)
-    graft.CacheUtil.release(lazyPairs)
-    out
-  }
+  ): DataFrame = simHashNearDupsIncremental(delta, textCol, idCol, idx)
 
-  /** The un-materialized plan behind [[simHashNearDups128Incremental]]
-    * — exposed for plan-shape tests; callers must
-    * [[graft.CacheUtil.release]] it when done.
-    */
-  private[graft] def simHash128PairsIncrementalLazy(
+  /** [[simHashNearDupsIncremental]] against a combination-keyed index. */
+  def simHashNearDupsIncrementalCombo(
       delta: DataFrame,
       textCol: String,
       idCol: String,
-      idx: SimHash128Index
+      idx: SimHashComboIndex
+  ): DataFrame = simHashNearDupsIncremental(delta, textCol, idCol, idx)
+
+  /** The un-materialized plan behind [[simHashNearDupsIncremental]].
+    * Exposed for plan-shape tests (the public wrapper eagerly
+    * checkpoints, which hides the join from `executedPlan`); callers must
+    * [[graft.CacheUtil.release]] it when done.
+    */
+  private[graft] def simHashPairsIncrementalLazy(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashFamilyIndex
   ): DataFrame = {
-    val chunkedRaw =
-      simHashChunked128(delta, textCol, idCol, idx.maxHamming, spread = false)
-        .localCheckpoint(true)
-    val chunked = admittedAgainstIndex(chunkedRaw, idx.chunkTable, idx.maxBucket)
+    val keyedRaw = idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
       .localCheckpoint(true)
-    graft.CacheUtil.release(chunkedRaw)
-    simHash128PairsFromAdmitted(chunked, idx)
+    val keyed = admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket)
+      .localCheckpoint(true)
+    graft.CacheUtil.release(keyedRaw)
+    simHashPairsFromAdmitted(keyed, idx)
   }
 
-  /** Probe-then-append in ONE delta pass — the 128-bit twin of
-    * [[simHashNearDupsIncrementalFold]] (gated identical to the
-    * separate [[simHashNearDups128Incremental]] +
-    * [[appendToSimHash128Index]] calls).
+  /** Probe-then-append in ONE delta pass, for an index of any key scheme:
+    * emit near-dup pairs against the index as it stood, then fold the
+    * delta in — the per-batch body of the unbounded-ingest loop.
+    * Semantically identical to [[simHashNearDupsIncremental]] followed by
+    * [[appendToSimHashIndex]] (gated), but the delta keying and the
+    * admission scan over the corpus index run ONCE instead of twice.
+    *
+    * REPLAY-SAFE ([[ReplaySafe]], single key table): the table is both
+    * index and ledger for docs with stored rows, so re-running the fold on
+    * a delta whose append already committed appends nothing and emits
+    * nothing; a doc whose every bucket was full stores nothing, but its
+    * re-admission recomputes deterministically against the
+    * delta-excluded corpus, so the replayed append writes the same
+    * (empty) row set. `sink` persists the emissions BEFORE the ledger
+    * append ([[IdempotentSink]]). Every block the fold allocates is
+    * released on every exit: if the sink or the append throws, nothing
+    * stays pinned and the index is unchanged or row-healed by a retry.
     */
+  def simHashNearDupsIncrementalFold(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashFamilyIndex,
+      sink: Option[DataFrame => Unit] = None
+  ): DataFrame = {
+    val spark = delta.sparkSession
+    // one-job ledger read (the table's seen set + the delta id frame,
+    // [[ReplaySafe.ledgerRead]]) ∥ delta keying (the simhash compute):
+    // they share no inputs ([[Overlap]], guide §2.6)
+    val (ledger, keyedRaw) = Overlap.par2(
+      () => ReplaySafe.ledgerRead(
+        spark.table(idx.chunkTable), "_id", delta, idCol),
+      () => idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
+        .localCheckpoint(true))
+    // `pinned` reaches every delta-side block still held (the raw keying
+    // until admission, then the admitted delta and the capped members)
+    var pinned = keyedRaw
+    var out: DataFrame = null
+    try {
+      val (rids, seen) = (ledger.rids, ledger.seenA)
+      // first-attempt fast path (r19): no delta id in the ledger table
+      // makes every excludeIds anti join a semantic no-op — skip them,
+      // and skip the unseen-pair suppression too (with nothing seen,
+      // every emitted pair touches an unseen doc by construction)
+      val firstAttempt = ReplaySafe.noneSeen(seen)
+      val excl = if (firstAttempt) None else Some(rids)
+      val keyed = admittedAgainstIndex(
+        keyedRaw, idx.chunkTable, idx.maxBucket, excl).localCheckpoint(true)
+      graft.CacheUtil.release(keyedRaw)
+      pinned = keyed
+      val rawPairs = simHashPairsFromAdmitted(keyed, idx, excl)
+      pinned = rawPairs
+      val lazyPairs =
+        if (firstAttempt) rawPairs
+        else ReplaySafe.keepPairsTouchingUnseen(
+          rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
+      // materializes the pair set BEFORE the append mutates the table
+      out = lazyPairs.localCheckpoint(true)
+      sink.foreach(_(out))
+      appendRowHealed(
+        keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
+        Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
+      out
+    } catch {
+      case e: Throwable =>
+        Option(out).foreach(graft.CacheUtil.release)
+        throw e
+    } finally {
+      graft.CacheUtil.release(pinned)
+      // rids/seen/unseen are lazy views over the one ledger cache
+      graft.CacheUtil.release(ledger.tagged)
+    }
+  }
+
+  /** [[simHashNearDupsIncrementalFold]] for a 128-bit index. */
   def simHashNearDups128IncrementalFold(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       idx: SimHash128Index,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
-    val spark = delta.sparkSession
-    // replay safety: same single-table ledger shape as the 64-bit fold;
-    // ledger read ∥ delta chunking ([[Overlap]], guide §2.6)
-    val (ledger, chunkedRaw) = Overlap.par2(
-      () => ReplaySafe.ledgerRead(
-        spark.table(idx.chunkTable), "_id", delta, idCol),
-      () => simHashChunked128(delta, textCol, idCol, idx.maxHamming, spread = false)
-        .localCheckpoint(true))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): see simHashNearDupsIncrementalFold
-    // (skips the exclusion antis AND the unseen-pair suppression)
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val excl = if (firstAttempt) None else Some(rids)
-    val chunked = admittedAgainstIndex(
-      chunkedRaw, idx.chunkTable, idx.maxBucket, excl).localCheckpoint(true)
-    graft.CacheUtil.release(chunkedRaw)
-    val rawPairs = simHash128PairsFromAdmitted(chunked, idx, excl)
-    val lazyPairs =
-      if (firstAttempt) rawPairs
-      else ReplaySafe.keepPairsTouchingUnseen(
-        rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
-    // materializes the pair set BEFORE the append mutates the table
-    val out = lazyPairs.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[IdempotentSink]])
-    appendRowHealed(
-      chunked, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
-    graft.CacheUtil.release(lazyPairs)
-    // rids/seen/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
-  }
+  ): DataFrame = simHashNearDupsIncrementalFold(delta, textCol, idCol, idx, sink)
 
-  private def simHash128PairsFromAdmitted(
-      chunked: DataFrame,
-      idx: SimHash128Index,
+  /** [[simHashNearDupsIncrementalFold]] for a combination-keyed index. */
+  def simHashNearDupsIncrementalComboFold(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashComboIndex,
+      sink: Option[DataFrame => Unit] = None
+  ): DataFrame = simHashNearDupsIncrementalFold(delta, textCol, idCol, idx, sink)
+
+  private def simHashPairsFromAdmitted(
+      keyed: DataFrame,
+      idx: SimHashFamilyIndex,
       excludeIds: Option[DataFrame] = None
   ): DataFrame = {
-    val spark = chunked.sparkSession
-    val within = simHash128PairsFromChunked(chunked, idx.maxHamming, idx.maxBucket)
+    val spark = keyed.sparkSession
+    val keys = idx.keys
+    val within = simHashPairsFromKeyed(keyed, keys, idx.maxBucket)
     val corpus = excludeIds.fold(spark.table(idx.chunkTable))(
       ReplaySafe.excludeIds(spark.table(idx.chunkTable), "_id", _))
-    val cross = chunked
+    val cross = keyed
       .as("d")
       .join(
         corpus.as("c"),
         col("d._chunk") === col("c._chunk") &&
           col("d._val") === col("c._val") &&
           col("d._id") =!= col("c._id") &&
-          noLowerChunkMatches128(idx.maxHamming + 1, "d", "c")
+          keys.noLowerKeyMatches("d", "c")
       )
       .select(
         least(col("d._id"), col("c._id")).as("id_a"),
         greatest(col("d._id"), col("c._id")).as("id_b"),
-        hamming128("d", "c").as("hamming")
+        keys.hamming("d", "c").as("hamming")
       )
       .filter(col("hamming") <= idx.maxHamming)
     cross.unionByName(within)
   }
-
-  /** Audit for [[simHashNearDups128]]'s bucket cap: every (chunk, value)
-    * block larger than `maxBucket`, with its size — the
-    * [[hotSimHashBuckets]] twin.
-    */
-  def hotSimHash128Buckets(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int,
-      maxBucket: Int = 10000
-  ): DataFrame =
-    simHashChunked128(df, textCol, idCol, maxHamming)
-      .groupBy(col("_chunk"), col("_val"))
-      .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > maxBucket)
 
   /** Structural audit of an emitted near-dup pair table, as ONE row of
     * violation counts — the invariants every pair emitter in this file
@@ -1923,681 +2074,32 @@ object Dedup {
     joined.agg(base.head, (base.tail ++ extras): _*)
   }
 
-  /** Exactly-once emission conjunction for chunk-blocked joins: true iff
-    * NO chunk below the bucket's own chunk matches between the two sides,
-    * each chunk value recomputed at plan time from the carried 64-bit
-    * hashes (`<alias>._simhash`). The SimHash twin of
-    * [[noLowerBandMatches]] — see the emission rationale in
-    * [[simHashPairsFromChunked]].
-    */
-  private def noLowerChunkMatches(
-      chunks: Int,
-      left: String,
-      right: String
-  ): Column = {
-    val (widths, offsets) = chunkLayout(chunks)
-    noLowerKeyMatches(
-      chunks,
-      (h, c) => shiftrightunsigned(h, offsets(c)).bitwiseAND(lit(chunkMask(widths(c)))),
-      left,
-      right
-    )
-  }
-
-  /** Generic lowest-matching-key emission conjunction: true iff NO key
-    * index below the bucket's own `_chunk` matches between the two sides,
-    * each key recomputed at plan time from the carried 64-bit hashes via
-    * `keyVal`. Shared by pigeonhole chunks and Manku combination keys.
-    */
-  private def noLowerKeyMatches(
-      numKeys: Int,
-      keyVal: (Column, Int) => Column,
-      left: String,
-      right: String
-  ): Column =
-    (0 until numKeys - 1)
-      .map { c =>
-        col(s"$left._chunk") <= lit(c) ||
-          keyVal(col(s"$left._simhash"), c) =!= keyVal(col(s"$right._simhash"), c)
-      }
-      .reduceOption(_ && _)
-      .getOrElse(lit(true))
-
-  /** Audit view for [[simHashNearDups]]'s bucket cap: every (chunk, value)
-    * block larger than `maxBucket`, with its size.
-    */
-  def hotSimHashBuckets(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 3,
-      maxBucket: Int = 10000
-  ): DataFrame =
-    simHashChunked(df, textCol, idCol, maxHamming)
-      .groupBy(col("_chunk"), col("_val"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucket)
-      .select(col("_chunk").as("chunk"), col("_val").as("value"), col("bucket_size"))
-
-  // ------------------------- Manku combination blocking (web-scale h≤4)
-
-  /** All C(blocks, t) block-index subsets of size `t`, lexicographic.
-    * Order matters: the lowest-matching-key emission conjunction assumes
-    * key index == position in this sequence.
-    */
-  private[graft] def combinationSubsets(blocks: Int, t: Int): Seq[Seq[Int]] =
-    (0 until blocks).combinations(t).map(_.toSeq).toSeq
-
-  /** One combination key packed into a long: the subset's block values
-    * shifted into consecutive low bits (total width = Σ subset widths ≤
-    * 64). A pure plan-time function of the carried hash, so the
-    * exactly-once conjunction can recompute any key from `_simhash`.
-    */
-  private[graft] def comboVal(
-      h: Column,
-      subset: Seq[Int],
-      widths: Seq[Int],
-      offsets: Seq[Int]
-  ): Column =
-    subset
-      .foldLeft((lit(0L), 0)) { case ((acc, pos), blk) =>
-        val v = shiftrightunsigned(h, offsets(blk))
-          .bitwiseAND(lit(chunkMask(widths(blk))))
-        (acc.bitwiseOR(shiftleft(v, pos)), pos + widths(blk))
-      }
-      ._1
-
-  /** SimHash near-dup pairs via Manku-style combination blocking (Manku,
-    * Jain & Das Sarma, "Detecting Near-Duplicates for Web Crawling",
-    * WWW'07 §3): split the 64-bit fingerprint into `blocks` > maxHamming
-    * blocks; a pair within Hamming ≤ maxHamming agrees on ≥ blocks −
-    * maxHamming blocks, so it agrees entirely on at least one of the
-    * C(blocks, t) subsets of size t = blocks − maxHamming. Each subset's
-    * concatenated block values form one bucket key — recall is exact
-    * (same guarantee as [[simHashNearDups]]'s pigeonhole chunks) but the
-    * keys are ~64·t/blocks bits wide instead of ~64/(maxHamming+1).
-    *
-    * Why this exists next to [[simHashNearDups]]: pigeonhole blocking at
-    * h=3 uses 16-bit keys — random-collision candidate mass ≈ n²/2^15,
-    * fine to ~10⁷ docs but quadratic death at 10⁹+ (100 TB corpora). The
-    * default here (h=3, blocks=6, t=3) probes 20 keys/row of ~32 bits —
-    * collision mass ≈ 20·n²/2^33, ~13,000× fewer random candidates for
-    * 5× the probe rows. Use the pigeonhole form below ~10⁷ docs (fewer
-    * probe rows shuffle less and random collisions don't dominate yet);
-    * use this form above. Radii ≥ ~10 on 64 bits are intrinsically dense
-    * — no blocking discriminates; keep h ≤ 4 at scale (or move to a
-    * 128-bit fingerprint).
-    *
-    * Same kernel as [[simHashNearDups]]: one job caps each (key, value)
-    * bucket, localCheckpoints the membership, then a codegen'd self-join
-    * verifies `bit_count(xor)` inline with lowest-matching-key
-    * exactly-once emission. Release the result's checkpoint blocks with
-    * [[graft.CacheUtil.release]].
-    */
-  def simHashNearDupsCombination(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      maxBucket: Int = 10000
-  ): DataFrame = {
-    val subsets = comboSubsetsChecked(maxHamming, blocks)
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val (widths, offsets) = chunkLayout(blocks)
-    simHashPairsFromKeyed(
-      simHashComboKeyed(df, textCol, idCol, subsets, widths, offsets),
-      maxHamming,
-      maxBucket,
-      subsets.length,
-      (h, c) => comboVal(h, subsets(c), widths, offsets)
-    )
-  }
-
-  /** Audit view for [[simHashNearDupsCombination]]'s bucket cap: every
-    * (key, value) bucket larger than `maxBucket`, with its size.
-    */
-  def hotSimHashComboBuckets(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      maxBucket: Int = 10000
-  ): DataFrame = {
-    val subsets = comboSubsetsChecked(maxHamming, blocks)
-    val (widths, offsets) = chunkLayout(blocks)
-    simHashComboKeyed(df, textCol, idCol, subsets, widths, offsets)
-      .groupBy(col("_chunk"), col("_val"))
-      .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucket)
-      .select(col("_chunk").as("combo"), col("_val").as("value"), col("bucket_size"))
-  }
-
-  private def comboSubsetsChecked(maxHamming: Int, blocks: Int): Seq[Seq[Int]] = {
-    require(
-      maxHamming >= 0 && blocks > maxHamming && blocks <= 64,
-      s"need maxHamming ≥ 0 < blocks ≤ 64 with blocks > maxHamming, " +
-        s"got maxHamming=$maxHamming blocks=$blocks"
-    )
-    val subsets = combinationSubsets(blocks, blocks - maxHamming)
-    // each probe row carries one key and the emission conjunction has
-    // C(blocks, t) − 1 terms — cap both before the plan explodes
-    require(
-      subsets.length <= 512,
-      s"C($blocks, ${blocks - maxHamming}) = ${subsets.length} combination " +
-        "keys — too many probe rows/plan terms; pick blocks closer to maxHamming"
-    )
-    subsets
-  }
-
-  /** (_id, _simhash, _chunk, _val) combination-key blocking table:
-    * `_chunk` is the subset index, `_val` the packed key. The combination
-    * twin of [[simHashChunked]].
-    */
-  private def simHashComboKeyed(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      subsets: Seq[Seq[Int]],
-      widths: Seq[Int],
-      offsets: Seq[Int],
-      spread: Boolean = true
-  ): DataFrame = {
-    // see simHashChunked's `spread` note (r19)
-    val base = df.select(col(idCol).as("_id"), col(textCol).as("_t"))
-    val withSim =
-      (if (spread)
-         base.repartition(df.sparkSession.sparkContext.defaultParallelism)
-       else base)
-      .select(col("_id"), simHash(col("_t")).as("_simhash"))
-    withSim.select(
-      col("_id"),
-      col("_simhash"),
-      posexplode(
-        array(subsets.map(s => comboVal(col("_simhash"), s, widths, offsets)): _*)
-      ).as(Seq("_chunk", "_val"))
-    )
-  }
-
-  // ------------------------------------ incremental SimHash chunk index
-
-  /** Handle for a persisted SimHash dedup index: ONE bucketed catalog
-    * table holding the (_chunk, _val) pigeonhole membership with the
-    * carried 64-bit hash. Unlike [[MinHashIndex]] no second lookup table
-    * is needed — verification (`bit_count(xor) ≤ radius`) runs inline
-    * from the carried hashes, so the index is self-contained. The radius
-    * travels with the handle: the chunk layout is a function of
-    * `maxHamming`, and probing with a different radius would block on a
-    * disjoint (chunk, value) space.
-    */
-  case class SimHashIndex(
-      chunkTable: String,
-      maxHamming: Int,
-      buckets: Int,
-      maxBucket: Int = 10000)
-
-  /** Build and persist a SimHash index for `df` under catalog table
-    * `<name>_chunks`, bucketed by (_chunk, _val) so incremental probes
-    * read the corpus side with zero Exchange. One pass evaluates each
-    * SimHash once ([[simHashChunked]] spreads the hash compute first).
-    * Buckets are capped at the `maxBucket` lowest ids AT WRITE TIME
-    * ([[capChunkBuckets]]) so probes see exactly the membership the
-    * capped batch form would use; `maxBucket` travels with the handle.
-    */
-  def writeSimHashIndex(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      name: String,
-      maxHamming: Int = 3,
-      buckets: Int = 32,
-      maxBucket: Int = 10000
-  ): SimHashIndex = {
-    require(
-      maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 64), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val idx = SimHashIndex(s"${name}_chunks", maxHamming, buckets, maxBucket)
-    writeBucketedTable(
-      capChunkBuckets(
-        simHashChunked(df, textCol, idCol, maxHamming),
-        maxBucket,
-        Seq("_simhash")),
-      idx.chunkTable,
-      buckets,
-      Seq("_chunk", "_val"),
-      org.apache.spark.sql.SaveMode.Overwrite
-    )
-    idx
-  }
-
-  /** Fold a delta into an existing SimHash index (after its pairs were
-    * emitted via [[simHashNearDupsIncremental]]) so the NEXT delta dedups
-    * against corpus ∪ this delta. Only rows the bucket cap admits
-    * ([[admittedAgainstIndex]]) are appended — exactly the membership the
-    * probe paired, keeping stored buckets ≤ `idx.maxBucket` forever.
-    */
-  def appendToSimHashIndex(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashIndex
-  ): Unit = {
-    // materialize before writing: the admission plan reads the very
-    // table the append inserts into
-    val admitted = admittedAgainstIndex(
-      simHashChunked(delta, textCol, idCol, idx.maxHamming, spread = false),
-      idx.chunkTable,
-      idx.maxBucket
-    ).localCheckpoint(true)
-    writeBucketedTable(
-      admitted,
-      idx.chunkTable,
-      idx.buckets,
-      Seq("_chunk", "_val"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-    graft.CacheUtil.release(admitted)
-  }
-
-  /** Incremental SimHash near-dups: every pair within `idx.maxHamming`
-    * with at least one member in `delta` = (delta × corpus) via the
-    * bucketed chunk table ∪ (delta × delta) via the batch self-join.
-    * Corpus × corpus pairs were emitted when the corpus was indexed —
-    * union the calls' outputs for the full pair set.
-    *
-    * Scale shape mirrors [[minHashNearDupsIncremental]]: the delta is
-    * chunked ONCE (localCheckpoint) and reused by both legs; the corpus
-    * side of the cross join is a bucketed scan feeding the (_chunk, _val)
-    * equi-join with ZERO Exchange (only the delta shuffles, into the
-    * index's bucket partitioning). Exactly-once emission uses the same
-    * lowest-matching-chunk conjunction as the batch path, evaluated
-    * across the delta/corpus pair from the carried hashes; verification
-    * is inline `bit_count(xor)` — no lookup join at all.
-    *
-    * Bucket-cap contract (round-10): the index is pre-capped at write/
-    * append/compact time ([[capChunkBuckets]]) and the delta side is
-    * admitted per bucket into the remaining slots
-    * ([[admittedAgainstIndex]]), so incremental == capped-batch holds
-    * even on buckets OVER `idx.maxBucket` (gated with a planted over-cap
-    * bucket), under the monotone-id daily-crawl contract. Audit what the
-    * cap truncates with [[hotSimHashBuckets]] at build time.
-    *
-    * Result is materialized (localCheckpoint) and the delta-side blocks
-    * are released before returning.
-    */
-  def simHashNearDupsIncremental(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashIndex
-  ): DataFrame = {
-    val lazyPairs =
-      simHashPairsIncrementalLazy(delta, textCol, idCol, idx)
-    val out = lazyPairs.localCheckpoint(true)
-    // releasing the lazy plan frees BOTH delta-side checkpoints it reads
-    // (the admitted delta membership and the capped within-delta members)
-    graft.CacheUtil.release(lazyPairs)
-    out
-  }
-
-  /** The un-materialized plan behind [[simHashNearDupsIncremental]].
-    * Exposed for plan-shape tests (the public wrapper eagerly
-    * checkpoints, which hides the join from `executedPlan`); callers must
-    * [[graft.CacheUtil.release]] it when done.
-    */
-  private[graft] def simHashPairsIncrementalLazy(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashIndex
-  ): DataFrame = {
-    val chunkedRaw =
-      simHashChunked(delta, textCol, idCol, idx.maxHamming, spread = false)
-        .localCheckpoint(true)
-    val chunked = admittedAgainstIndex(chunkedRaw, idx.chunkTable, idx.maxBucket)
-      .localCheckpoint(true)
-    graft.CacheUtil.release(chunkedRaw)
-    simHashPairsFromAdmitted(chunked, idx)
-  }
-
-  /** Probe-then-append in ONE delta pass: emit near-dup pairs against
-    * the index as it stood, then fold the delta in — the per-batch body
-    * of the unbounded-ingest loop. Semantically identical to
-    * [[simHashNearDupsIncremental]] followed by [[appendToSimHashIndex]]
-    * (gated), but the delta chunking and the admission scan over the
-    * corpus index run ONCE instead of twice.
-    */
-  def simHashNearDupsIncrementalFold(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashIndex,
-      sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
-    val spark = delta.sparkSession
-    // REPLAY SAFETY ([[ReplaySafe]], single chunk table): the chunk
-    // table is both index and ledger for docs with stored rows; a doc
-    // whose every bucket was full stores nothing, but its re-admission
-    // recomputes deterministically against the delta-excluded corpus,
-    // so the replayed append writes the same (empty) row set
-    // one-job ledger read: table's seen set + the delta id frame
-    // ([[ReplaySafe.ledgerRead]], r19 second session); the ledger read
-    // and the delta chunking (the simhash compute) share no inputs —
-    // overlap them ([[Overlap]], guide §2.6)
-    val (ledger, chunkedRaw) = Overlap.par2(
-      () => ReplaySafe.ledgerRead(
-        spark.table(idx.chunkTable), "_id", delta, idCol),
-      () => simHashChunked(delta, textCol, idCol, idx.maxHamming, spread = false)
-        .localCheckpoint(true))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): no delta id in the ledger table
-    // makes every excludeIds anti join a semantic no-op — skip them,
-    // and skip the unseen-pair suppression too (with nothing seen,
-    // every emitted pair touches an unseen doc by construction)
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val excl = if (firstAttempt) None else Some(rids)
-    val chunked = admittedAgainstIndex(
-      chunkedRaw, idx.chunkTable, idx.maxBucket, excl).localCheckpoint(true)
-    graft.CacheUtil.release(chunkedRaw)
-    val rawPairs = simHashPairsFromAdmitted(chunked, idx, excl)
-    val lazyPairs =
-      if (firstAttempt) rawPairs
-      else ReplaySafe.keepPairsTouchingUnseen(
-        rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
-    // materializes the pair set BEFORE the append mutates the table
-    val out = lazyPairs.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[IdempotentSink]])
-    appendRowHealed(
-      chunked, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
-    graft.CacheUtil.release(lazyPairs) // frees `chunked` + internal members
-    // rids/seen/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
-  }
-
-  private def simHashPairsFromAdmitted(
-      chunked: DataFrame,
-      idx: SimHashIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame = {
-    val spark = chunked.sparkSession
-    val within = simHashPairsFromChunked(chunked, idx.maxHamming, idx.maxBucket)
-    val corpus = excludeIds.fold(spark.table(idx.chunkTable))(
-      ReplaySafe.excludeIds(spark.table(idx.chunkTable), "_id", _))
-    val cross = chunked
-      .as("d")
-      .join(
-        corpus.as("c"),
-        col("d._chunk") === col("c._chunk") &&
-          col("d._val") === col("c._val") &&
-          col("d._id") =!= col("c._id") &&
-          noLowerChunkMatches(idx.maxHamming + 1, "d", "c")
-      )
-      .select(
-        least(col("d._id"), col("c._id")).as("id_a"),
-        greatest(col("d._id"), col("c._id")).as("id_b"),
-        bit_count(col("d._simhash").bitwiseXOR(col("c._simhash")))
-          .as("hamming")
-      )
-      .filter(col("hamming") <= idx.maxHamming)
-    cross.unionByName(within)
-  }
-
-  // --------------------------- incremental SimHash combination index
-
-  /** Handle for a persisted COMBINATION-KEYED SimHash index — the
-    * ≥10⁷-doc twin of [[SimHashIndex]]. Same self-contained single-table
-    * shape (the carried `_simhash` verifies inline, no lookup join), but
-    * the bucket keys are Manku combination keys
-    * ([[simHashNearDupsCombination]]): ~64·t/blocks bits wide instead of
-    * ~64/(maxHamming+1), so random-collision candidate mass on a
-    * web-scale corpus stays output-bound where pigeonhole keys go
-    * quadratic. Both `maxHamming` and `blocks` travel with the handle —
-    * the key space is a function of both, and probing with different
-    * values would block on disjoint (combo, value) keys.
-    */
-  case class SimHashComboIndex(
-      chunkTable: String,
-      maxHamming: Int,
-      blocks: Int,
-      buckets: Int,
-      maxBucket: Int = 10000
-  )
-
-  /** Build and persist a combination-keyed SimHash index for `df` under
-    * catalog table `<name>_combo`, bucketed by (_chunk, _val) so
-    * incremental probes read the corpus side with zero Exchange. One
-    * pass evaluates each SimHash once ([[simHashComboKeyed]] spreads the
-    * hash compute first); C(blocks, blocks−maxHamming) rows are written
-    * per doc (20 at the h=3/blocks=6 default) — the storage price of
-    * wide keys, amortized over every future delta.
-    */
-  def writeSimHashComboIndex(
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      name: String,
-      maxHamming: Int = 3,
-      blocks: Int = 6,
-      buckets: Int = 32,
-      maxBucket: Int = 10000
-  ): SimHashComboIndex = {
-    val subsets = comboSubsetsChecked(maxHamming, blocks)
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val (widths, offsets) = chunkLayout(blocks)
-    val idx = SimHashComboIndex(s"${name}_combo", maxHamming, blocks, buckets, maxBucket)
-    writeBucketedTable(
-      capChunkBuckets(
-        simHashComboKeyed(df, textCol, idCol, subsets, widths, offsets),
-        maxBucket,
-        Seq("_simhash")),
-      idx.chunkTable,
-      buckets,
-      Seq("_chunk", "_val"),
-      org.apache.spark.sql.SaveMode.Overwrite
-    )
-    idx
-  }
-
-  /** Fold a delta into an existing combination index (after its pairs
-    * were emitted via [[simHashNearDupsIncrementalCombo]]) so the NEXT
-    * delta dedups against corpus ∪ this delta. Only rows the bucket cap
-    * admits ([[admittedAgainstIndex]]) are appended.
-    */
-  def appendToSimHashComboIndex(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): Unit = {
-    val subsets = comboSubsetsChecked(idx.maxHamming, idx.blocks)
-    val (widths, offsets) = chunkLayout(idx.blocks)
-    val admitted = admittedAgainstIndex(
-      simHashComboKeyed(
-        delta, textCol, idCol, subsets, widths, offsets, spread = false),
-      idx.chunkTable,
-      idx.maxBucket
-    ).localCheckpoint(true)
-    writeBucketedTable(
-      admitted,
-      idx.chunkTable,
-      idx.buckets,
-      Seq("_chunk", "_val"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-    graft.CacheUtil.release(admitted)
-  }
-
-  /** Incremental combination-keyed SimHash near-dups: every pair within
-    * `idx.maxHamming` with at least one member in `delta` =
-    * (delta × corpus) via the bucketed combination table ∪
-    * (delta × delta) via the batch combination self-join. Corpus ×
-    * corpus pairs were emitted when the corpus was indexed — union the
-    * calls' outputs for the full pair set.
-    *
-    * Scale shape mirrors [[simHashNearDupsIncremental]] exactly — delta
-    * keyed ONCE (localCheckpoint) and reused by both legs, zero
-    * corpus-side Exchange, exactly-once lowest-matching-KEY emission
-    * recomputed from the carried hashes, inline `bit_count(xor)`
-    * verification — but with combination keys, so a daily delta against
-    * a 10⁹-doc corpus joins on ~32-bit keys instead of 16-bit ones:
-    * random-collision candidate mass drops by the measured ~8600×
-    * (ComboBlockingProbe) at the cost of C(blocks, t)/(maxHamming+1) ×
-    * more index rows. Use [[simHashNearDupsIncremental]] below ~10⁷
-    * docs, this form above.
-    *
-    * Result is materialized (localCheckpoint) and the delta-side blocks
-    * are released before returning.
-    */
-  def simHashNearDupsIncrementalCombo(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): DataFrame = {
-    val lazyPairs =
-      simHashComboIncrementalLazy(delta, textCol, idCol, idx)
-    val out = lazyPairs.localCheckpoint(true)
-    graft.CacheUtil.release(lazyPairs)
-    out
-  }
-
-  /** The un-materialized plan behind [[simHashNearDupsIncrementalCombo]]
-    * — exposed for plan-shape tests; callers must
-    * [[graft.CacheUtil.release]] it when done.
-    */
-  private[graft] def simHashComboIncrementalLazy(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): DataFrame =
-    simHashComboPairsFromAdmitted(comboAdmittedKeys(delta, textCol, idCol, idx), idx)
-
-  /** Probe-then-append in ONE delta pass — the combination-keyed member
-    * of the fold family (gated identical to the separate
-    * [[simHashNearDupsIncrementalCombo]] + [[appendToSimHashComboIndex]]
-    * calls). The C(blocks, blocks−maxHamming)-row combination keying
-    * and the admission scan run ONCE instead of twice.
-    *
-    * REPLAY-SAFE ([[ReplaySafe]], single chunk table — the same ledger
-    * shape as [[simHashNearDupsIncrementalFold]]): re-running the fold
-    * on a delta whose append already committed appends nothing and
-    * emits nothing; a doc whose every bucket was full stores nothing,
-    * but its re-admission recomputes deterministically against the
-    * delta-excluded corpus, so the replayed append writes the same
-    * (empty) row set.
-    */
-  def simHashNearDupsIncrementalComboFold(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex,
-      sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
-    val spark = delta.sparkSession
-    // ledger read ∥ delta combo-keying ([[Overlap]], guide §2.6)
-    val (ledger, keyedRaw) = Overlap.par2(
-      () => ReplaySafe.ledgerRead(
-        spark.table(idx.chunkTable), "_id", delta, idCol),
-      () => comboKeyedRawChk(delta, textCol, idCol, idx))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): see simHashNearDupsIncrementalFold
-    // (skips the exclusion antis AND the unseen-pair suppression)
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val excl = if (firstAttempt) None else Some(rids)
-    val keyed = comboAdmittedFromKeyed(keyedRaw, idx, excl)
-    val rawPairs = simHashComboPairsFromAdmitted(keyed, idx, excl)
-    val lazyPairs =
-      if (firstAttempt) rawPairs
-      else ReplaySafe.keepPairsTouchingUnseen(
-        rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
-    // materializes the pair set BEFORE the append mutates the table
-    val out = lazyPairs.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[IdempotentSink]])
-    appendRowHealed(
-      keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-      Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
-    graft.CacheUtil.release(lazyPairs) // frees `keyed` + internal members
-    // rids/seen/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
-  }
-
-  private def comboAdmittedKeys(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame =
-    comboAdmittedFromKeyed(
-      comboKeyedRawChk(delta, textCol, idCol, idx), idx, excludeIds)
-
-  /** The delta's combo-keyed rows, checkpointed — the simhash compute,
-    * shared by [[comboAdmittedKeys]] and the fold's overlapped start. */
-  private def comboKeyedRawChk(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): DataFrame = {
-    val subsets = comboSubsetsChecked(idx.maxHamming, idx.blocks)
-    val (widths, offsets) = chunkLayout(idx.blocks)
-    simHashComboKeyed(
-      delta, textCol, idCol, subsets, widths, offsets, spread = false)
-      .localCheckpoint(true)
-  }
-
-  /** Admission from a prebuilt keyed frame; releases `keyedRaw`. */
-  private def comboAdmittedFromKeyed(
-      keyedRaw: DataFrame,
-      idx: SimHashComboIndex,
-      excludeIds: Option[DataFrame]
-  ): DataFrame = {
-    val keyed = admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket, excludeIds)
-      .localCheckpoint(true)
-    graft.CacheUtil.release(keyedRaw)
-    keyed
-  }
-
-  private def simHashComboPairsFromAdmitted(
-      keyed: DataFrame,
-      idx: SimHashComboIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame = {
-    val spark = keyed.sparkSession
-    val subsets = comboSubsetsChecked(idx.maxHamming, idx.blocks)
-    val (widths, offsets) = chunkLayout(idx.blocks)
-    val keyVal = (h: Column, c: Int) => comboVal(h, subsets(c), widths, offsets)
-    val within =
-      simHashPairsFromKeyed(keyed, idx.maxHamming, idx.maxBucket, subsets.length, keyVal)
-    val corpus = excludeIds.fold(spark.table(idx.chunkTable))(
-      ReplaySafe.excludeIds(spark.table(idx.chunkTable), "_id", _))
-    val cross = keyed
-      .as("d")
-      .join(
-        corpus.as("c"),
-        col("d._chunk") === col("c._chunk") &&
-          col("d._val") === col("c._val") &&
-          col("d._id") =!= col("c._id") &&
-          noLowerKeyMatches(subsets.length, keyVal, "d", "c")
-      )
-      .select(
-        least(col("d._id"), col("c._id")).as("id_a"),
-        greatest(col("d._id"), col("c._id")).as("id_b"),
-        bit_count(col("d._simhash").bitwiseXOR(col("c._simhash")))
-          .as("hamming")
-      )
-      .filter(col("hamming") <= idx.maxHamming)
-    cross.unionByName(within)
-  }
-
   // ------------------------------------------------ cluster resolution
+
+  /** End-to-end fuzzy dedup — the composition a pipeline actually runs:
+    * resolve `pairs` into clusters ([[dupClusters]]) and drop every
+    * non-representative member (id ≠ cluster min), keeping unpaired docs
+    * untouched. `pairs` is any verified near-dup pair list:
+    * [[minHashNearDups]] / [[simHashNearDups]] or their incremental
+    * forms at scale, [[jaccardPairsBrute]] as the oracle form.
+    *
+    * Scale shape: the victim id set is (cluster members − clusters)-sized
+    * — far smaller than the corpus unless it is pathologically dup-heavy
+    * — and is materialized (localCheckpoint) so the cluster iteration's
+    * blocks can be released eagerly; the final anti-join is left to the
+    * planner (broadcast when the victim set fits, shuffle join
+    * otherwise). Release the returned plan's blocks with
+    * [[graft.CacheUtil.release]] when done.
+    */
+  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val clusters = dupClusters(pairs)
+    val victims = clusters
+      .filter(col("id") =!= col("cluster_id"))
+      .select(col("id").as(idCol))
+      .localCheckpoint(true)
+    graft.CacheUtil.release(clusters)
+    df.join(victims, Seq(idCol), "left_anti")
+  }
 
   /** Duplicate-cluster resolution: connected components over a near-dup
     * pair list. Returns `(id, cluster_id)` for every id appearing in
@@ -2630,31 +2132,6 @@ object Dedup {
     * checkpoint) is released before return; only the returned result's own
     * checkpoint blocks remain — free them with [[graft.CacheUtil.release]].
     */
-  /** End-to-end fuzzy dedup — the composition a pipeline actually runs:
-    * resolve `pairs` into clusters ([[dupClusters]]) and drop every
-    * non-representative member (id ≠ cluster min), keeping unpaired docs
-    * untouched. `pairs` is any verified near-dup pair list:
-    * [[minHashNearDups]] / [[simHashNearDups]] or their incremental
-    * forms at scale, [[jaccardPairsBrute]] as the oracle form.
-    *
-    * Scale shape: the victim id set is (cluster members − clusters)-sized
-    * — far smaller than the corpus unless it is pathologically dup-heavy
-    * — and is materialized (localCheckpoint) so the cluster iteration's
-    * blocks can be released eagerly; the final anti-join is left to the
-    * planner (broadcast when the victim set fits, shuffle join
-    * otherwise). Release the returned plan's blocks with
-    * [[graft.CacheUtil.release]] when done.
-    */
-  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val clusters = dupClusters(pairs)
-    val victims = clusters
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as(idCol))
-      .localCheckpoint(true)
-    graft.CacheUtil.release(clusters)
-    df.join(victims, Seq(idCol), "left_anti")
-  }
-
   def dupClusters(
       pairs: DataFrame,
       idA: String = "id_a",

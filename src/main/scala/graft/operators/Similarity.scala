@@ -1107,7 +1107,7 @@ object Similarity {
       nTables: Int,
       spread: Boolean = true
   ): DataFrame = {
-    // see Dedup.simHashChunked's `spread` note (r19): delta paths skip
+    // see Dedup.SimHashKeys.keyed's `spread` note (r19): delta paths skip
     // the per-batch Exchange; corpus build/batch paths keep the spread
     val base = df.select(col(idCol).as("_id"), col(vecCol).as("_v"))
     val spreadDf =

@@ -125,42 +125,15 @@ object StreamingDedup {
       maxBucket: Int = 10000
   ): Dataset[StreamPair] = {
     import spark.implicits._
-    require(
-      maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 64), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val chunks = maxHamming + 1
-    val (widths, offsets) = (Dedup.chunkLayout(chunks)._1.toArray, Dedup.chunkLayout(chunks)._2.toArray)
-    val masks = widths.map(Dedup.chunkMask)
-    val exploded = docs
-      .select(
-        col(idCol).cast("long").as("_id"),
-        Dedup.simHash(col(textCol)).as("_simhash")
-      )
-      .select(
-        col("_id"),
-        col("_simhash"),
-        posexplode(
-          array((0 until chunks).map { c =>
-            shiftrightunsigned(col("_simhash"), offsets(c))
-              .bitwiseAND(lit(masks(c)))
-          }: _*)
-        ).as(Seq("_chunk", "_val"))
-      )
-      .select(
-        col("_chunk").as("chunk"),
-        col("_val").as("value"),
-        col("_id").as("doc_id"),
-        col("_simhash").as("simhash")
-      )
+    val keys = Dedup.SimHashKeys.pigeonhole(1, maxHamming)
+    val cap = keys.pairCap(maxBucket)
+    bucketEvents(keys, docs, textCol, idCol)
       .as[BucketEvent]
-    exploded
       .groupByKey(e => (e.chunk, e.value))
       .flatMapGroupsWithState(
         OutputMode.Append,
         GroupStateTimeout.NoTimeout
-      )(updateBucket(maxHamming, maxBucket, widths, offsets))
+      )(updateBucket(maxHamming, cap, keys.widths.toArray, keys.offsets.toArray))
   }
 
   /** Wide-radius streaming near-dups on the 128-bit fingerprint — the
@@ -184,48 +157,32 @@ object StreamingDedup {
       maxBucket: Int = 10000
   ): Dataset[StreamPair] = {
     import spark.implicits._
-    require(
-      maxHamming >= 0 && maxHamming < 128,
-      s"maxHamming must be in [0, 128), got $maxHamming"
-    )
-    require(maxBucket > 1, "maxBucket must allow at least one pair")
-    val chunks = maxHamming + 1
-    val (widths, offsets) = Dedup.chunkLayout128(chunks)
-    val exploded = docs
-      .select(
-        col(idCol).cast("long").as("_id"),
-        Dedup.simHash128(col(textCol)).as("_h")
-      )
-      .select(
-        col("_id"),
-        element_at(col("_h"), 1).as("_sh0"),
-        element_at(col("_h"), 2).as("_sh1")
-      )
-      .select(
-        col("_id"),
-        col("_sh0"),
-        col("_sh1"),
-        posexplode(
-          array((0 until chunks).map { c =>
-            Dedup.chunkVal128(col("_sh0"), col("_sh1"), offsets(c), widths(c))
-          }: _*)
-        ).as(Seq("_chunk", "_val"))
-      )
-      .select(
-        col("_chunk").as("chunk"),
-        col("_val").as("value"),
-        col("_id").as("doc_id"),
-        col("_sh0").as("sh0"),
-        col("_sh1").as("sh1")
-      )
+    val keys = Dedup.SimHashKeys.pigeonhole(2, maxHamming)
+    val cap = keys.pairCap(maxBucket)
+    bucketEvents(keys, docs, textCol, idCol)
       .as[Bucket128Event]
-    exploded
       .groupByKey(e => (e.chunk, e.value))
       .flatMapGroupsWithState(
         OutputMode.Append,
         GroupStateTimeout.NoTimeout
-      )(updateBucket128(maxHamming, maxBucket, widths.toArray, offsets.toArray))
+      )(updateBucket128(maxHamming, cap, keys.widths.toArray, keys.offsets.toArray))
   }
+
+  /** `(chunk, value, doc_id, <fingerprint words>)` bucket events, keyed
+    * by the batch index family's own scheme ([[Dedup.SimHashKeys]]) so
+    * stream and batch block on identical (chunk, value) buckets.
+    */
+  private def bucketEvents(
+      keys: Dedup.SimHashKeys,
+      docs: DataFrame,
+      textCol: String,
+      idCol: String
+  ): DataFrame =
+    keys
+      .keyed(docs, col(idCol).cast("long"), col(textCol), spread = false)
+      .select(
+        Seq(col("_chunk").as("chunk"), col("_val").as("value"), col("_id").as("doc_id")) ++
+          keys.hashCols.map(h => col(h).as(h.stripPrefix("_"))): _*)
 
   /** MinHash near-dup pairs over a document stream — the streaming twin
     * of [[graft.operators.Dedup.minHashNearDups]], with one deliberate

@@ -808,7 +808,7 @@ class OperatorsSpec extends AnyFunSuite {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val chunked = Dedup.simHashChunked(delta, "text", "doc_id", 10)
+      val chunked = idx.keys.keyed(delta, $"doc_id", $"text")
       val admitted = Dedup.admittedAgainstIndexKeyed(
         chunked, idx.chunkTable, 10000, Seq("_chunk", "_val"))
       val plan = admitted.queryExecution.executedPlan.toString
@@ -928,7 +928,7 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val pairs =
-        Dedup.simHashComboIncrementalLazy(delta, "text", "doc_id", idx)
+        Dedup.simHashPairsIncrementalLazy(delta, "text", "doc_id", idx)
       val plan = pairs.queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"),
         s"index scan did not use the bucket layout:\n${plan.take(3000)}")
@@ -1003,7 +1003,7 @@ class OperatorsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val idx = Dedup.writeSimHash128Index(
         corpus, "text", "doc_id", "s128inc_plan", maxHamming = 20, buckets = 8)
-      val pairs = Dedup.simHash128PairsIncrementalLazy(delta, "text", "doc_id", idx)
+      val pairs = Dedup.simHashPairsIncrementalLazy(delta, "text", "doc_id", idx)
       val plan = pairs.queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"),
         s"index scan did not use the bucket layout:\n${plan.take(3000)}")
@@ -1090,7 +1090,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(gotRows.length === got.size, "pair emitted more than once")
     // straddling-chunk extraction sanity: every chunk layout bit is
     // covered exactly once (widths sum to 128, offsets contiguous)
-    val (ws, offs) = Dedup.chunkLayout128(h + 1)
+    val (ws, offs) = Dedup.chunkLayout(128, h + 1)
     assert(ws.sum === 128 && offs.zip(ws).map { case (o, w) => o + w } === offs.tail :+ 128)
     // identical text → identical fingerprint → hamming 0
     val twin = Seq(Doc(1, "alpha beta gamma"), Doc(2, "alpha beta gamma")).toDS.toDF
@@ -1162,6 +1162,8 @@ class OperatorsSpec extends AnyFunSuite {
       .collect()
     assert(hot.length === 20) // identical docs: one hot bucket per C(6,3) key
     assert(hot.forall(_.getLong(2) === 300L))
+    assert(Dedup.hotSimHashComboBuckets(df, "text", "doc_id").columns.toSeq ===
+      Seq("chunk", "value", "bucket_size"))
   }
 
   test("planted hot bucket: cap bounds the pair expansion, audit reports it (minhash)") {
@@ -1182,15 +1184,23 @@ class OperatorsSpec extends AnyFunSuite {
   test("planted hot bucket: cap bounds the pair expansion, audit reports it (simhash)") {
     val docs = (1L to 300L).map(i => Doc(i, "boilerplate header repeated everywhere"))
     val df = docs.toDS.toDF
-    val capped = Dedup
-      .simHashNearDups(df, "text", "doc_id", maxHamming = 3, maxBucket = 40)
-      .count()
-    assert(capped === 40L * 39 / 2, s"expected capped pair count, got $capped")
-    val hot = Dedup
-      .hotSimHashBuckets(df, "text", "doc_id", maxHamming = 3, maxBucket = 40)
-      .collect()
-    assert(hot.length === 4) // identical docs: one hot bucket per chunk
-    assert(hot.forall(_.getLong(2) === 300L))
+    // the 64-bit and 128-bit pigeonhole emitters with their audits
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, () => org.apache.spark.sql.DataFrame)](
+      ("simhash64",
+        () => Dedup.simHashNearDups(df, "text", "doc_id", maxHamming = 3, maxBucket = 40),
+        () => Dedup.hotSimHashBuckets(df, "text", "doc_id", maxHamming = 3, maxBucket = 40)),
+      ("simhash128",
+        () => Dedup.simHashNearDups128(df, "text", "doc_id", maxHamming = 3, maxBucket = 40),
+        () => Dedup.hotSimHash128Buckets(df, "text", "doc_id", maxHamming = 3, maxBucket = 40)))
+    for ((kind, pairs, audit) <- cases) {
+      val capped = pairs().count()
+      assert(capped === 40L * 39 / 2, s"$kind: expected capped pair count, got $capped")
+      val hotDf = audit()
+      assert(hotDf.columns.toSeq === Seq("chunk", "value", "bucket_size"), kind)
+      val hot = hotDf.collect()
+      assert(hot.length === 4, kind) // identical docs: one hot bucket per chunk
+      assert(hot.forall(_.getLong(2) === 300L), kind)
+    }
   }
 
   test("passage dedup: windows, cross-doc dup detection, fractions, stride, short docs") {
@@ -2080,7 +2090,7 @@ class OperatorsSpec extends AnyFunSuite {
         () => cbProbe(),
         () => Dedup.compactSimHashComboIndex(spark, cbIdx),
         () => {
-          val lazyOut = Dedup.simHashComboIncrementalLazy(
+          val lazyOut = Dedup.simHashPairsIncrementalLazy(
             echo(710000L), "text", "doc_id", cbIdx)
           val p = lazyOut.queryExecution.executedPlan.toString
           graft.CacheUtil.release(lazyOut)
@@ -2766,6 +2776,14 @@ class OperatorsSpec extends AnyFunSuite {
         docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
     }
     spark.sql("DROP TABLE IF EXISTS leak_sidx_chunks")
+    assertReleasable("simHashNearDupsIncrementalCombo") {
+      val idx = Dedup.writeSimHashComboIndex(
+        docs.filter($"doc_id" % 3 =!= 0), "text", "doc_id", "leak_cbidx",
+        maxHamming = 3, blocks = 6, buckets = 8)
+      Dedup.simHashNearDupsIncrementalCombo(
+        docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
+    }
+    spark.sql("DROP TABLE IF EXISTS leak_cbidx_combo")
     assertReleasable("decontaminate")(
       operators.Decontaminate.decontaminate(
         docs.filter($"doc_id" % 10 =!= 0), "text", "doc_id",

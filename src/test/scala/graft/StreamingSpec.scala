@@ -1794,6 +1794,59 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("simhash fold failure path: a throwing sink or append pins nothing and leaves the index unchanged (64/128/combo)") {
+    import graft.operators.{CompactLock, Dedup}
+    // The one SimHash fold pins the ledger read, the admitted delta, the
+    // capped members and the emitted pairs; each must be released on
+    // EVERY exit. Two failure points per key scheme: the sink throws
+    // (before the append), and the append throws after the sink ran (a
+    // held compaction sentinel makes it fail fast). Each must propagate,
+    // pin no persistent RDD, leave the index row count unchanged, and a
+    // retry must emit exactly what a clean run emits.
+    val (base, other) = rpTexts
+    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val kinds = Seq[(String, String => Dedup.SimHashFamilyIndex)](
+      "s64" -> (n => Dedup.writeSimHashIndex(corpus, "text", "doc_id", n, buckets = 4)),
+      "s128" -> (n => Dedup.writeSimHash128Index(corpus, "text", "doc_id", n, buckets = 4)),
+      "cb" -> (n => Dedup.writeSimHashComboIndex(
+        corpus, "text", "doc_id", n, maxHamming = 3, blocks = 6, buckets = 4)))
+    for ((kind, write) <- kinds) {
+      val clean = write(s"ff_${kind}_clean")
+      val idx = write(s"ff_$kind")
+      try {
+        val expected = pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", clean))
+        assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)),
+          s"$kind: clean run emitted $expected")
+        val rows = spark.table(idx.chunkTable).count()
+        def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+          val before = spark.sparkContext.getPersistentRDDs.keySet
+          val e = intercept[IllegalStateException](
+            Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
+          assert(e.getMessage.contains(message), s"$kind/$what: wrong error ${e.getMessage}")
+          val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+          assert(leaked.isEmpty, s"$kind/$what leaked persistent RDDs: $leaked")
+          assert(spark.table(idx.chunkTable).count() === rows, s"$kind/$what changed the index")
+        }
+        failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+        val lock = CompactLock.forTable(spark, idx.chunkTable)
+        val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        var sunk = -1L
+        CompactLock.acquire(fs, lock)
+        try failingRun("append", df => sunk = df.count(), "compaction")
+        finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+        assert(sunk === expected.size.toLong, s"$kind: the sink did not run before the append")
+        assert(pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
+          s"$kind: retry after the failures emitted differently from a clean run")
+      } finally
+        Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.chunkTable}`"))
+    }
+  }
+
   // ------------------- sink half of exactly-once (IdempotentSink) -------------------
   // ReplaySafe makes the INDEX idempotent; these gates prove the
   // emission-persistence half: the fold's `sink` callback commits the
