@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** The default `pin` of the pair builders: materialize, truncating
+    * lineage. Fold paths that need only a plan's schema pass `identity`.
+    */
+  private val checkpointed: DataFrame => DataFrame = _.localCheckpoint(true)
+
   // ------------------------------------------------------------ exact
 
   /** Exact dedup groups: fingerprint → keeper id + multiplicity.
@@ -379,17 +384,19 @@ object Dedup {
   /** Steps (1)+(2) of [[minHashCandidates]] from an already-banded
     * (_id, _band, _bucket, _lower) table — shared with the incremental
     * path, which bands the delta once and reuses it for both the
-    * within-delta self-join and the delta-vs-index join.
+    * within-delta self-join and the delta-vs-index join. `pin`
+    * materializes the capped members (both join sides read them);
+    * `identity` leaves the whole plan lazy, for its schema alone.
     */
   private def candidatePairsFromBanded(
       banded: DataFrame,
       bands: Int,
-      maxBucket: Int
+      maxBucket: Int,
+      pin: DataFrame => DataFrame = checkpointed
   ): DataFrame = {
-    val members = cappedMultiMembers(
+    val members = pin(cappedMultiMembers(
       banded.select(col("_band"), col("_bucket"), col("_id"), col("_lower")),
-      maxBucket, Seq("_band", "_bucket"))
-      .localCheckpoint(true)
+      maxBucket, Seq("_band", "_bucket")))
     members
       .as("a")
       .join(
@@ -722,10 +729,11 @@ object Dedup {
       if (knownFirstAttempt || ReplaySafe.noneSeen(seen)) None
       else Some(ReplaySafe.rowKeysPresent(
         rows.sparkSession.table(table), idColName, rids, rowKey))
-    writeBucketedTable(
-      present.fold(rows)(ReplaySafe.dropRowsPresent(rows, _, rowKey)),
-      table, nBuckets, bucketKeys, org.apache.spark.sql.SaveMode.Append)
-    present.foreach(graft.CacheUtil.release)
+    try
+      writeBucketedTable(
+        present.fold(rows)(ReplaySafe.dropRowsPresent(rows, _, rowKey)),
+        table, nBuckets, bucketKeys, org.apache.spark.sql.SaveMode.Append)
+    finally present.foreach(graft.CacheUtil.release)
   }
 
   /** Compact a bucketed index table after many appends. Every
@@ -1031,19 +1039,20 @@ object Dedup {
     minHashCandidatesFromAdmitted(admittedBands(delta, textCol, idCol, idx), idx)
 
   /** The delta's band rows admitted into the index's remaining bucket
-    * slots — the frame BOTH the probe and the append consume, exposed
-    * so [[minHashNearDupsIncrementalFold]] computes it once.
-    * Checkpointed; the caller releases it (directly, or via a result
-    * plan that references it).
+    * slots. Checkpointed; the caller releases it (directly, or via a
+    * result plan that references it).
     */
   private def admittedBands(
       delta: DataFrame,
       textCol: String,
       idCol: String,
-      idx: MinHashIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame =
-    admittedFromBanded(bandedRawChk(delta, textCol, idCol, idx), idx, excludeIds)
+      idx: MinHashIndex
+  ): DataFrame = {
+    val bandedRaw = bandedRawChk(delta, textCol, idCol, idx)
+    val banded = admitBanded(bandedRaw, idx).localCheckpoint(true)
+    graft.CacheUtil.release(bandedRaw)
+    banded
+  }
 
   /** The delta's banded rows, checkpointed — the signature compute,
     * shared by [[admittedBands]] and the fold's overlapped start. */
@@ -1058,26 +1067,25 @@ object Dedup {
       spread = false)
       .localCheckpoint(true)
 
-  /** Admission from a prebuilt banded frame; releases `bandedRaw`. */
-  private def admittedFromBanded(
+  /** Admission of a prebuilt banded frame, lazy — the frame BOTH the
+    * probe and the append consume, so callers checkpoint it.
+    */
+  private def admitBanded(
       bandedRaw: DataFrame,
       idx: MinHashIndex,
-      excludeIds: Option[DataFrame]
-  ): DataFrame = {
-    val banded = admittedAgainstIndexKeyed(
+      excludeIds: Option[DataFrame] = None
+  ): DataFrame =
+    admittedAgainstIndexKeyed(
       bandedRaw, idx.bandTable, idx.maxBucket, Seq("_band", "_bucket"), excludeIds)
-      .localCheckpoint(true)
-    graft.CacheUtil.release(bandedRaw)
-    banded
-  }
 
   private def minHashCandidatesFromAdmitted(
       banded: DataFrame,
       idx: MinHashIndex,
-      excludeIds: Option[DataFrame] = None
+      excludeIds: Option[DataFrame] = None,
+      pin: DataFrame => DataFrame = checkpointed
   ): DataFrame = {
     val spark = banded.sparkSession
-    val within = candidatePairsFromBanded(banded, idx.bands, idx.maxBucket)
+    val within = candidatePairsFromBanded(banded, idx.bands, idx.maxBucket, pin)
     val corpus = excludeIds.fold(spark.table(idx.bandTable))(
       ReplaySafe.excludeIds(spark.table(idx.bandTable), "_id", _))
     val cross = banded
@@ -1136,7 +1144,12 @@ object Dedup {
     * appends nothing and emits nothing — the index never grows twice
     * and the union of per-attempt emissions carries no duplicate pairs
     * (StreamingSpec gates this per fold family; st08 is the registry
-    * row).
+    * row). A replay the ledger proves committed
+    * ([[ReplaySafe.committed]]: every delta id in the shingle table with
+    * all `idx.bands` band rows) skips admission, probe, verification
+    * and both appends, and emits an empty frame. Every block the fold
+    * allocates is released on every exit: if the sink or an append
+    * throws, nothing stays pinned and a retry heals the index.
     */
   def minHashNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1155,61 +1168,83 @@ object Dedup {
     // replay completes exactly the missing rows. A crash between the
     // two appends heals: the committed table skips, the missing one
     // completes, and the shingle ledger still reads "unseen", so the
-    // never-delivered emissions are re-derived and re-emitted. All
-    // ledger reads snapshot the PRE-append state (eager checkpoints).
-    // both tables' ledger reads AND the delta id frame in ONE job
-    // (r19: the two eager seenIds scans were a measured ~0.3 s/fold of
-    // pure per-action overhead; second session fused the rids
-    // checkpoint in too — [[ReplaySafe.ledgerRead2]])
-    // the ledger read, the delta banding (the signature compute) and the
-    // delta shingle sets share no inputs — overlap their planning and
-    // jobs on concurrent driver threads ([[Overlap]], guide §2.6)
-    val (ledger, bandedRaw, deltaSh) = Overlap.par3(
-      () => ReplaySafe.ledgerRead2(
-        spark.table(idx.shingleTable), "_sid",
-        spark.table(idx.bandTable), "_id", delta, idCol),
+    // never-delivered emissions are re-derived and re-emitted. Both
+    // tables' ledger reads and the delta id frame are ONE eager job
+    // ([[ReplaySafe.ledgerRead2]]) that snapshots the PRE-append state.
+    // The ledger read with its attempt decision, the delta banding (the
+    // signature compute) and the delta shingle sets share no inputs —
+    // overlap their planning and jobs on concurrent driver threads
+    // ([[Overlap]])
+    val ((ledger, attempt), bandedRaw, deltaSh) = Overlap.par3(
+      () => {
+        val l = ReplaySafe.ledgerRead2(
+          spark.table(idx.shingleTable), "_sid",
+          spark.table(idx.bandTable), "_id", delta, idCol, keyColB = Some("_band"))
+        (l, ReplaySafe.classify(l, None, Some(idx.bands)))
+      },
       () => bandedRawChk(delta, textCol, idCol, idx),
       () => deltaShingles(delta, textCol, idCol, idx))
-    val (rids, seenSh, seenBand) = (ledger.rids, ledger.seenA, ledger.seenB)
-    // first-attempt fast path (r19): when NO delta id is in either
-    // table, every excludeIds anti join is a semantic no-op — skip the
-    // three broadcast antis (admission corpus, candidate corpus,
-    // verify shingles), the unseen-pair suppression (every emitted pair
-    // touches the delta by construction), and the shingle append's
-    // dropSeen (nothing to drop). A replay OR a torn append leaves ids
-    // in at least one table and keeps the full exclusion path.
-    val firstAttempt = ReplaySafe.noneSeen(ledger.seenAny)
-    val excl = if (firstAttempt) None else Some(rids)
-    val unseen =
-      if (firstAttempt) None else Some(ReplaySafe.unseenIds(rids, seenSh))
-    val admitted = admittedFromBanded(bandedRaw, idx, excl)
-    val cands = minHashCandidatesFromAdmitted(admitted, idx, excl)
-    // materializes the pair set BEFORE the appends mutate the tables.
-    // sidesDisjoint holds on BOTH fold branches: excl removes every
-    // delta id from the corpus side, and the fast path certified no
-    // delta id is stored at all.
-    val out = verifyMinHashIncremental(
-      cands, deltaSh, threshold, idx, excl, unseen, sidesDisjoint = true)
-    // sink BEFORE the ledger appends ([[IdempotentSink]]): once they
-    // commit, a replay (correctly) emits nothing — emissions not yet
-    // persisted by then would be lost
-    sink.foreach(_(out))
-    // the two table appends are independent (different tables; the
-    // replay heal reads only the band table) — overlap them (§2.6)
-    Overlap.par2(
-      () => appendRowHealed(
-        admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
-        Seq("_id", "_band"), "_id", rids, seenBand, firstAttempt),
-      () => writeBucketedTable(
-        if (firstAttempt) deltaSh
-        else ReplaySafe.dropSeen(deltaSh, "_sid", seenSh),
-        idx.shingleTable, idx.buckets, Seq("_sid"),
-        org.apache.spark.sql.SaveMode.Append))
-    graft.CacheUtil.release(cands) // also frees `admitted` in its lineage
-    graft.CacheUtil.release(deltaSh)
-    // rids/seenSh/seenBand/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
+    var admitted: DataFrame = null
+    var cands: DataFrame = null
+    var out: DataFrame = null
+    try {
+      val (rids, seenSh, seenBand) = (ledger.rids, ledger.seenA, ledger.seenB)
+      // first-attempt fast path (r19): when NO delta id is in either
+      // table, every excludeIds anti join is a semantic no-op — skip the
+      // three broadcast antis (admission corpus, candidate corpus,
+      // verify shingles), the unseen-pair suppression (every emitted pair
+      // touches the delta by construction), and the shingle append's
+      // dropSeen (nothing to drop). A replay OR a torn append leaves ids
+      // in at least one table and keeps the full exclusion path.
+      val firstAttempt = attempt == ReplaySafe.FirstAttempt
+      val excl = if (firstAttempt) None else Some(rids)
+      val unseen =
+        if (firstAttempt) None else Some(ReplaySafe.unseenIds(rids, seenSh))
+      def admit = admitBanded(bandedRaw, idx, excl)
+      // sidesDisjoint holds on BOTH probe branches: excl removes every
+      // delta id from the corpus side, and the fast path certified no
+      // delta id is stored at all
+      def verify(candidates: DataFrame, pin: DataFrame => DataFrame): DataFrame =
+        verifyMinHashIncremental(
+          candidates, deltaSh, threshold, idx, excl, unseen, sidesDisjoint = true, pin)
+      if (attempt == ReplaySafe.Committed) {
+        // the slow path's schema from its lazy plan — no job runs
+        out = ReplaySafe.emptyLike(
+          verify(minHashCandidatesFromAdmitted(admit, idx, excl, identity), identity))
+        sink.foreach(_(out))
+      } else {
+        admitted = admit.localCheckpoint(true)
+        graft.CacheUtil.release(bandedRaw)
+        cands = minHashCandidatesFromAdmitted(admitted, idx, excl)
+        // materializes the pair set BEFORE the appends mutate the tables
+        out = verify(cands, checkpointed)
+        // sink BEFORE the ledger appends ([[IdempotentSink]]): once they
+        // commit, a replay (correctly) emits nothing — emissions not yet
+        // persisted by then would be lost
+        sink.foreach(_(out))
+        // the two table appends are independent (different tables; the
+        // replay heal reads only the band table) — overlap them (§2.6)
+        Overlap.par2(
+          () => appendRowHealed(
+            admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
+            Seq("_id", "_band"), "_id", rids, seenBand, firstAttempt),
+          () => writeBucketedTable(
+            if (firstAttempt) deltaSh
+            else ReplaySafe.dropSeen(deltaSh, "_sid", seenSh),
+            idx.shingleTable, idx.buckets, Seq("_sid"),
+            org.apache.spark.sql.SaveMode.Append))
+      }
+      out
+    } catch {
+      case e: Throwable =>
+        Option(out).foreach(graft.CacheUtil.release)
+        throw e
+    } finally {
+      // cands' plan reaches the capped members and `admitted`;
+      // rids/seenSh/seenBand/unseen are lazy views over the ledger cache
+      Seq(bandedRaw, admitted, cands, deltaSh, ledger.tagged)
+        .filter(_ != null).foreach(graft.CacheUtil.release)
+    }
   }
 
   private def deltaShingles(
@@ -1226,8 +1261,9 @@ object Dedup {
       .localCheckpoint(true)
 
   /** Exact-Jaccard verification of incremental candidates: each side
-    * resolves against corpus-then-delta shingles. Returns a CHECKPOINTED
-    * frame; the caller releases `cands`/`deltaSh` afterwards.
+    * resolves against corpus-then-delta shingles. Returns the result
+    * through `pin` — CHECKPOINTED by default; the caller releases
+    * `cands`/`deltaSh` afterwards.
     */
   private def verifyMinHashIncremental(
       cands: DataFrame,
@@ -1236,7 +1272,8 @@ object Dedup {
       idx: MinHashIndex,
       excludeIds: Option[DataFrame] = None,
       touchingUnseen: Option[DataFrame] = None,
-      sidesDisjoint: Boolean = false
+      sidesDisjoint: Boolean = false,
+      pin: DataFrame => DataFrame = checkpointed
   ): DataFrame = {
     val table = cands.sparkSession.table(idx.shingleTable)
     val corpusSh =
@@ -1274,9 +1311,8 @@ object Dedup {
           .filter(col("jaccard") >= threshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
       }
-    touchingUnseen
-      .fold(verified)(ReplaySafe.keepPairsTouchingUnseen(verified, "id_a", "id_b", _))
-      .localCheckpoint(true)
+    pin(touchingUnseen
+      .fold(verified)(ReplaySafe.keepPairsTouchingUnseen(verified, "id_a", "id_b", _)))
   }
 
   // -------------------------------------------------------------- SimHash
@@ -1570,16 +1606,19 @@ object Dedup {
     * the cap so it never triggers; at large radii the chunks are narrow
     * (h=10 → 11 chunks of 5-6 bits → ≤64 values per chunk), so a 100 TB
     * corpus NEEDS the cap.
+    *
+    * `pin` materializes the capped membership (default: localCheckpoint);
+    * `identity` leaves the plan lazy, for its schema alone.
     */
   private def simHashPairsFromKeyed(
       keyed: DataFrame,
       keys: SimHashKeys,
-      maxBucket: Int
+      maxBucket: Int,
+      pin: DataFrame => DataFrame = checkpointed
   ): DataFrame = {
-    val members = cappedMultiMembers(
+    val members = pin(cappedMultiMembers(
       keyed.select((Seq("_chunk", "_val", "_id") ++ keys.hashCols).map(col): _*),
-      maxBucket, Seq("_chunk", "_val"))
-      .localCheckpoint(true)
+      maxBucket, Seq("_chunk", "_val")))
     members
       .as("a")
       .join(
@@ -1917,7 +1956,10 @@ object Dedup {
     * re-admission recomputes deterministically against the
     * delta-excluded corpus, so the replayed append writes the same
     * (empty) row set. `sink` persists the emissions BEFORE the ledger
-    * append ([[IdempotentSink]]). Every block the fold allocates is
+    * append ([[IdempotentSink]]). A replay the ledger proves committed
+    * ([[ReplaySafe.committed]]: every delta id holds all of its
+    * `idx.keys.subsets.length` key rows) skips admission, probe and
+    * append, and emits an empty frame. Every block the fold allocates is
     * released on every exit: if the sink or the append throws, nothing
     * stays pinned and the index is unchanged or row-healed by a retry.
     */
@@ -1929,12 +1971,15 @@ object Dedup {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    // one-job ledger read (the table's seen set + the delta id frame,
-    // [[ReplaySafe.ledgerRead]]) ∥ delta keying (the simhash compute):
-    // they share no inputs ([[Overlap]], guide §2.6)
-    val (ledger, keyedRaw) = Overlap.par2(
-      () => ReplaySafe.ledgerRead(
-        spark.table(idx.chunkTable), "_id", delta, idCol),
+    // one-job ledger read (the table's seen rows + the delta id frame,
+    // [[ReplaySafe.ledgerRead]]) with its attempt decision ∥ delta
+    // keying (the simhash compute): they share no inputs ([[Overlap]])
+    val ((ledger, attempt), keyedRaw) = Overlap.par2(
+      () => {
+        val l = ReplaySafe.ledgerRead(
+          spark.table(idx.chunkTable), "_id", delta, idCol, keyCol = Some("_chunk"))
+        (l, ReplaySafe.classify(l, Some(idx.keys.subsets.length)))
+      },
       () => idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
         .localCheckpoint(true))
     // `pinned` reaches every delta-side block still held (the raw keying
@@ -1947,24 +1992,32 @@ object Dedup {
       // makes every excludeIds anti join a semantic no-op — skip them,
       // and skip the unseen-pair suppression too (with nothing seen,
       // every emitted pair touches an unseen doc by construction)
-      val firstAttempt = ReplaySafe.noneSeen(seen)
+      val firstAttempt = attempt == ReplaySafe.FirstAttempt
       val excl = if (firstAttempt) None else Some(rids)
-      val keyed = admittedAgainstIndex(
-        keyedRaw, idx.chunkTable, idx.maxBucket, excl).localCheckpoint(true)
-      graft.CacheUtil.release(keyedRaw)
-      pinned = keyed
-      val rawPairs = simHashPairsFromAdmitted(keyed, idx, excl)
-      pinned = rawPairs
-      val lazyPairs =
+      def admit = admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket, excl)
+      def probe(keyed: DataFrame, pin: DataFrame => DataFrame): DataFrame = {
+        val rawPairs = simHashPairsFromAdmitted(keyed, idx, excl, pin)
         if (firstAttempt) rawPairs
         else ReplaySafe.keepPairsTouchingUnseen(
           rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
-      // materializes the pair set BEFORE the append mutates the table
-      out = lazyPairs.localCheckpoint(true)
-      sink.foreach(_(out))
-      appendRowHealed(
-        keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-        Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
+      }
+      if (attempt == ReplaySafe.Committed) {
+        // the slow path's schema from its lazy plan — no job runs
+        out = ReplaySafe.emptyLike(probe(admit, identity))
+        sink.foreach(_(out))
+      } else {
+        val keyed = admit.localCheckpoint(true)
+        graft.CacheUtil.release(keyedRaw)
+        pinned = keyed
+        val lazyPairs = probe(keyed, checkpointed)
+        pinned = lazyPairs
+        // materializes the pair set BEFORE the append mutates the table
+        out = lazyPairs.localCheckpoint(true)
+        sink.foreach(_(out))
+        appendRowHealed(
+          keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
+          Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
+      }
       out
     } catch {
       case e: Throwable =>
@@ -1998,11 +2051,12 @@ object Dedup {
   private def simHashPairsFromAdmitted(
       keyed: DataFrame,
       idx: SimHashFamilyIndex,
-      excludeIds: Option[DataFrame] = None
+      excludeIds: Option[DataFrame] = None,
+      pin: DataFrame => DataFrame = checkpointed
   ): DataFrame = {
     val spark = keyed.sparkSession
     val keys = idx.keys
-    val within = simHashPairsFromKeyed(keyed, keys, idx.maxBucket)
+    val within = simHashPairsFromKeyed(keyed, keys, idx.maxBucket, pin)
     val corpus = excludeIds.fold(spark.table(idx.chunkTable))(
       ReplaySafe.excludeIds(spark.table(idx.chunkTable), "_id", _))
     val cross = keyed

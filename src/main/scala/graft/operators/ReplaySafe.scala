@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** At-least-once replay safety for the probe-then-append fold family
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * bookkeeping, no extra commit protocol, so it composes with ANY
   * at-least-once caller, not just Structured Streaming:
   *
-  *  - [[seenIds]]: delta ids already present in an id-bearing index
+  *  - [[ledgerRead]]: delta ids already present in an id-bearing index
   *    table (a column-pruned corpus scan behind a broadcast semi join —
   *    the corpus side keeps its bucketed zero-Exchange scan shape).
   *    Empty on a first attempt; the whole delta after a committed
@@ -77,6 +77,27 @@ import org.apache.spark.sql.functions._
   * sink path below, which is why at-least-once callers should pass a
   * sink rather than rely on the ledger alone.
   *
+  * Committed replay: the common replay is of a micro-batch whose
+  * appends all committed, and for it the slow path above re-derives
+  * banding, admission, candidates and verification only for
+  * [[keepPairsTouchingUnseen]] and [[dropRowsPresent]] to discard every
+  * result. [[committed]] recognizes it from the ledger checkpoint
+  * alone: every delta id is in each one-row-per-id table, and holds all
+  * `n` distinct row keys `[0, n)` of each multi-row-per-id table (the
+  * keys a clean fold stores — bands, SimHash keys). The check is exact
+  * for that state: with every id in the emission ledger the unseen set
+  * is empty, so the slow path emits nothing; with every (id, key) row
+  * present its row-level heal drops every admitted row (admitted keys
+  * lie in `[0, n)`), so it appends nothing. A fold that finds it
+  * ([[classify]] ⇒ [[Committed]]) skips admission, probe, verification
+  * and every append and hands its sink an empty frame of the slow
+  * path's schema ([[emptyLike]]). Every other replay keeps the slow
+  * path: a torn append (an id or one of its rows missing), a doc the
+  * bucket cap kept out of some band or key (fewer than `n` rows stored
+  * by design), a partially seen delta. Counting DISTINCT keys in range,
+  * not rows, keeps a duplicated or stray row from standing in for a
+  * missing one.
+  *
   * What this does NOT give by itself: a crash after BOTH the appends
   * and the fold's return but before the caller persisted the emissions
   * loses those emissions (the replay suppresses them). That is the
@@ -88,20 +109,7 @@ import org.apache.spark.sql.functions._
   * canonical callback. A fold called without a sink keeps the
   * document-it-yourself contract above.
   */
-private[operators] object ReplaySafe {
-
-  /** The delta's ids as a one-column `_rid` frame. Not distinct — it is
-    * only ever the broadcast side of semi/anti joins, where duplicates
-    * cannot change the result (delta ids are unique per the family
-    * contract anyway). MATERIALIZED (localCheckpoint) so that the lazy
-    * probe plans it is spliced into reference a leaf of OURS, never the
-    * caller's delta blocks — `CacheUtil.release` walks the whole plan,
-    * and a fold releasing its internal lazy frames must not free the
-    * caller's checkpoints (the fold-family release contract). Folds
-    * release it before returning.
-    */
-  def ids(delta: DataFrame, idCol: String): DataFrame =
-    delta.select(col(idCol).as("_rid")).localCheckpoint(true)
+private[graft] object ReplaySafe {
 
   /** `corpus` without the delta's ids: a broadcast anti join, so the
     * corpus side keeps its bucketed, Exchange-free scan shape. On a
@@ -110,81 +118,89 @@ private[operators] object ReplaySafe {
   def excludeIds(corpus: DataFrame, idColName: String, ids: DataFrame): DataFrame =
     corpus.join(broadcast(ids), corpus(idColName) === ids("_rid"), "left_anti")
 
-  /** Delta ids already present in `corpus(idColName)` — the replay
-    * ledger read. Materialized eagerly (it must snapshot the PRE-append
-    * state, and it feeds several later filters); tiny by construction
-    * (≤ the micro-batch's rows in the table). NOT deduped (r19): the
-    * semi join emits one row per matching corpus ROW (a multi-row-per-id
-    * table yields repeats), and a distinct here cost an Exchange + two
-    * HashAggregates + an AQE stage round on EVERY fold's ledger read —
-    * per-batch overhead paid at any scale. Every consumer tolerates
-    * duplicates: [[noneSeen]] is emptiness, [[dropSeen]]/[[unseenIds]]
-    * broadcast it into anti joins whose hash-relation build dedups keys
-    * anyway (the same argument as the admission scan's r19
-    * distinct-removal). Consumers that need a per-id view must dedup
-    * themselves. Callers release.
-    */
-  def seenIds(corpus: DataFrame, idColName: String, ids: DataFrame): DataFrame =
-    corpus
-      .select(col(idColName).as("_rid"))
-      .join(broadcast(ids), Seq("_rid"), "left_semi")
-      .localCheckpoint(true)
-
   /** True iff some delta id is NOT in `seen` — "does this batch carry
     * anything new" in ONE take(1)-style job over two materialized
-    * frames (replaces the two-count comparison that broke under
-    * [[seenIds]]'s duplicate rows, and is cheaper than either count).
+    * frames (replaces the two-count comparison that broke under the
+    * ledger's duplicate seen rows, and is cheaper than either count).
     */
   def anyUnseen(ids: DataFrame, seen: DataFrame): Boolean =
     !ids.join(broadcast(seen), Seq("_rid"), "left_anti").isEmpty
 
-  /** The fold's whole per-batch ledger read in ONE materialized job
-    * (r19, second session): the delta's id frame ([[ids]]) and the
-    * table's seen-id set ([[seenIds]]) were two eager checkpoints per
-    * fold; tag-union them instead (tag 0 = seen, tag 2 = the delta
-    * ids) and checkpoint once. Returns (rids, seen, tagged): rids and
-    * seen are lazy filters over the cached `tagged` blocks — safe to
-    * splice into probe plans and to broadcast, exactly like the frames
-    * they replace, because after the checkpoint their plans reference
-    * ONLY our LogicalRDD leaf, never the caller's delta blocks
-    * ([[graft.CacheUtil.release]] walks to LogicalRDD leaves). The
-    * caller releases `tagged`.
+  /** Views over one [[ledgerRead]]/[[ledgerRead2]] checkpoint `tagged`
+    * (`_rid`, `_t`, `_k`): `_t` is 0 or 1 for the delta ids table A or
+    * B already holds (one row per stored ROW, not per id — see
+    * [[ledgerRead]]) and 2 for the delta's own ids; `_k` is the row key
+    * of a multi-row-per-id table (NULL for one-row-per-id tables and
+    * the delta ids). `rids` = the delta's ids, `seenA`/`seenB` = per-table
+    * seen sets (equal for the one-table form), `seenAny` = their union
+    * (the first-attempt test: `noneSeen(seenAny)`). The views are lazy
+    * filters over the cached `tagged` blocks — safe to splice into probe
+    * plans and to broadcast, because after the checkpoint their plans
+    * reference ONLY our LogicalRDD leaf, never the caller's delta blocks
+    * ([[graft.CacheUtil.release]] walks to LogicalRDD leaves). The caller
+    * releases `tagged`.
     */
-  /** Views over one [[ledgerRead]]/[[ledgerRead2]] checkpoint: `rids`
-    * = the delta's ids, `seenA`/`seenB` = per-table seen sets (equal
-    * for the one-table form), `seenAny` = their union (the
-    * first-attempt test: `noneSeen(seenAny)`), `tagged` = the cached
-    * frame to release.
-    */
-  final case class Ledger(
-      rids: DataFrame,
-      seenA: DataFrame,
-      seenB: DataFrame,
-      seenAny: DataFrame,
-      tagged: DataFrame)
+  final case class Ledger(tagged: DataFrame, tables: Int) {
+    private def tag(t: Int): DataFrame = tagged.filter(col("_t") === t).select(col("_rid"))
+    lazy val rids: DataFrame = tag(2)
+    lazy val seenA: DataFrame = tag(0)
+    lazy val seenB: DataFrame = if (tables == 1) seenA else tag(1)
+    lazy val seenAny: DataFrame =
+      if (tables == 1) seenA else tagged.filter(col("_t") =!= 2).select(col("_rid"))
+  }
 
+  /** One ledger table's leg: the delta ids `corpus` holds, one row per
+    * stored row, with the row key `keyCol` as `_k` for a
+    * multi-row-per-id table. NOT deduped (r19): a distinct here cost an
+    * Exchange + two HashAggregates + an AQE stage round on EVERY fold's
+    * ledger read. Every consumer tolerates duplicates: [[noneSeen]] is
+    * emptiness, [[dropSeen]]/[[unseenIds]] broadcast the seen set into
+    * anti joins whose hash-relation build dedups keys anyway, and
+    * [[committed]] counts distinct keys.
+    */
+  private def seenLeg(
+      corpus: DataFrame,
+      idColName: String,
+      keyCol: Option[String],
+      ids: DataFrame,
+      t: Int
+  ): DataFrame =
+    corpus
+      .select(col(idColName).as("_rid"), keyCol.fold(lit(null).cast("int"))(col).as("_k"))
+      .join(broadcast(ids), Seq("_rid"), "left_semi")
+      .withColumn("_t", lit(t))
+
+  /** The fold's whole per-batch replay-ledger read in ONE materialized
+    * job (r19): the delta ids `corpus(idColName)` already holds
+    * (a column-pruned corpus scan behind a broadcast semi join — the
+    * corpus side keeps its bucketed zero-Exchange scan shape) tag-unioned
+    * with the delta's id frame, and checkpointed once. Materialized
+    * eagerly: it must snapshot the PRE-append state, and it feeds
+    * several later filters. Tiny by construction (≤ the micro-batch's
+    * rows in the table). The seen set is empty on a first attempt, the
+    * whole delta after a committed append, and a strict subset after a
+    * TORN append (every consumer of it is per-id, so a subset is
+    * handled, not an error state). `keyCol` names the row key of a
+    * multi-row-per-id table, carried for [[committed]].
+    */
   def ledgerRead(
       corpus: DataFrame,
       idColName: String,
       delta: DataFrame,
-      idCol: String
+      idCol: String,
+      keyCol: Option[String] = None
   ): Ledger = {
     val ids = delta.select(col(idCol).as("_rid"))
-    val tagged = corpus
-      .select(col(idColName).as("_rid"))
-      .join(broadcast(ids), Seq("_rid"), "left_semi")
-      .withColumn("_t", lit(0))
-      .unionByName(ids.withColumn("_t", lit(2)))
+    val tagged = seenLeg(corpus, idColName, keyCol, ids, 0)
+      .unionByName(deltaLeg(ids))
       .localCheckpoint(true)
-    val seen = tagged.filter(col("_t") === 0).select(col("_rid"))
-    Ledger(
-      tagged.filter(col("_t") === 2).select(col("_rid")),
-      seen, seen, seen, tagged)
+    Ledger(tagged, tables = 1)
   }
 
   /** Two-table twin of [[ledgerRead]] — the minhash / vector-LSH fold
     * shape: both tables' seen sets AND the delta id frame in one
-    * checkpointed job.
+    * checkpointed job. `keyColB` names table B's row key when B holds
+    * several rows per id.
     */
   def ledgerRead2(
       corpusA: DataFrame,
@@ -192,25 +208,98 @@ private[operators] object ReplaySafe {
       corpusB: DataFrame,
       idColB: String,
       delta: DataFrame,
-      idCol: String
+      idCol: String,
+      keyColB: Option[String] = None
   ): Ledger = {
     val ids = delta.select(col(idCol).as("_rid"))
-    def leg(corpus: DataFrame, c: String, t: Int): DataFrame =
-      corpus
-        .select(col(c).as("_rid"))
-        .join(broadcast(ids), Seq("_rid"), "left_semi")
-        .withColumn("_t", lit(t))
-    val tagged = leg(corpusA, idColA, 0)
-      .unionByName(leg(corpusB, idColB, 1))
-      .unionByName(ids.withColumn("_t", lit(2)))
+    val tagged = seenLeg(corpusA, idColA, None, ids, 0)
+      .unionByName(seenLeg(corpusB, idColB, keyColB, ids, 1))
+      .unionByName(deltaLeg(ids))
       .localCheckpoint(true)
-    Ledger(
-      tagged.filter(col("_t") === 2).select(col("_rid")),
-      tagged.filter(col("_t") === 0).select(col("_rid")),
-      tagged.filter(col("_t") === 1).select(col("_rid")),
-      tagged.filter(col("_t") =!= 2).select(col("_rid")),
-      tagged)
+    Ledger(tagged, tables = 2)
   }
+
+  private def deltaLeg(ids: DataFrame): DataFrame =
+    ids.withColumn("_k", lit(null).cast("int")).withColumn("_t", lit(2))
+
+  /** True iff the ledger proves the whole micro-batch already folded:
+    * every delta id is in each ledger table, with all of its rows.
+    * `keysPerDoc` has one entry per ledger table, in `_t` order: `None`
+    * for a one-row-per-id table (the id must be present), `Some(n)` for
+    * a multi-row-per-id table whose clean fold stores keys `[0, n)` per
+    * id (minhash `_band`, SimHash `_chunk`) — the id must hold all `n`
+    * DISTINCT keys in that range, so a duplicated row cannot stand in for
+    * a missing one and a stray key outside it counts for nothing.
+    *
+    * Reads only the ledger checkpoint, never the index. The per-id
+    * grouping is one RDD shuffle counted in ONE job: the same aggregate
+    * as a DataFrame costs an adaptive shuffle-stage job plus a result
+    * job, and this check sits on the replay's critical path. Ledger rows
+    * are the delta's stored rows, so the shuffle is micro-batch sized.
+    * Only asked on a replay ([[classify]]), so a first attempt never
+    * pays for it.
+    */
+  def committed(ledger: Ledger, keysPerDoc: Option[Int]*): Boolean = {
+    require(keysPerDoc.size == ledger.tables,
+      s"one keysPerDoc entry per ledger table: ${ledger.tables}, got ${keysPerDoc.size}")
+    val (t, k) = (col("_t"), col("_k"))
+    // the slot a seen row fills in its table: 0 in a one-row-per-id
+    // table, its key in a multi-row one (NULL when out of range — and
+    // for the delta's own id rows, which only make the id a group)
+    val slot = keysPerDoc.zipWithIndex.foldLeft(lit(null).cast("int")) {
+      case (other, (n, i)) =>
+        when(t === i, n.fold(lit(0))(n => when(k >= 0 && k < n, k))).otherwise(other)
+    }
+    val need = keysPerDoc.map(_.getOrElse(1))
+    ledger.tagged
+      .select(col("_rid"), t, slot)
+      .rdd
+      .map { r =>
+        (r.get(0), if (r.isNullAt(2)) Set.empty[(Int, Int)] else Set((r.getInt(1), r.getInt(2))))
+      }
+      .reduceByKey(_ ++ _, ledger.tagged.sparkSession.sparkContext.defaultParallelism)
+      .filter { case (_, held) => need.indices.exists(i => held.count(_._1 == i) < need(i)) }
+      .count() == 0
+  }
+
+  /** What a fold does with this micro-batch, decided from its ledger. */
+  sealed trait Attempt
+
+  /** No delta id in any ledger table: the plain probe and appends. */
+  case object FirstAttempt extends Attempt
+
+  /** Some delta ids seen, not all fully folded: the exclusion path, with
+    * row-level append healing.
+    */
+  case object Replay extends Attempt
+
+  /** Every delta id fully folded ([[committed]]): emit nothing and
+    * append nothing, without probing.
+    */
+  case object Committed extends Attempt
+
+  /** [[noneSeen]], then on a replay [[committed]] — the two decisions a
+    * fold's ledger thunk makes while its signature compute runs
+    * ([[Overlap]]). Releases the ledger if either check throws.
+    */
+  def classify(ledger: Ledger, keysPerDoc: Option[Int]*): Attempt =
+    try {
+      if (noneSeen(ledger.seenAny)) FirstAttempt
+      else if (committed(ledger, keysPerDoc: _*)) Committed
+      else Replay
+    } catch {
+      case e: Throwable =>
+        graft.CacheUtil.release(ledger.tagged)
+        throw e
+    }
+
+  /** An empty frame with `shape`'s schema, built without running
+    * `shape` (no action, no job) — a [[Committed]] fold's emission.
+    * Folds pass the slow path's own lazy plan, so the schema (names,
+    * types, nullability) is the slow path's by construction.
+    */
+  def emptyLike(shape: DataFrame): DataFrame =
+    shape.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](), shape.schema)
 
   /** Delta ids NOT in `seen` — the docs whose emissions have never been
     * handed to a caller. LAZY over its two materialized inputs (a pure
@@ -226,45 +315,13 @@ private[operators] object ReplaySafe {
       .join(broadcast(seen), Seq("_rid"), "left_anti")
       .distinct()
 
-  /** The TWO-TABLE fold families' ledger read (minhash bands+shingles,
-    * vector-LSH bands+vecs) in ONE job instead of two: both tables'
-    * seen-id sets computed through a tag-unioned scan and checkpointed
-    * once. Returns (seenA, seenB, tagged) — seenA/seenB are lazy
-    * filters over the cached `tagged` blocks (usable everywhere a
-    * [[seenIds]] frame is, including [[noneSeen]]); the caller releases
-    * `tagged` (releasing the children hits the same blocks).
-    */
-  def seenIds2(
-      corpusA: DataFrame,
-      idColA: String,
-      corpusB: DataFrame,
-      idColB: String,
-      ids: DataFrame
-  ): (DataFrame, DataFrame, DataFrame) = {
-    // legs are NOT deduped — same rationale and same consumer contract
-    // as [[seenIds]] (r19): dropping the per-leg distinct removes the
-    // only Exchange from the fused ledger read, leaving one scan-shaped
-    // job per fold instead of a multi-stage AQE round
-    def leg(corpus: DataFrame, idCol: String, t: Int): DataFrame =
-      corpus
-        .select(col(idCol).as("_rid"))
-        .join(broadcast(ids), Seq("_rid"), "left_semi")
-        .withColumn("_t", lit(t))
-    val tagged = leg(corpusA, idColA, 0)
-      .unionByName(leg(corpusB, idColB, 1))
-      .localCheckpoint(true)
-    (tagged.filter(col("_t") === 0).select(col("_rid")),
-      tagged.filter(col("_t") === 1).select(col("_rid")),
-      tagged)
-  }
-
   /** Rows of `df` whose `colName` is not in `seen` (broadcast anti) —
     * the append filter, and the emission filter for per-doc outputs.
     */
   def dropSeen(df: DataFrame, colName: String, seen: DataFrame): DataFrame =
     df.join(broadcast(seen), df(colName) === seen("_rid"), "left_anti")
 
-  /** True iff `seen` (a materialized [[seenIds]] frame) is empty — the
+  /** True iff `seen` (a [[Ledger]] seen view) is empty — the
     * first-attempt fast path. When NO delta id has rows in a table, the
     * plain append is already correct, so the fold skips the row-level
     * heal ([[rowKeysPresent]]/[[dropRowsPresent]]) entirely and the

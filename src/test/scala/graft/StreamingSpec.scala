@@ -1847,6 +1847,219 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("minhash fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's pairs") {
+    import graft.operators.{CompactLock, Dedup}
+    // The MinHash fold pins the ledger read, the raw and admitted delta
+    // banding, the capped members, the delta shingles and the emitted
+    // pairs; each must be released on EVERY exit. Two failure points:
+    // the sink throws (before any append), and the shingle append throws
+    // after the sink ran (a held compaction sentinel on the emission
+    // ledger makes it fail fast; the overlapped band append may still
+    // commit — the torn state the retry must heal).
+    val (base, other) = rpTexts
+    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val clean = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff_clean", buckets = 4)
+    val idx = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff", buckets = 4)
+    def counts(i: Dedup.MinHashIndex) =
+      Seq(i.bandTable, i.shingleTable).map(spark.table(_).count())
+    try {
+      val expected = pairs(
+        Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, clean))
+      assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)), s"clean run emitted $expected")
+      val shRows = spark.table(idx.shingleTable).count()
+      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalStateException](
+          Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx, Some(sink)))
+        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
+        assert(spark.table(idx.shingleTable).count() === shRows, s"$what changed the shingle ledger")
+      }
+      val untouched = counts(idx)
+      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+      assert(counts(idx) === untouched, "a throwing sink let an append through")
+      val lock = CompactLock.forTable(spark, idx.shingleTable)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var sunk = -1L
+      CompactLock.acquire(fs, lock)
+      try failingRun("append", df => sunk = df.count(), "compaction")
+      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+      assert(sunk === expected.size.toLong, "the sink did not run before the append")
+      assert(pairs(Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx))
+        === expected, "retry after the failures emitted differently from a clean run")
+      assert(counts(idx) === counts(clean), "retry did not converge to the clean fold's index")
+    } finally
+      Seq(clean, idx).foreach(i =>
+        Seq(i.bandTable, i.shingleTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
+  }
+
+  // ------------------- committed replay short-circuit -------------------
+  // A replay of a micro-batch whose appends all committed must cost a
+  // ledger read, not a second fold: ReplaySafe.committed proves it from
+  // the ledger checkpoint, and the fold then emits an empty frame of the
+  // slow path's schema without probing or appending.
+
+  /** Spark jobs started while `f` runs (listener events post
+    * asynchronously; a short settle covers them at fixture scale).
+    */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("committed replay short-circuits: empty output of the first attempt's schema, one sink call, no index change, ≤ 6 jobs (minhash, simhash 64/128/combo)") {
+    import graft.operators.Dedup
+    val (base, other) = rpTexts
+    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    val delta = Seq((10L, base), (11L, base),
+      (12L, "completely fresh words nothing shared here at all right now")
+    ).toDF("doc_id", "text").localCheckpoint(true)
+    def gate(
+        family: String,
+        tables: Seq[String],
+        fold: Option[DataFrame => Unit] => DataFrame): Unit = {
+      val first = fold(None)
+      val schema = first.schema
+      val emitted = first.count()
+      graft.CacheUtil.release(first)
+      assert(emitted > 0L, s"$family: first attempt emitted nothing — gate vacuous")
+      val rows = tables.map(spark.table(_).count())
+      val sunk = scala.collection.mutable.ArrayBuffer[DataFrame]()
+      val (out, jobs) = jobsDuring(fold(Some(sunk += _)))
+      assert(jobs <= 6, s"$family: committed replay ran $jobs jobs — the slow path?")
+      assert(out.schema === schema, s"$family: replay schema ${out.schema} != first attempt's $schema")
+      assert(out.count() === 0L, s"$family: committed replay emitted rows")
+      assert(sunk.size === 1, s"$family: sink called ${sunk.size} times")
+      assert(sunk.head.schema === schema && sunk.head.count() === 0L,
+        s"$family: sink got a non-empty or differently shaped frame")
+      assert(tables.map(spark.table(_).count()) === rows, s"$family: replay changed the index")
+      graft.CacheUtil.release(out)
+    }
+    val mh = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "cr_mh", buckets = 4)
+    val s64 = Dedup.writeSimHashIndex(corpus, "text", "doc_id", "cr_s64", buckets = 4)
+    val s128 = Dedup.writeSimHash128Index(corpus, "text", "doc_id", "cr_s128", buckets = 4)
+    val cb = Dedup.writeSimHashComboIndex(
+      corpus, "text", "doc_id", "cr_cb", maxHamming = 3, blocks = 6, buckets = 4)
+    try {
+      gate("minhash", Seq(mh.bandTable, mh.shingleTable),
+        Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, mh, _))
+      for ((kind, i) <- Seq("s64" -> s64, "s128" -> s128, "cb" -> cb))
+        gate(kind, Seq(i.chunkTable), Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", i, _))
+    } finally {
+      graft.CacheUtil.release(delta)
+      Seq(mh.bandTable, mh.shingleTable, s64.chunkTable, s128.chunkTable, cb.chunkTable)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("replay under an ACTIVE cap keeps the slow path and converges (a doc capped out of its bands / keys)") {
+    import graft.operators.{Dedup, ReplaySafe}
+    // maxBucket = 2 and two identical corpus docs fill every bucket the
+    // delta's twin (id 10) hashes into: it stores shingles but no band
+    // rows, and no SimHash key rows. The fresh doc 12 stores everything,
+    // so the replay's ledger is non-empty but NOT committed — the fold
+    // must take the slow path, emit nothing and append nothing, and the
+    // index must still ingest like one that never saw the replay.
+    val (base, _) = rpTexts
+    val corpus = Seq((1L, base), (2L, base)).toDF("doc_id", "text")
+    val fresh = "completely fresh words nothing shared here at all right now"
+    val delta = Seq((10L, base), (12L, fresh)).toDF("doc_id", "text").localCheckpoint(true)
+    val d2 = Seq((20L, fresh)).toDF("doc_id", "text").localCheckpoint(true)
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    def ledgerCommitted(l: ReplaySafe.Ledger, keysPerDoc: Option[Int]*): Boolean =
+      try ReplaySafe.committed(l, keysPerDoc: _*) finally graft.CacheUtil.release(l.tagged)
+    val mh = Seq("a", "b").map(n =>
+      Dedup.writeMinHashIndex(corpus, "text", "doc_id", s"cap_mh_$n", buckets = 4, maxBucket = 2))
+    val sh = Seq("a", "b").map(n =>
+      Dedup.writeSimHashIndex(corpus, "text", "doc_id", s"cap_sh_$n", buckets = 4, maxBucket = 2))
+    try {
+      mh.foreach(i => pairs(Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, i)))
+      sh.foreach(i => pairs(Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", i)))
+      assert(spark.table(mh(0).bandTable).filter($"_id" === 10L).count() === 0L &&
+        spark.table(sh(0).chunkTable).filter($"_id" === 10L).count() === 0L,
+        "doc 10 was not capped out — fixture vacuous")
+      assert(!ledgerCommitted(ReplaySafe.ledgerRead2(
+        spark.table(mh(0).shingleTable), "_sid", spark.table(mh(0).bandTable), "_id",
+        delta, "doc_id", keyColB = Some("_band")), None, Some(mh(0).bands)))
+      assert(!ledgerCommitted(ReplaySafe.ledgerRead(
+        spark.table(sh(0).chunkTable), "_id", delta, "doc_id", keyCol = Some("_chunk")),
+        Some(sh(0).keys.subsets.length)))
+      val mhRows = Seq(mh(0).bandTable, mh(0).shingleTable).map(spark.table(_).count())
+      val shRows = spark.table(sh(0).chunkTable).count()
+      val (mhOut, mhJobs) = jobsDuring(pairs(
+        Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, mh(0))))
+      val (shOut, shJobs) = jobsDuring(pairs(
+        Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", sh(0))))
+      assert(mhJobs > 6 && shJobs > 6, s"capped replay short-circuited ($mhJobs, $shJobs jobs)")
+      assert(mhOut.isEmpty && shOut.isEmpty, s"capped replay re-emitted $mhOut $shOut")
+      assert(Seq(mh(0).bandTable, mh(0).shingleTable).map(spark.table(_).count()) === mhRows,
+        "capped minhash replay changed the index")
+      assert(spark.table(sh(0).chunkTable).count() === shRows, "capped simhash replay changed the index")
+      val mhNext = mh.map(i => pairs(Dedup.minHashNearDupsIncrementalFold(d2, "text", "doc_id", 0.4, i)))
+      val shNext = sh.map(i => pairs(Dedup.simHashNearDupsIncrementalFold(d2, "text", "doc_id", i)))
+      assert(mhNext(0) === mhNext(1) && mhNext(0).contains((12L, 20L)),
+        s"replayed minhash index diverged: $mhNext")
+      assert(shNext(0) === shNext(1) && shNext(0).contains((12L, 20L)),
+        s"replayed simhash index diverged: $shNext")
+    } finally {
+      graft.CacheUtil.release(delta)
+      graft.CacheUtil.release(d2)
+      (mh.flatMap(i => Seq(i.bandTable, i.shingleTable)) ++ sh.map(_.chunkTable))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("ReplaySafe.committed on hand-built ledgers: distinct in-range keys per id, every table, every id") {
+    import graft.operators.ReplaySafe
+    // rows: (_rid, _k, _t) — _t 0/1 = seen in table A/B, 2 = delta id
+    def ledger(tables: Int, rows: Seq[(Option[Long], Option[Int], Int)]): ReplaySafe.Ledger =
+      ReplaySafe.Ledger(rows.toDF("_rid", "_k", "_t"), tables)
+    def ids(xs: Long*) = xs.map(x => (Option(x), Option.empty[Int], 2))
+    def inA(xs: Long*) = xs.map(x => (Option(x), Option.empty[Int], 0))
+    def keysB(x: Long, ks: Int*) = ks.map(k => (Option(x), Option(k), 1))
+    // two-table form: A one row per id, B keys [0, 4)
+    def two(rows: Seq[(Option[Long], Option[Int], Int)]) =
+      ReplaySafe.committed(ledger(2, rows), None, Some(4))
+    val whole = ids(1L, 2L) ++ inA(1L, 2L) ++ keysB(1L, 0, 1, 2, 3) ++ keysB(2L, 3, 2, 1, 0)
+    assert(two(whole), "a fully folded batch read as not committed")
+    assert(two(whole ++ keysB(1L, 0, 1)), "duplicate rows of a complete id broke the check")
+    assert(!two(ids(1L, 2L) ++ inA(1L, 2L) ++ keysB(1L, 0, 1, 2, 3) ++ keysB(2L, 0, 1, 2, 2)),
+      "duplicate rows hid a missing key")
+    assert(!two(ids(1L, 2L) ++ inA(1L, 2L) ++ keysB(1L, 0, 1, 2, 3) ++ keysB(2L, 0, 1, 2, 7)),
+      "a key outside [0, keysPerDoc) stood in for a missing one")
+    assert(!two(ids(1L, 2L) ++ inA(1L, 2L) ++ keysB(1L, 0, 1, 2, 3) ++ keysB(2L, -1, 0, 1, 2)),
+      "a negative key stood in for a missing one")
+    assert(!two(ids(1L, 2L) ++ inA(1L) ++ keysB(1L, 0, 1, 2, 3) ++ keysB(2L, 0, 1, 2, 3)),
+      "an id missing from the one-row-per-id table read as committed")
+    assert(!two(whole ++ ids(3L)), "an unseen delta id read as committed")
+    assert(!two(whole ++ Seq((Option.empty[Long], Option.empty[Int], 2))),
+      "a NULL delta id read as committed")
+    // one-table form (SimHash): keys [0, 3)
+    val one = ids(5L) ++ keysB(5L, 0, 1, 2).map { case (r, k, _) => (r, k, 0) }
+    assert(ReplaySafe.committed(ledger(1, one), Some(3)))
+    assert(!ReplaySafe.committed(ledger(1, one), Some(4)))
+    intercept[IllegalArgumentException](ReplaySafe.committed(ledger(1, one), None, Some(3)))
+  }
+
   // ------------------- sink half of exactly-once (IdempotentSink) -------------------
   // ReplaySafe makes the INDEX idempotent; these gates prove the
   // emission-persistence half: the fold's `sink` callback commits the
