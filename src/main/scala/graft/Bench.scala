@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: JSON lines with per-query seconds at
   * SPARK_GRAFT_SF_DIR — the LAST complete stdout line is the artifact.
   * The orchestrator re-emits the merged line after every batch and
@@ -216,16 +214,8 @@ object Bench {
 
   private def runInProcess(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Cluster.open(nodes = cpus, appName = "graft-bench", shufflePartitions = cpus)
 
     // Per-query time budget: one pathological query must never consume the
     // external bench budget and take innocent queries down with it (the r3
@@ -324,13 +314,20 @@ object Bench {
     val contended = calibSec > calibThreshold || calibSec > 1.5 * ref
 
     // warm pass at the target SF: C2 JIT + codegen cache + page cache —
-    // the timed pass below measures steady-state engine cost
-    tokens.foreach { tk =>
+    // the timed pass below measures steady-state engine cost. Each row's
+    // generated-class compiles are recorded: in the warm pass they are
+    // the classes the row adds to the cache, in the timed passes they
+    // should be 0 (a nonzero timed count means the cache is thrashing or
+    // the row's generated code varies from run to run).
+    val warmCompiles = tokens.map { tk =>
+      val c0 = Observability.codegenCompiles()
       resolve(tk).foreach { case (n, dir) =>
         try materialize(n, dir)
         catch { case _: Throwable => () }
       }
-    }
+      tk -> (Observability.codegenCompiles() - c0)
+    }.toMap
+    val timedCompiles = scala.collection.mutable.Map[String, Long]()
     // two timed passes, min per query — damps scheduler/GC noise without
     // hiding real cost (both passes are fully warm). A query that throws
     // is recorded as FAILED, not timed — a regression must never make the
@@ -341,6 +338,7 @@ object Bench {
       // per JVM — hence the fresh-JVM batches; within a small batch it
       // keeps the min-of-2 tight)
       System.gc()
+      val c0 = Observability.codegenCompiles()
       val t0 = System.nanoTime()
       val ok = resolve(tk) match {
         case Some((n, dir)) =>
@@ -351,7 +349,10 @@ object Bench {
           }
         case None => false
       }
-      tk -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
+      val dt = (System.nanoTime() - t0) / 1e9
+      timedCompiles(tk) =
+        timedCompiles.getOrElse(tk, 0L) + Observability.codegenCompiles() - c0
+      tk -> (if (ok) Some(dt) else None)
     }.toMap
     // Solo/heavy children take a THIRD timed pass: the five singleton
     // incremental probes are bimodally noisy even in identical isolated
@@ -394,7 +395,9 @@ object Bench {
     val line = renderLine(
       results, failed, calibSec, ref, contended,
       if (contended) tokens else Nil, leakedBlocks, sfDir,
-      isolation = "single-jvm", batches = 1)
+      isolation = "single-jvm", batches = 1,
+      compiles = tokens.map(tk =>
+        tk -> (warmCompiles(tk), timedCompiles.getOrElse(tk, 0L))).toMap)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
@@ -578,6 +581,7 @@ object Bench {
     var contended = false
     var contendedQueries = Seq.empty[String]
     var leaked = 0
+    var compiles = Map.empty[String, (Long, Long)]
     val ref = calibRef
     // contention auto-rerun (judge ask #1): a batch whose child stamps
     // contended (calib > 1.5 × quiet-box ref) is retried in a fresh JVM
@@ -636,7 +640,8 @@ object Bench {
                   (b.failed ++ r.failed).distinct.filterNot(mergedQ.contains),
                   math.min(b.calibSec, r.calibSec),
                   contended = false,
-                  math.max(b.leaked, r.leaked)))
+                  math.max(b.leaked, r.leaked),
+                  b.compiles ++ r.compiles))
                 }
             }
             if (r.contended) {
@@ -669,6 +674,7 @@ object Bench {
           contended = contended || r.contended
           if (r.contended) contendedQueries = contendedQueries ++ batch
           leaked += r.leaked
+          compiles = compiles ++ r.compiles
         case None =>
           failed = failed ++ batch
       }
@@ -686,7 +692,7 @@ object Bench {
         merged.toSeq.sortBy(t => tokens.indexOf(t._1)), failed, calibMax,
         ref, contended, contendedQueries, leaked, sfDir,
         isolation = "fresh-jvm-batches", batches = batches.size,
-        batchesDone = i + 1)
+        batchesDone = i + 1, compiles = compiles)
       java.nio.file.Files.write(
         java.nio.file.Paths.get(
           sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
@@ -803,7 +809,7 @@ object Bench {
           isolation = "fresh-jvm-batches", batches = batches.size,
           batchesDone = batches.size, isolatedFloor = floors,
           floorSkipped = floorSkipped, floorContended = floorContended,
-          floorFailed = floorFailed)
+          floorFailed = floorFailed, compiles = compiles)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(
             sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
@@ -828,7 +834,7 @@ object Bench {
       isolation = "fresh-jvm-batches", batches = batches.size,
       batchesDone = batches.size, isolatedFloor = floors,
       floorSkipped = floorSkipped, floorContended = floorContended,
-          floorFailed = floorFailed)
+          floorFailed = floorFailed, compiles = compiles)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(outFile),
@@ -852,7 +858,8 @@ object Bench {
       failed: Seq[String],
       calibSec: Double,
       contended: Boolean,
-      leaked: Int
+      leaked: Int,
+      compiles: Map[String, (Long, Long)]
   )
 
   /** Parse the known shape we render ourselves — no JSON library in the
@@ -871,7 +878,11 @@ object Bench {
       .findFirstMatchIn(line).map(_.group(1).toDouble).getOrElse(0.0)
     val leaked = "\"leaked_rdds\":(\\d+)".r
       .findFirstMatchIn(line).map(_.group(1).toInt).getOrElse(0)
-    ChildResult(qs, failed, calib, line.contains("\"contended\":true"), leaked)
+    val compiles = "\"([^\"]+)\":\\[(\\d+),(\\d+)\\]".r
+      .findAllMatchIn("\"codegen_compiles\":\\{([^}]*)\\}".r
+        .findFirstMatchIn(line).map(_.group(1)).getOrElse(""))
+      .map(m => m.group(1) -> (m.group(2).toLong, m.group(3).toLong)).toMap
+    ChildResult(qs, failed, calib, line.contains("\"contended\":true"), leaked, compiles)
   }
 
   /** A compact twin of [[renderLine]], guaranteed to fit the external
@@ -927,7 +938,9 @@ object Bench {
   /** One JSON line. "value" (the headline total) sums ONLY target-SF
     * queries — the "@sf0.01" small-fixture rows are reported per-query
     * (and summed under "small_fixture_sec") but must never inflate the
-    * round-over-round headline.
+    * round-over-round headline. "codegen_compiles" maps each timed row
+    * to `[warm, timed]`: the generated classes it compiled in its warm
+    * pass and in all of its timed passes together.
     */
   private def renderLine(
       results: Seq[(String, Double)],
@@ -944,7 +957,8 @@ object Bench {
       isolatedFloor: Map[String, Double] = Map.empty,
       floorSkipped: Seq[String] = Nil,
       floorContended: Seq[String] = Nil,
-      floorFailed: Seq[String] = Nil
+      floorFailed: Seq[String] = Nil,
+      compiles: Map[String, (Long, Long)] = Map.empty
   ): String = {
     // single-jvm callers pass no batchesDone — their one batch is done
     val doneN = if (batchesDone < 0) batches else batchesDone
@@ -966,6 +980,9 @@ object Bench {
       floorContended.map("\"" + _ + "\"").mkString("[", ",", "]")
     val floorFailedJson =
       floorFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"calib_sec":$calibSec%.3f,"calib_ref":$calibRefSec%.3f,"contended":$contended,"contended_queries":$contendedJson,"leaked_rdds":$leakedBlocks,"sf":"$sfDir","isolation":"$isolation","batches":$batches,"batches_done":$doneN,"small_fixture_sec":$smallTotal%.3f,"isolated_floor":$floorJson,"floor_skipped":$floorSkippedJson,"floor_contended":$floorContendedJson,"floor_failed":$floorFailedJson}"""
+    val compilesJson = results.flatMap { case (k, _) => compiles.get(k).map(k -> _) }
+      .map { case (k, (warm, timed)) => "\"" + k + "\":[" + warm + "," + timed + "]" }
+      .mkString("{", ",", "}")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"calib_sec":$calibSec%.3f,"calib_ref":$calibRefSec%.3f,"contended":$contended,"contended_queries":$contendedJson,"leaked_rdds":$leakedBlocks,"sf":"$sfDir","isolation":"$isolation","batches":$batches,"batches_done":$doneN,"small_fixture_sec":$smallTotal%.3f,"isolated_floor":$floorJson,"floor_skipped":$floorSkippedJson,"floor_contended":$floorContendedJson,"floor_failed":$floorFailedJson,"codegen_compiles":$compilesJson}"""
   }
 }

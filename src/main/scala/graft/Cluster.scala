@@ -13,9 +13,46 @@ import org.apache.spark.sql.SparkSession
   */
 object Cluster {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100) — see
+    * [[open]].
+    */
+  val CodegenCacheEntries: Int = 3000
+
   /** Open a session ≈ `rscl.connect` (reference R/rscl.R:13-40).
     * `nodes` maps to local threads here; on a real cluster the same code
     * runs unchanged under spark-submit with `--master yarn/k8s`.
+    *
+    * Every session of the program comes from here, so this is where the
+    * generated-class cache is sized: [[CodegenCacheEntries]] entries.
+    * Whole-stage codegen turns each plan into Java source that Janino
+    * compiles; the cache, keyed by that source, lets a plan shape that
+    * recurs pay the compile once. It is an LRU, and a workload that
+    * cycles through more distinct classes than it holds misses on every
+    * access — each class is evicted just before its next use — so at
+    * Spark's default of 100 the repeating workloads below recompiled
+    * every class in every round. Distinct classes per steady cycle,
+    * counted with [[Observability.codegenCompiles]]:
+    *  - 106 for a perfbench `bdt_query` round;
+    *  - 179 for a perfbench `fold_stream` pass (MinHash and SimHash
+    *    folds, a replay, a compaction);
+    *  - 2390 for one `graft.Bench` pass over the 151 registry rows at
+    *    sf0.1 in one JVM. At 1000 entries its second pass recompiled
+    *    2426 classes; at 3000, 660, all but 16 of them in the streaming
+    *    rows, whose generated code differs from run to run and compiles
+    *    anew at any size.
+    * A tier-1 run (403 tests, one JVM) compiles 6819 classes in all.
+    * 3000 is the smallest round number that holds the largest cycle with
+    * headroom. Each cached class keeps its bytecode on the heap, about
+    * 35 KB: after two registry passes the live heap was 210.5 MB at 3000
+    * entries against 162.0 MB at 1000. The perfbench workloads never
+    * fill 1000 entries, so their heap does not depend on the size.
+    *
+    * The cache is JVM-wide and sized ONCE per JVM: Spark reads the value
+    * from the active session's conf at the first compile in the JVM and
+    * never again. It is a static SQL conf, so it only takes effect on
+    * the builder before `getOrCreate` creates the `SparkContext`; when
+    * a `SparkContext` already exists, Spark ignores it with a warning.
     */
   def open(
       nodes: Int = Runtime.getRuntime.availableProcessors(),
@@ -35,6 +72,7 @@ object Cluster {
       // loaders stay side-effect-free (Tables.events truncates to micros)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

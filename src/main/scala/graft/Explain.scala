@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan for the named
   * queries (all headline-worthy ones by default) so partition/pushdown/
   * broadcast decisions can be reviewed per round.
@@ -15,13 +13,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q03_group_multi", "q10_join_agg", "q24_join_copart",
         "q18_topn", "d02_minhash_neardup", "s01_knn_brute", "t03_lang_id")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Cluster.open(nodes = 4, appName = "graft-explain", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -124,4 +124,15 @@ object Observability {
 
   def detach(spark: SparkSession, log: QueryLog): Unit =
     spark.listenerManager.unregister(log)
+
+  /** Generated classes Janino has compiled in this JVM so far: the count
+    * of Spark's codegen compile-time histogram, updated once per compile
+    * (a generated-class cache hit compiles nothing). Host load cannot
+    * move it. A compile completes before the action that needed it
+    * returns — on the driver or on a task of that action's jobs — so a
+    * difference of two reads around an action is exact with no listener
+    * and no wait. JVM-wide: concurrent actions share the count.
+    */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev fixture generator for the empirical scale smoke (round-13 judge
@@ -113,17 +113,12 @@ object ScaleFixture {
     require(args.length == 3, "usage: ScaleFixture <srcSfDir> <destDir> <factor>")
     val Array(src, dest, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession
-      .builder()
-      .appName(s"graft-scale-fixture-${factor}x")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // events has shipped as TIMESTAMP(NANOS); read it as LONG nanos and
-      // write it back as LONG — Tables.events / Streams.eventStream
-      // dual-dispatch on the footer type, so both generations round-trip
-      .config("spark.sql.legacy.parquet.nanosAsLong", true)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    // events has shipped as TIMESTAMP(NANOS); the session reads it as
+    // LONG nanos and writes it back as LONG — Tables.events /
+    // Streams.eventStream dual-dispatch on the footer type, so both
+    // generations round-trip
+    val spark = Cluster.open(
+      nodes = 32, appName = s"graft-scale-fixture-${factor}x", shufflePartitions = 32)
     try {
       val destPath = new org.apache.hadoop.fs.Path(dest)
       val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -175,45 +175,52 @@ object Dedup {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    val withFp = delta
-      .withColumn("_fp", exactFp(textCol, idx.hash64))
-      .localCheckpoint(true)
-    // materializes the membership probe BEFORE the append mutates the table
-    val unseen = withFp
-      .join(spark.table(idx.fpTable), Seq("_fp"), "left_anti")
-      .localCheckpoint(true)
-    // same NULL-text keeper contract as exactDedupIncrementalImpl
-    val keepers = unseen
-      .groupBy(col("_fp"), when(col("_fp").isNull, col(idCol)).as("_nullkey"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(col(idCol))
-    val outLazy = unseen.drop("_fp").join(keepers, Seq(idCol), "left_semi")
-    // sink BEFORE the ledger append ([[IdempotentSink]]): this family's
-    // replay re-derives only the NULL-text keepers, so emissions not
-    // persisted by the time the append commits would be lost. The
-    // sinkless path keeps its lazy return (no extra checkpoint per
-    // batch); the sink path materializes so the persisted frame and the
-    // returned one are one computation, and releases `unseen` (no
-    // longer in the returned plan's lineage) in-fold.
-    val out = sink match {
-      case Some(persist) =>
-        val o = outLazy.localCheckpoint(true)
-        persist(o)
-        o
-      case None => outLazy
+    var withFp: DataFrame = null
+    var unseen: DataFrame = null
+    var out: DataFrame = null
+    try {
+      withFp = delta
+        .withColumn("_fp", exactFp(textCol, idx.hash64))
+        .localCheckpoint(true)
+      // materializes the membership probe BEFORE the append mutates the table
+      unseen = withFp
+        .join(spark.table(idx.fpTable), Seq("_fp"), "left_anti")
+        .localCheckpoint(true)
+      // same NULL-text keeper contract as exactDedupIncrementalImpl
+      val keepers = unseen
+        .groupBy(col("_fp"), when(col("_fp").isNull, col(idCol)).as("_nullkey"))
+        .agg(min(col(idCol)).as(idCol))
+        .select(col(idCol))
+      val outLazy = unseen.drop("_fp").join(keepers, Seq(idCol), "left_semi")
+      // sink BEFORE the ledger append ([[IdempotentSink]]): this family's
+      // replay re-derives only the NULL-text keepers, so emissions not
+      // persisted by the time the append commits would be lost. The
+      // sinkless path keeps its lazy return (no extra checkpoint per
+      // batch); the sink path materializes so the persisted frame and the
+      // returned one are one computation, and releases `unseen` (no
+      // longer in the returned plan's lineage) in-fold.
+      out = if (sink.isDefined) outLazy.localCheckpoint(true) else outLazy
+      sink.foreach(_(out))
+      // replay-safe append: only fingerprints the index lacks (NULL fps
+      // excluded — a NULL can never match the anti-join probe anyway)
+      writeBucketedTable(
+        unseen.select(col("_fp")).filter(col("_fp").isNotNull).distinct(),
+        idx.fpTable,
+        idx.buckets,
+        Seq("_fp"),
+        org.apache.spark.sql.SaveMode.Append
+      )
+      if (sink.isDefined) graft.CacheUtil.release(unseen)
+      out
+    } catch {
+      case e: Throwable =>
+        // nothing is returned: free the probe and (with a sink) the
+        // materialized emissions
+        Seq(out, unseen).filter(_ != null).foreach(graft.CacheUtil.release)
+        throw e
+    } finally {
+      if (withFp != null) graft.CacheUtil.release(withFp)
     }
-    // replay-safe append: only fingerprints the index lacks (NULL fps
-    // excluded — a NULL can never match the anti-join probe anyway)
-    writeBucketedTable(
-      unseen.select(col("_fp")).filter(col("_fp").isNotNull).distinct(),
-      idx.fpTable,
-      idx.buckets,
-      Seq("_fp"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-    graft.CacheUtil.release(withFp)
-    if (sink.isDefined) graft.CacheUtil.release(unseen)
-    out
   }
 
   private def exactDedupIncrementalImpl(

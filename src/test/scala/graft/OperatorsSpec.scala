@@ -4042,25 +4042,12 @@ class OperatorsSpec extends AnyFunSuite {
     val manyQueries = emb.filter($"vec_id" % 5 === 0) // 100 at sf0.001
     val nq = manyQueries.count()
     assert(nq >= 50, s"fixture too small for the job gate: $nq")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = Quantization.ivfSq8SearchMany(
-        spark, idx, manyQueries, "embedding", "vec_id", k = 5, nProbe = 2)
-        .count()
-      assert(n > 0)
-      // listener events post asynchronously; a short settle is enough at
-      // fixture scale (the bound below has 3× headroom regardless)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 15,
-      s"batched search ran ${jobs.get()} jobs for $nq queries — per-query work?")
+    val (n, jobs) = JobCount.during(spark)(Quantization.ivfSq8SearchMany(
+      spark, idx, manyQueries, "embedding", "vec_id", k = 5, nProbe = 2)
+      .count())
+    assert(n > 0)
+    assert(jobs <= 15,
+      s"batched search ran $jobs jobs for $nq queries — per-query work?")
     // a wrong-dim query frame fails before any scan
     val bad = Seq(Vec(77777L, Array(1f, 2f))).toDS.toDF
     val e = intercept[IllegalArgumentException] {
@@ -4181,22 +4168,12 @@ class OperatorsSpec extends AnyFunSuite {
     val slicedDf = Quantization.ivfSq8SearchMany(
       spark, idx, queries, "embedding", "vec_id", k = 5, nProbe = 2,
       maxBroadcastProbeRows = 50) // 100 x 2 probe rows -> 4 slices
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(rows(slicedDf) === single)
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (sliced, jobs) = JobCount.during(spark)(rows(slicedDf))
+    assert(sliced === single)
     // job count is O(slices), not O(queries): 4 slices of ~25 queries
     // each ran within a fixed per-slice budget (vs >= 100 for a loop)
-    assert(jobs.get() <= 30,
-      s"sliced search ran ${jobs.get()} jobs for $nq queries in 4 slices")
+    assert(jobs <= 30,
+      s"sliced search ran $jobs jobs for $nq queries in 4 slices")
     // plan-shape asserts on a FRESH (un-executed) frame: an executed
     // AQE plan string reprints exchanges under its query stages
     val plan = Quantization.ivfSq8SearchMany(

@@ -1899,29 +1899,106 @@ class StreamingSpec extends AnyFunSuite {
         Seq(i.bandTable, i.shingleTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
   }
 
+  test("exact fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's keepers") {
+    import graft.operators.{CompactLock, Dedup}
+    // The exact fold pins the fingerprinted delta, its unseen rows and
+    // (with a sink) the emitted keepers; each must be released on EVERY
+    // exit. Two failure points: the sink throws (before the append), and
+    // the fingerprint append throws after the sink ran (a held compaction
+    // sentinel makes it fail fast). Each must propagate, pin no
+    // persistent RDD and leave the index unchanged, and a retry must emit
+    // exactly what a clean run emits.
+    val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+    def delta() = Seq((10L, "alpha"), (11L, "fresh"), (12L, "fresh"), (13L, "novel"))
+      .toDF("doc_id", "text")
+    def ids(df: DataFrame): Set[Long] = {
+      val s = df.select("doc_id").collect().map(_.getLong(0)).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val clean = Dedup.writeExactDedupIndex(corpus, "text", "eff_clean", buckets = 4)
+    val idx = Dedup.writeExactDedupIndex(corpus, "text", "eff", buckets = 4)
+    try {
+      val expected = ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", clean))
+      assert(expected === Set(11L, 13L), s"clean run emitted $expected")
+      val rows = spark.table(idx.fpTable).count()
+      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalStateException](
+          Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
+        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
+        assert(spark.table(idx.fpTable).count() === rows, s"$what changed the index")
+      }
+      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+      val lock = CompactLock.forTable(spark, idx.fpTable)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var sunk = -1L
+      CompactLock.acquire(fs, lock)
+      try failingRun("append", df => sunk = df.count(), "compaction")
+      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+      assert(sunk === expected.size.toLong, "the sink did not run before the append")
+      assert(ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
+        "retry after the failures emitted differently from a clean run")
+      assert(spark.table(idx.fpTable).count() === spark.table(clean.fpTable).count(),
+        "retry did not converge to the clean fold's index")
+    } finally
+      Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.fpTable}`"))
+  }
+
+  test("fold loop compiles its generated code once: a third same-shape micro-batch through the minhash and simhash folds compiles no class") {
+    import graft.operators.Dedup
+    // Whole-stage codegen compiles each plan shape once per JVM only
+    // while Spark's generated-class cache holds the whole cycle of
+    // classes a micro-batch needs; an LRU smaller than the cycle evicts
+    // every class before its next use and recompiles all of them in every
+    // micro-batch. Three deltas of one shape (a copy of a corpus doc, an
+    // in-batch twin pair, a fresh doc) fold through both folds: the
+    // first two warm the cache, the third must compile nothing.
+    def words(tag: String) = (0 until 12).map(j => s"${tag}w$j").mkString(" ")
+    val corpus = (1 to 4).map(i => (i.toLong, words(s"c$i"))).toDF("doc_id", "text")
+    val deltas = (1 to 3).map { b =>
+      val base = 100L * b
+      Seq((base + 1, words(s"c$b")), (base + 2, words(s"t$b")), (base + 3, words(s"t$b")),
+        (base + 4, words(s"f$b"))).toDF("doc_id", "text").localCheckpoint(true)
+    }
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val mh = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "cg_mh", buckets = 4)
+    val sh = Dedup.writeSimHashIndex(corpus, "text", "doc_id", "cg_sh", buckets = 4)
+    try {
+      val perBatch = deltas.zipWithIndex.map { case (d, i) =>
+        val c0 = Observability.codegenCompiles()
+        val b = 100L * (i + 1)
+        val want = Set((i + 1L, b + 1), (b + 2, b + 3))
+        assert(pairs(Dedup.minHashNearDupsIncrementalFold(d, "text", "doc_id", 0.4, mh)) === want,
+          s"micro-batch ${i + 1}: minhash pairs")
+        assert(pairs(Dedup.simHashNearDupsIncrementalFold(d, "text", "doc_id", sh)) === want,
+          s"micro-batch ${i + 1}: simhash pairs")
+        Observability.codegenCompiles() - c0
+      }
+      assert(perBatch(2) === 0L,
+        s"the third micro-batch recompiled generated code (compiles per micro-batch: $perBatch)")
+      assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+        Cluster.CodegenCacheEntries.toString)
+      // the counter is live: a class no earlier query can have compiled
+      val c0 = Observability.codegenCompiles()
+      spark.range(4).select(col("id") + lit(System.nanoTime())).collect()
+      assert(Observability.codegenCompiles() > c0, "codegenCompiles missed a fresh class")
+    } finally {
+      deltas.foreach(graft.CacheUtil.release)
+      Seq(mh.bandTable, mh.shingleTable, sh.chunkTable)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
   // ------------------- committed replay short-circuit -------------------
   // A replay of a micro-batch whose appends all committed must cost a
   // ledger read, not a second fold: ReplaySafe.committed proves it from
   // the ledger checkpoint, and the fold then emits an empty frame of the
   // slow path's schema without probing or appending.
-
-  /** Spark jobs started while `f` runs (listener events post
-    * asynchronously; a short settle covers them at fixture scale).
-    */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   test("committed replay short-circuits: empty output of the first attempt's schema, one sink call, no index change, ≤ 6 jobs (minhash, simhash 64/128/combo)") {
     import graft.operators.Dedup
@@ -1941,7 +2018,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(emitted > 0L, s"$family: first attempt emitted nothing — gate vacuous")
       val rows = tables.map(spark.table(_).count())
       val sunk = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      val (out, jobs) = jobsDuring(fold(Some(sunk += _)))
+      val (out, jobs) = JobCount.during(spark)(fold(Some(sunk += _)))
       assert(jobs <= 6, s"$family: committed replay ran $jobs jobs — the slow path?")
       assert(out.schema === schema, s"$family: replay schema ${out.schema} != first attempt's $schema")
       assert(out.count() === 0L, s"$family: committed replay emitted rows")
@@ -2005,9 +2082,9 @@ class StreamingSpec extends AnyFunSuite {
         Some(sh(0).keys.subsets.length)))
       val mhRows = Seq(mh(0).bandTable, mh(0).shingleTable).map(spark.table(_).count())
       val shRows = spark.table(sh(0).chunkTable).count()
-      val (mhOut, mhJobs) = jobsDuring(pairs(
+      val (mhOut, mhJobs) = JobCount.during(spark)(pairs(
         Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, mh(0))))
-      val (shOut, shJobs) = jobsDuring(pairs(
+      val (shOut, shJobs) = JobCount.during(spark)(pairs(
         Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", sh(0))))
       assert(mhJobs > 6 && shJobs > 6, s"capped replay short-circuited ($mhJobs, $shJobs jobs)")
       assert(mhOut.isEmpty && shOut.isEmpty, s"capped replay re-emitted $mhOut $shOut")
