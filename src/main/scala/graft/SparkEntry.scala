@@ -1795,7 +1795,7 @@ object SparkEntry {
         val idx = operators.Dedup.writeSimHash128Index(
           corpus, "text", "doc_id", "d28_idx", maxHamming = 20, buckets = 8)
         val pairs = operators.Dedup
-          .simHashNearDups128Incremental(delta, "text", "doc_id", idx)
+          .simHashNearDupsIncremental(delta, "text", "doc_id", idx)
         val perDoc = docs
           .select(
             col("doc_id").as("_cid"),
@@ -2301,7 +2301,7 @@ object SparkEntry {
         val idx = operators.Dedup
           .writeSimHash128Index(corpus, "text", "doc_id", "d22_idx", maxHamming = 20, buckets = 8)
         operators.Dedup
-          .simHashNearDups128Incremental(delta, "text", "doc_id", idx)
+          .simHashNearDupsIncremental(delta, "text", "doc_id", idx)
           .select(col("id_a"), col("id_b"), col("hamming"))
       },
       None

@@ -708,41 +708,6 @@ object Dedup {
       .saveAsTable(table)
   }
 
-  /** Replay-safe append of a multi-row-per-id frame (bands / chunks /
-    * passage windows) — the ROW-level half of the fold families' torn-
-    * append healing ([[ReplaySafe]]): a torn job commit can land WITHIN
-    * one id (a doc's band rows span up to `buckets` files), so dropping
-    * whole "seen" ids would leave that id permanently incomplete.
-    * When any delta id already has rows in `table` (`seen` nonempty —
-    * a replay), the append anti-joins on the row identity key `rowKey`
-    * instead, completing exactly the missing rows; on a first attempt
-    * ([[ReplaySafe.noneSeen]]) the frame appends unfiltered — the hot
-    * path carries no extra join.
-    */
-  private[operators] def appendRowHealed(
-      rows: DataFrame,
-      table: String,
-      nBuckets: Int,
-      bucketKeys: Seq[String],
-      rowKey: Seq[String],
-      idColName: String,
-      rids: DataFrame,
-      seen: DataFrame,
-      knownFirstAttempt: Boolean = false
-  ): Unit = {
-    // knownFirstAttempt (r19): the fold already proved its LEDGER empty,
-    // which implies `seen` is too — skip the redundant take(1) job
-    val present =
-      if (knownFirstAttempt || ReplaySafe.noneSeen(seen)) None
-      else Some(ReplaySafe.rowKeysPresent(
-        rows.sparkSession.table(table), idColName, rids, rowKey))
-    try
-      writeBucketedTable(
-        present.fold(rows)(ReplaySafe.dropRowsPresent(rows, _, rowKey)),
-        table, nBuckets, bucketKeys, org.apache.spark.sql.SaveMode.Append)
-    finally present.foreach(graft.CacheUtil.release)
-  }
-
   /** Compact a bucketed index table after many appends. Every
     * `appendTo*Index` adds a fresh file set per bucket, so a year of
     * daily deltas leaves ~365 small files per bucket — correct but
@@ -957,18 +922,6 @@ object Dedup {
       spark, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
       capChunkBuckets(_, idx.maxBucket, idx.keys.hashCols))
 
-  /** [[compactSimHashIndex]] for a 128-bit index. */
-  def compactSimHash128Index(
-      spark: org.apache.spark.sql.SparkSession,
-      idx: SimHash128Index
-  ): Unit = compactSimHashIndex(spark, idx)
-
-  /** [[compactSimHashIndex]] for a combination-keyed index. */
-  def compactSimHashComboIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      idx: SimHashComboIndex
-  ): Unit = compactSimHashIndex(spark, idx)
-
   /** Compact a MinHash index after many appends: membership and shingle
     * rows are unique per doc under the disjoint-delta append contract —
     * the band table re-applies the bucket cap (healing legacy uncapped
@@ -1131,7 +1084,7 @@ object Dedup {
   ): DataFrame = {
     val cands = minHashCandidatesIncremental(delta, textCol, idCol, idx)
     val deltaSh = deltaShingles(delta, textCol, idCol, idx)
-    val out = verifyMinHashIncremental(cands, deltaSh, threshold, idx)
+    val out = verifyMinHashIncremental(cands, deltaSh, threshold, idx).localCheckpoint(true)
     graft.CacheUtil.release(cands)
     graft.CacheUtil.release(deltaSh)
     out
@@ -1146,17 +1099,11 @@ object Dedup {
     * are each computed ONCE instead of twice — at ingest scale those
     * are the dominant per-batch costs.
     *
-    * REPLAY-SAFE ([[ReplaySafe]]): re-running the fold on a delta whose
-    * append already committed (the at-least-once foreachBatch replay)
-    * appends nothing and emits nothing — the index never grows twice
-    * and the union of per-attempt emissions carries no duplicate pairs
-    * (StreamingSpec gates this per fold family; st08 is the registry
-    * row). A replay the ledger proves committed
-    * ([[ReplaySafe.committed]]: every delta id in the shingle table with
-    * all `idx.bands` band rows) skips admission, probe, verification
-    * and both appends, and emits an empty frame. Every block the fold
-    * allocates is released on every exit: if the sink or an append
-    * throws, nothing stays pinned and a retry heals the index.
+    * Replay-safe through the one fold body ([[IndexFold]], contract in
+    * [[ReplaySafe]]). Ledger: the shingle table (`_sid`, one row per
+    * doc, the emission ledger) and the band table (`_id`, row key
+    * `_band`, healed per (`_id`, `_band`) row). Committed proof: every
+    * delta id in the shingle table with all `idx.bands` band rows.
     */
   def minHashNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1167,90 +1114,22 @@ object Dedup {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    // REPLAY SAFETY ([[ReplaySafe]]): the shingle table records EVERY
-    // folded doc, so it is the emission ledger; the band table's append
-    // is gated separately at ROW granularity — (_id, _band) — because a
-    // torn job commit can land WITHIN one id (its 16 band rows span up
-    // to 16 bucketed files); re-derivation is deterministic, so the
-    // replay completes exactly the missing rows. A crash between the
-    // two appends heals: the committed table skips, the missing one
-    // completes, and the shingle ledger still reads "unseen", so the
-    // never-delivered emissions are re-derived and re-emitted. Both
-    // tables' ledger reads and the delta id frame are ONE eager job
-    // ([[ReplaySafe.ledgerRead2]]) that snapshots the PRE-append state.
-    // The ledger read with its attempt decision, the delta banding (the
-    // signature compute) and the delta shingle sets share no inputs —
-    // overlap their planning and jobs on concurrent driver threads
-    // ([[Overlap]])
-    val ((ledger, attempt), bandedRaw, deltaSh) = Overlap.par3(
-      () => {
-        val l = ReplaySafe.ledgerRead2(
-          spark.table(idx.shingleTable), "_sid",
-          spark.table(idx.bandTable), "_id", delta, idCol, keyColB = Some("_band"))
-        (l, ReplaySafe.classify(l, None, Some(idx.bands)))
-      },
+    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
+      Seq(ReplaySafe.LedgerTable(spark.table(idx.shingleTable), "_sid"),
+        ReplaySafe.LedgerTable(spark.table(idx.bandTable), "_id", Some("_band" -> idx.bands))),
       () => bandedRawChk(delta, textCol, idCol, idx),
-      () => deltaShingles(delta, textCol, idCol, idx))
-    var admitted: DataFrame = null
-    var cands: DataFrame = null
-    var out: DataFrame = null
-    try {
-      val (rids, seenSh, seenBand) = (ledger.rids, ledger.seenA, ledger.seenB)
-      // first-attempt fast path (r19): when NO delta id is in either
-      // table, every excludeIds anti join is a semantic no-op — skip the
-      // three broadcast antis (admission corpus, candidate corpus,
-      // verify shingles), the unseen-pair suppression (every emitted pair
-      // touches the delta by construction), and the shingle append's
-      // dropSeen (nothing to drop). A replay OR a torn append leaves ids
-      // in at least one table and keeps the full exclusion path.
-      val firstAttempt = attempt == ReplaySafe.FirstAttempt
-      val excl = if (firstAttempt) None else Some(rids)
-      val unseen =
-        if (firstAttempt) None else Some(ReplaySafe.unseenIds(rids, seenSh))
-      def admit = admitBanded(bandedRaw, idx, excl)
-      // sidesDisjoint holds on BOTH probe branches: excl removes every
-      // delta id from the corpus side, and the fast path certified no
-      // delta id is stored at all
-      def verify(candidates: DataFrame, pin: DataFrame => DataFrame): DataFrame =
+      () => deltaShingles(delta, textCol, idCol, idx)) { case (Seq(bandedRaw, deltaSh), step) =>
+      val admitted = step.pin(admitBanded(bandedRaw, idx, step.excl))
+      // sidesDisjoint: `excl` strips every delta id from the corpus side,
+      // and a first attempt's ledger proved none is stored
+      IndexFold.Probe(
         verifyMinHashIncremental(
-          candidates, deltaSh, threshold, idx, excl, unseen, sidesDisjoint = true, pin)
-      if (attempt == ReplaySafe.Committed) {
-        // the slow path's schema from its lazy plan — no job runs
-        out = ReplaySafe.emptyLike(
-          verify(minHashCandidatesFromAdmitted(admit, idx, excl, identity), identity))
-        sink.foreach(_(out))
-      } else {
-        admitted = admit.localCheckpoint(true)
-        graft.CacheUtil.release(bandedRaw)
-        cands = minHashCandidatesFromAdmitted(admitted, idx, excl)
-        // materializes the pair set BEFORE the appends mutate the tables
-        out = verify(cands, checkpointed)
-        // sink BEFORE the ledger appends ([[IdempotentSink]]): once they
-        // commit, a replay (correctly) emits nothing — emissions not yet
-        // persisted by then would be lost
-        sink.foreach(_(out))
-        // the two table appends are independent (different tables; the
-        // replay heal reads only the band table) — overlap them (§2.6)
-        Overlap.par2(
-          () => appendRowHealed(
-            admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
-            Seq("_id", "_band"), "_id", rids, seenBand, firstAttempt),
-          () => writeBucketedTable(
-            if (firstAttempt) deltaSh
-            else ReplaySafe.dropSeen(deltaSh, "_sid", seenSh),
-            idx.shingleTable, idx.buckets, Seq("_sid"),
-            org.apache.spark.sql.SaveMode.Append))
-      }
-      out
-    } catch {
-      case e: Throwable =>
-        Option(out).foreach(graft.CacheUtil.release)
-        throw e
-    } finally {
-      // cands' plan reaches the capped members and `admitted`;
-      // rids/seenSh/seenBand/unseen are lazy views over the ledger cache
-      Seq(bandedRaw, admitted, cands, deltaSh, ledger.tagged)
-        .filter(_ != null).foreach(graft.CacheUtil.release)
+          minHashCandidatesFromAdmitted(admitted, idx, step.excl, step.pin),
+          deltaSh, threshold, idx, step.excl, sidesDisjoint = true),
+        () => step.appendHealed(admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
+          Seq("_id", "_band"), "_id", 1),
+        () => writeBucketedTable(step.fresh(deltaSh, "_sid"), idx.shingleTable, idx.buckets,
+          Seq("_sid"), org.apache.spark.sql.SaveMode.Append))
     }
   }
 
@@ -1268,9 +1147,8 @@ object Dedup {
       .localCheckpoint(true)
 
   /** Exact-Jaccard verification of incremental candidates: each side
-    * resolves against corpus-then-delta shingles. Returns the result
-    * through `pin` — CHECKPOINTED by default; the caller releases
-    * `cands`/`deltaSh` afterwards.
+    * resolves against corpus-then-delta shingles. Lazy — the caller
+    * materializes it, then releases `cands`/`deltaSh`.
     */
   private def verifyMinHashIncremental(
       cands: DataFrame,
@@ -1278,9 +1156,7 @@ object Dedup {
       threshold: Double,
       idx: MinHashIndex,
       excludeIds: Option[DataFrame] = None,
-      touchingUnseen: Option[DataFrame] = None,
-      sidesDisjoint: Boolean = false,
-      pin: DataFrame => DataFrame = checkpointed
+      sidesDisjoint: Boolean = false
   ): DataFrame = {
     val table = cands.sparkSession.table(idx.shingleTable)
     val corpusSh =
@@ -1292,34 +1168,31 @@ object Dedup {
     // two joins and two broadcast builds instead of four, same left-join
     // multiplicity, bit-identical values. The probe-only entry points
     // keep the coalesce shape: a re-probed doc may be in both sources.
-    val verified =
-      if (sidesDisjoint) {
-        val allSh = corpusSh.unionByName(deltaSh)
-        cands
-          .join(allSh.as("sa"), col("id_a") === col("sa._sid"), "left")
-          .select(col("id_a"), col("id_b"), col("sa._sh").as("_sh_a"))
-          .join(allSh.as("sb"), col("id_b") === col("sb._sid"), "left")
-          .withColumn("jaccard", jaccard(col("_sh_a"), col("sb._sh")))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-      } else {
-        cands
-          .join(corpusSh.as("ca"), col("id_a") === col("ca._sid"), "left")
-          .join(deltaSh.as("da"), col("id_a") === col("da._sid"), "left")
-          .select(
-            col("id_a"),
-            col("id_b"),
-            coalesce(col("ca._sh"), col("da._sh")).as("_sh_a")
-          )
-          .join(corpusSh.as("cb"), col("id_b") === col("cb._sid"), "left")
-          .join(deltaSh.as("db"), col("id_b") === col("db._sid"), "left")
-          .withColumn(
-            "jaccard", jaccard(col("_sh_a"), coalesce(col("cb._sh"), col("db._sh"))))
-          .filter(col("jaccard") >= threshold)
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-      }
-    pin(touchingUnseen
-      .fold(verified)(ReplaySafe.keepPairsTouchingUnseen(verified, "id_a", "id_b", _)))
+    if (sidesDisjoint) {
+      val allSh = corpusSh.unionByName(deltaSh)
+      cands
+        .join(allSh.as("sa"), col("id_a") === col("sa._sid"), "left")
+        .select(col("id_a"), col("id_b"), col("sa._sh").as("_sh_a"))
+        .join(allSh.as("sb"), col("id_b") === col("sb._sid"), "left")
+        .withColumn("jaccard", jaccard(col("_sh_a"), col("sb._sh")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+    } else {
+      cands
+        .join(corpusSh.as("ca"), col("id_a") === col("ca._sid"), "left")
+        .join(deltaSh.as("da"), col("id_a") === col("da._sid"), "left")
+        .select(
+          col("id_a"),
+          col("id_b"),
+          coalesce(col("ca._sh"), col("da._sh")).as("_sh_a")
+        )
+        .join(corpusSh.as("cb"), col("id_b") === col("cb._sid"), "left")
+        .join(deltaSh.as("db"), col("id_b") === col("db._sid"), "left")
+        .withColumn(
+          "jaccard", jaccard(col("_sh_a"), coalesce(col("cb._sh"), col("db._sh"))))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+    }
   }
 
   // -------------------------------------------------------------- SimHash
@@ -1330,7 +1203,8 @@ object Dedup {
   // fingerprint is the one-word case of the 128-bit one — so every verb
   // below (batch pairs, hot-bucket audit, write, append, incremental
   // probe, fold, compact) has one body, parameterized by a [[SimHashKeys]]
-  // value; the 128-bit and combination entry points delegate to it.
+  // value. The index-taking verbs take any [[SimHashFamilyIndex]]; only
+  // the batch pairs, audits and writers keep a per-scheme name.
 
   /** 64-bit SimHash over distinct tokens: per-bit majority vote of token
     * hashes, packed into a long. Computed by the compiled
@@ -1852,22 +1726,6 @@ object Dedup {
     graft.CacheUtil.release(admitted)
   }
 
-  /** [[appendToSimHashIndex]] for a 128-bit index. */
-  def appendToSimHash128Index(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHash128Index
-  ): Unit = appendToSimHashIndex(delta, textCol, idCol, idx)
-
-  /** [[appendToSimHashIndex]] for a combination-keyed index. */
-  def appendToSimHashComboIndex(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): Unit = appendToSimHashIndex(delta, textCol, idCol, idx)
-
   /** Incremental SimHash near-dups against an index of any key scheme:
     * every pair within `idx.maxHamming` with at least one member in
     * `delta` = (delta × corpus) via the bucketed key table ∪
@@ -1914,22 +1772,6 @@ object Dedup {
     out
   }
 
-  /** [[simHashNearDupsIncremental]] against a 128-bit index. */
-  def simHashNearDups128Incremental(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHash128Index
-  ): DataFrame = simHashNearDupsIncremental(delta, textCol, idCol, idx)
-
-  /** [[simHashNearDupsIncremental]] against a combination-keyed index. */
-  def simHashNearDupsIncrementalCombo(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex
-  ): DataFrame = simHashNearDupsIncremental(delta, textCol, idCol, idx)
-
   /** The un-materialized plan behind [[simHashNearDupsIncremental]].
     * Exposed for plan-shape tests (the public wrapper eagerly
     * checkpoints, which hides the join from `executedPlan`); callers must
@@ -1956,19 +1798,13 @@ object Dedup {
     * [[appendToSimHashIndex]] (gated), but the delta keying and the
     * admission scan over the corpus index run ONCE instead of twice.
     *
-    * REPLAY-SAFE ([[ReplaySafe]], single key table): the table is both
-    * index and ledger for docs with stored rows, so re-running the fold on
-    * a delta whose append already committed appends nothing and emits
-    * nothing; a doc whose every bucket was full stores nothing, but its
-    * re-admission recomputes deterministically against the
-    * delta-excluded corpus, so the replayed append writes the same
-    * (empty) row set. `sink` persists the emissions BEFORE the ledger
-    * append ([[IdempotentSink]]). A replay the ledger proves committed
-    * ([[ReplaySafe.committed]]: every delta id holds all of its
-    * `idx.keys.subsets.length` key rows) skips admission, probe and
-    * append, and emits an empty frame. Every block the fold allocates is
-    * released on every exit: if the sink or the append throws, nothing
-    * stays pinned and the index is unchanged or row-healed by a retry.
+    * Replay-safe through the one fold body ([[IndexFold]], contract in
+    * [[ReplaySafe]]). Ledger: the key table alone (`_id`, row key
+    * `_chunk`, healed per (`_id`, `_chunk`) row); a doc whose every
+    * bucket was full stores nothing, but its re-admission recomputes
+    * deterministically against the delta-excluded corpus, so a replayed
+    * append writes the same (empty) row set. Committed proof: every
+    * delta id holds all `idx.keys.subsets.length` key rows.
     */
   def simHashNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1978,82 +1814,18 @@ object Dedup {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    // one-job ledger read (the table's seen rows + the delta id frame,
-    // [[ReplaySafe.ledgerRead]]) with its attempt decision ∥ delta
-    // keying (the simhash compute): they share no inputs ([[Overlap]])
-    val ((ledger, attempt), keyedRaw) = Overlap.par2(
-      () => {
-        val l = ReplaySafe.ledgerRead(
-          spark.table(idx.chunkTable), "_id", delta, idCol, keyCol = Some("_chunk"))
-        (l, ReplaySafe.classify(l, Some(idx.keys.subsets.length)))
-      },
+    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
+      Seq(ReplaySafe.LedgerTable(
+        spark.table(idx.chunkTable), "_id", Some("_chunk" -> idx.keys.subsets.length))),
       () => idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
-        .localCheckpoint(true))
-    // `pinned` reaches every delta-side block still held (the raw keying
-    // until admission, then the admitted delta and the capped members)
-    var pinned = keyedRaw
-    var out: DataFrame = null
-    try {
-      val (rids, seen) = (ledger.rids, ledger.seenA)
-      // first-attempt fast path (r19): no delta id in the ledger table
-      // makes every excludeIds anti join a semantic no-op — skip them,
-      // and skip the unseen-pair suppression too (with nothing seen,
-      // every emitted pair touches an unseen doc by construction)
-      val firstAttempt = attempt == ReplaySafe.FirstAttempt
-      val excl = if (firstAttempt) None else Some(rids)
-      def admit = admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket, excl)
-      def probe(keyed: DataFrame, pin: DataFrame => DataFrame): DataFrame = {
-        val rawPairs = simHashPairsFromAdmitted(keyed, idx, excl, pin)
-        if (firstAttempt) rawPairs
-        else ReplaySafe.keepPairsTouchingUnseen(
-          rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen))
-      }
-      if (attempt == ReplaySafe.Committed) {
-        // the slow path's schema from its lazy plan — no job runs
-        out = ReplaySafe.emptyLike(probe(admit, identity))
-        sink.foreach(_(out))
-      } else {
-        val keyed = admit.localCheckpoint(true)
-        graft.CacheUtil.release(keyedRaw)
-        pinned = keyed
-        val lazyPairs = probe(keyed, checkpointed)
-        pinned = lazyPairs
-        // materializes the pair set BEFORE the append mutates the table
-        out = lazyPairs.localCheckpoint(true)
-        sink.foreach(_(out))
-        appendRowHealed(
-          keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
-          Seq("_id", "_chunk"), "_id", rids, seen, firstAttempt)
-      }
-      out
-    } catch {
-      case e: Throwable =>
-        Option(out).foreach(graft.CacheUtil.release)
-        throw e
-    } finally {
-      graft.CacheUtil.release(pinned)
-      // rids/seen/unseen are lazy views over the one ledger cache
-      graft.CacheUtil.release(ledger.tagged)
+        .localCheckpoint(true)) { case (Seq(keyedRaw), step) =>
+      val keyed = step.pin(admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket, step.excl))
+      IndexFold.Probe(
+        simHashPairsFromAdmitted(keyed, idx, step.excl, step.pin),
+        () => step.appendHealed(keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
+          Seq("_id", "_chunk"), "_id", 0))
     }
   }
-
-  /** [[simHashNearDupsIncrementalFold]] for a 128-bit index. */
-  def simHashNearDups128IncrementalFold(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHash128Index,
-      sink: Option[DataFrame => Unit] = None
-  ): DataFrame = simHashNearDupsIncrementalFold(delta, textCol, idCol, idx, sink)
-
-  /** [[simHashNearDupsIncrementalFold]] for a combination-keyed index. */
-  def simHashNearDupsIncrementalComboFold(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashComboIndex,
-      sink: Option[DataFrame => Unit] = None
-  ): DataFrame = simHashNearDupsIncrementalFold(delta, textCol, idCol, idx, sink)
 
   private def simHashPairsFromAdmitted(
       keyed: DataFrame,

@@ -443,64 +443,70 @@ object Lines {
     // pass optimistically in parallel with the ledger read ([[Overlap]],
     // guide §2.6); a replay discards it and recomputes over `fresh`
     // (replays re-derive everything anyway, and are the rare path)
-    val ((bids, ledger), optimisticCounts) = Overlap.par2(
+    var bids: Seq[Long] = Nil
+    val Seq(tagged, optimisticCounts) = Overlap.run[DataFrame](Seq(
       () => {
-        val b = committedBids(spark, idx)
+        bids = committedBids(spark, idx)
         // one-job ledger read: committed ledger rows' seen set + delta ids
-        (b, ReplaySafe.ledgerRead(
-          spark.table(idx.fpTable)
-            .filter(col("_did").isNotNull && col("_bid").isin(b: _*)),
-          "_did", delta, idCol))
+        ReplaySafe.ledgerRead(delta, idCol, ReplaySafe.LedgerTable(
+          spark.table(idx.fpTable).filter(col("_did").isNotNull && col("_bid").isin(bids: _*)),
+          "_did")).tagged
       },
       () => fpDocCounts(delta, textCol, idCol, idx.hash64, idx.delimiter)
-        .localCheckpoint(true))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): no delta id in the committed
-    // ledger makes the dropSeen anti join a semantic no-op — skip it
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val fresh =
-      if (firstAttempt) delta
-      else ReplaySafe.dropSeen(delta, idCol, seen)
-    val deltaCounts =
-      if (firstAttempt) optimisticCounts
-      else {
+        .localCheckpoint(true)), graft.CacheUtil.release)
+    val ledger = ReplaySafe.Ledger(tagged, 1)
+    var deltaCounts = optimisticCounts
+    var out: DataFrame = null
+    try {
+      val (rids, seen) = (ledger.rids, ledger.seen(0))
+      // first-attempt fast path (r19): no delta id in the committed
+      // ledger makes the dropSeen anti join a semantic no-op — skip it
+      val firstAttempt = ReplaySafe.noneSeen(seen)
+      val fresh =
+        if (firstAttempt) delta
+        else ReplaySafe.dropSeen(delta, idCol, seen)
+      if (!firstAttempt) {
         graft.CacheUtil.release(optimisticCounts)
-        fpDocCounts(fresh, textCol, idCol, idx.hash64, idx.delimiter)
+        deltaCounts = fpDocCounts(fresh, textCol, idCol, idx.hash64, idx.delimiter)
           .localCheckpoint(true)
       }
-    val lazyOut =
-      cleanedAgainstCounts(fresh, textCol, idCol, idx, minDocs, deltaCounts, bids)
-    // materializes the cleaned text BEFORE the append mutates the table
-    val out = lazyOut.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[graft.operators.IdempotentSink]])
-    // nothing fresh ⇒ nothing to commit (a marker-only append would
-    // grow the table once per replay for no visible rows); one
-    // take-style job over two materialized caches ([[ReplaySafe.anyUnseen]]
-    // — seen is no longer deduped, so row counts cannot be compared)
-    if (ReplaySafe.anyUnseen(rids, seen)) {
-      val bid = newBid()
-      Dedup.writeBucketedTable(
-        deltaCounts
-          .select(
-            col("_fp"), col("_ndocs"),
-            lit(null).cast(fresh.schema(idCol).dataType).as("_did"), lit(bid).as("_bid"))
-          .unionByName(fresh.select(
-            ledgerFp(col(idCol), idx.hash64).as("_fp"),
-            lit(null).cast("bigint").as("_ndocs"),
-            col(idCol).as("_did"),
-            lit(bid).as("_bid"))),
-        idx.fpTable, idx.buckets, Seq("_fp"),
-        org.apache.spark.sql.SaveMode.Append)
-      // rows first, marker last — the marker IS the batch's commit
-      commitMarker(idx, bid, spark)
+      // materializes the cleaned text BEFORE the append mutates the table
+      out = cleanedAgainstCounts(fresh, textCol, idCol, idx, minDocs, deltaCounts, bids)
+        .localCheckpoint(true)
+      sink.foreach(_(out)) // persist before the ledger append ([[graft.operators.IdempotentSink]])
+      // nothing fresh ⇒ nothing to commit (a marker-only append would
+      // grow the table once per replay for no visible rows); one
+      // take-style job over two materialized caches ([[ReplaySafe.anyUnseen]]
+      // — seen is no longer deduped, so row counts cannot be compared)
+      if (ReplaySafe.anyUnseen(rids, seen)) {
+        val bid = newBid()
+        Dedup.writeBucketedTable(
+          deltaCounts
+            .select(
+              col("_fp"), col("_ndocs"),
+              lit(null).cast(fresh.schema(idCol).dataType).as("_did"), lit(bid).as("_bid"))
+            .unionByName(fresh.select(
+              ledgerFp(col(idCol), idx.hash64).as("_fp"),
+              lit(null).cast("bigint").as("_ndocs"),
+              col(idCol).as("_did"),
+              lit(bid).as("_bid"))),
+          idx.fpTable, idx.buckets, Seq("_fp"),
+          org.apache.spark.sql.SaveMode.Append)
+        // rows first, marker last — the marker IS the batch's commit
+        commitMarker(idx, bid, spark)
+      }
+      out
+    } catch {
+      case e: Throwable =>
+        Option(out).foreach(graft.CacheUtil.release)
+        throw e
+    } finally {
+      // ONLY the internal checkpoints: the cleaned text's plan also reads
+      // the CALLER's delta blocks (lineFps and the re-admission join read
+      // the delta directly), which are the caller's to free. rids/seen are
+      // lazy views over the one ledger cache.
+      Seq(deltaCounts, ledger.tagged).foreach(graft.CacheUtil.release)
     }
-    // release ONLY the internal checkpoints: lazyOut's plan also contains
-    // the CALLER's delta blocks (lineFps and the re-admission join read
-    // the delta directly), which are the caller's to free
-    graft.CacheUtil.release(deltaCounts)
-    // rids/seen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
   }
 
   private def cleanedAgainstCounts(

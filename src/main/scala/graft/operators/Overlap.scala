@@ -19,36 +19,37 @@ package graft.operators
   * Threads are created INSIDE the call so they inherit the caller's
   * `InheritableThreadLocal` Spark properties (job group, description) —
   * the bench's per-query `cancelJobGroupAndFutureJobs` reaches the
-  * overlapped jobs, and UI attribution is unchanged. Failures propagate
-  * to the caller (the first thunk's failure wins the throw; every thread
-  * is joined first, so no work outlives the call).
+  * overlapped jobs, and UI attribution is unchanged.
   */
 private[graft] object Overlap {
 
-  def par2[A, B](fa: () => A, fb: () => B): (A, B) = {
-    val rs = run(Seq(() => fa(), () => fb()))
-    (rs(0).asInstanceOf[A], rs(1).asInstanceOf[B])
-  }
-
-  def par3[A, B, C](fa: () => A, fb: () => B, fc: () => C): (A, B, C) = {
-    val rs = run(Seq(() => fa(), () => fb(), () => fc()))
-    (rs(0).asInstanceOf[A], rs(1).asInstanceOf[B], rs(2).asInstanceOf[C])
-  }
-
-  private def run(thunks: Seq[() => Any]): IndexedSeq[Any] = {
-    val out = new Array[Either[Throwable, Any]](thunks.size)
-    val threads = thunks.zipWithIndex.map { case (f, i) =>
-      val t = new Thread(
-        () => out(i) = try Right(f()) catch { case e: Throwable => Left(e) },
-        s"graft-overlap-$i")
-      t.setDaemon(true)
-      t.start()
-      t
+  /** The thunks' results, in order; a single thunk runs on the calling
+    * thread. Every thread is joined before anything is returned or
+    * thrown, so no work outlives the call. When a thunk throws, `release`
+    * frees what its siblings returned (their checkpoints would otherwise
+    * stay pinned for the life of the JVM) and the first failure in thunk
+    * order is rethrown.
+    */
+  def run[A](thunks: Seq[() => A], release: A => Unit): IndexedSeq[A] = {
+    def attempt(f: () => A): Either[Throwable, A] =
+      try Right(f()) catch { case e: Throwable => Left(e) }
+    val rs =
+      if (thunks.size == 1) IndexedSeq(attempt(thunks.head))
+      else {
+        val out = new Array[Either[Throwable, A]](thunks.size)
+        val threads = thunks.zipWithIndex.map { case (f, i) =>
+          val t = new Thread(() => out(i) = attempt(f), s"graft-overlap-$i")
+          t.setDaemon(true)
+          t.start()
+          t
+        }
+        threads.foreach(_.join())
+        out.toIndexedSeq
+      }
+    rs.collectFirst { case Left(e) => e }.foreach { e =>
+      rs.foreach(_.foreach(release))
+      throw e
     }
-    threads.foreach(_.join())
-    out.toIndexedSeq.map {
-      case Right(a) => a
-      case Left(e)  => throw e
-    }
+    rs.collect { case Right(a) => a }
   }
 }

@@ -255,7 +255,7 @@ object Passages {
     * make the table's `_pid` set a COMPLETE ledger of every indexed doc
     * — the replay-safety anchor for [[passageDupFractionIncrementalFold]]
     * ([[graft.operators.ReplaySafe]]). A marker's `_fp` is a
-    * bucket-SPREAD surrogate ([[markerFp]] — a NULL fp would pile every
+    * bucket-SPREAD surrogate ([[markerRows]] — a NULL fp would pile every
     * short doc of a web-scale crawl into the one NULL bucket, making
     * the ledger read a single-task scan); markers are invisible to
     * every probe because the dup semi-join's corpus side filters on
@@ -272,21 +272,25 @@ object Passages {
       .groupBy(col(idCol), col("_fp"))
       .agg(count(lit(1)).as("_occ"))
       .select(col(idCol).as("_pid"), col("_fp"), col("_occ"))
-    // size(split(NULL)) = -1, so NULL-text docs also get a marker
-    val markers = df
-      .filter(size(split(col(textCol), " ")) < idx.windowTokens)
-      .select(
-        col(idCol).as("_pid"),
-        markerFp(col(idCol), idx.hash64).as("_fp"),
-        lit(0L).as("_occ"))
-    counts.unionByName(markers)
+    counts.unionByName(markerRows(df, textCol, idCol, idx))
   }
 
-  /** Bucket-spread surrogate `_fp` for a windowless-doc marker row (see
-    * [[indexRows]]): a hash of the doc id in the table's fp kind.
+  /** One windowless-doc marker row per doc of `df` shorter than
+    * `windowTokens` tokens (see [[indexRows]]), with a bucket-spread
+    * surrogate `_fp`: a hash of the doc id in the table's fp kind.
     */
-  private def markerFp(id: org.apache.spark.sql.Column, hash64: Boolean) =
-    if (hash64) xxhash64(id) else md5(id.cast("string"))
+  private def markerRows(
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: PassageIndex
+  ): DataFrame =
+    // size(split(NULL)) = -1, so NULL-text docs also get a marker
+    df.filter(size(split(col(textCol), " ")) < idx.windowTokens)
+      .select(
+        col(idCol).as("_pid"),
+        (if (idx.hash64) xxhash64(col(idCol)) else md5(col(idCol).cast("string"))).as("_fp"),
+        lit(0L).as("_occ"))
 
   /** Incremental [[passageDupFraction]]: profile every `delta` document
     * against corpus ∪ delta, where the corpus is the persisted index. A
@@ -328,13 +332,9 @@ object Passages {
       textCol: String,
       idCol: String,
       idx: PassageIndex
-  ): DataFrame = {
-    val deltaFp = windowFps(delta, textCol, idCol, idx.windowTokens, idx.stride, idx.hash64)
-      .groupBy(col(idCol), col("_fp"))
-      .agg(count(lit(1)).as("_occ"))
-      .localCheckpoint(true)
-    profileFromDeltaFp(idCol, idx, deltaFp, windowTotals(delta, textCol, idCol, idx))
-  }
+  ): DataFrame =
+    profileFromDeltaFp(
+      idCol, idx, deltaFpChk(delta, textCol, idCol, idx), windowTotals(delta, textCol, idCol, idx))
 
   /** Probe-then-append in ONE delta pass: profile the delta against the
     * index as it stands, then fold the delta's fingerprints in — the
@@ -345,6 +345,14 @@ object Passages {
     * |tokens| rows per doc, the dominant delta-side cost — runs ONCE
     * instead of twice: the same per-(doc, fp) count frame feeds the
     * profile and the append.
+    *
+    * Replay-safe through the one fold body
+    * ([[graft.operators.IndexFold]], contract in
+    * [[graft.operators.ReplaySafe]]). Ledger: the fingerprint table
+    * alone (`_pid`; windowless docs get marker rows, [[indexRows]]),
+    * healed per (`_pid`, `_fp`) row. No committed proof: the row keys
+    * are fingerprints, not `[0, n)`, so every replay takes the slow path,
+    * which heals a tear inside one doc's window rows.
     */
   def passageDupFractionIncrementalFold(
       delta: DataFrame,
@@ -354,55 +362,32 @@ object Passages {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    // REPLAY SAFETY ([[graft.operators.ReplaySafe]], single table): the
-    // index's `_pid` set is a complete ledger (windowless docs get
-    // marker rows — [[indexRows]]), the probe excludes the delta's own
-    // stored rows, a replayed append writes nothing, and profile rows
-    // for already-folded docs are suppressed
-    // one-job ledger read: table's seen set + the delta id frame.
-    // The ledger read, the window-fingerprint pass (the expensive
-    // per-batch compute) and the per-doc window totals share no inputs —
-    // overlap them ([[Overlap]], guide §2.6)
-    val (ledger, deltaFp, totals) = Overlap.par3(
-      () => ReplaySafe.ledgerRead(
-        spark.table(idx.fpTable), "_pid", delta, idCol),
-      () => windowFps(delta, textCol, idCol, idx.windowTokens, idx.stride, idx.hash64)
-        .groupBy(col(idCol), col("_fp"))
-        .agg(count(lit(1)).as("_occ"))
-        .localCheckpoint(true),
-      () => windowTotals(delta, textCol, idCol, idx))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): no delta id in the ledger makes
-    // the excludeIds anti join a semantic no-op — skip it, along with
-    // the profile's dropSeen (nothing to suppress)
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val excl = if (firstAttempt) None else Some(rids)
-    val profile = profileFromDeltaFp(idCol, idx, deltaFp, totals, excl)
-    val lazyOut =
-      if (firstAttempt) profile
-      else ReplaySafe.dropSeen(profile, idCol, seen)
-    // materializes the profile BEFORE the append mutates the table
-    val out = lazyOut.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[graft.operators.IdempotentSink]])
-    val markers = delta
-      .filter(size(split(col(textCol), " ")) < idx.windowTokens)
-      .select(
-        col(idCol).as("_pid"),
-        markerFp(col(idCol), idx.hash64).as("_fp"),
-        lit(0L).as("_occ"))
-    // append heals at ROW granularity — (_pid, _fp), covering the
-    // windowless markers too — because a torn job commit can land
-    // WITHIN one doc's window rows ([[Dedup.appendRowHealed]])
-    Dedup.appendRowHealed(
-      deltaFp.select(col(idCol).as("_pid"), col("_fp"), col("_occ"))
-        .unionByName(markers),
-      idx.fpTable, idx.buckets, Seq("_fp"),
-      Seq("_pid", "_fp"), "_pid", rids, seen, firstAttempt)
-    graft.CacheUtil.release(lazyOut) // frees deltaFp + totals in its lineage
-    // rids/seen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
+    IndexFold.run(delta, idCol, sink, IndexFold.PerDoc(idCol), proven = false,
+      Seq(ReplaySafe.LedgerTable(spark.table(idx.fpTable), "_pid")),
+      () => deltaFpChk(delta, textCol, idCol, idx),
+      () => windowTotals(delta, textCol, idCol, idx)) { case (Seq(deltaFp, totals), step) =>
+      IndexFold.Probe(
+        profileFromDeltaFp(idCol, idx, deltaFp, totals, step.excl),
+        () => step.appendHealed(
+          deltaFp.select(col(idCol).as("_pid"), col("_fp"), col("_occ"))
+            .unionByName(markerRows(delta, textCol, idCol, idx)),
+          idx.fpTable, idx.buckets, Seq("_fp"), Seq("_pid", "_fp"), "_pid", 0))
+    }
   }
+
+  /** The delta's per-(doc, fp) window occurrence counts, checkpointed —
+    * the window fingerprinting, the dominant per-batch compute.
+    */
+  private def deltaFpChk(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: PassageIndex
+  ): DataFrame =
+    windowFps(delta, textCol, idCol, idx.windowTokens, idx.stride, idx.hash64)
+      .groupBy(col(idCol), col("_fp"))
+      .agg(count(lit(1)).as("_occ"))
+      .localCheckpoint(true)
 
   /** Per-doc window totals, checkpointed so the profile plan references
     * ONLY internal checkpoints: releasing it must never free the

@@ -946,10 +946,11 @@ object Quantization {
     // the delta id frame in a single checkpoint
     var ledger: ReplaySafe.Ledger = null
     try {
-      ledger = ReplaySafe.ledgerRead(spark.table(idx.codeTable), "_vid", delta, idCol)
+      ledger = ReplaySafe.ledgerRead(
+        delta, idCol, ReplaySafe.LedgerTable(spark.table(idx.codeTable), "_vid"))
       val fresh =
-        if (ReplaySafe.noneSeen(ledger.seenA)) delta
-        else ReplaySafe.dropSeen(delta, idCol, ledger.seenA)
+        if (ReplaySafe.noneSeen(ledger.seen(0))) delta
+        else ReplaySafe.dropSeen(delta, idCol, ledger.seen(0))
       writeSq8Table(fresh, vecCol, idCol, idx, org.apache.spark.sql.SaveMode.Append)
     } finally {
       if (ledger != null) graft.CacheUtil.release(ledger.tagged)
@@ -1310,10 +1311,10 @@ object Quantization {
         .parquet(s"$path/codes")
         .filter(col("_centroid").isin(touched.map(Integer.valueOf): _*))
       // one-job ledger read: pruned seen set + the delta id frame
-      ledger = ReplaySafe.ledgerRead(existing, "_vid", assigned, idCol)
+      ledger = ReplaySafe.ledgerRead(assigned, idCol, ReplaySafe.LedgerTable(existing, "_vid"))
       val fresh =
-        if (ReplaySafe.noneSeen(ledger.seenA)) assigned
-        else ReplaySafe.dropSeen(assigned, idCol, ledger.seenA)
+        if (ReplaySafe.noneSeen(ledger.seen(0))) assigned
+        else ReplaySafe.dropSeen(assigned, idCol, ledger.seen(0))
       fresh
         .withColumn("_code", sq8EncodeExpr(col(vecCol), idx.params))
         .select(Seq(col(idCol).as("_vid"), col("_centroid"), col("_code"))

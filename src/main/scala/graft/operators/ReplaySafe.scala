@@ -84,7 +84,8 @@ import org.apache.spark.sql.functions._
   * result. [[committed]] recognizes it from the ledger checkpoint
   * alone: every delta id is in each one-row-per-id table, and holds all
   * `n` distinct row keys `[0, n)` of each multi-row-per-id table (the
-  * keys a clean fold stores — bands, SimHash keys). The check is exact
+  * keys a clean fold stores — MinHash bands, SimHash keys, vector-LSH
+  * tables). The check is exact
   * for that state: with every id in the emission ledger the unseen set
   * is empty, so the slow path emits nothing; with every (id, key) row
   * present its row-level heal drops every admitted row (admitted keys
@@ -108,6 +109,36 @@ import org.apache.spark.sql.functions._
   * rename-committed per-batch parquet dirs, first write wins) as the
   * canonical callback. A fold called without a sink keeps the
   * document-it-yourself contract above.
+  *
+  * One fold body ([[IndexFold.run]]): the MinHash, SimHash, vector-LSH,
+  * semDedup and passage folds share one body, in this order.
+  *  1. The ledger read ([[ledgerRead]]) with [[classify]] runs on one
+  *     driver thread beside the family's signature thunks ([[Overlap]]).
+  *  1. The attempt decides `excl` (the delta's ids, dropped from every
+  *     corpus read on a replay) and the emission filter: pairs touching
+  *     an unseen doc, or rows of unseen docs (no filter on a first
+  *     attempt).
+  *  1. [[Committed]]: the sink gets [[emptyLike]] of the family's lazy
+  *     probe plan, built with an identity `pin`, and no job runs.
+  *  1. Otherwise the probe runs, its emission is checkpointed before any
+  *     append, the sink persists it, then the family's appends run
+  *     overlapped.
+  *  1. One release path: the ledger checkpoint, every signature result
+  *     and every frame the probe materialized (through the body's `pin`,
+  *     its only way to) are released on every exit, and the emission too
+  *     when the fold throws. When an overlapped thunk throws, its
+  *     siblings' results are released before the throw.
+  *
+  * A family supplies its ledger tables with their row keys, its
+  * signature thunks, the lazy probe with its appends, and its emission
+  * shape. Passages declines the committed proof: its row keys are
+  * fingerprints, not `[0, n)`, so every replay takes the slow path,
+  * which heals a tear inside one doc. Three folds stay outside, each with
+  * its own release path: the exact fold has no ledger read (its
+  * fingerprint table is the ledger, and membership is the probe), the
+  * line catalogue gates on per-batch commit markers rather than per-id
+  * rows, and the IVF-SQ8 fold's ledger read depends on the centroids the
+  * delta touches, so it cannot overlap the signature compute.
   */
 private[graft] object ReplaySafe {
 
@@ -126,28 +157,36 @@ private[graft] object ReplaySafe {
   def anyUnseen(ids: DataFrame, seen: DataFrame): Boolean =
     !ids.join(broadcast(seen), Seq("_rid"), "left_anti").isEmpty
 
-  /** Views over one [[ledgerRead]]/[[ledgerRead2]] checkpoint `tagged`
-    * (`_rid`, `_t`, `_k`): `_t` is 0 or 1 for the delta ids table A or
-    * B already holds (one row per stored ROW, not per id — see
-    * [[ledgerRead]]) and 2 for the delta's own ids; `_k` is the row key
-    * of a multi-row-per-id table (NULL for one-row-per-id tables and
-    * the delta ids). `rids` = the delta's ids, `seenA`/`seenB` = per-table
-    * seen sets (equal for the one-table form), `seenAny` = their union
-    * (the first-attempt test: `noneSeen(seenAny)`). The views are lazy
-    * filters over the cached `tagged` blocks — safe to splice into probe
-    * plans and to broadcast, because after the checkpoint their plans
-    * reference ONLY our LogicalRDD leaf, never the caller's delta blocks
+  /** Views over one [[ledgerRead]] checkpoint `tagged` (`_rid`, `_t`,
+    * `_k`): `_t` is the index of the ledger table that already holds the
+    * delta id (one row per stored ROW, not per id — see [[ledgerRead]])
+    * and 2 for the delta's own ids; `_k` is the row key of a
+    * multi-row-per-id table (NULL for one-row-per-id tables and the delta
+    * ids). `rids` = the delta's ids, `seen(t)` = table `t`'s seen set,
+    * `seenAny` = their union (the first-attempt test:
+    * `noneSeen(seenAny)`). The views are lazy filters over the cached
+    * `tagged` blocks — safe to splice into probe plans and to broadcast,
+    * because after the checkpoint their plans reference ONLY our
+    * LogicalRDD leaf, never the caller's delta blocks
     * ([[graft.CacheUtil.release]] walks to LogicalRDD leaves). The caller
     * releases `tagged`.
     */
   final case class Ledger(tagged: DataFrame, tables: Int) {
-    private def tag(t: Int): DataFrame = tagged.filter(col("_t") === t).select(col("_rid"))
-    lazy val rids: DataFrame = tag(2)
-    lazy val seenA: DataFrame = tag(0)
-    lazy val seenB: DataFrame = if (tables == 1) seenA else tag(1)
-    lazy val seenAny: DataFrame =
-      if (tables == 1) seenA else tagged.filter(col("_t") =!= 2).select(col("_rid"))
+    def seen(t: Int): DataFrame = tagged.filter(col("_t") === t).select(col("_rid"))
+    def rids: DataFrame = seen(2)
+    def seenAny: DataFrame =
+      if (tables == 1) seen(0) else tagged.filter(col("_t") =!= 2).select(col("_rid"))
   }
+
+  /** One table of a fold's replay ledger: the delta ids
+    * `corpus(idColName)` holds. `keys` names the row key of a
+    * multi-row-per-id table and the `n` keys `[0, n)` a clean fold stores
+    * per id ([[committed]]); `None` for a one-row-per-id table.
+    */
+  final case class LedgerTable(
+      corpus: DataFrame,
+      idColName: String,
+      keys: Option[(String, Int)] = None)
 
   /** One ledger table's leg: the delta ids `corpus` holds, one row per
     * stored row, with the row key `keyCol` as `_k` for a
@@ -171,52 +210,27 @@ private[graft] object ReplaySafe {
       .withColumn("_t", lit(t))
 
   /** The fold's whole per-batch replay-ledger read in ONE materialized
-    * job (r19): the delta ids `corpus(idColName)` already holds
-    * (a column-pruned corpus scan behind a broadcast semi join — the
-    * corpus side keeps its bucketed zero-Exchange scan shape) tag-unioned
-    * with the delta's id frame, and checkpointed once. Materialized
-    * eagerly: it must snapshot the PRE-append state, and it feeds
-    * several later filters. Tiny by construction (≤ the micro-batch's
-    * rows in the table). The seen set is empty on a first attempt, the
-    * whole delta after a committed append, and a strict subset after a
-    * TORN append (every consumer of it is per-id, so a subset is
-    * handled, not an error state). `keyCol` names the row key of a
-    * multi-row-per-id table, carried for [[committed]].
+    * job (r19): for each of (at most two) ledger tables, the delta ids it
+    * already holds (a column-pruned corpus scan behind a broadcast semi
+    * join — the corpus side keeps its bucketed zero-Exchange scan
+    * shape), tag-unioned with the delta's id frame, and checkpointed
+    * once. Materialized eagerly: it must snapshot the PRE-append state,
+    * and it feeds several later filters. Tiny by construction (≤ the
+    * micro-batch's rows in the tables). A seen set is empty on a first
+    * attempt, the whole delta after a committed append, and a strict
+    * subset after a TORN append (every consumer of it is per-id, so a
+    * subset is handled, not an error state). A table's `keys` column is
+    * carried as `_k` for [[committed]].
     */
-  def ledgerRead(
-      corpus: DataFrame,
-      idColName: String,
-      delta: DataFrame,
-      idCol: String,
-      keyCol: Option[String] = None
-  ): Ledger = {
+  def ledgerRead(delta: DataFrame, idCol: String, tables: LedgerTable*): Ledger = {
+    require(tables.size == 1 || tables.size == 2, s"one or two ledger tables, got ${tables.size}")
     val ids = delta.select(col(idCol).as("_rid"))
-    val tagged = seenLeg(corpus, idColName, keyCol, ids, 0)
+    val tagged = tables.zipWithIndex
+      .map { case (t, i) => seenLeg(t.corpus, t.idColName, t.keys.map(_._1), ids, i) }
+      .reduce(_ unionByName _)
       .unionByName(deltaLeg(ids))
       .localCheckpoint(true)
-    Ledger(tagged, tables = 1)
-  }
-
-  /** Two-table twin of [[ledgerRead]] — the minhash / vector-LSH fold
-    * shape: both tables' seen sets AND the delta id frame in one
-    * checkpointed job. `keyColB` names table B's row key when B holds
-    * several rows per id.
-    */
-  def ledgerRead2(
-      corpusA: DataFrame,
-      idColA: String,
-      corpusB: DataFrame,
-      idColB: String,
-      delta: DataFrame,
-      idCol: String,
-      keyColB: Option[String] = None
-  ): Ledger = {
-    val ids = delta.select(col(idCol).as("_rid"))
-    val tagged = seenLeg(corpusA, idColA, None, ids, 0)
-      .unionByName(seenLeg(corpusB, idColB, keyColB, ids, 1))
-      .unionByName(deltaLeg(ids))
-      .localCheckpoint(true)
-    Ledger(tagged, tables = 2)
+    Ledger(tagged, tables.size)
   }
 
   private def deltaLeg(ids: DataFrame): DataFrame =
@@ -278,14 +292,16 @@ private[graft] object ReplaySafe {
     */
   case object Committed extends Attempt
 
-  /** [[noneSeen]], then on a replay [[committed]] — the two decisions a
-    * fold's ledger thunk makes while its signature compute runs
-    * ([[Overlap]]). Releases the ledger if either check throws.
+  /** [[noneSeen]], then on a replay [[committed]] with `keysPerDoc`
+    * (`None`: the family has no committed proof, every replay is a
+    * [[Replay]]) — the two decisions a fold's ledger thunk makes while
+    * its signature compute runs ([[Overlap]]). Releases the ledger if
+    * either check throws.
     */
-  def classify(ledger: Ledger, keysPerDoc: Option[Int]*): Attempt =
+  def classify(ledger: Ledger, keysPerDoc: Option[Seq[Option[Int]]]): Attempt =
     try {
       if (noneSeen(ledger.seenAny)) FirstAttempt
-      else if (committed(ledger, keysPerDoc: _*)) Committed
+      else if (keysPerDoc.exists(committed(ledger, _: _*))) Committed
       else Replay
     } catch {
       case e: Throwable =>

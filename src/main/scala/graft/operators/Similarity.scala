@@ -763,7 +763,7 @@ object Similarity {
         col(index.idCol).as("_id"),
         VectorFunctions.l2Normalize(col(index.vecCol)).as("_nv"),
         col("_centroid"))
-    val admitted = semDedupAdmit(probe, stored, maxCluster)
+    val admitted = semDedupAdmit(probe, stored, maxCluster).localCheckpoint(true)
     val out =
       semDedupPairsTouchingDelta(admitted, stored, threshold).localCheckpoint(true)
     graft.CacheUtil.release(stored)
@@ -794,6 +794,13 @@ object Similarity {
     * capped member set would diverge from the capped batch over the
     * union with no runtime signal. Under-cap clusters are unaffected.
     * The over-cap ScalaTest leg asserts the precondition explicitly.
+    *
+    * Replay-safe through the one fold body
+    * ([[graft.operators.IndexFold]], contract in
+    * [[graft.operators.ReplaySafe]]). Ledger: the lists alone (`idCol`,
+    * one row per id); the append writes only ids the lists lack.
+    * Committed proof: every delta id is in the lists. Compaction is
+    * checked at entry only ([[failIfCompacting]]).
     */
   def semDedupPairsIncrementalFold(
       spark: org.apache.spark.sql.SparkSession,
@@ -808,49 +815,22 @@ object Similarity {
     require(maxCluster > 1, "maxCluster must allow at least one pair")
     failIfCompacting(spark, s"$path/lists")
     val cents = readCentroids(spark, s"$path/centroids")
-    // REPLAY SAFETY ([[graft.operators.ReplaySafe]], single lists dir):
-    // the lists record every folded row, so they are both index and
-    // ledger; the probe reads them with the delta's ids excluded
-    // (pre-append state on a replay, a no-op on a first attempt) and
-    // the append writes only unseen rows
-    val listsRaw = spark.read.parquet(s"$path/lists")
-    // one-job ledger read (lists' seen set + the delta id frame) and the
-    // ONE delta-side assignment pass (reused by probe and fold) share no
-    // inputs — overlap them ([[Overlap]], guide §2.6)
-    val (ledger, assigned) = Overlap.par2(
-      () => ReplaySafe.ledgerRead(listsRaw, idCol, delta, idCol),
-      () => ivfAssign(delta, vecCol, cents).localCheckpoint(true))
-    val (rids, seen) = (ledger.rids, ledger.seenA)
-    // first-attempt fast path (r19): no delta id in the lists makes the
-    // excludeIds anti join a semantic no-op — skip it, along with the
-    // unseen-pair suppression (nothing seen ⇒ every pair touches an
-    // unseen doc) and the append's dropSeen (nothing to drop)
-    val firstAttempt = ReplaySafe.noneSeen(seen)
-    val index = IvfIndex(
-      if (firstAttempt) listsRaw
-      else ReplaySafe.excludeIds(listsRaw, idCol, rids),
-      cents, vecCol, idCol)
-    val stored = semDedupCappedStored(index, maxCluster)
-    val probe = assigned.select(
-      col(idCol).as("_id"),
-      VectorFunctions.l2Normalize(col(vecCol)).as("_nv"),
-      col("_centroid"))
-    val admitted = semDedupAdmit(probe, stored, maxCluster)
-    val rawPairs = semDedupPairsTouchingDelta(admitted, stored, threshold)
-    // materializes the pair set BEFORE the append mutates the lists
-    val out = (if (firstAttempt) rawPairs
-               else ReplaySafe.keepPairsTouchingUnseen(
-                 rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seen)))
-      .localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger append ([[IdempotentSink]])
-    (if (firstAttempt) assigned else ReplaySafe.dropSeen(assigned, idCol, seen))
-      .write.mode("append").partitionBy("_centroid").parquet(s"$path/lists")
-    graft.CacheUtil.release(stored)
-    graft.CacheUtil.release(admitted)
-    graft.CacheUtil.release(assigned)
-    // rids/seen/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
+    val lists = spark.read.parquet(s"$path/lists")
+    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
+      Seq(ReplaySafe.LedgerTable(lists, idCol)),
+      () => ivfAssign(delta, vecCol, cents).localCheckpoint(true)) { case (Seq(assigned), step) =>
+      val stored = step.pin(semDedupCappedStoredLazy(
+        IvfIndex(step.excl.fold(lists)(ReplaySafe.excludeIds(lists, idCol, _)), cents, vecCol, idCol),
+        maxCluster))
+      val admitted = step.pin(semDedupAdmit(assigned.select(
+        col(idCol).as("_id"),
+        VectorFunctions.l2Normalize(col(vecCol)).as("_nv"),
+        col("_centroid")), stored, maxCluster))
+      IndexFold.Probe(
+        semDedupPairsTouchingDelta(admitted, stored, threshold),
+        () => step.fresh(assigned, idCol)
+          .write.mode("append").partitionBy("_centroid").parquet(s"$path/lists"))
+    }
   }
 
   /** Normalized members of every cluster, capped at the `maxCluster`
@@ -895,7 +875,7 @@ object Similarity {
   /** First-seen-wins admission of assigned delta rows (`_centroid`,
     * `_id`, `_nv`) into each cluster's remaining slots. `stored` must
     * already be capped, so its per-cluster count IS the number of
-    * occupied slots. Checkpointed — callers release.
+    * occupied slots. Lazy — callers materialize.
     */
   private def semDedupAdmit(
       probe: DataFrame,
@@ -910,7 +890,6 @@ object Similarity {
       .join(slots, Seq("_centroid"), "left")
       .filter(col("_rk") <= lit(maxCluster) - coalesce(col("_nstored"), lit(0L)))
       .select(col("_centroid"), col("_id"), col("_nv"))
-      .localCheckpoint(true)
   }
 
   /** Every within-cluster pair ≥ `threshold` touching the delta:
@@ -1155,12 +1134,12 @@ object Similarity {
   private def lshCandidatesFromBanded(
       banded: DataFrame,
       nTables: Int,
-      maxBucket: Int
+      maxBucket: Int,
+      pin: DataFrame => DataFrame = _.localCheckpoint(true)
   ): DataFrame = {
-    val members = Dedup.cappedMultiMembers(
+    val members = pin(Dedup.cappedMultiMembers(
       banded.select(col("_tbl"), col("_sig"), col("_id"), col("_lower")),
-      maxBucket, Seq("_tbl", "_sig"))
-      .localCheckpoint(true)
+      maxBucket, Seq("_tbl", "_sig")))
     members
       .as("a")
       .join(
@@ -1386,6 +1365,13 @@ object Similarity {
     * [[appendToLshIndex]], but the hyperplane banding, the admission
     * scan over the corpus index, and the vector normalization each run
     * ONCE instead of twice.
+    *
+    * Replay-safe through the one fold body
+    * ([[graft.operators.IndexFold]], contract in
+    * [[graft.operators.ReplaySafe]]). Ledger: the vector table (`_vid`,
+    * one row per doc, the emission ledger) and the band table (`_id`,
+    * row key `_tbl`, healed per (`_id`, `_tbl`) row). Committed proof:
+    * every delta id in the vector table with all `idx.nTables` band rows.
     */
   def lshNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1396,66 +1382,37 @@ object Similarity {
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
     val spark = delta.sparkSession
-    // REPLAY SAFETY ([[graft.operators.ReplaySafe]]): the vector table
-    // records EVERY folded doc — it is the emission ledger; the band
-    // table's own id set gates its append separately (same two-table
-    // healing contract as the minhash fold)
-    // both tables' ledger reads AND the delta id frame in one job —
-    // the r19 fold fast path (see minHashNearDupsIncrementalFold)
-    // ledger read, banding (the plane-projection compute) and the
-    // normalized delta share no inputs — overlap them ([[Dedup.Overlap]]
-    // via [[Overlap]], guide §2.6), as in minHashNearDupsIncrementalFold
-    val (ledger, bandedRaw, deltaV) = Overlap.par3(
-      () => ReplaySafe.ledgerRead2(
-        spark.table(idx.vecTable), "_vid",
-        spark.table(idx.bandTable), "_id", delta, idCol),
+    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
+      Seq(ReplaySafe.LedgerTable(spark.table(idx.vecTable), "_vid"),
+        ReplaySafe.LedgerTable(spark.table(idx.bandTable), "_id", Some("_tbl" -> idx.nTables))),
       () => lshBandedRawChk(delta, vecCol, idCol, idx),
-      () => lshNormalizedDelta(delta, vecCol, idCol))
-    val (rids, seenVec, seenBand) = (ledger.rids, ledger.seenA, ledger.seenB)
-    // first-attempt fast path (r19): skips the exclusion antis, the
-    // unseen-pair suppression, and the vec append's dropSeen — see
-    // minHashNearDupsIncrementalFold for the certification argument
-    val firstAttempt = ReplaySafe.noneSeen(ledger.seenAny)
-    val excl = if (firstAttempt) None else Some(rids)
-    val banded = lshAdmittedFromBanded(bandedRaw, idx, excl)
-    // sidesDisjoint holds on both branches: excl strips delta ids from
-    // the corpus side, and the fast path certified none are stored
-    val rawPairs =
-      lshPairsFromAdmitted(banded, deltaV, threshold, idx, excl,
-        sidesDisjoint = true)
-    val lazyPairs =
-      if (firstAttempt) rawPairs
-      else ReplaySafe.keepPairsTouchingUnseen(
-        rawPairs, "id_a", "id_b", ReplaySafe.unseenIds(rids, seenVec))
-    // materializes the pair set BEFORE the appends mutate the tables
-    val out = lazyPairs.localCheckpoint(true)
-    sink.foreach(_(out)) // persist before the ledger appends ([[IdempotentSink]])
-    // band append heals at ROW granularity — (_id, _tbl) — a torn job
-    // commit can land WITHIN one id ([[Dedup.appendRowHealed]]); the two
-    // appends write different tables — overlap them (§2.6)
-    Overlap.par2(
-      () => Dedup.appendRowHealed(
-        banded, idx.bandTable, idx.buckets, Seq("_tbl", "_sig"),
-        Seq("_id", "_tbl"), "_id", rids, seenBand, firstAttempt),
-      () => Dedup.writeBucketedTable(
-        if (firstAttempt) deltaV
-        else ReplaySafe.dropSeen(deltaV, "_vid", seenVec),
-        idx.vecTable, idx.buckets, Seq("_vid"),
-        org.apache.spark.sql.SaveMode.Append))
-    graft.CacheUtil.release(lazyPairs) // frees banded + deltaV in its lineage
-    // rids/seenVec/seenBand/unseen are lazy views over the one ledger cache
-    graft.CacheUtil.release(ledger.tagged)
-    out
+      () => lshNormalizedDelta(delta, vecCol, idCol)) { case (Seq(bandedRaw, deltaV), step) =>
+      val banded = step.pin(Dedup.admittedAgainstIndexKeyed(
+        bandedRaw, idx.bandTable, idx.maxBucket, Seq("_tbl", "_sig"), step.excl))
+      // sidesDisjoint: `excl` strips every delta id from the corpus side,
+      // and a first attempt's ledger proved none is stored
+      IndexFold.Probe(
+        lshPairsFromAdmitted(banded, deltaV, threshold, idx, step.excl, sidesDisjoint = true, step.pin),
+        () => step.appendHealed(banded, idx.bandTable, idx.buckets, Seq("_tbl", "_sig"),
+          Seq("_id", "_tbl"), "_id", 1),
+        () => Dedup.writeBucketedTable(step.fresh(deltaV, "_vid"), idx.vecTable, idx.buckets,
+          Seq("_vid"), org.apache.spark.sql.SaveMode.Append))
+    }
   }
 
   private def lshAdmittedBands(
       delta: DataFrame,
       vecCol: String,
       idCol: String,
-      idx: LshIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame =
-    lshAdmittedFromBanded(lshBandedRawChk(delta, vecCol, idCol, idx), idx, excludeIds)
+      idx: LshIndex
+  ): DataFrame = {
+    val bandedRaw = lshBandedRawChk(delta, vecCol, idCol, idx)
+    val banded = Dedup.admittedAgainstIndexKeyed(
+      bandedRaw, idx.bandTable, idx.maxBucket, Seq("_tbl", "_sig"))
+      .localCheckpoint(true)
+    graft.CacheUtil.release(bandedRaw)
+    banded
+  }
 
   /** The delta's banded rows, checkpointed — the projection compute,
     * shared by [[lshAdmittedBands]] and the fold's overlapped start. */
@@ -1469,19 +1426,6 @@ object Similarity {
       delta, vecCol, idCol, idx.nPlanes, idx.dim, idx.seed, idx.nTables,
       spread = false)
       .localCheckpoint(true)
-
-  /** Admission from a prebuilt banded frame; releases `bandedRaw`. */
-  private def lshAdmittedFromBanded(
-      bandedRaw: DataFrame,
-      idx: LshIndex,
-      excludeIds: Option[DataFrame]
-  ): DataFrame = {
-    val banded = Dedup.admittedAgainstIndexKeyed(
-      bandedRaw, idx.bandTable, idx.maxBucket, Seq("_tbl", "_sig"), excludeIds)
-      .localCheckpoint(true)
-    graft.CacheUtil.release(bandedRaw)
-    banded
-  }
 
   private def lshNormalizedDelta(
       delta: DataFrame,
@@ -1498,10 +1442,11 @@ object Similarity {
       threshold: Double,
       idx: LshIndex,
       excludeIds: Option[DataFrame] = None,
-      sidesDisjoint: Boolean = false
+      sidesDisjoint: Boolean = false,
+      pin: DataFrame => DataFrame = _.localCheckpoint(true)
   ): DataFrame = {
     val spark = banded.sparkSession
-    val within = lshCandidatesFromBanded(banded, idx.nTables, idx.maxBucket)
+    val within = lshCandidatesFromBanded(banded, idx.nTables, idx.maxBucket, pin)
     val corpus = excludeIds.fold(spark.table(idx.bandTable))(
       ReplaySafe.excludeIds(spark.table(idx.bandTable), "_id", _))
     val cross = banded

@@ -185,7 +185,7 @@ object IncrementalIndexProbe {
       s128Idx = Dedup.writeSimHash128Index(corpus, "text", "doc_id", "incprobe_s128", maxHamming = 20)
     }
     timed("simhash128-incremental")(
-      Dedup.simHashNearDups128Incremental(delta, "text", "doc_id", s128Idx))
+      Dedup.simHashNearDupsIncremental(delta, "text", "doc_id", s128Idx))
 
     spark.sql("DROP TABLE IF EXISTS incprobe_e_exactfps")
     spark.sql("DROP TABLE IF EXISTS incprobe_li_linefps")

@@ -448,7 +448,7 @@ class OperatorsSpec extends AnyFunSuite {
     val idx128 = Dedup.writeSimHash128Index(
       corpus, "text", "doc_id", "cap_gate128", maxHamming = 4, buckets = 4, maxBucket = cap)
     try {
-      val incr = pairSet(Dedup.simHashNearDups128Incremental(delta, "text", "doc_id", idx128))
+      val incr = pairSet(Dedup.simHashNearDupsIncremental(delta, "text", "doc_id", idx128))
       val batch = pairSet(Dedup.simHashNearDups128(
         corpus.unionByName(delta), "text", "doc_id", maxHamming = 4, maxBucket = cap))
       val touchesDelta = batch.filter { case (x, y) => x >= 1000L || y >= 1000L }
@@ -674,13 +674,13 @@ class OperatorsSpec extends AnyFunSuite {
       val wSep = Dedup.writeSimHash128Index(docs.limit(0), "text", "doc_id", "foldpar_wsep", maxHamming = 8, buckets = 4)
       val wFold = Dedup.writeSimHash128Index(docs.limit(0), "text", "doc_id", "foldpar_wfold", maxHamming = 8, buckets = 4)
       chunks.foreach { c =>
-        val sep = pairs2(Dedup.simHashNearDups128Incremental(c, "text", "doc_id", wSep))
-        Dedup.appendToSimHash128Index(c, "text", "doc_id", wSep)
-        val fold = pairs2(Dedup.simHashNearDups128IncrementalFold(c, "text", "doc_id", wFold))
+        val sep = pairs2(Dedup.simHashNearDupsIncremental(c, "text", "doc_id", wSep))
+        Dedup.appendToSimHashIndex(c, "text", "doc_id", wSep)
+        val fold = pairs2(Dedup.simHashNearDupsIncrementalFold(c, "text", "doc_id", wFold))
         assert(fold === sep, "simhash128 fold emissions diverged")
       }
-      val w3s = pairs2(Dedup.simHashNearDups128Incremental(probe3, "text", "doc_id", wSep))
-      val w3f = pairs2(Dedup.simHashNearDups128Incremental(probe3, "text", "doc_id", wFold))
+      val w3s = pairs2(Dedup.simHashNearDupsIncremental(probe3, "text", "doc_id", wSep))
+      val w3f = pairs2(Dedup.simHashNearDupsIncremental(probe3, "text", "doc_id", wFold))
       assert(w3f === w3s, "simhash128 index state diverged after fold appends")
       assert(w3s.nonEmpty, "simhash128 fold gate emitted no pairs — vacuous")
 
@@ -689,13 +689,13 @@ class OperatorsSpec extends AnyFunSuite {
       val cSep = Dedup.writeSimHashComboIndex(docs.limit(0), "text", "doc_id", "foldpar_csep", maxHamming = 3, blocks = 6, buckets = 4)
       val cFold = Dedup.writeSimHashComboIndex(docs.limit(0), "text", "doc_id", "foldpar_cfold", maxHamming = 3, blocks = 6, buckets = 4)
       chunks.foreach { c =>
-        val sep = pairs2(Dedup.simHashNearDupsIncrementalCombo(c, "text", "doc_id", cSep))
-        Dedup.appendToSimHashComboIndex(c, "text", "doc_id", cSep)
-        val fold = pairs2(Dedup.simHashNearDupsIncrementalComboFold(c, "text", "doc_id", cFold))
+        val sep = pairs2(Dedup.simHashNearDupsIncremental(c, "text", "doc_id", cSep))
+        Dedup.appendToSimHashIndex(c, "text", "doc_id", cSep)
+        val fold = pairs2(Dedup.simHashNearDupsIncrementalFold(c, "text", "doc_id", cFold))
         assert(fold === sep, "combo fold emissions diverged")
       }
-      val c3s = pairs2(Dedup.simHashNearDupsIncrementalCombo(probe3, "text", "doc_id", cSep))
-      val c3f = pairs2(Dedup.simHashNearDupsIncrementalCombo(probe3, "text", "doc_id", cFold))
+      val c3s = pairs2(Dedup.simHashNearDupsIncremental(probe3, "text", "doc_id", cSep))
+      val c3f = pairs2(Dedup.simHashNearDupsIncremental(probe3, "text", "doc_id", cFold))
       assert(c3f === c3s, "combo index state diverged after fold appends")
       assert(c3s.nonEmpty, "combo fold gate emitted no pairs — vacuous")
 
@@ -874,7 +874,7 @@ class OperatorsSpec extends AnyFunSuite {
         graft.CacheUtil.release(df)
         out
       }
-      val incr = pairs(Dedup.simHashNearDupsIncrementalCombo(delta, "text", "doc_id", idx))
+      val incr = pairs(Dedup.simHashNearDupsIncremental(delta, "text", "doc_id", idx))
       val batch = pairs(
         Dedup.simHashNearDupsCombination(docs, "text", "doc_id", maxHamming = 3, blocks = 6)).toSet
       val corpusOnly = pairs(
@@ -899,14 +899,14 @@ class OperatorsSpec extends AnyFunSuite {
       corpus, "text", "doc_id", "scinc_app", maxHamming = 3, blocks = 6, buckets = 4)
     try {
       val delta1 = Seq(Doc(10, base)).toDS.toDF
-      val incr1 = Dedup.simHashNearDupsIncrementalCombo(delta1, "text", "doc_id", idx)
+      val incr1 = Dedup.simHashNearDupsIncremental(delta1, "text", "doc_id", idx)
       assert(incr1.count() === 0)
       graft.CacheUtil.release(incr1)
-      Dedup.appendToSimHashComboIndex(delta1, "text", "doc_id", idx)
+      Dedup.appendToSimHashIndex(delta1, "text", "doc_id", idx)
       // identical text → hamming 0, inside any radius — probes the
       // appended rows without depending on perturbation distance
       val delta2 = Seq(Doc(20, base)).toDS.toDF
-      val incr2 = Dedup.simHashNearDupsIncrementalCombo(delta2, "text", "doc_id", idx)
+      val incr2 = Dedup.simHashNearDupsIncremental(delta2, "text", "doc_id", idx)
       val got = incr2
         .select("id_a", "id_b")
         .collect()
@@ -957,7 +957,7 @@ class OperatorsSpec extends AnyFunSuite {
         graft.CacheUtil.release(df)
         out
       }
-      val incr = pairs(Dedup.simHashNearDups128Incremental(delta, "text", "doc_id", idx))
+      val incr = pairs(Dedup.simHashNearDupsIncremental(delta, "text", "doc_id", idx))
       val batch = pairs(Dedup.simHashNearDups128(docs, "text", "doc_id", maxHamming = h)).toSet
       val corpusOnly = pairs(Dedup.simHashNearDups128(corpus, "text", "doc_id", maxHamming = h)).toSet
       val touchesDelta = batch.filter { case (a, b) => a % 3 == 0 || b % 3 == 0 }
@@ -980,12 +980,12 @@ class OperatorsSpec extends AnyFunSuite {
       corpus, "text", "doc_id", "s128inc_app", maxHamming = 0, buckets = 4)
     try {
       val delta1 = Seq(Doc(10, base)).toDS.toDF
-      val incr1 = Dedup.simHashNearDups128Incremental(delta1, "text", "doc_id", idx)
+      val incr1 = Dedup.simHashNearDupsIncremental(delta1, "text", "doc_id", idx)
       assert(incr1.count() === 0)
       graft.CacheUtil.release(incr1)
-      Dedup.appendToSimHash128Index(delta1, "text", "doc_id", idx)
+      Dedup.appendToSimHashIndex(delta1, "text", "doc_id", idx)
       val delta2 = Seq(Doc(20, base)).toDS.toDF
-      val incr2 = Dedup.simHashNearDups128Incremental(delta2, "text", "doc_id", idx)
+      val incr2 = Dedup.simHashNearDupsIncremental(delta2, "text", "doc_id", idx)
       val got = incr2.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.toSet === Set((10L, 20L)))
       graft.CacheUtil.release(incr2)
@@ -2075,10 +2075,10 @@ class OperatorsSpec extends AnyFunSuite {
     val cbIdx = Dedup.writeSimHashComboIndex(
       corpus, "text", "doc_id", "cmp_cb", maxHamming = 3, blocks = 6, buckets = 4)
     try {
-      Dedup.appendToSimHashComboIndex(echo(500000L), "text", "doc_id", cbIdx)
-      Dedup.appendToSimHashComboIndex(echo(600000L), "text", "doc_id", cbIdx)
+      Dedup.appendToSimHashIndex(echo(500000L), "text", "doc_id", cbIdx)
+      Dedup.appendToSimHashIndex(echo(600000L), "text", "doc_id", cbIdx)
       def cbProbe() = {
-        val out = Dedup.simHashNearDupsIncrementalCombo(
+        val out = Dedup.simHashNearDupsIncremental(
           echo(700000L), "text", "doc_id", cbIdx)
         val got = out.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         graft.CacheUtil.release(out)
@@ -2088,7 +2088,7 @@ class OperatorsSpec extends AnyFunSuite {
       checkCompaction(
         Seq(cbIdx.chunkTable),
         () => cbProbe(),
-        () => Dedup.compactSimHashComboIndex(spark, cbIdx),
+        () => Dedup.compactSimHashIndex(spark, cbIdx),
         () => {
           val lazyOut = Dedup.simHashPairsIncrementalLazy(
             echo(710000L), "text", "doc_id", cbIdx)
@@ -2743,11 +2743,11 @@ class OperatorsSpec extends AnyFunSuite {
         docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
     }
     spark.sql("DROP TABLE IF EXISTS leak_exidx_exactfps")
-    assertReleasable("simHashNearDups128Incremental") {
+    assertReleasable("simHashNearDupsIncremental") {
       val idx = Dedup.writeSimHash128Index(
         docs.filter($"doc_id" % 3 =!= 0), "text", "doc_id", "leak_s128idx",
         maxHamming = 20, buckets = 8)
-      Dedup.simHashNearDups128Incremental(
+      Dedup.simHashNearDupsIncremental(
         docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
     }
     spark.sql("DROP TABLE IF EXISTS leak_s128idx_chunks128")
@@ -2776,11 +2776,11 @@ class OperatorsSpec extends AnyFunSuite {
         docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
     }
     spark.sql("DROP TABLE IF EXISTS leak_sidx_chunks")
-    assertReleasable("simHashNearDupsIncrementalCombo") {
+    assertReleasable("simHashNearDupsIncremental") {
       val idx = Dedup.writeSimHashComboIndex(
         docs.filter($"doc_id" % 3 =!= 0), "text", "doc_id", "leak_cbidx",
         maxHamming = 3, blocks = 6, buckets = 8)
-      Dedup.simHashNearDupsIncrementalCombo(
+      Dedup.simHashNearDupsIncremental(
         docs.filter($"doc_id" % 3 === 0), "text", "doc_id", idx)
     }
     spark.sql("DROP TABLE IF EXISTS leak_cbidx_combo")

@@ -1036,8 +1036,8 @@ class StreamingSpec extends AnyFunSuite {
     // the tear the per-id gate above cannot reach: a torn job commit
     // lands INSIDE one doc's rows (a doc's band/chunk rows span up to
     // `buckets` files), so the id reads "seen" with rows missing — the
-    // appendRowHealed row-level anti must complete exactly the absent
-    // rows, converging every table to its clean-fold twin's row set
+    // fold's row-healed append (IndexFold) must complete exactly the
+    // absent rows, converging every table to its clean-fold twin's row set
     import graft.operators.{Dedup, Passages, Similarity}
     val (base, other) = rpTexts
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
@@ -1384,10 +1384,10 @@ class StreamingSpec extends AnyFunSuite {
         "simhash64 replay re-emitted")
       assert(spark.table(s64.chunkTable).count() === n64, "simhash64 chunk table grew on replay")
 
-      assert(pairs(Dedup.simHashNearDups128IncrementalFold(shDelta, "text", "doc_id", s128))
+      assert(pairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", s128))
         .contains((1L, 10L)))
       val n128 = spark.table(s128.chunkTable).count()
-      assert(pairs(Dedup.simHashNearDups128IncrementalFold(shDelta, "text", "doc_id", s128)).isEmpty,
+      assert(pairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", s128)).isEmpty,
         "simhash128 replay re-emitted")
       assert(spark.table(s128.chunkTable).count() === n128, "simhash128 chunk table grew on replay")
     } finally {
@@ -1464,13 +1464,13 @@ class StreamingSpec extends AnyFunSuite {
         val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
         graft.CacheUtil.release(df); s
       }
-      assert(pairs(Dedup.simHashNearDupsIncrementalComboFold(delta, "text", "doc_id", idx))
+      assert(pairs(Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", idx))
         .contains((1L, 10L)), "identical twin not paired — gate vacuous")
       val n = spark.table(idx.chunkTable).count()
-      assert(pairs(Dedup.simHashNearDupsIncrementalComboFold(delta, "text", "doc_id", idx)).isEmpty,
+      assert(pairs(Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", idx)).isEmpty,
         "combo replay re-emitted")
       assert(spark.table(idx.chunkTable).count() === n, "combo chunk table grew on replay")
-      assert(pairs(Dedup.simHashNearDupsIncrementalComboFold(
+      assert(pairs(Dedup.simHashNearDupsIncrementalFold(
         Seq((20L, base)).toDF("doc_id", "text"), "text", "doc_id", idx)).toSet
         === Set((1L, 20L), (10L, 20L)), "index stopped ingesting after replay")
     } finally {
@@ -1557,17 +1557,17 @@ class StreamingSpec extends AnyFunSuite {
         "simhash64 replay re-emitted under string ids")
       assert(spark.table(s64.chunkTable).count() === n64, "simhash64 chunk table grew on string-id replay")
 
-      assert(sPairs(Dedup.simHashNearDups128IncrementalFold(shDelta, "text", "doc_id", s128))
+      assert(sPairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", s128))
         .contains(("c-a", "d-a")), "gate vacuous")
       val n128 = spark.table(s128.chunkTable).count()
-      assert(sPairs(Dedup.simHashNearDups128IncrementalFold(shDelta, "text", "doc_id", s128)).isEmpty,
+      assert(sPairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", s128)).isEmpty,
         "simhash128 replay re-emitted under string ids")
       assert(spark.table(s128.chunkTable).count() === n128, "simhash128 chunk table grew on string-id replay")
 
-      assert(sPairs(Dedup.simHashNearDupsIncrementalComboFold(shDelta, "text", "doc_id", cb))
+      assert(sPairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", cb))
         .contains(("c-a", "d-a")), "gate vacuous")
       val ncb = spark.table(cb.chunkTable).count()
-      assert(sPairs(Dedup.simHashNearDupsIncrementalComboFold(shDelta, "text", "doc_id", cb)).isEmpty,
+      assert(sPairs(Dedup.simHashNearDupsIncrementalFold(shDelta, "text", "doc_id", cb)).isEmpty,
         "combo replay re-emitted under string ids")
       assert(spark.table(cb.chunkTable).count() === ncb, "combo chunk table grew on string-id replay")
     } finally {
@@ -1780,9 +1780,9 @@ class StreamingSpec extends AnyFunSuite {
       gate("simhash64", tc(s64.chunkTable),
         s => { val d = docDelta(); val o = Dedup.simHashNearDupsIncrementalFold(d, "text", "doc_id", s64, Some(s)); graft.CacheUtil.release(d); o })
       gate("simhash128", tc(s128.chunkTable),
-        s => { val d = docDelta(); val o = Dedup.simHashNearDups128IncrementalFold(d, "text", "doc_id", s128, Some(s)); graft.CacheUtil.release(d); o })
+        s => { val d = docDelta(); val o = Dedup.simHashNearDupsIncrementalFold(d, "text", "doc_id", s128, Some(s)); graft.CacheUtil.release(d); o })
       gate("combo", tc(cb.chunkTable),
-        s => { val d = docDelta(); val o = Dedup.simHashNearDupsIncrementalComboFold(d, "text", "doc_id", cb, Some(s)); graft.CacheUtil.release(d); o })
+        s => { val d = docDelta(); val o = Dedup.simHashNearDupsIncrementalFold(d, "text", "doc_id", cb, Some(s)); graft.CacheUtil.release(d); o })
       gate("vector-lsh", tc(lsh.bandTable, lsh.vecTable),
         s => { val d = Seq(vecRow(10L, 1f)).toDF("vec_id", "embedding").localCheckpoint(true); val o = Similarity.lshNearDupsIncrementalFold(d, "embedding", "vec_id", 0.95, lsh, Some(s)); graft.CacheUtil.release(d); o })
       gate("semdedup", () => Seq(spark.read.parquet(s"$ivfDir/lists").count()),
@@ -1794,156 +1794,154 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("simhash fold failure path: a throwing sink or append pins nothing and leaves the index unchanged (64/128/combo)") {
-    import graft.operators.{CompactLock, Dedup}
-    // The one SimHash fold pins the ledger read, the admitted delta, the
-    // capped members and the emitted pairs; each must be released on
-    // EVERY exit. Two failure points per key scheme: the sink throws
-    // (before the append), and the append throws after the sink ran (a
-    // held compaction sentinel makes it fail fast). Each must propagate,
-    // pin no persistent RDD, leave the index row count unchanged, and a
-    // retry must emit exactly what a clean run emits.
+  test("fold failure paths: a throwing sink or append pins nothing, leaves the index unchanged, and a retry emits a clean run's output (every fold family)") {
+    import graft.operators.{CompactLock, Dedup, Lines, Passages, Similarity}
+    // Every fold pins its ledger read, its signature checkpoints, its
+    // probe's intermediates and its emission; each must be released on
+    // EVERY exit. Two failure points per family: the sink throws (before
+    // any append), and an append throws after the sink ran (a held
+    // compaction sentinel on the family's emission ledger makes it fail
+    // fast; the other append of a two-table family may still commit — the
+    // torn state the retry must heal). semDedup checks its lock only at
+    // entry, so it runs the sink case only. Each failure must propagate,
+    // pin no persistent RDD and leave the index (the locked ledger, for
+    // the append case) unchanged; a retry must emit exactly what a clean
+    // run on a twin index emits and converge to the twin's row counts.
     val (base, other) = rpTexts
-    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
-    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
-    def pairs(df: DataFrame): Set[(Long, Long)] = {
-      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.CacheUtil.release(df); s
+    val docs = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def docDelta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def vecRow(id: Long, x: Float) = (id, Array(x, 1f, 0.5f, -0.25f))
+    val vecs = Seq(vecRow(1L, 1f), vecRow(2L, -8f), vecRow(3L, -7.5f)).toDF("vec_id", "embedding")
+    def vecDelta() = Seq(vecRow(10L, 1f), vecRow(11L, 1f)).toDF("vec_id", "embedding")
+    // one family: its fold on the clean twin (true) or the failing index,
+    // the row counts of either, and the failing index's emission ledger
+    // table when its appends honor a held CompactLock
+    final case class Family(
+        name: String,
+        fold: (Boolean, Option[DataFrame => Unit]) => DataFrame,
+        counts: Boolean => Seq[Long],
+        ledger: Option[String],
+        drop: () => Unit)
+    def tableFamily[I](name: String, c: I, i: I)(tables: I => Seq[String], ledger: I => String)(
+        fold: (I, Option[DataFrame => Unit]) => DataFrame): Family =
+      Family(name, (clean, s) => fold(if (clean) c else i, s),
+        clean => tables(if (clean) c else i).map(spark.table(_).count()), Some(ledger(i)),
+        () => Seq(c, i).flatMap(tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
+    def twins[I](name: String)(write: String => I): Seq[I] = Seq(s"${name}_clean", name).map(write)
+    def simhash(kind: String)(write: String => Dedup.SimHashFamilyIndex): Family = {
+      val Seq(c, i) = twins(s"ff_$kind")(write)
+      tableFamily(kind, c, i)(x => Seq(x.chunkTable), _.chunkTable)(
+        Dedup.simHashNearDupsIncrementalFold(docDelta(), "text", "doc_id", _, _))
     }
-    val kinds = Seq[(String, String => Dedup.SimHashFamilyIndex)](
-      "s64" -> (n => Dedup.writeSimHashIndex(corpus, "text", "doc_id", n, buckets = 4)),
-      "s128" -> (n => Dedup.writeSimHash128Index(corpus, "text", "doc_id", n, buckets = 4)),
-      "cb" -> (n => Dedup.writeSimHashComboIndex(
-        corpus, "text", "doc_id", n, maxHamming = 3, blocks = 6, buckets = 4)))
-    for ((kind, write) <- kinds) {
-      val clean = write(s"ff_${kind}_clean")
-      val idx = write(s"ff_$kind")
+    val families: Seq[() => Family] = Seq(
+      () => {
+        val Seq(c, i) = twins("ff_mh")(Dedup.writeMinHashIndex(docs, "text", "doc_id", _, buckets = 4))
+        tableFamily("minhash", c, i)(x => Seq(x.bandTable, x.shingleTable), _.shingleTable)(
+          Dedup.minHashNearDupsIncrementalFold(docDelta(), "text", "doc_id", 0.4, _, _))
+      },
+      () => simhash("s64")(Dedup.writeSimHashIndex(docs, "text", "doc_id", _, buckets = 4)),
+      () => simhash("s128")(Dedup.writeSimHash128Index(docs, "text", "doc_id", _, buckets = 4)),
+      () => simhash("cb")(Dedup.writeSimHashComboIndex(
+        docs, "text", "doc_id", _, maxHamming = 3, blocks = 6, buckets = 4)),
+      () => {
+        val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+        val Seq(c, i) = twins("ff_ex")(Dedup.writeExactDedupIndex(corpus, "text", _, buckets = 4))
+        tableFamily("exact", c, i)(x => Seq(x.fpTable), _.fpTable)(Dedup.exactDedupIncrementalFold(
+          Seq((10L, "alpha"), (11L, "fresh"), (12L, "fresh"), (13L, "novel")).toDF("doc_id", "text"),
+          "text", "doc_id", _, _))
+      },
+      () => {
+        val Seq(c, i) = twins("ff_lsh")(Similarity.writeLshIndex(
+          vecs, "embedding", "vec_id", _, nPlanes = 4, dim = 4, nTables = 2, buckets = 4))
+        tableFamily("vector-lsh", c, i)(x => Seq(x.bandTable, x.vecTable), _.vecTable)(
+          Similarity.lshNearDupsIncrementalFold(vecDelta(), "embedding", "vec_id", 0.95, _, _))
+      },
+      () => {
+        val Seq(c, i) = twins("ff_ps")(
+          Passages.writePassageIndex(docs, "text", "doc_id", _, windowTokens = 4, buckets = 4))
+        tableFamily("passages", c, i)(x => Seq(x.fpTable), _.fpTable)(
+          Passages.passageDupFractionIncrementalFold(
+            Seq((10L, base), (11L, "too short")).toDF("doc_id", "text"), "text", "doc_id", _, _))
+      },
+      () => {
+        val corpus = Seq((1L, "shared banner line\nuniq a"), (2L, "other stuff\nuniq b"))
+          .toDF("doc_id", "text")
+        val Seq(c, i) = twins("ff_ln")(Lines.writeLineIndex(corpus, "text", "doc_id", _, buckets = 4))
+        tableFamily("lines", c, i)(x => Seq(x.fpTable), _.fpTable)(
+          Lines.dropDuplicatedLinesIncrementalFold(
+            Seq((10L, "shared banner line\nuniq c"), (11L, "fresh line")).toDF("doc_id", "text"),
+            "text", "doc_id", _, minDocs = 2, _))
+      },
+      () => {
+        val built = Similarity.ivfBuild(vecs, "embedding", "vec_id", nCentroids = 2, refineIters = 1)
+        val Seq(c, i) = twins("ff_ivf") { n =>
+          val d = java.nio.file.Files.createTempDirectory(n).toString
+          Similarity.ivfWrite(built, d); d
+        }
+        graft.CacheUtil.release(built.assigned)
+        val dir = (clean: Boolean) => if (clean) c else i
+        Family("semdedup", (clean, s) => Similarity.semDedupPairsIncrementalFold(
+            spark, vecDelta(), dir(clean), "embedding", "vec_id", threshold = 0.95, sink = s),
+          clean => Seq(spark.read.parquet(s"${dir(clean)}/lists").count()), None, () => ())
+      })
+    def rows(df: DataFrame): Set[org.apache.spark.sql.Row] = {
+      val r = df.collect().toSet
+      graft.CacheUtil.release(df); r
+    }
+    for (make <- families) {
+      val f = make()
       try {
-        val expected = pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", clean))
-        assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)),
-          s"$kind: clean run emitted $expected")
-        val rows = spark.table(idx.chunkTable).count()
+        val expected = rows(f.fold(true, None))
+        assert(expected.nonEmpty, s"${f.name}: a clean run emitted nothing — gate vacuous")
         def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
           val before = spark.sparkContext.getPersistentRDDs.keySet
-          val e = intercept[IllegalStateException](
-            Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
-          assert(e.getMessage.contains(message), s"$kind/$what: wrong error ${e.getMessage}")
+          val e = intercept[IllegalStateException](f.fold(false, Some(sink)))
+          assert(e.getMessage.contains(message), s"${f.name}/$what: wrong error ${e.getMessage}")
           val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-          assert(leaked.isEmpty, s"$kind/$what leaked persistent RDDs: $leaked")
-          assert(spark.table(idx.chunkTable).count() === rows, s"$kind/$what changed the index")
+          assert(leaked.isEmpty, s"${f.name}/$what leaked ${leaked.size} persistent RDDs: $leaked")
         }
+        val untouched = f.counts(false)
         failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
-        val lock = CompactLock.forTable(spark, idx.chunkTable)
-        val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        var sunk = -1L
-        CompactLock.acquire(fs, lock)
-        try failingRun("append", df => sunk = df.count(), "compaction")
-        finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
-        assert(sunk === expected.size.toLong, s"$kind: the sink did not run before the append")
-        assert(pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
-          s"$kind: retry after the failures emitted differently from a clean run")
-      } finally
-        Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.chunkTable}`"))
+        assert(f.counts(false) === untouched, s"${f.name}: a throwing sink let an append through")
+        f.ledger.foreach { t =>
+          val held = spark.table(t).count()
+          val lock = CompactLock.forTable(spark, t)
+          val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          var sunk = -1L
+          CompactLock.acquire(fs, lock)
+          try failingRun("append", df => sunk = df.count(), "compaction")
+          finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+          assert(sunk === expected.size.toLong, s"${f.name}: the sink did not run before the append")
+          assert(spark.table(t).count() === held, s"${f.name}: the locked ledger changed")
+        }
+        assert(rows(f.fold(false, None)) === expected,
+          s"${f.name}: retry after the failures emitted differently from a clean run")
+        assert(f.counts(false) === f.counts(true),
+          s"${f.name}: retry did not converge to the clean fold's index")
+      } finally f.drop()
     }
   }
 
-  test("minhash fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's pairs") {
-    import graft.operators.{CompactLock, Dedup}
-    // The MinHash fold pins the ledger read, the raw and admitted delta
-    // banding, the capped members, the delta shingles and the emitted
-    // pairs; each must be released on EVERY exit. Two failure points:
-    // the sink throws (before any append), and the shingle append throws
-    // after the sink ran (a held compaction sentinel on the emission
-    // ledger makes it fail fast; the overlapped band append may still
-    // commit — the torn state the retry must heal).
+  test("a fold whose ledger read throws releases its overlapped signature checkpoints") {
+    import graft.operators.Dedup
+    // The MinHash fold reads its ledger on one driver thread while two
+    // others checkpoint the delta banding and shingle sets. With the
+    // shingle table gone the ledger thunk throws after its siblings
+    // succeeded; their checkpoints must be released, not dropped.
     val (base, other) = rpTexts
     val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
-    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
-    def pairs(df: DataFrame): Set[(Long, Long)] = {
-      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      graft.CacheUtil.release(df); s
-    }
-    val clean = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff_clean", buckets = 4)
-    val idx = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff", buckets = 4)
-    def counts(i: Dedup.MinHashIndex) =
-      Seq(i.bandTable, i.shingleTable).map(spark.table(_).count())
+    val idx = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "ov_mh", buckets = 4)
     try {
-      val expected = pairs(
-        Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, clean))
-      assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)), s"clean run emitted $expected")
-      val shRows = spark.table(idx.shingleTable).count()
-      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val e = intercept[IllegalStateException](
-          Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx, Some(sink)))
-        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
-        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
-        assert(spark.table(idx.shingleTable).count() === shRows, s"$what changed the shingle ledger")
-      }
-      val untouched = counts(idx)
-      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
-      assert(counts(idx) === untouched, "a throwing sink let an append through")
-      val lock = CompactLock.forTable(spark, idx.shingleTable)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var sunk = -1L
-      CompactLock.acquire(fs, lock)
-      try failingRun("append", df => sunk = df.count(), "compaction")
-      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
-      assert(sunk === expected.size.toLong, "the sink did not run before the append")
-      assert(pairs(Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx))
-        === expected, "retry after the failures emitted differently from a clean run")
-      assert(counts(idx) === counts(clean), "retry did not converge to the clean fold's index")
+      spark.sql(s"DROP TABLE `${idx.shingleTable}`")
+      val delta = Seq((10L, base)).toDF("doc_id", "text").localCheckpoint(true)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[org.apache.spark.sql.AnalysisException](
+        Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, idx))
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"a failed ledger thunk left ${leaked.size} sibling checkpoints pinned")
+      graft.CacheUtil.release(delta)
     } finally
-      Seq(clean, idx).foreach(i =>
-        Seq(i.bandTable, i.shingleTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
-  }
-
-  test("exact fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's keepers") {
-    import graft.operators.{CompactLock, Dedup}
-    // The exact fold pins the fingerprinted delta, its unseen rows and
-    // (with a sink) the emitted keepers; each must be released on EVERY
-    // exit. Two failure points: the sink throws (before the append), and
-    // the fingerprint append throws after the sink ran (a held compaction
-    // sentinel makes it fail fast). Each must propagate, pin no
-    // persistent RDD and leave the index unchanged, and a retry must emit
-    // exactly what a clean run emits.
-    val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-    def delta() = Seq((10L, "alpha"), (11L, "fresh"), (12L, "fresh"), (13L, "novel"))
-      .toDF("doc_id", "text")
-    def ids(df: DataFrame): Set[Long] = {
-      val s = df.select("doc_id").collect().map(_.getLong(0)).toSet
-      graft.CacheUtil.release(df); s
-    }
-    val clean = Dedup.writeExactDedupIndex(corpus, "text", "eff_clean", buckets = 4)
-    val idx = Dedup.writeExactDedupIndex(corpus, "text", "eff", buckets = 4)
-    try {
-      val expected = ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", clean))
-      assert(expected === Set(11L, 13L), s"clean run emitted $expected")
-      val rows = spark.table(idx.fpTable).count()
-      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        val e = intercept[IllegalStateException](
-          Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
-        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
-        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
-        assert(spark.table(idx.fpTable).count() === rows, s"$what changed the index")
-      }
-      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
-      val lock = CompactLock.forTable(spark, idx.fpTable)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var sunk = -1L
-      CompactLock.acquire(fs, lock)
-      try failingRun("append", df => sunk = df.count(), "compaction")
-      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
-      assert(sunk === expected.size.toLong, "the sink did not run before the append")
-      assert(ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
-        "retry after the failures emitted differently from a clean run")
-      assert(spark.table(idx.fpTable).count() === spark.table(clean.fpTable).count(),
-        "retry did not converge to the clean fold's index")
-    } finally
-      Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.fpTable}`"))
+      Seq(idx.bandTable, idx.shingleTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
 
   test("fold loop compiles its generated code once: a third same-shape micro-batch through the minhash and simhash folds compiles no class") {
@@ -2000,6 +1998,34 @@ class StreamingSpec extends AnyFunSuite {
   // the ledger checkpoint, and the fold then emits an empty frame of the
   // slow path's schema without probing or appending.
 
+  /** Runs `fold` once as a first attempt, then replays it with a
+    * recording sink: the replay must return and sink one empty frame of
+    * the first attempt's schema, leave `counts` unchanged, and run at
+    * most `maxJobs` Spark jobs. Returns the replay's job count.
+    */
+  private def committedReplayGate(
+      family: String,
+      counts: () => Seq[Long],
+      maxJobs: Int)(fold: Option[DataFrame => Unit] => DataFrame): Int = {
+    val first = fold(None)
+    val schema = first.schema
+    val emitted = first.count()
+    graft.CacheUtil.release(first)
+    assert(emitted > 0L, s"$family: first attempt emitted nothing — gate vacuous")
+    val rows = counts()
+    val sunk = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val (out, jobs) = JobCount.during(spark)(fold(Some(sunk += _)))
+    assert(jobs <= maxJobs, s"$family: committed replay ran $jobs jobs — the slow path?")
+    assert(out.schema === schema, s"$family: replay schema ${out.schema} != first attempt's $schema")
+    assert(out.count() === 0L, s"$family: committed replay emitted rows")
+    assert(sunk.size === 1, s"$family: sink called ${sunk.size} times")
+    assert(sunk.head.schema === schema && sunk.head.count() === 0L,
+      s"$family: sink got a non-empty or differently shaped frame")
+    assert(counts() === rows, s"$family: replay changed the index")
+    graft.CacheUtil.release(out)
+    jobs
+  }
+
   test("committed replay short-circuits: empty output of the first attempt's schema, one sink call, no index change, ≤ 6 jobs (minhash, simhash 64/128/combo)") {
     import graft.operators.Dedup
     val (base, other) = rpTexts
@@ -2007,41 +2033,50 @@ class StreamingSpec extends AnyFunSuite {
     val delta = Seq((10L, base), (11L, base),
       (12L, "completely fresh words nothing shared here at all right now")
     ).toDF("doc_id", "text").localCheckpoint(true)
-    def gate(
-        family: String,
-        tables: Seq[String],
-        fold: Option[DataFrame => Unit] => DataFrame): Unit = {
-      val first = fold(None)
-      val schema = first.schema
-      val emitted = first.count()
-      graft.CacheUtil.release(first)
-      assert(emitted > 0L, s"$family: first attempt emitted nothing — gate vacuous")
-      val rows = tables.map(spark.table(_).count())
-      val sunk = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      val (out, jobs) = JobCount.during(spark)(fold(Some(sunk += _)))
-      assert(jobs <= 6, s"$family: committed replay ran $jobs jobs — the slow path?")
-      assert(out.schema === schema, s"$family: replay schema ${out.schema} != first attempt's $schema")
-      assert(out.count() === 0L, s"$family: committed replay emitted rows")
-      assert(sunk.size === 1, s"$family: sink called ${sunk.size} times")
-      assert(sunk.head.schema === schema && sunk.head.count() === 0L,
-        s"$family: sink got a non-empty or differently shaped frame")
-      assert(tables.map(spark.table(_).count()) === rows, s"$family: replay changed the index")
-      graft.CacheUtil.release(out)
-    }
+    def tables(ts: String*)(): Seq[Long] = ts.map(spark.table(_).count())
     val mh = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "cr_mh", buckets = 4)
     val s64 = Dedup.writeSimHashIndex(corpus, "text", "doc_id", "cr_s64", buckets = 4)
     val s128 = Dedup.writeSimHash128Index(corpus, "text", "doc_id", "cr_s128", buckets = 4)
     val cb = Dedup.writeSimHashComboIndex(
       corpus, "text", "doc_id", "cr_cb", maxHamming = 3, blocks = 6, buckets = 4)
     try {
-      gate("minhash", Seq(mh.bandTable, mh.shingleTable),
+      committedReplayGate("minhash", tables(mh.bandTable, mh.shingleTable), 6)(
         Dedup.minHashNearDupsIncrementalFold(delta, "text", "doc_id", 0.4, mh, _))
       for ((kind, i) <- Seq("s64" -> s64, "s128" -> s128, "cb" -> cb))
-        gate(kind, Seq(i.chunkTable), Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", i, _))
+        committedReplayGate(kind, tables(i.chunkTable), 6)(
+          Dedup.simHashNearDupsIncrementalFold(delta, "text", "doc_id", i, _))
     } finally {
       graft.CacheUtil.release(delta)
       Seq(mh.bandTable, mh.shingleTable, s64.chunkTable, s128.chunkTable, cb.chunkTable)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("committed replay short-circuits for vector-LSH and semDedup: empty output, one sink call, no index change, a job bound below the slow path's") {
+    import graft.operators.Similarity
+    // The job bounds are this fixture's measured replay counts (6 and 8);
+    // the slow path ran the same replays in more jobs (CHANGES.md).
+    def vecRow(id: Long, x: Float) = (id, Array(x, 1f, 0.5f, -0.25f))
+    val corpus = Seq(vecRow(1L, 1f), vecRow(2L, -8f), vecRow(3L, -7.5f)).toDF("vec_id", "embedding")
+    val delta = Seq(vecRow(10L, 1f), vecRow(11L, 1f), vecRow(12L, -0.5f))
+      .toDF("vec_id", "embedding").localCheckpoint(true)
+    val lsh = Similarity.writeLshIndex(
+      corpus, "embedding", "vec_id", "cr_lsh", nPlanes = 4, dim = 4, nTables = 2, buckets = 4)
+    val built = Similarity.ivfBuild(corpus, "embedding", "vec_id", nCentroids = 2, refineIters = 1)
+    val ivfDir = java.nio.file.Files.createTempDirectory("cr_ivf").toString
+    Similarity.ivfWrite(built, ivfDir)
+    graft.CacheUtil.release(built.assigned)
+    try {
+      committedReplayGate("vector-lsh",
+        () => Seq(lsh.bandTable, lsh.vecTable).map(spark.table(_).count()), 6)(
+        Similarity.lshNearDupsIncrementalFold(delta, "embedding", "vec_id", 0.95, lsh, _))
+      committedReplayGate("semdedup",
+        () => Seq(spark.read.parquet(s"$ivfDir/lists").count()), 8)(s =>
+        Similarity.semDedupPairsIncrementalFold(
+          spark, delta, ivfDir, "embedding", "vec_id", threshold = 0.95, sink = s))
+    } finally {
+      graft.CacheUtil.release(delta)
+      Seq(lsh.bandTable, lsh.vecTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
 
@@ -2074,12 +2109,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.table(mh(0).bandTable).filter($"_id" === 10L).count() === 0L &&
         spark.table(sh(0).chunkTable).filter($"_id" === 10L).count() === 0L,
         "doc 10 was not capped out — fixture vacuous")
-      assert(!ledgerCommitted(ReplaySafe.ledgerRead2(
-        spark.table(mh(0).shingleTable), "_sid", spark.table(mh(0).bandTable), "_id",
-        delta, "doc_id", keyColB = Some("_band")), None, Some(mh(0).bands)))
-      assert(!ledgerCommitted(ReplaySafe.ledgerRead(
-        spark.table(sh(0).chunkTable), "_id", delta, "doc_id", keyCol = Some("_chunk")),
-        Some(sh(0).keys.subsets.length)))
+      assert(!ledgerCommitted(ReplaySafe.ledgerRead(delta, "doc_id",
+        ReplaySafe.LedgerTable(spark.table(mh(0).shingleTable), "_sid"),
+        ReplaySafe.LedgerTable(spark.table(mh(0).bandTable), "_id", Some("_band" -> mh(0).bands))),
+        None, Some(mh(0).bands)))
+      val nKeys = sh(0).keys.subsets.length
+      assert(!ledgerCommitted(ReplaySafe.ledgerRead(delta, "doc_id",
+        ReplaySafe.LedgerTable(spark.table(sh(0).chunkTable), "_id", Some("_chunk" -> nKeys))),
+        Some(nKeys)))
       val mhRows = Seq(mh(0).bandTable, mh(0).shingleTable).map(spark.table(_).count())
       val shRows = spark.table(sh(0).chunkTable).count()
       val (mhOut, mhJobs) = JobCount.during(spark)(pairs(
