@@ -1794,11 +1794,165 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("fold failure paths: a throwing sink or append pins nothing, leaves the index unchanged, and a retry emits a clean run's output (every fold family)") {
-    import graft.operators.{CompactLock, Dedup, Lines, Passages, Similarity}
-    // Every fold pins its ledger read, its signature checkpoints, its
-    // probe's intermediates and its emission; each must be released on
-    // EVERY exit. Two failure points per family: the sink throws (before
+  test("simhash fold failure path: a throwing sink or append pins nothing and leaves the index unchanged (64/128/combo)") {
+    import graft.operators.{CompactLock, Dedup}
+    // The one SimHash fold pins the ledger read, the admitted delta, the
+    // capped members and the emitted pairs; each must be released on
+    // EVERY exit. Two failure points per key scheme: the sink throws
+    // (before the append), and the append throws after the sink ran (a
+    // held compaction sentinel makes it fail fast). Each must propagate,
+    // pin no persistent RDD, leave the index row count unchanged, and a
+    // retry must emit exactly what a clean run emits.
+    val (base, other) = rpTexts
+    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val kinds = Seq[(String, String => Dedup.SimHashFamilyIndex)](
+      "s64" -> (n => Dedup.writeSimHashIndex(corpus, "text", "doc_id", n, buckets = 4)),
+      "s128" -> (n => Dedup.writeSimHash128Index(corpus, "text", "doc_id", n, buckets = 4)),
+      "cb" -> (n => Dedup.writeSimHashComboIndex(
+        corpus, "text", "doc_id", n, maxHamming = 3, blocks = 6, buckets = 4)))
+    for ((kind, write) <- kinds) {
+      val clean = write(s"ff_${kind}_clean")
+      val idx = write(s"ff_$kind")
+      try {
+        val expected = pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", clean))
+        assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)),
+          s"$kind: clean run emitted $expected")
+        val rows = spark.table(idx.chunkTable).count()
+        def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+          val before = spark.sparkContext.getPersistentRDDs.keySet
+          val e = intercept[IllegalStateException](
+            Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
+          assert(e.getMessage.contains(message), s"$kind/$what: wrong error ${e.getMessage}")
+          val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+          assert(leaked.isEmpty, s"$kind/$what leaked persistent RDDs: $leaked")
+          assert(spark.table(idx.chunkTable).count() === rows, s"$kind/$what changed the index")
+        }
+        failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+        val lock = CompactLock.forTable(spark, idx.chunkTable)
+        val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        var sunk = -1L
+        CompactLock.acquire(fs, lock)
+        try failingRun("append", df => sunk = df.count(), "compaction")
+        finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+        assert(sunk === expected.size.toLong, s"$kind: the sink did not run before the append")
+        assert(pairs(Dedup.simHashNearDupsIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
+          s"$kind: retry after the failures emitted differently from a clean run")
+      } finally
+        Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.chunkTable}`"))
+    }
+  }
+
+  test("minhash fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's pairs") {
+    import graft.operators.{CompactLock, Dedup}
+    // The MinHash fold pins the ledger read, the raw and admitted delta
+    // banding, the capped members, the delta shingles and the emitted
+    // pairs; each must be released on EVERY exit. Two failure points:
+    // the sink throws (before any append), and the shingle append throws
+    // after the sink ran (a held compaction sentinel on the emission
+    // ledger makes it fail fast; the overlapped band append may still
+    // commit — the torn state the retry must heal).
+    val (base, other) = rpTexts
+    val corpus = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def delta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def pairs(df: DataFrame): Set[(Long, Long)] = {
+      val s = df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val clean = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff_clean", buckets = 4)
+    val idx = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "mff", buckets = 4)
+    def counts(i: Dedup.MinHashIndex) =
+      Seq(i.bandTable, i.shingleTable).map(spark.table(_).count())
+    try {
+      val expected = pairs(
+        Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, clean))
+      assert(expected === Set((1L, 10L), (1L, 11L), (10L, 11L)), s"clean run emitted $expected")
+      val shRows = spark.table(idx.shingleTable).count()
+      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalStateException](
+          Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx, Some(sink)))
+        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
+        assert(spark.table(idx.shingleTable).count() === shRows, s"$what changed the shingle ledger")
+      }
+      val untouched = counts(idx)
+      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+      assert(counts(idx) === untouched, "a throwing sink let an append through")
+      val lock = CompactLock.forTable(spark, idx.shingleTable)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var sunk = -1L
+      CompactLock.acquire(fs, lock)
+      try failingRun("append", df => sunk = df.count(), "compaction")
+      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+      assert(sunk === expected.size.toLong, "the sink did not run before the append")
+      assert(pairs(Dedup.minHashNearDupsIncrementalFold(delta(), "text", "doc_id", 0.4, idx))
+        === expected, "retry after the failures emitted differently from a clean run")
+      assert(counts(idx) === counts(clean), "retry did not converge to the clean fold's index")
+    } finally
+      Seq(clean, idx).foreach(i =>
+        Seq(i.bandTable, i.shingleTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
+  }
+
+  test("exact fold failure path: a throwing sink or append pins nothing and a retry emits a clean run's keepers") {
+    import graft.operators.{CompactLock, Dedup}
+    // The exact fold pins the fingerprinted delta, its unseen rows and
+    // (with a sink) the emitted keepers; each must be released on EVERY
+    // exit. Two failure points: the sink throws (before the append), and
+    // the fingerprint append throws after the sink ran (a held compaction
+    // sentinel makes it fail fast). Each must propagate, pin no
+    // persistent RDD and leave the index unchanged, and a retry must emit
+    // exactly what a clean run emits.
+    val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
+    def delta() = Seq((10L, "alpha"), (11L, "fresh"), (12L, "fresh"), (13L, "novel"))
+      .toDF("doc_id", "text")
+    def ids(df: DataFrame): Set[Long] = {
+      val s = df.select("doc_id").collect().map(_.getLong(0)).toSet
+      graft.CacheUtil.release(df); s
+    }
+    val clean = Dedup.writeExactDedupIndex(corpus, "text", "eff_clean", buckets = 4)
+    val idx = Dedup.writeExactDedupIndex(corpus, "text", "eff", buckets = 4)
+    try {
+      val expected = ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", clean))
+      assert(expected === Set(11L, 13L), s"clean run emitted $expected")
+      val rows = spark.table(idx.fpTable).count()
+      def failingRun(what: String, sink: DataFrame => Unit, message: String): Unit = {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalStateException](
+          Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx, Some(sink)))
+        assert(e.getMessage.contains(message), s"$what: wrong error ${e.getMessage}")
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$what leaked persistent RDDs: $leaked")
+        assert(spark.table(idx.fpTable).count() === rows, s"$what changed the index")
+      }
+      failingRun("sink", _ => throw new IllegalStateException("sink down"), "sink down")
+      val lock = CompactLock.forTable(spark, idx.fpTable)
+      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var sunk = -1L
+      CompactLock.acquire(fs, lock)
+      try failingRun("append", df => sunk = df.count(), "compaction")
+      finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+      assert(sunk === expected.size.toLong, "the sink did not run before the append")
+      assert(ids(Dedup.exactDedupIncrementalFold(delta(), "text", "doc_id", idx)) === expected,
+        "retry after the failures emitted differently from a clean run")
+      assert(spark.table(idx.fpTable).count() === spark.table(clean.fpTable).count(),
+        "retry did not converge to the clean fold's index")
+    } finally
+      Seq(clean, idx).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.fpTable}`"))
+  }
+
+
+  test("fold failure paths: a throwing sink or append pins nothing, leaves the index unchanged, and a retry emits a clean run's output (vector-LSH, passages, lines, semDedup)") {
+    import graft.operators.{CompactLock, Lines, Passages, Similarity}
+    // The MinHash, SimHash and exact folds have their own failure-path
+    // tests above; this one runs the other four fold families. Every fold
+    // pins its ledger read, its signature checkpoints, its probe's
+    // intermediates and its emission; each must be released on EVERY exit. Two failure points per family: the sink throws (before
     // any append), and an append throws after the sink ran (a held
     // compaction sentinel on the family's emission ledger makes it fail
     // fast; the other append of a two-table family may still commit — the
@@ -1828,28 +1982,7 @@ class StreamingSpec extends AnyFunSuite {
         clean => tables(if (clean) c else i).map(spark.table(_).count()), Some(ledger(i)),
         () => Seq(c, i).flatMap(tables).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`")))
     def twins[I](name: String)(write: String => I): Seq[I] = Seq(s"${name}_clean", name).map(write)
-    def simhash(kind: String)(write: String => Dedup.SimHashFamilyIndex): Family = {
-      val Seq(c, i) = twins(s"ff_$kind")(write)
-      tableFamily(kind, c, i)(x => Seq(x.chunkTable), _.chunkTable)(
-        Dedup.simHashNearDupsIncrementalFold(docDelta(), "text", "doc_id", _, _))
-    }
     val families: Seq[() => Family] = Seq(
-      () => {
-        val Seq(c, i) = twins("ff_mh")(Dedup.writeMinHashIndex(docs, "text", "doc_id", _, buckets = 4))
-        tableFamily("minhash", c, i)(x => Seq(x.bandTable, x.shingleTable), _.shingleTable)(
-          Dedup.minHashNearDupsIncrementalFold(docDelta(), "text", "doc_id", 0.4, _, _))
-      },
-      () => simhash("s64")(Dedup.writeSimHashIndex(docs, "text", "doc_id", _, buckets = 4)),
-      () => simhash("s128")(Dedup.writeSimHash128Index(docs, "text", "doc_id", _, buckets = 4)),
-      () => simhash("cb")(Dedup.writeSimHashComboIndex(
-        docs, "text", "doc_id", _, maxHamming = 3, blocks = 6, buckets = 4)),
-      () => {
-        val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
-        val Seq(c, i) = twins("ff_ex")(Dedup.writeExactDedupIndex(corpus, "text", _, buckets = 4))
-        tableFamily("exact", c, i)(x => Seq(x.fpTable), _.fpTable)(Dedup.exactDedupIncrementalFold(
-          Seq((10L, "alpha"), (11L, "fresh"), (12L, "fresh"), (13L, "novel")).toDF("doc_id", "text"),
-          "text", "doc_id", _, _))
-      },
       () => {
         val Seq(c, i) = twins("ff_lsh")(Similarity.writeLshIndex(
           vecs, "embedding", "vec_id", _, nPlanes = 4, dim = 4, nTables = 2, buckets = 4))
