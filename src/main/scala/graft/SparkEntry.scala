@@ -199,6 +199,11 @@ object SparkEntry {
     */
   private val streamOutSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Scratch root of the rows that write source or index dirs: under the
+    * working directory, so runs from two checkouts never share one.
+    */
+  private val tmpRoot = s"${sys.props("user.dir")}/target/tmp"
+
   /** Driver-built micro-batch chunk at SOURCE-LIKE partitioning — the
     * batch twin of [[graft.streaming.Streams.statefulShufflePartitions]]
     * (guide §2.5 scale-adaptive partitioning): a local parallelize
@@ -3301,7 +3306,7 @@ object SparkEntry {
       (s, d) => {
         val ev = events(s, d)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        val srcDir = s"/root/repo/target/tmp/st12_src_${d.replaceAll("[^0-9.]", "")}"
+        val srcDir = s"$tmpRoot/st12_src_${d.replaceAll("[^0-9.]", "")}"
         val schema = streaming.Streams.writeTsOrderedChunks(ev, "ts", srcDir, n = 3)
         val raw = s.readStream
           .schema(schema)
@@ -3366,7 +3371,7 @@ object SparkEntry {
       (s, d) => {
         val ev = events(s, d)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        val srcDir = s"/root/repo/target/tmp/st14_src_${d.replaceAll("[^0-9.]", "")}"
+        val srcDir = s"$tmpRoot/st14_src_${d.replaceAll("[^0-9.]", "")}"
         val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
         import s.implicits._
         val sentinels = Seq(
@@ -3453,7 +3458,7 @@ object SparkEntry {
       (s, d) => {
         val ev = events(s, d)
           .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        val srcDir = s"/root/repo/target/tmp/st16_src_${d.replaceAll("[^0-9.]", "")}"
+        val srcDir = s"$tmpRoot/st16_src_${d.replaceAll("[^0-9.]", "")}"
         val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0)
         import s.implicits._
         val sentinels = Seq(
@@ -3531,7 +3536,7 @@ object SparkEntry {
       (s, d) => {
         val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val srcDir =
-          s"/root/repo/target/tmp/st13_src_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/st13_src_${d.replaceAll("[^0-9.]", "")}"
         val schema = streaming.Streams.writeIdModChunks(emb, "vec_id", srcDir, n = 3)
         @volatile var idx: operators.Quantization.Sq8Index = null
         val q = s.readStream
@@ -3590,9 +3595,9 @@ object SparkEntry {
       (s, d) => {
         val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val srcDir =
-          s"/root/repo/target/tmp/st15_src_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/st15_src_${d.replaceAll("[^0-9.]", "")}"
         val idxPath =
-          s"/root/repo/target/tmp/st15_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/st15_idx_${d.replaceAll("[^0-9.]", "")}"
         val schema = streaming.Streams.writeIdModChunks(emb, "vec_id", srcDir, n = 3)
         // the index handle is path-addressed (ivfSq8Read below), so the
         // build's return value is not carried across batches
@@ -3661,9 +3666,9 @@ object SparkEntry {
           .unionByName(plant(4200002L, 1L)) // % 3 = 2: dup of a batch-1 admission
           .unionByName(plant(4200004L, 2L)) // % 3 = 1: its ORIGINAL arrives later
         val srcDir =
-          s"/root/repo/target/tmp/st17_src_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/st17_src_${d.replaceAll("[^0-9.]", "")}"
         val idxPath =
-          s"/root/repo/target/tmp/st17_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/st17_idx_${d.replaceAll("[^0-9.]", "")}"
         val schema = streaming.Streams.writeIdModChunks(base, "vec_id", srcDir, n = 3)
         val q = s.readStream
           .schema(schema)
@@ -4512,7 +4517,7 @@ object SparkEntry {
       (s, d) => {
         val emb = embeddings(s, d)
         val path =
-          s"/root/repo/target/tmp/s16_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s16_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization
           .ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
         val qv = emb
@@ -4546,7 +4551,7 @@ object SparkEntry {
         val embNat = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val emb = embNat.unionByName(nudgedEchoes(embNat, 100000L))
         val path =
-          s"/root/repo/target/tmp/s17_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s17_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization
           .ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
         val qv = embNat
@@ -4609,7 +4614,7 @@ object SparkEntry {
       (s, d) => {
         val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val path =
-          s"/root/repo/target/tmp/s19_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s19_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization
           .ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
         val queries = emb.filter(pmod(col("vec_id"), lit(29)) === 0)
@@ -4633,7 +4638,7 @@ object SparkEntry {
         import s.implicits._
         val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val path =
-          s"/root/repo/target/tmp/s20_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s20_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization
           .ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
         val qids = Seq(0L, 29L, 58L, 87L)
@@ -4681,7 +4686,7 @@ object SparkEntry {
       (s, d) => {
         val emb = embeddings(s, d).select(col("vec_id"), col("embedding"))
         val path =
-          s"/root/repo/target/tmp/s21_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s21_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization
           .ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
         val queries = emb.filter(pmod(col("vec_id"), lit(29)) === 0)
@@ -4758,7 +4763,7 @@ object SparkEntry {
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding"), col("label"))
         val path =
-          s"/root/repo/target/tmp/s23_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s23_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization.ivfSq8Build(
           emb, "embedding", "vec_id", path, nCentroids = 16,
           attrCols = Seq("label"))
@@ -4785,7 +4790,7 @@ object SparkEntry {
         val emb = embeddings(s, d)
           .select(col("vec_id"), col("embedding"), col("label"))
         val path =
-          s"/root/repo/target/tmp/s25_idx_${d.replaceAll("[^0-9.]", "")}"
+          s"$tmpRoot/s25_idx_${d.replaceAll("[^0-9.]", "")}"
         val idx = operators.Quantization.ivfSq8Build(
           emb, "embedding", "vec_id", path, nCentroids = 16,
           attrCols = Seq("label"))
@@ -4895,7 +4900,7 @@ object SparkEntry {
     Q(
       "m05_binaryfile_ingest",
       (s, d) => {
-        val tmp = s"/root/repo/target/tmp/m05_bin_${d.replaceAll("[^0-9.]", "")}"
+        val tmp = s"$tmpRoot/m05_bin_${d.replaceAll("[^0-9.]", "")}"
         operators.Multimodal
           .writeTextCorpusAsFiles(documents(s, d), "doc_id", "text", tmp)
         operators.Multimodal
@@ -4985,7 +4990,7 @@ object SparkEntry {
     Q(
       "q28_csv_roundtrip",
       (s, d) => {
-        val tmp = s"/root/repo/target/tmp/q28_csv_${d.replaceAll("[^0-9.]", "")}"
+        val tmp = s"$tmpRoot/q28_csv_${d.replaceAll("[^0-9.]", "")}"
         val rt = sources.Sources.roundTrip(
           nation(s, d).select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
           tmp,
@@ -5004,7 +5009,7 @@ object SparkEntry {
     Q(
       "q29_jsonl_roundtrip",
       (s, d) => {
-        val tmp = s"/root/repo/target/tmp/q29_jsonl_${d.replaceAll("[^0-9.]", "")}"
+        val tmp = s"$tmpRoot/q29_jsonl_${d.replaceAll("[^0-9.]", "")}"
         val rt = sources.Sources.roundTrip(
           supplier(s, d).select(col("s_suppkey"), col("s_name"), col("s_nationkey")),
           tmp,
@@ -5026,7 +5031,7 @@ object SparkEntry {
     Q(
       "q38_orc_roundtrip",
       (s, d) => {
-        val tmp = s"/root/repo/target/tmp/q38_orc_${d.replaceAll("[^0-9.]", "")}"
+        val tmp = s"$tmpRoot/q38_orc_${d.replaceAll("[^0-9.]", "")}"
         val rt = sources.Sources.roundTrip(
           part(s, d).select(col("p_partkey"), col("p_brand"), col("p_retailprice")),
           tmp,

@@ -594,43 +594,21 @@ object Dedup {
     idx
   }
 
-  /** Fold a delta into an existing index (after its pairs have been
-    * emitted via [[minHashNearDupsIncremental]]) so the NEXT delta dedups
-    * against corpus ∪ this delta. Appends to both bucketed tables with
-    * the index's own bucket spec — Spark validates the spec matches.
+  /** Fold a delta into an existing index so the NEXT delta dedups
+    * against corpus ∪ this delta: the MinHash family's appends without
+    * its emission ([[IndexFold.appendOnly]]). Band rows are admitted into
+    * each bucket's remaining slots (the capped-write contract); shingle
+    * rows append in full — a doc capped out of one band may be in-cap in
+    * another and must verify.
     */
   def appendToMinHashIndex(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       idx: MinHashIndex
-  ): Unit = {
-    // band rows are admitted into each bucket's remaining slots (the
-    // capped-write contract); shingle rows append in full — a doc capped
-    // out of one band may be in-cap in another and must verify
-    val admitted = admittedAgainstIndexKeyed(
-      minHashBanded(
-        delta, textCol, idCol, idx.numHashes, idx.bands, idx.shingleSize,
-        spread = false),
-      idx.bandTable,
-      idx.maxBucket,
-      Seq("_band", "_bucket")
-    ).localCheckpoint(true)
-    writeBucketedTable(
-      admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
-      org.apache.spark.sql.SaveMode.Append)
-    graft.CacheUtil.release(admitted)
-    writeBucketedTable(
-      delta.select(
-        col(idCol).as("_sid"),
-        TextFunctions.shingleSet(col(textCol), idx.shingleSize).as("_sh")
-      ),
-      idx.shingleTable,
-      idx.buckets,
-      Seq("_sid"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-  }
+  ): Unit =
+    // the threshold's one reader, the emission, is never built
+    IndexFold.appendOnly(minHashFamily(delta, textCol, idCol, 1.0, idx))
 
   /** Drop a managed table AND its warehouse directory. With the
     * in-memory catalog the metadata dies with the session but the files
@@ -889,16 +867,6 @@ object Dedup {
       .drop("_rank", "_n")
   }
 
-  /** The (_chunk, _val)-keyed form used by the SimHash index family. */
-  private def admittedAgainstIndex(
-      chunked: DataFrame,
-      table: String,
-      maxBucket: Int,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame =
-    admittedAgainstIndexKeyed(
-      chunked, table, maxBucket, Seq("_chunk", "_val"), excludeIds)
-
   /** Compact an exact-dedup index: appends may re-add fingerprints a
     * later delta already contributed, so compaction also dedups rows.
     */
@@ -968,54 +936,8 @@ object Dedup {
     )
   }
 
-  /** Candidate pairs for an incremental dedup: every pair with at least
-    * one member in `delta` = (delta × corpus) via the bucketed band table
-    * ∪ (delta × delta) via the batch self-join. Corpus × corpus pairs
-    * were emitted when the corpus itself was indexed — union the calls'
-    * outputs for the full pair set.
-    *
-    * Scale shape: the delta is banded ONCE (localCheckpoint) and reused by
-    * both joins. The corpus side of the cross join is the bucketed
-    * `bandTable` scan — its side of the (_band, _bucket) equi-join plans
-    * with ZERO Exchange (only the small delta shuffles, into the index's
-    * bucket partitioning). Exactly-once emission uses the same
-    * lowest-matching-band conjunction as the batch path, evaluated across
-    * the delta/corpus pair.
-    *
-    * Bucket-cap contract (round-10, same as the simhash families): the
-    * band table is pre-capped at write/append/compact time
-    * ([[capBucketMembership]]) and the delta side is admitted per bucket
-    * into the remaining slots ([[admittedAgainstIndexKeyed]]), so
-    * incremental == capped-batch holds even on buckets OVER
-    * `idx.maxBucket`, under the monotone-id daily-crawl contract. Audit
-    * what the cap truncates with [[hotMinHashBuckets]] at build time.
-    */
-  def minHashCandidatesIncremental(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: MinHashIndex
-  ): DataFrame =
-    minHashCandidatesFromAdmitted(admittedBands(delta, textCol, idCol, idx), idx)
-
-  /** The delta's band rows admitted into the index's remaining bucket
-    * slots. Checkpointed; the caller releases it (directly, or via a
-    * result plan that references it).
-    */
-  private def admittedBands(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: MinHashIndex
-  ): DataFrame = {
-    val bandedRaw = bandedRawChk(delta, textCol, idCol, idx)
-    val banded = admitBanded(bandedRaw, idx).localCheckpoint(true)
-    graft.CacheUtil.release(bandedRaw)
-    banded
-  }
-
-  /** The delta's banded rows, checkpointed — the signature compute,
-    * shared by [[admittedBands]] and the fold's overlapped start. */
+  /** The delta's banded rows, checkpointed — the MinHash signature
+    * compute. */
   private def bandedRawChk(
       delta: DataFrame,
       textCol: String,
@@ -1027,22 +949,11 @@ object Dedup {
       spread = false)
       .localCheckpoint(true)
 
-  /** Admission of a prebuilt banded frame, lazy — the frame BOTH the
-    * probe and the append consume, so callers checkpoint it.
-    */
-  private def admitBanded(
-      bandedRaw: DataFrame,
-      idx: MinHashIndex,
-      excludeIds: Option[DataFrame] = None
-  ): DataFrame =
-    admittedAgainstIndexKeyed(
-      bandedRaw, idx.bandTable, idx.maxBucket, Seq("_band", "_bucket"), excludeIds)
-
   private def minHashCandidatesFromAdmitted(
       banded: DataFrame,
       idx: MinHashIndex,
-      excludeIds: Option[DataFrame] = None,
-      pin: DataFrame => DataFrame = checkpointed
+      excludeIds: Option[DataFrame],
+      pin: DataFrame => DataFrame
   ): DataFrame = {
     val spark = banded.sparkSession
     val within = candidatePairsFromBanded(banded, idx.bands, idx.maxBucket, pin)
@@ -1064,16 +975,32 @@ object Dedup {
     cross.unionByName(within)
   }
 
-  /** Incremental near-dup pairs, verified: [[minHashCandidatesIncremental]]
-    * candidates, then exact shingle-Jaccard ≥ threshold. Corpus shingles
-    * come from the index's bucketed shingle table (no text recompute, no
-    * corpus-side Exchange on the lookup joins); delta shingles are
-    * computed once and localCheckpointed (they are joined twice). Each
-    * candidate side resolves against corpus-then-delta via left joins +
-    * coalesce, so pairs mix sources freely.
+  /** Incremental near-dup pairs: every pair with at least one member in
+    * `delta` and shingle-Jaccard ≥ `threshold` = (delta × corpus) via the
+    * bucketed band table ∪ (delta × delta) via the batch self-join, then
+    * exact verification. Corpus × corpus pairs were emitted when the
+    * corpus itself was indexed — union the calls' outputs for the full
+    * pair set. The MinHash family's probe with its appends dropped
+    * ([[IndexFold.probeOnly]]); the result is materialized and its
+    * intermediate blocks are released before returning.
     *
-    * Result is materialized (localCheckpoint) and intermediate blocks are
-    * released before returning, as in [[minHashNearDups]].
+    * Scale shape: the delta is banded ONCE (localCheckpoint) and reused
+    * by both joins. The corpus side of the cross join is the bucketed
+    * `bandTable` scan — its side of the (_band, _bucket) equi-join plans
+    * with ZERO Exchange (only the small delta shuffles, into the index's
+    * bucket partitioning). Exactly-once emission uses the same
+    * lowest-matching-band conjunction as the batch path, evaluated
+    * across the delta/corpus pair. Corpus shingles come from the index's
+    * bucketed shingle table (no text recompute); delta shingles are
+    * computed once and checkpointed.
+    *
+    * Bucket-cap contract (round-10, same as the simhash families): the
+    * band table is pre-capped at write/append/compact time
+    * ([[capBucketMembership]]) and the delta side is admitted per bucket
+    * into the remaining slots ([[admittedAgainstIndexKeyed]]), so
+    * incremental == capped-batch holds even on buckets OVER
+    * `idx.maxBucket`, under the monotone-id daily-crawl contract. Audit
+    * what the cap truncates with [[hotMinHashBuckets]] at build time.
     */
   def minHashNearDupsIncremental(
       delta: DataFrame,
@@ -1081,29 +1008,13 @@ object Dedup {
       idCol: String,
       threshold: Double,
       idx: MinHashIndex
-  ): DataFrame = {
-    val cands = minHashCandidatesIncremental(delta, textCol, idCol, idx)
-    val deltaSh = deltaShingles(delta, textCol, idCol, idx)
-    val out = verifyMinHashIncremental(cands, deltaSh, threshold, idx).localCheckpoint(true)
-    graft.CacheUtil.release(cands)
-    graft.CacheUtil.release(deltaSh)
-    out
-  }
+  ): DataFrame =
+    IndexFold.probeOnly(minHashFamily(delta, textCol, idCol, threshold, idx))
 
   /** Probe-then-append in ONE delta pass: emit near-dup pairs against
     * the index as it stood, then fold the delta in — the per-batch body
     * of the unbounded-ingest loop (st05, and any foreachBatch caller).
-    * Semantically identical to [[minHashNearDupsIncremental]] followed
-    * by [[appendToMinHashIndex]] (gated), but the banding, the
-    * admission scan over the corpus index, and the delta shingle sets
-    * are each computed ONCE instead of twice — at ingest scale those
-    * are the dominant per-batch costs.
-    *
-    * Replay-safe through the one fold body ([[IndexFold]], contract in
-    * [[ReplaySafe]]). Ledger: the shingle table (`_sid`, one row per
-    * doc, the emission ledger) and the band table (`_id`, row key
-    * `_band`, healed per (`_id`, `_band`) row). Committed proof: every
-    * delta id in the shingle table with all `idx.bands` band rows.
+    * One family, three ways: see [[ReplaySafe]] ("One fold body").
     */
   def minHashNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1112,20 +1023,36 @@ object Dedup {
       threshold: Double,
       idx: MinHashIndex,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
+  ): DataFrame =
+    IndexFold.run(minHashFamily(delta, textCol, idCol, threshold, idx), sink)
+
+  /** The MinHash index family ([[IndexFold]]). Signatures: the delta's
+    * banding and its shingle sets. Ledger: the shingle table (`_sid`,
+    * one row per doc, the emission ledger) and the band table (`_id`,
+    * row key `_band`, healed per (`_id`, `_band`) row). Committed proof:
+    * every delta id in the shingle table with all `idx.bands` band rows.
+    */
+  private[graft] def minHashFamily(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      threshold: Double,
+      idx: MinHashIndex
+  ): IndexFold.Family = {
     val spark = delta.sparkSession
-    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
-      Seq(ReplaySafe.LedgerTable(spark.table(idx.shingleTable), "_sid"),
+    IndexFold.Family(delta, idCol, IndexFold.Pairs, proven = true,
+      () => Seq(ReplaySafe.LedgerTable(spark.table(idx.shingleTable), "_sid"),
         ReplaySafe.LedgerTable(spark.table(idx.bandTable), "_id", Some("_band" -> idx.bands))),
       () => bandedRawChk(delta, textCol, idCol, idx),
       () => deltaShingles(delta, textCol, idCol, idx)) { case (Seq(bandedRaw, deltaSh), step) =>
-      val admitted = step.pin(admitBanded(bandedRaw, idx, step.excl))
-      // sidesDisjoint: `excl` strips every delta id from the corpus side,
-      // and a first attempt's ledger proved none is stored
-      IndexFold.Probe(
+      // admitted into the remaining bucket slots: the frame both the
+      // probe and the band append read
+      val admitted = step.pin(admittedAgainstIndexKeyed(
+        bandedRaw, idx.bandTable, idx.maxBucket, Seq("_band", "_bucket"), step.excl))
+      new IndexFold.Probe(
         verifyMinHashIncremental(
           minHashCandidatesFromAdmitted(admitted, idx, step.excl, step.pin),
-          deltaSh, threshold, idx, step.excl, sidesDisjoint = true),
+          deltaSh, threshold, idx, step.excl, step.sidesDisjoint),
         () => step.appendHealed(admitted, idx.bandTable, idx.buckets, Seq("_band", "_bucket"),
           Seq("_id", "_band"), "_id", 1),
         () => writeBucketedTable(step.fresh(deltaSh, "_sid"), idx.shingleTable, idx.buckets,
@@ -1147,27 +1074,25 @@ object Dedup {
       .localCheckpoint(true)
 
   /** Exact-Jaccard verification of incremental candidates: each side
-    * resolves against corpus-then-delta shingles. Lazy — the caller
-    * materializes it, then releases `cands`/`deltaSh`.
+    * resolves against corpus-then-delta shingles. Lazy.
     */
   private def verifyMinHashIncremental(
       cands: DataFrame,
       deltaSh: DataFrame,
       threshold: Double,
       idx: MinHashIndex,
-      excludeIds: Option[DataFrame] = None,
-      sidesDisjoint: Boolean = false
+      excludeIds: Option[DataFrame],
+      sidesDisjoint: Boolean
   ): DataFrame = {
     val table = cands.sparkSession.table(idx.shingleTable)
     val corpusSh =
       excludeIds.fold(table)(ReplaySafe.excludeIds(table, "_sid", _))
-    // sidesDisjoint (r19, fold paths only): when the caller certifies no
-    // id is in BOTH shingle sources (the fold's excl strips delta ids
-    // from the corpus side; its fast path certified none are stored),
-    // each id resolves against the UNION in one left join per endpoint —
-    // two joins and two broadcast builds instead of four, same left-join
-    // multiplicity, bit-identical values. The probe-only entry points
-    // keep the coalesce shape: a re-probed doc may be in both sources.
+    // sidesDisjoint (r19, [[IndexFold.Step]]): when no id is in BOTH
+    // shingle sources, each id resolves against the UNION in one left
+    // join per endpoint — two joins and two broadcast builds instead of
+    // four, same left-join multiplicity, bit-identical values. A
+    // ledger-free probe keeps the coalesce shape: a re-probed doc may be
+    // in both sources.
     if (sidesDisjoint) {
       val allSh = corpusSh.unionByName(deltaSh)
       cands
@@ -1696,11 +1621,11 @@ object Dedup {
     idx
   }
 
-  /** Fold a delta into an existing SimHash index of any key scheme (after
-    * its pairs were emitted via [[simHashNearDupsIncremental]]) so the
-    * NEXT delta dedups against corpus ∪ this delta. Only rows the bucket
-    * cap admits ([[admittedAgainstIndex]]) are appended — exactly the
-    * membership the probe paired, keeping stored buckets ≤
+  /** Fold a delta into an existing SimHash index of any key scheme so
+    * the NEXT delta dedups against corpus ∪ this delta: the family's
+    * append without its emission ([[IndexFold.appendOnly]]). Only rows
+    * the bucket cap admits ([[admittedAgainstIndexKeyed]]) are appended —
+    * exactly the membership the probe pairs, keeping stored buckets ≤
     * `idx.maxBucket` forever.
     */
   def appendToSimHashIndex(
@@ -1708,23 +1633,8 @@ object Dedup {
       textCol: String,
       idCol: String,
       idx: SimHashFamilyIndex
-  ): Unit = {
-    // materialize before writing: the admission plan reads the very
-    // table the append inserts into
-    val admitted = admittedAgainstIndex(
-      idx.keys.keyed(delta, col(idCol), col(textCol), spread = false),
-      idx.chunkTable,
-      idx.maxBucket
-    ).localCheckpoint(true)
-    writeBucketedTable(
-      admitted,
-      idx.chunkTable,
-      idx.buckets,
-      Seq("_chunk", "_val"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-    graft.CacheUtil.release(admitted)
-  }
+  ): Unit =
+    IndexFold.appendOnly(simHashFamily(delta, textCol, idCol, idx))
 
   /** Incremental SimHash near-dups against an index of any key scheme:
     * every pair within `idx.maxHamming` with at least one member in
@@ -1749,62 +1659,27 @@ object Dedup {
     * Bucket-cap contract (round-10): the index is pre-capped at write/
     * append/compact time ([[capChunkBuckets]]) and the delta side is
     * admitted per bucket into the remaining slots
-    * ([[admittedAgainstIndex]]), so incremental == capped-batch holds
+    * ([[admittedAgainstIndexKeyed]]), so incremental == capped-batch holds
     * even on buckets OVER `idx.maxBucket` (gated with a planted over-cap
     * bucket), under the monotone-id daily-crawl contract. Audit what the
     * cap truncates with the hot-bucket audits at build time.
     *
-    * Result is materialized (localCheckpoint) and the delta-side blocks
-    * are released before returning.
+    * The SimHash family's probe with its appends dropped
+    * ([[IndexFold.probeOnly]]): the result is materialized and the
+    * delta-side blocks are released before returning.
     */
   def simHashNearDupsIncremental(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       idx: SimHashFamilyIndex
-  ): DataFrame = {
-    val lazyPairs =
-      simHashPairsIncrementalLazy(delta, textCol, idCol, idx)
-    val out = lazyPairs.localCheckpoint(true)
-    // releasing the lazy plan frees BOTH delta-side checkpoints it reads
-    // (the admitted delta membership and the capped within-delta members)
-    graft.CacheUtil.release(lazyPairs)
-    out
-  }
-
-  /** The un-materialized plan behind [[simHashNearDupsIncremental]].
-    * Exposed for plan-shape tests (the public wrapper eagerly
-    * checkpoints, which hides the join from `executedPlan`); callers must
-    * [[graft.CacheUtil.release]] it when done.
-    */
-  private[graft] def simHashPairsIncrementalLazy(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: SimHashFamilyIndex
-  ): DataFrame = {
-    val keyedRaw = idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
-      .localCheckpoint(true)
-    val keyed = admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket)
-      .localCheckpoint(true)
-    graft.CacheUtil.release(keyedRaw)
-    simHashPairsFromAdmitted(keyed, idx)
-  }
+  ): DataFrame =
+    IndexFold.probeOnly(simHashFamily(delta, textCol, idCol, idx))
 
   /** Probe-then-append in ONE delta pass, for an index of any key scheme:
     * emit near-dup pairs against the index as it stood, then fold the
-    * delta in — the per-batch body of the unbounded-ingest loop.
-    * Semantically identical to [[simHashNearDupsIncremental]] followed by
-    * [[appendToSimHashIndex]] (gated), but the delta keying and the
-    * admission scan over the corpus index run ONCE instead of twice.
-    *
-    * Replay-safe through the one fold body ([[IndexFold]], contract in
-    * [[ReplaySafe]]). Ledger: the key table alone (`_id`, row key
-    * `_chunk`, healed per (`_id`, `_chunk`) row); a doc whose every
-    * bucket was full stores nothing, but its re-admission recomputes
-    * deterministically against the delta-excluded corpus, so a replayed
-    * append writes the same (empty) row set. Committed proof: every
-    * delta id holds all `idx.keys.subsets.length` key rows.
+    * delta in — the per-batch body of the unbounded-ingest loop. One
+    * family, three ways: see [[ReplaySafe]] ("One fold body").
     */
   def simHashNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1812,15 +1687,34 @@ object Dedup {
       idCol: String,
       idx: SimHashFamilyIndex,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
+  ): DataFrame =
+    IndexFold.run(simHashFamily(delta, textCol, idCol, idx), sink)
+
+  /** The SimHash index family of any key scheme ([[IndexFold]]).
+    * Signature: the delta's keying. Ledger: the key table alone (`_id`,
+    * row key `_chunk`, healed per (`_id`, `_chunk`) row); a doc whose
+    * every bucket was full stores nothing, but its re-admission
+    * recomputes deterministically against the delta-excluded corpus, so
+    * a replayed append writes the same (empty) row set. Committed proof:
+    * every delta id holds all `idx.keys.subsets.length` key rows.
+    */
+  private[graft] def simHashFamily(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: SimHashFamilyIndex
+  ): IndexFold.Family = {
     val spark = delta.sparkSession
-    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
-      Seq(ReplaySafe.LedgerTable(
+    IndexFold.Family(delta, idCol, IndexFold.Pairs, proven = true,
+      () => Seq(ReplaySafe.LedgerTable(
         spark.table(idx.chunkTable), "_id", Some("_chunk" -> idx.keys.subsets.length))),
       () => idx.keys.keyed(delta, col(idCol), col(textCol), spread = false)
         .localCheckpoint(true)) { case (Seq(keyedRaw), step) =>
-      val keyed = step.pin(admittedAgainstIndex(keyedRaw, idx.chunkTable, idx.maxBucket, step.excl))
-      IndexFold.Probe(
+      // materialized: the admission plan reads the very table the
+      // append inserts into
+      val keyed = step.pin(admittedAgainstIndexKeyed(
+        keyedRaw, idx.chunkTable, idx.maxBucket, Seq("_chunk", "_val"), step.excl))
+      new IndexFold.Probe(
         simHashPairsFromAdmitted(keyed, idx, step.excl, step.pin),
         () => step.appendHealed(keyed, idx.chunkTable, idx.buckets, Seq("_chunk", "_val"),
           Seq("_id", "_chunk"), "_id", 0))
@@ -1830,8 +1724,8 @@ object Dedup {
   private def simHashPairsFromAdmitted(
       keyed: DataFrame,
       idx: SimHashFamilyIndex,
-      excludeIds: Option[DataFrame] = None,
-      pin: DataFrame => DataFrame = checkpointed
+      excludeIds: Option[DataFrame],
+      pin: DataFrame => DataFrame
   ): DataFrame = {
     val spark = keyed.sparkSession
     val keys = idx.keys

@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
-/** The one probe-then-append fold body of the MinHash, SimHash,
-  * vector-LSH, semDedup and passage folds. Its order, its release
-  * contract and why the other fold families stay out are in
-  * [[ReplaySafe]] ("One fold body"). A family supplies its ledger
-  * tables, its signature thunks, a lazy probe, the probe's appends and
-  * its emission shape.
+/** The one body of the MinHash, SimHash, vector-LSH, semDedup and passage
+  * index families. A family is one [[Family]] value; [[run]] folds it
+  * replay-safely, [[probeOnly]] runs its probe with the appends dropped
+  * and [[appendOnly]] its appends with the emission dropped. The order,
+  * the release contract and why the other fold families stay out are in
+  * [[ReplaySafe]] ("One fold body").
   */
-private[operators] object IndexFold {
+private[graft] object IndexFold {
 
   /** How an emission row names the delta docs it belongs to — what a
     * replay suppresses once they are folded in.
@@ -28,29 +28,50 @@ private[operators] object IndexFold {
     */
   final case class PerDoc(idCol: String) extends Emission
 
-  /** A family's probe: its lazy emission and the appends that fold the
-    * delta in afterwards (run overlapped — they must write different
-    * tables).
+  /** A family's probe: its emission, built on first use only, and the
+    * appends that fold the delta in afterwards (run overlapped — they
+    * must write different tables). An append-only run never builds the
+    * emission, so it pins nothing that only the emission reads.
     */
-  final case class Probe(emission: DataFrame, appends: (() => Unit)*)
+  final class Probe(emit: => DataFrame, val appends: (() => Unit)*) {
+    lazy val emission: DataFrame = emit
+  }
+
+  /** One index family over one delta: its ledger `tables` (read by the
+    * fold alone, inside its overlapped ledger thunk), whether their keys
+    * prove a committed replay (`proven`, [[ReplaySafe.committed]]), its
+    * signature thunks, and its `probe`, which gets the signature results
+    * in order.
+    */
+  final case class Family(
+      delta: DataFrame,
+      idCol: String,
+      emission: Emission,
+      proven: Boolean,
+      tables: () => Seq[ReplaySafe.LedgerTable],
+      signatures: (() => DataFrame)*
+  )(val probe: (IndexedSeq[DataFrame], Step) => Probe)
 
   /** The attempt as a family's probe sees it. `pin` is the probe's only
     * way to materialize a frame (`identity` on a committed replay, which
     * needs only the plan's schema); `excl` is the delta's ids to exclude
-    * from corpus reads, `None` on a first attempt.
+    * from corpus reads, `None` on a first attempt and in a ledger-free
+    * call. `sidesDisjoint` says that no delta id is in a corpus read:
+    * true in the fold (`excl` strips them on a replay, and a first
+    * attempt's ledger proved none is stored), false in a ledger-free
+    * call, which may re-probe stored docs.
     */
   final class Step private[IndexFold] (
-      ledger: ReplaySafe.Ledger,
-      attempt: ReplaySafe.Attempt,
+      ledger: Option[ReplaySafe.Ledger],
+      val sidesDisjoint: Boolean,
       val pin: DataFrame => DataFrame) {
-    private val firstAttempt = attempt == ReplaySafe.FirstAttempt
-    val excl: Option[DataFrame] = if (firstAttempt) None else Some(ledger.rids)
+    val excl: Option[DataFrame] = ledger.map(_.rids)
 
     /** `rows` whose `idColName` the emission ledger (table 0) does not
       * hold yet — the append of a one-row-per-id table.
       */
     def fresh(rows: DataFrame, idColName: String): DataFrame =
-      if (firstAttempt) rows else ReplaySafe.dropSeen(rows, idColName, ledger.seen(0))
+      ledger.fold(rows)(l => ReplaySafe.dropSeen(rows, idColName, l.seen(0)))
 
     /** The append of ledger table `t`, a multi-row-per-id table (bands,
       * keys, passage windows), healed at ROW granularity: a torn job
@@ -69,10 +90,8 @@ private[operators] object IndexFold {
         idColName: String,
         t: Int
     ): Unit = {
-      val present =
-        if (firstAttempt || ReplaySafe.noneSeen(ledger.seen(t))) None
-        else Some(ReplaySafe.rowKeysPresent(
-          rows.sparkSession.table(table), idColName, ledger.rids, rowKey))
+      val present = ledger.filterNot(l => ReplaySafe.noneSeen(l.seen(t))).map(l =>
+        ReplaySafe.rowKeysPresent(rows.sparkSession.table(table), idColName, l.rids, rowKey))
       try
         Dedup.writeBucketedTable(
           present.fold(rows)(ReplaySafe.dropRowsPresent(rows, _, rowKey)),
@@ -81,40 +100,28 @@ private[operators] object IndexFold {
     }
   }
 
-  /** Folds `delta` in and returns its emission (see [[ReplaySafe]]).
-    * `tables` is read inside the overlapped ledger thunk; `proven` says
-    * whether the family's `tables` keys prove a committed replay
-    * ([[ReplaySafe.committed]]); `probe` gets the signature results in
-    * order.
+  /** Folds the family's delta in and returns its emission (see
+    * [[ReplaySafe]]).
     */
-  def run(
-      delta: DataFrame,
-      idCol: String,
-      sink: Option[DataFrame => Unit],
-      emission: Emission,
-      proven: Boolean,
-      tables: => Seq[ReplaySafe.LedgerTable],
-      signatures: (() => DataFrame)*
-  )(probe: (IndexedSeq[DataFrame], Step) => Probe): DataFrame = {
+  def run(f: Family, sink: Option[DataFrame => Unit]): DataFrame = {
     var ledger: ReplaySafe.Ledger = null
     var attempt: ReplaySafe.Attempt = null
     val sigs = Overlap.run[DataFrame]((() => {
-      val ts = tables
-      ledger = ReplaySafe.ledgerRead(delta, idCol, ts: _*)
-      attempt = ReplaySafe.classify(ledger, Option.when(proven)(ts.map(_.keys.map(_._2))))
+      val ts = f.tables()
+      ledger = ReplaySafe.ledgerRead(f.delta, f.idCol, ts: _*)
+      attempt = ReplaySafe.classify(ledger, Option.when(f.proven)(ts.map(_.keys.map(_._2))))
       ledger.tagged
-    }) +: signatures, graft.CacheUtil.release).tail
+    }) +: f.signatures, graft.CacheUtil.release).tail
     val pinned = mutable.ArrayBuffer(ledger.tagged) ++= sigs
     var out: DataFrame = null
     try {
       val committed = attempt == ReplaySafe.Committed
-      val pin: DataFrame => DataFrame =
-        if (committed) identity
-        else { df => val c = df.localCheckpoint(true); pinned += c; c }
-      val p = probe(sigs, new Step(ledger, attempt, pin))
+      val pin: DataFrame => DataFrame = if (committed) identity else pinInto(pinned)
+      val firstAttempt = attempt == ReplaySafe.FirstAttempt
+      val p = f.probe(sigs, new Step(Option.unless(firstAttempt)(ledger), sidesDisjoint = true, pin))
       val emitted =
-        if (attempt == ReplaySafe.FirstAttempt) p.emission
-        else emission match {
+        if (firstAttempt) p.emission
+        else f.emission match {
           case Pairs => ReplaySafe.keepPairsTouchingUnseen(
             p.emission, "id_a", "id_b", ReplaySafe.unseenIds(ledger.rids, ledger.seen(0)))
           case PerDoc(c) => ReplaySafe.dropSeen(p.emission, c, ledger.seen(0))
@@ -129,5 +136,37 @@ private[operators] object IndexFold {
         Option(out).foreach(graft.CacheUtil.release)
         throw e
     } finally pinned.foreach(graft.CacheUtil.release)
+  }
+
+  /** The family's emission against the index as it stands, checkpointed;
+    * nothing is appended. The caller releases it.
+    */
+  def probeOnly(f: Family): DataFrame = withProbePlan(f)(_.localCheckpoint(true))
+
+  /** Folds the family's delta in without building its emission. */
+  def appendOnly(f: Family): Unit = ledgerFree(f)(p => Overlap.run[Unit](p.appends, _ => ()))
+
+  /** `use` of the family's lazy probe-only emission plan — for plan-shape
+    * tests, since [[probeOnly]]'s checkpoint hides the plan. Every frame
+    * the plan reads is released when `use` returns.
+    */
+  private[graft] def withProbePlan[A](f: Family)(use: DataFrame => A): A =
+    ledgerFree(f)(p => use(p.emission))
+
+  /** `use` of the family's probe with no ledger read: the signatures run
+    * overlapped, `pin` checkpoints, and every signature result and pinned
+    * frame is released on every exit.
+    */
+  private def ledgerFree[A](f: Family)(use: Probe => A): A = {
+    val pinned = mutable.ArrayBuffer[DataFrame]() ++=
+      Overlap.run[DataFrame](f.signatures, graft.CacheUtil.release)
+    try use(f.probe(pinned.toIndexedSeq, new Step(None, sidesDisjoint = false, pinInto(pinned))))
+    finally pinned.foreach(graft.CacheUtil.release)
+  }
+
+  private def pinInto(pinned: mutable.ArrayBuffer[DataFrame]): DataFrame => DataFrame = { df =>
+    val c = df.localCheckpoint(true)
+    pinned += c
+    c
   }
 }

@@ -211,9 +211,9 @@ object Passages {
     idx
   }
 
-  /** Fold a delta into an existing passage index (after its profile was
-    * emitted via [[passageDupFractionIncremental]]) so the NEXT delta
-    * profiles against corpus ∪ this delta.
+  /** Fold a delta into an existing passage index so the NEXT delta
+    * profiles against corpus ∪ this delta: the index build's own write,
+    * in Append mode.
     */
   def appendToPassageIndex(
       delta: DataFrame,
@@ -310,49 +310,25 @@ object Passages {
     * Precondition: delta ids are disjoint from indexed ids (the normal
     * append workflow). Re-profiling an ALREADY-INDEXED document would
     * count its own indexed windows as "another document".
+    *
+    * The passage family's probe with its append dropped
+    * ([[IndexFold.probeOnly]]).
     */
   def passageDupFractionIncremental(
       delta: DataFrame,
       textCol: String,
       idCol: String,
       idx: PassageIndex
-  ): DataFrame = {
-    val lazyOut = passageDupFractionIncrementalLazy(delta, textCol, idCol, idx)
-    val out = lazyOut.localCheckpoint(true)
-    graft.CacheUtil.release(lazyOut)
-    out
-  }
-
-  /** The un-materialized plan behind [[passageDupFractionIncremental]]
-    * — exposed for plan-shape tests; callers must
-    * [[graft.CacheUtil.release]] it when done.
-    */
-  private[graft] def passageDupFractionIncrementalLazy(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: PassageIndex
   ): DataFrame =
-    profileFromDeltaFp(
-      idCol, idx, deltaFpChk(delta, textCol, idCol, idx), windowTotals(delta, textCol, idCol, idx))
+    IndexFold.probeOnly(passageFamily(delta, textCol, idCol, idx))
 
   /** Probe-then-append in ONE delta pass: profile the delta against the
     * index as it stands, then fold the delta's fingerprints in — the
     * per-batch body of the unbounded-ingest loop (st04, and any
-    * foreachBatch caller). Semantically identical to
-    * [[passageDupFractionIncremental]] followed by
-    * [[appendToPassageIndex]] (gated), but the window fingerprinting —
-    * |tokens| rows per doc, the dominant delta-side cost — runs ONCE
-    * instead of twice: the same per-(doc, fp) count frame feeds the
-    * profile and the append.
-    *
-    * Replay-safe through the one fold body
-    * ([[graft.operators.IndexFold]], contract in
-    * [[graft.operators.ReplaySafe]]). Ledger: the fingerprint table
-    * alone (`_pid`; windowless docs get marker rows, [[indexRows]]),
-    * healed per (`_pid`, `_fp`) row. No committed proof: the row keys
-    * are fingerprints, not `[0, n)`, so every replay takes the slow path,
-    * which heals a tear inside one doc's window rows.
+    * foreachBatch caller). The window fingerprinting — |tokens| rows per
+    * doc, the dominant delta-side cost — runs ONCE: the same per-(doc,
+    * fp) count frame feeds the profile and the append. One family, three
+    * ways: see [[graft.operators.ReplaySafe]] ("One fold body").
     */
   def passageDupFractionIncrementalFold(
       delta: DataFrame,
@@ -360,13 +336,29 @@ object Passages {
       idCol: String,
       idx: PassageIndex,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
+  ): DataFrame =
+    IndexFold.run(passageFamily(delta, textCol, idCol, idx), sink)
+
+  /** The passage index family ([[graft.operators.IndexFold]]).
+    * Signatures: the delta's window fingerprint counts and per-doc window
+    * totals. Ledger: the fingerprint table alone (`_pid`; windowless docs
+    * get marker rows, [[indexRows]]), healed per (`_pid`, `_fp`) row. No
+    * committed proof: the row keys are fingerprints, not `[0, n)`, so
+    * every replay takes the slow path, which heals a tear inside one
+    * doc's window rows.
+    */
+  private[graft] def passageFamily(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: PassageIndex
+  ): IndexFold.Family = {
     val spark = delta.sparkSession
-    IndexFold.run(delta, idCol, sink, IndexFold.PerDoc(idCol), proven = false,
-      Seq(ReplaySafe.LedgerTable(spark.table(idx.fpTable), "_pid")),
+    IndexFold.Family(delta, idCol, IndexFold.PerDoc(idCol), proven = false,
+      () => Seq(ReplaySafe.LedgerTable(spark.table(idx.fpTable), "_pid")),
       () => deltaFpChk(delta, textCol, idCol, idx),
       () => windowTotals(delta, textCol, idCol, idx)) { case (Seq(deltaFp, totals), step) =>
-      IndexFold.Probe(
+      new IndexFold.Probe(
         profileFromDeltaFp(idCol, idx, deltaFp, totals, step.excl),
         () => step.appendHealed(
           deltaFp.select(col(idCol).as("_pid"), col("_fp"), col("_occ"))
@@ -416,7 +408,7 @@ object Passages {
       idx: PassageIndex,
       deltaFp: DataFrame,
       totals: DataFrame,
-      excludeIds: Option[DataFrame] = None
+      excludeIds: Option[DataFrame]
   ): DataFrame = {
     val spark = deltaFp.sparkSession
     val deltaFps = deltaFp

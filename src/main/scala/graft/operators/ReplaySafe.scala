@@ -110,8 +110,27 @@ import org.apache.spark.sql.functions._
   * canonical callback. A fold called without a sink keeps the
   * document-it-yourself contract above.
   *
-  * One fold body ([[IndexFold.run]]): the MinHash, SimHash, vector-LSH,
-  * semDedup and passage folds share one body, in this order.
+  * One fold body ([[IndexFold]]): the MinHash, SimHash, vector-LSH,
+  * semDedup and passage index families are each one
+  * [[IndexFold.Family]] value — ledger tables, signature thunks, and a
+  * probe whose emission is lazy and whose appends fold the delta in. It
+  * runs three ways:
+  *  - the replay-safe fold ([[IndexFold.run]], every `*IncrementalFold`);
+  *  - probe-only ([[IndexFold.probeOnly]], the `*Incremental` probes):
+  *    the emission, checkpointed, with the appends dropped;
+  *  - append-only ([[IndexFold.appendOnly]]: `appendToMinHashIndex`,
+  *    `appendToSimHashIndex`, `appendToLshIndex`): the appends, with the
+  *    emission never built, so nothing only the emission reads is
+  *    pinned. Passages appends through its index build's own write, and
+  *    semDedup through [[Similarity.ivfAppend]].
+  *
+  * Probe-only and append-only read no ledger: their step is a first
+  * attempt's (no `excl`, unfiltered appends) except for one fact. The
+  * fold proves that no delta id is in a corpus read, and a ledger-free
+  * call does not (it may re-probe stored docs), so its verify keeps the
+  * four-join coalesce shape ([[IndexFold.Step]]'s `sidesDisjoint`). Both
+  * release every signature result and every pinned frame on every exit.
+  * The fold's order:
   *  1. The ledger read ([[ledgerRead]]) with [[classify]] runs on one
   *     driver thread beside the family's signature thunks ([[Overlap]]).
   *  1. The attempt decides `excl` (the delta's ids, dropped from every

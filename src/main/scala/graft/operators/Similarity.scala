@@ -746,41 +746,27 @@ object Similarity {
     * pairing concern, applied by slicing the lowest ids at probe time,
     * so a later probe over the grown lists still sees the capped-batch
     * member set). Gated: emission == capped-batch pairs on the union
-    * restricted to delta-touching, incl. over-cap clusters.
+    * restricted to delta-touching, incl. over-cap clusters. The semDedup
+    * family's probe over `index.assigned` ([[IndexFold.probeOnly]]).
     */
   def semDedupPairsIncremental(
       delta: DataFrame,
       index: IvfIndex,
       threshold: Double,
       maxCluster: Int = 10000
-  ): DataFrame = {
-    require(maxCluster > 1, "maxCluster must allow at least one pair")
-    val stored = semDedupCappedStored(index, maxCluster)
-    val probe = ivfAssign(
-      delta.select(col(index.idCol), col(index.vecCol)),
-      index.vecCol, index.centroids)
-      .select(
-        col(index.idCol).as("_id"),
-        VectorFunctions.l2Normalize(col(index.vecCol)).as("_nv"),
-        col("_centroid"))
-    val admitted = semDedupAdmit(probe, stored, maxCluster).localCheckpoint(true)
-    val out =
-      semDedupPairsTouchingDelta(admitted, stored, threshold).localCheckpoint(true)
-    graft.CacheUtil.release(stored)
-    graft.CacheUtil.release(admitted)
-    out
-  }
+  ): DataFrame =
+    IndexFold.probeOnly(semDedupFamily(
+      delta.select(col(index.idCol), col(index.vecCol)), index.assigned, index.centroids,
+      index.vecCol, index.idCol, threshold, maxCluster, listsPath = None))
 
   /** Probe-then-append in ONE delta pass against a WRITTEN IVF index
     * (the [[ivfWrite]] layout) — the semantic member of the fold family
     * ([[graft.operators.Dedup.minHashNearDupsIncrementalFold]] et al.):
     * emit every threshold-passing within-cluster pair touching the
     * delta against the lists as they stood, then fold the delta in.
-    * Gated observationally identical to [[semDedupPairsIncremental]]
-    * over [[ivfRead]] followed by [[ivfAppend]], but the per-row
-    * centroid argmin runs ONCE (checkpointed) and feeds both the probe
-    * and the appended list rows. Like [[ivfAppend]], `delta` must carry
-    * the same columns the index was built from, and the lists stay
+    * The per-row centroid argmin runs ONCE (checkpointed) and feeds both
+    * the probe and the appended list rows. Like [[ivfAppend]], `delta`
+    * must carry the same columns the index was built from, and the lists stay
     * uncapped on disk (ANN completeness — the cluster cap is a pairing
     * concern applied at probe time).
     *
@@ -795,12 +781,9 @@ object Similarity {
     * union with no runtime signal. Under-cap clusters are unaffected.
     * The over-cap ScalaTest leg asserts the precondition explicitly.
     *
-    * Replay-safe through the one fold body
-    * ([[graft.operators.IndexFold]], contract in
-    * [[graft.operators.ReplaySafe]]). Ledger: the lists alone (`idCol`,
-    * one row per id); the append writes only ids the lists lack.
-    * Committed proof: every delta id is in the lists. Compaction is
-    * checked at entry only ([[failIfCompacting]]).
+    * One family, three ways: see [[graft.operators.ReplaySafe]] ("One
+    * fold body"). Compaction is checked at entry only
+    * ([[failIfCompacting]]).
     */
   def semDedupPairsIncrementalFold(
       spark: org.apache.spark.sql.SparkSession,
@@ -812,24 +795,44 @@ object Similarity {
       maxCluster: Int = 10000,
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
-    require(maxCluster > 1, "maxCluster must allow at least one pair")
     failIfCompacting(spark, s"$path/lists")
-    val cents = readCentroids(spark, s"$path/centroids")
-    val lists = spark.read.parquet(s"$path/lists")
-    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
-      Seq(ReplaySafe.LedgerTable(lists, idCol)),
+    IndexFold.run(semDedupFamily(
+      delta, spark.read.parquet(s"$path/lists"), readCentroids(spark, s"$path/centroids"),
+      vecCol, idCol, threshold, maxCluster, Some(s"$path/lists")), sink)
+  }
+
+  /** The semDedup index family ([[graft.operators.IndexFold]]) over the
+    * inverted `lists` and their frozen centroids. Signature: the delta's
+    * centroid assignment. Ledger: the lists alone (`idCol`, one row per
+    * id); the append, present only when the lists are a written
+    * directory (`listsPath`), writes only ids the lists lack. Committed
+    * proof: every delta id is in the lists.
+    */
+  private[graft] def semDedupFamily(
+      delta: DataFrame,
+      lists: DataFrame,
+      cents: Array[Array[Double]],
+      vecCol: String,
+      idCol: String,
+      threshold: Double,
+      maxCluster: Int,
+      listsPath: Option[String]
+  ): IndexFold.Family = {
+    require(maxCluster > 1, "maxCluster must allow at least one pair")
+    IndexFold.Family(delta, idCol, IndexFold.Pairs, proven = true,
+      () => Seq(ReplaySafe.LedgerTable(lists, idCol)),
       () => ivfAssign(delta, vecCol, cents).localCheckpoint(true)) { case (Seq(assigned), step) =>
-      val stored = step.pin(semDedupCappedStoredLazy(
-        IvfIndex(step.excl.fold(lists)(ReplaySafe.excludeIds(lists, idCol, _)), cents, vecCol, idCol),
-        maxCluster))
-      val admitted = step.pin(semDedupAdmit(assigned.select(
-        col(idCol).as("_id"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("_nv"),
-        col("_centroid")), stored, maxCluster))
-      IndexFold.Probe(
-        semDedupPairsTouchingDelta(admitted, stored, threshold),
-        () => step.fresh(assigned, idCol)
-          .write.mode("append").partitionBy("_centroid").parquet(s"$path/lists"))
+      new IndexFold.Probe({
+        val stored = step.pin(semDedupCappedStoredLazy(
+          IvfIndex(step.excl.fold(lists)(ReplaySafe.excludeIds(lists, idCol, _)), cents, vecCol, idCol),
+          maxCluster))
+        val admitted = step.pin(semDedupAdmit(assigned.select(
+          col(idCol).as("_id"),
+          VectorFunctions.l2Normalize(col(vecCol)).as("_nv"),
+          col("_centroid")), stored, maxCluster))
+        semDedupPairsTouchingDelta(admitted, stored, threshold)
+      }, listsPath.toSeq.map(p => () =>
+        step.fresh(assigned, idCol).write.mode("append").partitionBy("_centroid").parquet(p)): _*)
     }
   }
 
@@ -1227,40 +1230,19 @@ object Similarity {
     idx
   }
 
-  /** Fold a delta into an existing LSH index (after its pairs were
-    * emitted via [[lshNearDupsIncremental]]). Band rows are admitted
-    * into each bucket's remaining slots (the capped-write contract);
-    * vector rows append in full.
+  /** Fold a delta into an existing LSH index: the vector-LSH family's
+    * appends without its emission ([[IndexFold.appendOnly]]). Band rows
+    * are admitted into each bucket's remaining slots (the capped-write
+    * contract); vector rows append in full.
     */
   def appendToLshIndex(
       delta: DataFrame,
       vecCol: String,
       idCol: String,
       idx: LshIndex
-  ): Unit = {
-    val admitted = Dedup.admittedAgainstIndexKeyed(
-      lshBanded(
-        delta, vecCol, idCol, idx.nPlanes, idx.dim, idx.seed, idx.nTables,
-        spread = false),
-      idx.bandTable,
-      idx.maxBucket,
-      Seq("_tbl", "_sig")
-    ).localCheckpoint(true)
-    Dedup.writeBucketedTable(
-      admitted, idx.bandTable, idx.buckets, Seq("_tbl", "_sig"),
-      org.apache.spark.sql.SaveMode.Append)
-    graft.CacheUtil.release(admitted)
-    Dedup.writeBucketedTable(
-      delta.select(
-        col(idCol).as("_vid"),
-        VectorFunctions.l2Normalize(col(vecCol)).as("_nv")
-      ),
-      idx.vecTable,
-      idx.buckets,
-      Seq("_vid"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-  }
+  ): Unit =
+    // the threshold's one reader, the emission, is never built
+    IndexFold.appendOnly(lshFamily(delta, vecCol, idCol, 1.0, idx))
 
   /** Compact an LSH index after many appends: band-membership and
     * normalized-vector rows are unique per doc under the disjoint-delta
@@ -1326,8 +1308,9 @@ object Similarity {
     * incremental == capped-batch holds even on buckets OVER
     * `idx.maxBucket`, under the monotone-id daily-crawl contract.
     *
-    * Result is materialized (localCheckpoint) and delta-side blocks are
-    * released before returning.
+    * The vector-LSH family's probe with its appends dropped
+    * ([[IndexFold.probeOnly]]): the result is materialized and the
+    * delta-side blocks are released before returning.
     */
   def lshNearDupsIncremental(
       delta: DataFrame,
@@ -1335,43 +1318,14 @@ object Similarity {
       idCol: String,
       threshold: Double,
       idx: LshIndex
-  ): DataFrame = {
-    val lazyPairs =
-      lshPairsIncrementalLazy(delta, vecCol, idCol, threshold, idx)
-    val out = lazyPairs.localCheckpoint(true)
-    graft.CacheUtil.release(lazyPairs)
-    out
-  }
-
-  /** The un-materialized plan behind [[lshNearDupsIncremental]], exposed
-    * for plan-shape tests; callers must [[graft.CacheUtil.release]] it.
-    */
-  private[graft] def lshPairsIncrementalLazy(
-      delta: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      idx: LshIndex
-  ): DataFrame = {
-    val banded = lshAdmittedBands(delta, vecCol, idCol, idx)
-    val deltaV = lshNormalizedDelta(delta, vecCol, idCol)
-    lshPairsFromAdmitted(banded, deltaV, threshold, idx)
-  }
+  ): DataFrame =
+    IndexFold.probeOnly(lshFamily(delta, vecCol, idCol, threshold, idx))
 
   /** Probe-then-append in ONE delta pass — the vector twin of
     * [[graft.operators.Dedup.minHashNearDupsIncrementalFold]]: emit
     * near-dup pairs against the index as it stood, then fold the delta
-    * in. Gated identical to [[lshNearDupsIncremental]] followed by
-    * [[appendToLshIndex]], but the hyperplane banding, the admission
-    * scan over the corpus index, and the vector normalization each run
-    * ONCE instead of twice.
-    *
-    * Replay-safe through the one fold body
-    * ([[graft.operators.IndexFold]], contract in
-    * [[graft.operators.ReplaySafe]]). Ledger: the vector table (`_vid`,
-    * one row per doc, the emission ledger) and the band table (`_id`,
-    * row key `_tbl`, healed per (`_id`, `_tbl`) row). Committed proof:
-    * every delta id in the vector table with all `idx.nTables` band rows.
+    * in. One family, three ways: see [[graft.operators.ReplaySafe]]
+    * ("One fold body").
     */
   def lshNearDupsIncrementalFold(
       delta: DataFrame,
@@ -1380,52 +1334,41 @@ object Similarity {
       threshold: Double,
       idx: LshIndex,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
+  ): DataFrame =
+    IndexFold.run(lshFamily(delta, vecCol, idCol, threshold, idx), sink)
+
+  /** The vector-LSH index family ([[graft.operators.IndexFold]]).
+    * Signatures: the delta's hyperplane banding and its normalized
+    * vectors. Ledger: the vector table (`_vid`, one row per doc, the
+    * emission ledger) and the band table (`_id`, row key `_tbl`, healed
+    * per (`_id`, `_tbl`) row). Committed proof: every delta id in the
+    * vector table with all `idx.nTables` band rows.
+    */
+  private[graft] def lshFamily(
+      delta: DataFrame,
+      vecCol: String,
+      idCol: String,
+      threshold: Double,
+      idx: LshIndex
+  ): IndexFold.Family = {
     val spark = delta.sparkSession
-    IndexFold.run(delta, idCol, sink, IndexFold.Pairs, proven = true,
-      Seq(ReplaySafe.LedgerTable(spark.table(idx.vecTable), "_vid"),
+    IndexFold.Family(delta, idCol, IndexFold.Pairs, proven = true,
+      () => Seq(ReplaySafe.LedgerTable(spark.table(idx.vecTable), "_vid"),
         ReplaySafe.LedgerTable(spark.table(idx.bandTable), "_id", Some("_tbl" -> idx.nTables))),
-      () => lshBandedRawChk(delta, vecCol, idCol, idx),
+      () => lshBanded(
+        delta, vecCol, idCol, idx.nPlanes, idx.dim, idx.seed, idx.nTables, spread = false)
+        .localCheckpoint(true),
       () => lshNormalizedDelta(delta, vecCol, idCol)) { case (Seq(bandedRaw, deltaV), step) =>
       val banded = step.pin(Dedup.admittedAgainstIndexKeyed(
         bandedRaw, idx.bandTable, idx.maxBucket, Seq("_tbl", "_sig"), step.excl))
-      // sidesDisjoint: `excl` strips every delta id from the corpus side,
-      // and a first attempt's ledger proved none is stored
-      IndexFold.Probe(
-        lshPairsFromAdmitted(banded, deltaV, threshold, idx, step.excl, sidesDisjoint = true, step.pin),
+      new IndexFold.Probe(
+        lshPairsFromAdmitted(banded, deltaV, threshold, idx, step.excl, step.sidesDisjoint, step.pin),
         () => step.appendHealed(banded, idx.bandTable, idx.buckets, Seq("_tbl", "_sig"),
           Seq("_id", "_tbl"), "_id", 1),
         () => Dedup.writeBucketedTable(step.fresh(deltaV, "_vid"), idx.vecTable, idx.buckets,
           Seq("_vid"), org.apache.spark.sql.SaveMode.Append))
     }
   }
-
-  private def lshAdmittedBands(
-      delta: DataFrame,
-      vecCol: String,
-      idCol: String,
-      idx: LshIndex
-  ): DataFrame = {
-    val bandedRaw = lshBandedRawChk(delta, vecCol, idCol, idx)
-    val banded = Dedup.admittedAgainstIndexKeyed(
-      bandedRaw, idx.bandTable, idx.maxBucket, Seq("_tbl", "_sig"))
-      .localCheckpoint(true)
-    graft.CacheUtil.release(bandedRaw)
-    banded
-  }
-
-  /** The delta's banded rows, checkpointed — the projection compute,
-    * shared by [[lshAdmittedBands]] and the fold's overlapped start. */
-  private def lshBandedRawChk(
-      delta: DataFrame,
-      vecCol: String,
-      idCol: String,
-      idx: LshIndex
-  ): DataFrame =
-    lshBanded(
-      delta, vecCol, idCol, idx.nPlanes, idx.dim, idx.seed, idx.nTables,
-      spread = false)
-      .localCheckpoint(true)
 
   private def lshNormalizedDelta(
       delta: DataFrame,
@@ -1441,9 +1384,9 @@ object Similarity {
       deltaV: DataFrame,
       threshold: Double,
       idx: LshIndex,
-      excludeIds: Option[DataFrame] = None,
-      sidesDisjoint: Boolean = false,
-      pin: DataFrame => DataFrame = _.localCheckpoint(true)
+      excludeIds: Option[DataFrame],
+      sidesDisjoint: Boolean,
+      pin: DataFrame => DataFrame
   ): DataFrame = {
     val spark = banded.sparkSession
     val within = lshCandidatesFromBanded(banded, idx.nTables, idx.maxBucket, pin)
@@ -1465,12 +1408,12 @@ object Similarity {
     val cands = cross.unionByName(within)
     val corpusV = excludeIds.fold(spark.table(idx.vecTable))(
       ReplaySafe.excludeIds(spark.table(idx.vecTable), "_vid", _))
-    // sidesDisjoint (r19, fold path only): when no id can be in BOTH
+    // sidesDisjoint (r19, [[IndexFold.Step]]): when no id can be in BOTH
     // vector sources, each endpoint resolves against the UNION in one
     // left join — two joins and two broadcast builds instead of four,
     // same multiplicity, the same stored-normalized floats feeding the
-    // same IEEE dot in the same (a, b) order. Probe-only entry points
-    // keep the coalesce shape (a re-probed doc may be in both sources).
+    // same IEEE dot in the same (a, b) order. A ledger-free probe keeps
+    // the coalesce shape (a re-probed doc may be in both sources).
     val verified =
       if (sidesDisjoint) {
         val allV = corpusV.unionByName(deltaV)

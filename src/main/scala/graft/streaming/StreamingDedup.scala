@@ -126,14 +126,21 @@ object StreamingDedup {
   ): Dataset[StreamPair] = {
     import spark.implicits._
     val keys = Dedup.SimHashKeys.pigeonhole(1, maxHamming)
-    val cap = keys.pairCap(maxBucket)
+    val transition =
+      updateBucket(maxHamming, keys.pairCap(maxBucket), keys.widths.toArray, keys.offsets.toArray) _
     bucketEvents(keys, docs, textCol, idCol)
       .as[BucketEvent]
       .groupByKey(e => (e.chunk, e.value))
       .flatMapGroupsWithState(
         OutputMode.Append,
         GroupStateTimeout.NoTimeout
-      )(updateBucket(maxHamming, cap, keys.widths.toArray, keys.offsets.toArray))
+      ) { (key, events: Iterator[BucketEvent], state: GroupState[BucketState]) =>
+        val st = state.getOption.getOrElse(BucketState(Array.empty, Array.empty))
+        val (ids, Array(hashes), out) = transition(key._1,
+          events.map(e => (e.doc_id, Array(e.simhash))), st.ids, Array(st.hashes))
+        state.update(BucketState(ids, hashes))
+        out
+      }
   }
 
   /** Wide-radius streaming near-dups on the 128-bit fingerprint — the
@@ -146,7 +153,8 @@ object StreamingDedup {
     * same effective radius (calibrate on the doubled Hamming scale:
     * 64-bit h=10 ≈ h=20 here), spreading state across 2^11-2^12 values
     * per chunk instead. Emission, cap, and replay semantics are
-    * identical to [[simHashNearDupStream]] (see [[updateBucket]]).
+    * identical to [[simHashNearDupStream]]: one state transition
+    * ([[updateBucket]]) serves both fingerprint widths.
     */
   def simHashNearDup128Stream(
       spark: SparkSession,
@@ -158,14 +166,21 @@ object StreamingDedup {
   ): Dataset[StreamPair] = {
     import spark.implicits._
     val keys = Dedup.SimHashKeys.pigeonhole(2, maxHamming)
-    val cap = keys.pairCap(maxBucket)
+    val transition =
+      updateBucket(maxHamming, keys.pairCap(maxBucket), keys.widths.toArray, keys.offsets.toArray) _
     bucketEvents(keys, docs, textCol, idCol)
       .as[Bucket128Event]
       .groupByKey(e => (e.chunk, e.value))
       .flatMapGroupsWithState(
         OutputMode.Append,
         GroupStateTimeout.NoTimeout
-      )(updateBucket128(maxHamming, cap, keys.widths.toArray, keys.offsets.toArray))
+      ) { (key, events: Iterator[Bucket128Event], state: GroupState[Bucket128State]) =>
+        val st = state.getOption.getOrElse(Bucket128State(Array.empty, Array.empty, Array.empty))
+        val (ids, Array(h0, h1), out) = transition(key._1,
+          events.map(e => (e.doc_id, Array(e.sh0, e.sh1))), st.ids, Array(st.h0, st.h1))
+        state.update(Bucket128State(ids, h0, h1))
+        out
+      }
   }
 
   /** `(chunk, value, doc_id, <fingerprint words>)` bucket events, keyed
@@ -331,10 +346,13 @@ object StreamingDedup {
     out.result().iterator
   }
 
-  /** Per-bucket state transition: verify each arriving member against the
-    * retained membership, emit verified pairs whose lowest matching chunk
-    * is THIS bucket's chunk, then fold the arrival into the capped
-    * membership (keep the `maxBucket` lowest ids).
+  /** Per-bucket state transition of both SimHash streams, over a
+    * fingerprint of one or more 64-bit words (`members(w)(i)` is word `w`
+    * of member `i`; chunks may straddle a word boundary): verify each
+    * arriving member against the retained membership, emit verified
+    * pairs whose lowest matching chunk is THIS bucket's chunk, then fold
+    * the arrival into the capped membership (keep the `maxBucket` lowest
+    * ids). Returns the new ids, the new members and the pairs.
     *
     * Under an ACTIVE cap: an arrival past the cap emits nothing (it
     * leaves no trace in state, so a redelivery of it could not be
@@ -354,29 +372,27 @@ object StreamingDedup {
       widths: Array[Int],
       offsets: Array[Int]
   )(
-      key: (Int, Long),
-      events: Iterator[BucketEvent],
-      state: GroupState[BucketState]
-  ): Iterator[StreamPair] = {
-    val chunk = key._1
-    def lowestMatchingChunkIs(c: Int, ha: Long, hb: Long): Boolean = {
-      var i = 0
-      while (i < c) {
-        val va = (ha >>> offsets(i)) & Dedup.chunkMask(widths(i))
-        val vb = (hb >>> offsets(i)) & Dedup.chunkMask(widths(i))
-        if (va == vb) return false
-        i += 1
-      }
-      true
+      chunk: Int,
+      events: Iterator[(Long, Array[Long])],
+      stateIds: Array[Long],
+      stateMembers: Array[Array[Long]]
+  ): (Array[Long], Array[Array[Long]], Iterator[StreamPair]) = {
+    val nWords = stateMembers.length
+    def chunkVal(c: Int, word: Int => Long): Long = {
+      val k = offsets(c) >>> 6
+      val b = offsets(c) & 63
+      val lo = word(k) >>> b
+      (if (b + widths(c) <= 64) lo else lo | (word(k + 1) << (64 - b))) & Dedup.chunkMask(widths(c))
     }
-    val st = state.getOption.getOrElse(BucketState(Array.empty, Array.empty))
+    def lowestMatchingChunkIs(c: Int, a: Int => Long, b: Int => Long): Boolean =
+      (0 until c).forall(i => chunkVal(i, a) != chunkVal(i, b))
     // sort arrivals by id: emission and cap eviction are then independent
     // of arrival order within the batch (batch-parity determinism)
-    val arrivals = events.toArray.sortBy(_.doc_id)
+    val arrivals = events.toArray.sortBy(_._1)
     val out = Array.newBuilder[StreamPair]
-    var ids = st.ids
-    var hashes = st.hashes
-    arrivals.foreach { e =>
+    var ids = stateIds
+    var members = stateMembers
+    arrivals.foreach { case (id, fp) =>
       // emit ONLY for arrivals that enter the capped membership: a
       // replayed id is already represented (re-verifying would emit its
       // pairs twice — at-least-once sources redeliver), and an arrival
@@ -384,115 +400,37 @@ object StreamingDedup {
       // could not be recognized either — emitting for it would break
       // exactly-once. This is also precisely the batch cap semantics:
       // pairs exist only among capped members.
-      val p = java.util.Arrays.binarySearch(ids, e.doc_id)
+      val p = java.util.Arrays.binarySearch(ids, id)
       val pos = if (p >= 0) -1 else -(p + 1)
       if (pos >= 0 && pos < maxBucket) {
         var i = 0
         while (i < ids.length) {
-          val ham = java.lang.Long.bitCount(hashes(i) ^ e.simhash)
-          if (ham <= maxHamming && lowestMatchingChunkIs(chunk, hashes(i), e.simhash)) {
-            val (a, b) =
-              if (ids(i) < e.doc_id) (ids(i), e.doc_id) else (e.doc_id, ids(i))
+          var ham = 0
+          var w = 0
+          while (w < nWords) {
+            ham += java.lang.Long.bitCount(members(w)(i) ^ fp(w))
+            w += 1
+          }
+          val m = i
+          if (ham <= maxHamming && lowestMatchingChunkIs(chunk, members(_)(m), fp(_))) {
+            val (a, b) = if (ids(i) < id) (ids(i), id) else (id, ids(i))
             out += StreamPair(a, b, ham)
           }
           i += 1
         }
-      }
-      // fold into the capped membership: keep the maxBucket lowest ids
-      if (pos >= 0 && pos < maxBucket) {
+        // fold into the capped membership: keep the maxBucket lowest ids
         val n = math.min(ids.length + 1, maxBucket)
-        val newIds = new Array[Long](n)
-        val newHashes = new Array[Long](n)
-        System.arraycopy(ids, 0, newIds, 0, pos)
-        System.arraycopy(hashes, 0, newHashes, 0, pos)
-        newIds(pos) = e.doc_id
-        newHashes(pos) = e.simhash
-        val tail = n - pos - 1
-        System.arraycopy(ids, pos, newIds, pos + 1, tail)
-        System.arraycopy(hashes, pos, newHashes, pos + 1, tail)
-        ids = newIds
-        hashes = newHashes
-      }
-    }
-    state.update(BucketState(ids, hashes))
-    out.result().iterator
-  }
-
-  /** Per-bucket state transition for the 128-bit stream — identical
-    * semantics to [[updateBucket]] (entered-the-membership emission,
-    * lowest-matching-chunk exactly-once, capped lowest ids), with the
-    * chunk values and Hamming distance computed over both words; chunks
-    * may straddle the word boundary.
-    */
-  private[streaming] def updateBucket128(
-      maxHamming: Int,
-      maxBucket: Int,
-      widths: Array[Int],
-      offsets: Array[Int]
-  )(
-      key: (Int, Long),
-      events: Iterator[Bucket128Event],
-      state: GroupState[Bucket128State]
-  ): Iterator[StreamPair] = {
-    val chunk = key._1
-    def chunkVal(c: Int, w0: Long, w1: Long): Long = {
-      val off = offsets(c)
-      val w = widths(c)
-      val mask = Dedup.chunkMask(w)
-      if (off + w <= 64) (w0 >>> off) & mask
-      else if (off >= 64) (w1 >>> (off - 64)) & mask
-      else ((w0 >>> off) | (w1 << (64 - off))) & mask
-    }
-    def lowestMatchingChunkIs(c: Int, a0: Long, a1: Long, b0: Long, b1: Long): Boolean = {
-      var i = 0
-      while (i < c) {
-        if (chunkVal(i, a0, a1) == chunkVal(i, b0, b1)) return false
-        i += 1
-      }
-      true
-    }
-    val st = state.getOption.getOrElse(Bucket128State(Array.empty, Array.empty, Array.empty))
-    val arrivals = events.toArray.sortBy(_.doc_id)
-    val out = Array.newBuilder[StreamPair]
-    var ids = st.ids
-    var h0 = st.h0
-    var h1 = st.h1
-    arrivals.foreach { e =>
-      val p = java.util.Arrays.binarySearch(ids, e.doc_id)
-      val pos = if (p >= 0) -1 else -(p + 1)
-      if (pos >= 0 && pos < maxBucket) {
-        var i = 0
-        while (i < ids.length) {
-          val ham = java.lang.Long.bitCount(h0(i) ^ e.sh0) +
-            java.lang.Long.bitCount(h1(i) ^ e.sh1)
-          if (ham <= maxHamming &&
-            lowestMatchingChunkIs(chunk, h0(i), h1(i), e.sh0, e.sh1)) {
-            val (a, b) =
-              if (ids(i) < e.doc_id) (ids(i), e.doc_id) else (e.doc_id, ids(i))
-            out += StreamPair(a, b, ham)
-          }
-          i += 1
+        def inserted(old: Array[Long], v: Long): Array[Long] = {
+          val a = new Array[Long](n)
+          System.arraycopy(old, 0, a, 0, pos)
+          a(pos) = v
+          System.arraycopy(old, pos, a, pos + 1, n - pos - 1)
+          a
         }
-        val n = math.min(ids.length + 1, maxBucket)
-        val newIds = new Array[Long](n)
-        val newH0 = new Array[Long](n)
-        val newH1 = new Array[Long](n)
-        System.arraycopy(ids, 0, newIds, 0, pos)
-        System.arraycopy(h0, 0, newH0, 0, pos)
-        System.arraycopy(h1, 0, newH1, 0, pos)
-        newIds(pos) = e.doc_id
-        newH0(pos) = e.sh0
-        newH1(pos) = e.sh1
-        val tail = n - pos - 1
-        System.arraycopy(ids, pos, newIds, pos + 1, tail)
-        System.arraycopy(h0, pos, newH0, pos + 1, tail)
-        System.arraycopy(h1, pos, newH1, pos + 1, tail)
-        ids = newIds
-        h0 = newH0
-        h1 = newH1
+        members = Array.tabulate(nWords)(w => inserted(members(w), fp(w)))
+        ids = inserted(ids, id)
       }
     }
-    state.update(Bucket128State(ids, h0, h1))
-    out.result().iterator
+    (ids, members, out.result().iterator)
   }
 }

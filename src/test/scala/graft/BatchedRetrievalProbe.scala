@@ -53,7 +53,7 @@ object BatchedRetrievalProbe {
         .filter(col("vec_id") < 100000000L && pmod(col("vec_id"), lit(29)) === 0)
         .localCheckpoint(true)
       val nq = queries.count()
-      val path = "/root/repo/target/tmp/batched_probe_idx"
+      val path = s"${SparkTestSession.tmpRoot}/batched_probe_idx"
       val (_, build) = timed {
         Quantization.ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
       }
@@ -127,7 +127,7 @@ object BatchedRetrievalProbe {
         val embL = spark.read.parquet(s"$dir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"), col("label"))
           .localCheckpoint(true)
-        val pathF = "/root/repo/target/tmp/batched_probe_idx_f"
+        val pathF = s"${SparkTestSession.tmpRoot}/batched_probe_idx_f"
         Quantization.ivfSq8Build(embL, "embedding", "vec_id", pathF,
           nCentroids = 16, attrCols = Seq("label"))
         val idxF = Quantization.ivfSq8Read(spark, pathF, "vec_id")

@@ -245,7 +245,7 @@ class InfraSpec extends AnyFunSuite {
   }
 
   test("hive-partitioned write → read prunes partitions (scale: partition pruning)") {
-    val path = "/root/repo/target/tmp/pruned"
+    val path = s"${SparkTestSession.tmpRoot}/pruned"
     Tables.orders(spark, SparkTestSession.sfDir)
       .withColumn("status", $"o_orderstatus")
       .write.mode("overwrite").partitionBy("status").parquet(path)
@@ -259,7 +259,7 @@ class InfraSpec extends AnyFunSuite {
   test("CSV and JSON round-trips preserve data (B20)") {
     val df = Seq((1, "a", 1.5), (2, "b", -2.25)).toDF("k", "s", "v")
     for (fmt <- Seq("csv", "json", "parquet")) {
-      val back = Sources.roundTrip(df, s"/root/repo/target/tmp/rt_$fmt", fmt)
+      val back = Sources.roundTrip(df, s"${SparkTestSession.tmpRoot}/rt_$fmt", fmt)
       val got = back
         .collect()
         .map(r => (r.get(back.columns.indexOf("k")).toString.toInt,
@@ -301,7 +301,7 @@ class InfraSpec extends AnyFunSuite {
   test("writeCompacted bounds the output file count by target size (small-files remedy)") {
     val li = Tables.lineitem(spark, SparkTestSession.sfDir)
       .repartition(64) // simulate a fragmented upstream stage
-    val path = "/root/repo/target/tmp/compacted"
+    val path = s"${SparkTestSession.tmpRoot}/compacted"
     graft.sources.Sources.writeCompacted(li, path, targetFileMB = 16)
     val parts = new java.io.File(path)
       .listFiles()

@@ -319,17 +319,20 @@ class OperatorsSpec extends AnyFunSuite {
       // forbid broadcast so the claim is tested on the sort-merge path a
       // corpus-scale index would take (B22 test pattern)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cands = Dedup.minHashCandidatesIncremental(delta, "text", "doc_id", idx)
-      val plan = cands.queryExecution.executedPlan.toString
-      assert(
-        plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}"
-      )
-      assert(
-        !plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}"
-      )
-      assert(cands.count() > 0)
+      // the public probe is materialized — gate the family's lazy
+      // emission plan (threshold 0: every candidate pair is emitted)
+      IndexFold.withProbePlan(Dedup.minHashFamily(delta, "text", "doc_id", 0.0, idx)) { cands =>
+        val plan = cands.queryExecution.executedPlan.toString
+        assert(
+          plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}"
+        )
+        assert(
+          !plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}"
+        )
+        assert(cands.count() > 0)
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS inc_plan_bands")
@@ -836,15 +839,14 @@ class OperatorsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       // the public wrapper eagerly checkpoints (hiding the join), so
       // assert on the lazy plan it materializes
-      val pairs =
-        Dedup.simHashPairsIncrementalLazy(delta, "text", "doc_id", idx)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      assert(pairs.count() > 0)
-      graft.CacheUtil.release(pairs)
+      IndexFold.withProbePlan(Dedup.simHashFamily(delta, "text", "doc_id", idx)) { pairs =>
+        val plan = pairs.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        assert(pairs.count() > 0)
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS sinc_plan_chunks")
@@ -927,17 +929,16 @@ class OperatorsSpec extends AnyFunSuite {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pairs =
-        Dedup.simHashPairsIncrementalLazy(delta, "text", "doc_id", idx)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      // non-vacuous: a key-layout mismatch producing zero rows would let
-      // the Bucketed assertions above pass on an empty join
-      assert(pairs.count() > 0, "combo probe produced no pairs — plan gate is vacuous")
-      graft.CacheUtil.release(pairs)
+      IndexFold.withProbePlan(Dedup.simHashFamily(delta, "text", "doc_id", idx)) { pairs =>
+        val plan = pairs.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        // non-vacuous: a key-layout mismatch producing zero rows would let
+        // the Bucketed assertions above pass on an empty join
+        assert(pairs.count() > 0, "combo probe produced no pairs — plan gate is vacuous")
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS scinc_plan_combo")
@@ -1003,14 +1004,14 @@ class OperatorsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val idx = Dedup.writeSimHash128Index(
         corpus, "text", "doc_id", "s128inc_plan", maxHamming = 20, buckets = 8)
-      val pairs = Dedup.simHashPairsIncrementalLazy(delta, "text", "doc_id", idx)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      assert(pairs.count() > 0, "128-bit probe produced no pairs — plan gate is vacuous")
-      graft.CacheUtil.release(pairs)
+      IndexFold.withProbePlan(Dedup.simHashFamily(delta, "text", "doc_id", idx)) { pairs =>
+        val plan = pairs.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        assert(pairs.count() > 0, "128-bit probe produced no pairs — plan gate is vacuous")
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS s128inc_plan_chunks128")
@@ -1281,14 +1282,14 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val idx = Passages.writePassageIndex(corpus, "text", "doc_id", "pinc_plan", windowTokens = 8)
-      val out = Passages.passageDupFractionIncrementalLazy(delta, "text", "doc_id", idx)
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      assert(out.count() > 0)
-      graft.CacheUtil.release(out)
+      IndexFold.withProbePlan(Passages.passageFamily(delta, "text", "doc_id", idx)) { out =>
+        val plan = out.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        assert(out.count() > 0)
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS pinc_plan_fps")
@@ -2027,11 +2028,8 @@ class OperatorsSpec extends AnyFunSuite {
         () => Dedup.compactMinHashIndex(spark, mhIdx),
         () => {
           // the public probe is materialized — gate the LAZY plan
-          val lazyOut = Dedup.minHashCandidatesIncremental(
-            echo(710000L), "text", "doc_id", mhIdx)
-          val p = lazyOut.queryExecution.executedPlan.toString
-          graft.CacheUtil.release(lazyOut)
-          p
+          IndexFold.withProbePlan(Dedup.minHashFamily(echo(710000L), "text", "doc_id", 0.0, mhIdx))(
+            _.queryExecution.executedPlan.toString)
         }
       )
     } finally Seq("cmp_mh_bands", "cmp_mh_shingles")
@@ -2060,11 +2058,8 @@ class OperatorsSpec extends AnyFunSuite {
         () => lshProbe(),
         () => Similarity.compactLshIndex(spark, lshIdx),
         () => {
-          val lazyOut = Similarity.lshPairsIncrementalLazy(
-            vEcho(710000L), "embedding", "vec_id", 0.9, lshIdx)
-          val p = lazyOut.queryExecution.executedPlan.toString
-          graft.CacheUtil.release(lazyOut)
-          p
+          IndexFold.withProbePlan(Similarity.lshFamily(vEcho(710000L), "embedding", "vec_id", 0.9, lshIdx))(
+            _.queryExecution.executedPlan.toString)
         }
       )
     } finally Seq("cmp_lsh_bands", "cmp_lsh_vecs")
@@ -2090,11 +2085,8 @@ class OperatorsSpec extends AnyFunSuite {
         () => cbProbe(),
         () => Dedup.compactSimHashIndex(spark, cbIdx),
         () => {
-          val lazyOut = Dedup.simHashPairsIncrementalLazy(
-            echo(710000L), "text", "doc_id", cbIdx)
-          val p = lazyOut.queryExecution.executedPlan.toString
-          graft.CacheUtil.release(lazyOut)
-          p
+          IndexFold.withProbePlan(Dedup.simHashFamily(echo(710000L), "text", "doc_id", cbIdx))(
+            _.queryExecution.executedPlan.toString)
         }
       )
     } finally spark.sql("DROP TABLE IF EXISTS cmp_cb_combo")
@@ -2119,11 +2111,8 @@ class OperatorsSpec extends AnyFunSuite {
         () => pProbe(),
         () => Passages.compactPassageIndex(spark, pIdx),
         () => {
-          val lazyOut = Passages.passageDupFractionIncrementalLazy(
-            echo(710000L), "text", "doc_id", pIdx)
-          val p = lazyOut.queryExecution.executedPlan.toString
-          graft.CacheUtil.release(lazyOut)
-          p
+          IndexFold.withProbePlan(Passages.passageFamily(echo(710000L), "text", "doc_id", pIdx))(
+            _.queryExecution.executedPlan.toString)
         }
       )
     } finally spark.sql("DROP TABLE IF EXISTS cmp_pass_fps")
@@ -2478,6 +2467,64 @@ class OperatorsSpec extends AnyFunSuite {
     assert(s3.exists { case (a, b, _) => b >= 2000001L && a >= 1000001L && a < 2000001L },
       "third probe saw no appended rows — gate vacuous")
     chunks.foreach(graft.CacheUtil.release)
+  }
+
+  test("probe-only and append-only entry points run a bounded number of Spark jobs (minhash, simhash, vector-LSH, semDedup, passages)") {
+    // One count per call on a fixed fixture: the sf0.001 documents and
+    // embeddings, split %3 into corpus and delta. Each bound is the
+    // measured count; a rise means a step the family's fold shares with
+    // these calls now runs twice, or a frame is materialized that the
+    // call does not need.
+    val docs = Tables.documents(spark, SparkTestSession.sfDir).select($"doc_id", $"text")
+    val corpus = docs.filter($"doc_id" % 3 =!= 0)
+    val delta = docs.filter($"doc_id" % 3 === 0).localCheckpoint(true)
+    val emb = Tables.embeddings(spark, SparkTestSession.sfDir).select($"vec_id", $"embedding")
+    val vCorpus = emb.filter($"vec_id" % 3 =!= 0)
+    val vDelta = emb.filter($"vec_id" % 3 === 0).localCheckpoint(true)
+    def probeJobs(call: => org.apache.spark.sql.DataFrame): Int = {
+      val (out, n) = JobCount.during(spark)(call)
+      assert(out.count() > 0, "probe emitted nothing — the job count would gate an empty plan")
+      graft.CacheUtil.release(out)
+      n
+    }
+    def appendJobs(call: => Unit): Int = JobCount.during(spark)(call)._2
+    val measured = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val mh = Dedup.writeMinHashIndex(corpus, "text", "doc_id", "jg_mh", buckets = 4)
+    val sh = Dedup.writeSimHashIndex(corpus, "text", "doc_id", "jg_sh", maxHamming = 10, buckets = 4)
+    val lsh = Similarity.writeLshIndex(
+      vCorpus, "embedding", "vec_id", "jg_lsh", nPlanes = 2, nTables = 8, buckets = 4)
+    val ps = Passages.writePassageIndex(corpus, "text", "doc_id", "jg_ps", windowTokens = 8, buckets = 4)
+    val ivf = Similarity.ivfBuild(vCorpus, "embedding", "vec_id", nCentroids = 4)
+    try {
+      measured("minhash probe") = probeJobs(
+        Dedup.minHashNearDupsIncremental(delta, "text", "doc_id", 0.0, mh))
+      measured("minhash append") = appendJobs(Dedup.appendToMinHashIndex(delta, "text", "doc_id", mh))
+      measured("simhash probe") = probeJobs(Dedup.simHashNearDupsIncremental(delta, "text", "doc_id", sh))
+      measured("simhash append") = appendJobs(Dedup.appendToSimHashIndex(delta, "text", "doc_id", sh))
+      measured("vector-lsh probe") = probeJobs(
+        Similarity.lshNearDupsIncremental(vDelta, "embedding", "vec_id", 0.3, lsh))
+      measured("vector-lsh append") = appendJobs(
+        Similarity.appendToLshIndex(vDelta, "embedding", "vec_id", lsh))
+      measured("semdedup probe") = probeJobs(
+        Similarity.semDedupPairsIncremental(vDelta, ivf, threshold = 0.3))
+      measured("passages probe") = probeJobs(
+        Passages.passageDupFractionIncremental(delta, "text", "doc_id", ps))
+      info(measured.map { case (k, v) => s"$k=$v" }.mkString("jobs: ", ", ", ""))
+      // an append-only call checkpoints its signatures as the fold does
+      // (one job each), and the semDedup probe its centroid assignment
+      val bounds = Map(
+        "minhash probe" -> 13, "minhash append" -> 10,
+        "simhash probe" -> 10, "simhash append" -> 7,
+        "vector-lsh probe" -> 13, "vector-lsh append" -> 10,
+        "semdedup probe" -> 10, "passages probe" -> 10)
+      measured.foreach { case (k, n) =>
+        assert(n <= bounds(k), s"$k ran $n Spark jobs, bound ${bounds(k)}: $measured")
+      }
+    } finally {
+      Seq(mh.bandTable, mh.shingleTable, sh.chunkTable, lsh.bandTable, lsh.vecTable, ps.fpTable)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Seq(delta, vDelta, ivf.assigned).foreach(graft.CacheUtil.release)
+    }
   }
 
   test("ivfCompact / ivfPqCompact: probe parity, file shrink, layout preserved, crash recovery") {
@@ -3362,7 +3409,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("HLL sketches survive a parquet round-trip (the persist-per-day contract)") {
     val docs = Tables.documents(spark, SparkTestSession.sfDir)
       .withColumn("_day", $"doc_id" % 3)
-    val path = "/root/repo/target/tmp/sketches_rt"
+    val path = s"${SparkTestSession.tmpRoot}/sketches_rt"
     operators.Sketches.distinctSketch(docs, Seq("lang", "_day"), "text")
       .write.mode("overwrite").parquet(path)
     val merged = operators.Sketches
@@ -3881,7 +3928,7 @@ class OperatorsSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, SparkTestSession.sfDir)
     val corpus = emb.filter($"vec_id" % 3 =!= 0)
     val delta = emb.filter($"vec_id" % 3 === 0)
-    val path = "/root/repo/target/tmp/ivfsq8_gate"
+    val path = s"${SparkTestSession.tmpRoot}/ivfsq8_gate"
     val idx = Quantization.ivfSq8Build(
       corpus, "embedding", "vec_id", path, nCentroids = 8)
     // frozen params are exactly a plain SQ8 train on the build corpus
@@ -3997,7 +4044,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("ivfSq8SearchMany: batched == N single probes; one broadcast join + WindowGroupLimit + DPP; jobs don't scale with queries (s19/s20 gate)") {
     val emb = Tables.embeddings(spark, SparkTestSession.sfDir)
       .select($"vec_id", $"embedding")
-    val path = "/root/repo/target/tmp/ivfsq8_many_gate"
+    val path = s"${SparkTestSession.tmpRoot}/ivfsq8_many_gate"
     val idx = Quantization.ivfSq8Build(
       emb, "embedding", "vec_id", path, nCentroids = 8)
     val qids = Seq(0L, 3L, 7L, 11L, 200L)
@@ -4146,7 +4193,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("ivfSq8SearchMany r19: sliced == single-shot past the broadcast bound; filtered search is scan-pushed and exact; dup ids fail; appends carry attrs") {
     val emb = Tables.embeddings(spark, SparkTestSession.sfDir)
       .select($"vec_id", $"embedding", $"label")
-    val path = "/root/repo/target/tmp/ivfsq8_many_r19_gate"
+    val path = s"${SparkTestSession.tmpRoot}/ivfsq8_many_r19_gate"
     // ATTRIBUTE-CARRYING index: label rides into the codes table so
     // filtered retrieval needs no corpus-sized metadata join
     val idx = Quantization.ivfSq8Build(
@@ -4428,7 +4475,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(sq.length === 7 && !sq.contains(99L), sq.toSeq)
     // IVF-SQ8: the write path drops the NULL row, so the pruned probe
     // never sees (or ranks) it
-    val np = "/root/repo/target/tmp/ivfsq8_nullgate"
+    val np = s"${SparkTestSession.tmpRoot}/ivfsq8_nullgate"
     val nidx = Quantization.ivfSq8Build(vecs, "embedding", "vec_id", np, nCentroids = 2)
     val iv = Quantization.ivfSq8Search(spark, nidx, qv, k = 9, nProbe = 2)
       .collect().map(_.getLong(0))
@@ -4496,15 +4543,14 @@ class OperatorsSpec extends AnyFunSuite {
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val pairs = Similarity.lshPairsIncrementalLazy(
-        delta, "embedding", "vec_id", 0.3, idx)
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"index scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      assert(pairs.count() > 0)
-      graft.CacheUtil.release(pairs)
+      IndexFold.withProbePlan(Similarity.lshFamily(delta, "embedding", "vec_id", 0.3, idx)) { pairs =>
+        val plan = pairs.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"index scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        assert(pairs.count() > 0)
+      }
       // append: fold the delta in; the next (tiny) delta must pair
       // against a vector that only the append made visible
       Similarity.appendToLshIndex(delta, "embedding", "vec_id", idx)
@@ -4523,7 +4569,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("written IVF index probes as a partition-pruned scan, no cache/count (s03 scale shape)") {
     val emb = Tables.embeddings(spark, SparkTestSession.sfDir)
-    val path = "/root/repo/target/tmp/ivf_index"
+    val path = s"${SparkTestSession.tmpRoot}/ivf_index"
     val built = Similarity.ivfBuild(emb, "embedding", "vec_id", nCentroids = 8, refineIters = 1)
     Similarity.ivfWrite(built, path)
     val loaded = Similarity.ivfRead(spark, path, "embedding", "vec_id")
@@ -4669,7 +4715,7 @@ class OperatorsSpec extends AnyFunSuite {
     val idx = Quantization.ivfPqBuild(
       emb, "embedding", "vec_id",
       nCentroids = 8, refineIters = 1, m = 16, k = 32, iters = 1)
-    val path = "/root/repo/target/tmp/ivfpq_index"
+    val path = s"${SparkTestSession.tmpRoot}/ivfpq_index"
     Quantization.ivfPqWrite(idx, path)
     val loaded = Quantization.ivfPqRead(spark, path, "vec_id")
     // round-trip: codebooks and coarse centroids come back bit-identical
@@ -4881,7 +4927,7 @@ class OperatorsSpec extends AnyFunSuite {
     // fixture corpus as one file per doc, read it back via the binaryFile
     // source, and require the media frame to match the in-table stand-in
     val docs = Tables.documents(spark, SparkTestSession.sfDir).limit(50)
-    val dir = "/root/repo/target/tmp/binfiles_rt"
+    val dir = s"${SparkTestSession.tmpRoot}/binfiles_rt"
     Multimodal.writeTextCorpusAsFiles(docs, "doc_id", "text", dir)
     val fromFiles = Multimodal.mediaFromBinaryFiles(spark, dir)
       .select($"doc_id", $"kind", $"payload".cast("string").as("t"))
@@ -4898,7 +4944,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("mediaFromBinaryFiles rejects files without a numeric id prefix") {
-    val dir = "/root/repo/target/tmp/binfiles_bad"
+    val dir = s"${SparkTestSession.tmpRoot}/binfiles_bad"
     val p = java.nio.file.Paths.get(dir)
     org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
     java.nio.file.Files.createDirectories(p)

@@ -12,4 +12,9 @@ object SparkTestSession {
     shufflePartitions = 4
   )
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Scratch root for tests and probes that write fixed dirs: under the
+    * working directory, so runs from two checkouts never share one.
+    */
+  val tmpRoot = s"${sys.props("user.dir")}/target/tmp"
 }

@@ -62,7 +62,7 @@ object Sq8FixedDeltaProbe {
           .collect()
       }
       // ---- IVF-SQ8 pruned index ----
-      val path = "/root/repo/target/tmp/sq8_fdsp_ivf"
+      val path = s"${SparkTestSession.tmpRoot}/sq8_fdsp_ivf"
       val (ivfIdx, ivfBuild) = timed {
         Quantization.ivfSq8Build(emb, "embedding", "vec_id", path, nCentroids = 16)
       }
@@ -143,7 +143,7 @@ object Sq8FixedDeltaProbe {
       // keeps the fold's candidate work CONSTANT across the factors —
       // the claim the pinned-nCentroids column cannot show
       val nc = math.max(4, (n / 500L).toInt)
-      val pathSc = "/root/repo/target/tmp/sq8_fdsp_ivf_sc"
+      val pathSc = s"${SparkTestSession.tmpRoot}/sq8_fdsp_ivf_sc"
       val (_, scBuild) = timed {
         Quantization.ivfSq8Build(emb, "embedding", "vec_id", pathSc,
           nCentroids = nc)

@@ -27,7 +27,7 @@ object StreamPlanProbe {
     def runOnce(label: String, sized: Boolean): Unit = {
       val ev = Tables.events(spark, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val srcDir = s"/root/repo/target/tmp/stplan_src"
+      val srcDir = s"${SparkTestSession.tmpRoot}/stplan_src"
       val schema = streaming.Streams.writeTsOrderedChunks(ev, "ts", srcDir, n = 3)
       val raw = spark.readStream
         .schema(schema)

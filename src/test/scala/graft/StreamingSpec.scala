@@ -740,32 +740,32 @@ class StreamingSpec extends AnyFunSuite {
     // (pairs among final members {1,2,3}). This pins the documented
     // semantics: emitted pairs can involve later-evicted members (no
     // retraction in append mode), but every pair appears exactly once.
-    val mem = MemoryStream[(Long, String)]
-    val pairs = graft.streaming.StreamingDedup.simHashNearDupStream(
-      spark,
-      mem.toDF().toDF("doc_id", "text"),
-      "text",
-      "doc_id",
-      maxHamming = 3,
-      maxBucket = 3
-    )
-    val q = pairs.toDF().writeStream
-      .format("memory")
-      .queryName("ooo_out")
-      .outputMode("append")
-      .start()
-    try {
-      mem.addData(Seq(4L, 5L, 6L).map(i => (i, "boilerplate header repeated")))
-      q.processAllAvailable()
-      mem.addData(Seq(1L, 2L, 3L).map(i => (i, "boilerplate header repeated")))
-      q.processAllAvailable()
-      val got = spark.table("ooo_out")
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(got.length === got.toSet.size, "pair emitted more than once")
-      assert(got.length === 12, s"expected the documented superset of 12, got ${got.sorted.toSeq}")
-      // the batch cap's pairs (among the final lowest ids) are included
-      assert(Set((1L, 2L), (1L, 3L), (2L, 3L)).subsetOf(got.toSet))
-    } finally q.stop()
+    // Both fingerprint widths run the one bucket transition.
+    val streams = Seq[(String, DataFrame => org.apache.spark.sql.Dataset[graft.streaming.StreamPair])](
+      "ooo_out" -> (graft.streaming.StreamingDedup.simHashNearDupStream(
+        spark, _, "text", "doc_id", maxHamming = 3, maxBucket = 3)),
+      "ooo128_out" -> (graft.streaming.StreamingDedup.simHashNearDup128Stream(
+        spark, _, "text", "doc_id", maxHamming = 3, maxBucket = 3)))
+    for ((name, stream) <- streams) {
+      val mem = MemoryStream[(Long, String)]
+      val q = stream(mem.toDF().toDF("doc_id", "text")).toDF().writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .start()
+      try {
+        mem.addData(Seq(4L, 5L, 6L).map(i => (i, "boilerplate header repeated")))
+        q.processAllAvailable()
+        mem.addData(Seq(1L, 2L, 3L).map(i => (i, "boilerplate header repeated")))
+        q.processAllAvailable()
+        val got = spark.table(name)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        assert(got.length === got.toSet.size, s"$name: pair emitted more than once")
+        assert(got.length === 12, s"$name: expected the documented superset of 12, got ${got.sorted.toSeq}")
+        // the batch cap's pairs (among the final lowest ids) are included
+        assert(Set((1L, 2L), (1L, 3L), (2L, 3L)).subsetOf(got.toSet), name)
+      } finally q.stop()
+    }
   }
 
   test("streaming minhash dedup: planted near-dup found across micro-batches, exactly-once, replay-safe (d02 twin)") {
@@ -2055,6 +2055,88 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("probe-only and append-only failure paths pin nothing: an append under a held CompactLock, a probe over a dropped index table (minhash, simhash, vector-LSH, passages)") {
+    import graft.operators.{CompactLock, Dedup, Passages, Similarity}
+    // The probe-only and append-only entry points run a family's
+    // signatures, admission and probe the way its fold does, so they pin
+    // the same checkpoints and must release them on every exit. Two
+    // failure points per family: an append whose first write meets a held
+    // compaction sentinel (passages has no append-only path of its own),
+    // and a probe over an index with one table dropped, which throws
+    // after the delta-side signatures ran. Each must propagate and pin no
+    // persistent RDD.
+    val (base, other) = rpTexts
+    val docs = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+    def docDelta() = Seq((10L, base), (11L, base)).toDF("doc_id", "text")
+    def vecRow(id: Long, x: Float) = (id, Array(x, 1f, 0.5f, -0.25f))
+    val vecs = Seq(vecRow(1L, 1f), vecRow(2L, -8f), vecRow(3L, -7.5f)).toDF("vec_id", "embedding")
+    def vecDelta() = Seq(vecRow(10L, 1f), vecRow(11L, 1f)).toDF("vec_id", "embedding")
+    // one family: its probe-only and append-only calls, the table its
+    // append writes first (locked) and the table its probe reads last
+    // (dropped), and every table it owns
+    final case class Family(
+        name: String,
+        probe: () => DataFrame,
+        append: Option[() => Unit],
+        locked: String,
+        dropped: String,
+        tables: Seq[String])
+    val families: Seq[() => Family] = Seq(
+      () => {
+        val idx = Dedup.writeMinHashIndex(docs, "text", "doc_id", "pf_mh", buckets = 4)
+        Family("minhash", () => Dedup.minHashNearDupsIncremental(docDelta(), "text", "doc_id", 0.4, idx),
+          Some(() => Dedup.appendToMinHashIndex(docDelta(), "text", "doc_id", idx)),
+          idx.bandTable, idx.shingleTable, Seq(idx.bandTable, idx.shingleTable))
+      },
+      () => {
+        val idx = Dedup.writeSimHashIndex(docs, "text", "doc_id", "pf_sh", buckets = 4)
+        Family("simhash", () => Dedup.simHashNearDupsIncremental(docDelta(), "text", "doc_id", idx),
+          Some(() => Dedup.appendToSimHashIndex(docDelta(), "text", "doc_id", idx)),
+          idx.chunkTable, idx.chunkTable, Seq(idx.chunkTable))
+      },
+      () => {
+        val idx = Similarity.writeLshIndex(
+          vecs, "embedding", "vec_id", "pf_lsh", nPlanes = 4, dim = 4, nTables = 2, buckets = 4)
+        Family("vector-lsh",
+          () => Similarity.lshNearDupsIncremental(vecDelta(), "embedding", "vec_id", 0.95, idx),
+          Some(() => Similarity.appendToLshIndex(vecDelta(), "embedding", "vec_id", idx)),
+          idx.bandTable, idx.vecTable, Seq(idx.bandTable, idx.vecTable))
+      },
+      () => {
+        val idx = Passages.writePassageIndex(docs, "text", "doc_id", "pf_ps", windowTokens = 4, buckets = 4)
+        Family("passages",
+          () => Passages.passageDupFractionIncremental(docDelta(), "text", "doc_id", idx),
+          None, idx.fpTable, idx.fpTable, Seq(idx.fpTable))
+      })
+    def pinsNothing(f: Family, what: String)(call: => Unit): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      call
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"${f.name}/$what leaked ${leaked.size} persistent RDDs: $leaked")
+    }
+    for (make <- families) {
+      val f = make()
+      try {
+        val clean = f.probe()
+        assert(clean.count() > 0, s"${f.name}: a clean probe emitted nothing — gate vacuous")
+        graft.CacheUtil.release(clean)
+        f.append.foreach { append =>
+          val lock = CompactLock.forTable(spark, f.locked)
+          val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          CompactLock.acquire(fs, lock)
+          try pinsNothing(f, "append") {
+            val e = intercept[IllegalStateException](append())
+            assert(e.getMessage.contains("compaction"), s"${f.name}/append: wrong error ${e.getMessage}")
+          } finally CompactLock.releaseIfCanonical(fs, lock, canonicalPresent = true)
+        }
+        spark.sql(s"DROP TABLE `${f.dropped}`")
+        pinsNothing(f, "probe") {
+          intercept[org.apache.spark.sql.AnalysisException](f.probe())
+        }
+      } finally f.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
   test("a fold whose ledger read throws releases its overlapped signature checkpoints") {
     import graft.operators.Dedup
     // The MinHash fold reads its ledger on one driver thread while two
@@ -2582,7 +2664,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.operators.Quantization
     val emb = Tables.embeddings(spark, SparkTestSession.sfDir)
       .select($"vec_id", $"embedding")
-    val path = "/root/repo/target/tmp/st17_fold_gate"
+    val path = s"${SparkTestSession.tmpRoot}/st17_fold_gate"
     Quantization.ivfSq8Build(
       emb.filter(pmod($"vec_id", lit(3)) === 0),
       "embedding", "vec_id", path, nCentroids = 8)
