@@ -2770,9 +2770,7 @@ object SparkEntry {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val delta = batch.localCheckpoint(true)
             // fold form: ONE line-fingerprint pass feeds both the probe
-            // and the append (gated == probe-then-append; at sf0.1 the
-            // saved pass ≈ the fold's cleaned-text checkpoint, both
-            // inside box noise — see the fold's cost note)
+            // and the append (gated == probe-then-append)
             val cleaned = operators.Lines
               .dropDuplicatedLinesIncrementalFold(delta, "text", "doc_id", idx)
             collected += cleaned.collect()

@@ -64,7 +64,7 @@ object Dedup {
     * would dedup NULL-text docs against indexed NULLs while md5 mode
     * never does.
     */
-  private def exactFp(textCol: String, hash64: Boolean): Column =
+  private[graft] def exactFp(textCol: String, hash64: Boolean): Column =
     if (hash64) when(col(textCol).isNotNull, xxhash64(col(textCol)))
     else TextFunctions.fingerprintMd5(col(textCol))
 
@@ -126,7 +126,9 @@ object Dedup {
     * Scale shape: delta fingerprints anti-join the `_fp`-bucketed table
     * with zero corpus-side Exchange (plan-asserted); the within-delta
     * keep-min is one hash-aggregate + self-join on the fingerprint —
-    * no window over the corpus, nothing driver-side.
+    * no window over the corpus, nothing driver-side. The exact family's
+    * probe with its append dropped ([[IndexFold.probeOnly]]): the result
+    * is materialized.
     */
   def exactDedupIncremental(
       delta: DataFrame,
@@ -134,38 +136,13 @@ object Dedup {
       idCol: String,
       idx: ExactDedupIndex
   ): DataFrame =
-    exactDedupIncrementalImpl(delta, textCol, idCol, idx, materialize = true)
-
-  /** The un-checkpointed plan behind [[exactDedupIncremental]] —
-    * exposed for plan-shape tests (the public form materializes the
-    * shared `unseen` frame, which hides the anti-join from
-    * `executedPlan`). The lazy form executes the anti-join TWICE; never
-    * use it outside tests.
-    */
-  private[graft] def exactDedupIncrementalLazy(
-      delta: DataFrame,
-      textCol: String,
-      idCol: String,
-      idx: ExactDedupIndex
-  ): DataFrame =
-    exactDedupIncrementalImpl(delta, textCol, idCol, idx, materialize = false)
+    IndexFold.probeOnly(exactFamily(delta, textCol, idCol, idx))
 
   /** Probe-then-append in ONE delta pass — the exact-dedup member of
     * the fold family: dedup the delta against the index as it stood,
-    * then fold the delta's fingerprints in. Gated identical to
-    * [[exactDedupIncremental]] followed by [[appendToExactDedupIndex]],
-    * but the delta text is fingerprinted ONCE (the separate calls scan
-    * and hash it twice).
-    *
-    * REPLAY-SAFE ([[ReplaySafe]]): the append writes only fingerprints
-    * the index does not already hold, and the emission is the anti-join
-    * survivors — so an at-least-once caller replaying a batch whose
-    * append committed appends nothing and emits nothing (the index is
-    * the ledger; fingerprint membership IS the probe semantics here, so
-    * no id bookkeeping is needed). One niche re-emission remains:
-    * NULL-text rows are contractually never duplicates and carry no
-    * fingerprint, so a replayed batch re-emits its NULL-text keepers —
-    * dedup by id at the sink if NULL-text rows matter.
+    * then fold the delta's fingerprints in. The delta text is
+    * fingerprinted ONCE. One family, three ways: see [[ReplaySafe]]
+    * ("One fold body").
     */
   def exactDedupIncrementalFold(
       delta: DataFrame,
@@ -173,89 +150,54 @@ object Dedup {
       idCol: String,
       idx: ExactDedupIndex,
       sink: Option[DataFrame => Unit] = None
-  ): DataFrame = {
-    val spark = delta.sparkSession
-    var withFp: DataFrame = null
-    var unseen: DataFrame = null
-    var out: DataFrame = null
-    try {
-      withFp = delta
-        .withColumn("_fp", exactFp(textCol, idx.hash64))
-        .localCheckpoint(true)
-      // materializes the membership probe BEFORE the append mutates the table
-      unseen = withFp
-        .join(spark.table(idx.fpTable), Seq("_fp"), "left_anti")
-        .localCheckpoint(true)
-      // same NULL-text keeper contract as exactDedupIncrementalImpl
-      val keepers = unseen
-        .groupBy(col("_fp"), when(col("_fp").isNull, col(idCol)).as("_nullkey"))
-        .agg(min(col(idCol)).as(idCol))
-        .select(col(idCol))
-      val outLazy = unseen.drop("_fp").join(keepers, Seq(idCol), "left_semi")
-      // sink BEFORE the ledger append ([[IdempotentSink]]): this family's
-      // replay re-derives only the NULL-text keepers, so emissions not
-      // persisted by the time the append commits would be lost. The
-      // sinkless path keeps its lazy return (no extra checkpoint per
-      // batch); the sink path materializes so the persisted frame and the
-      // returned one are one computation, and releases `unseen` (no
-      // longer in the returned plan's lineage) in-fold.
-      out = if (sink.isDefined) outLazy.localCheckpoint(true) else outLazy
-      sink.foreach(_(out))
-      // replay-safe append: only fingerprints the index lacks (NULL fps
-      // excluded — a NULL can never match the anti-join probe anyway)
-      writeBucketedTable(
-        unseen.select(col("_fp")).filter(col("_fp").isNotNull).distinct(),
-        idx.fpTable,
-        idx.buckets,
-        Seq("_fp"),
-        org.apache.spark.sql.SaveMode.Append
-      )
-      if (sink.isDefined) graft.CacheUtil.release(unseen)
-      out
-    } catch {
-      case e: Throwable =>
-        // nothing is returned: free the probe and (with a sink) the
-        // materialized emissions
-        Seq(out, unseen).filter(_ != null).foreach(graft.CacheUtil.release)
-        throw e
-    } finally {
-      if (withFp != null) graft.CacheUtil.release(withFp)
-    }
-  }
+  ): DataFrame =
+    IndexFold.run(exactFamily(delta, textCol, idCol, idx), sink)
 
-  private def exactDedupIncrementalImpl(
+  /** The exact-dedup index family ([[IndexFold]]). No ledger tables: the
+    * fingerprint table is the ledger and membership is the probe, so
+    * every call is a first attempt. Signature: the `_fp`-tagged delta.
+    * The probe pins the delta rows whose fingerprint the index lacks
+    * ([[exactUnseen]]), emits the keepers among them and appends their
+    * non-NULL fingerprints. A replay after a committed append finds
+    * every non-NULL fingerprint stored, so it appends nothing and emits
+    * only the NULL-text keepers (NULL text carries no fingerprint and is
+    * never a duplicate) — dedup by id at the sink if those matter.
+    */
+  private[graft] def exactFamily(
       delta: DataFrame,
       textCol: String,
       idCol: String,
-      idx: ExactDedupIndex,
-      materialize: Boolean
-  ): DataFrame = {
-    val spark = delta.sparkSession
-    val fp = exactFp(textCol, idx.hash64)
-    // `unseen` feeds BOTH the keeper aggregate and the final semi-join;
-    // checkpoint it once or the anti-join against the bucketed index
-    // (the probe's expensive stage) executes twice. Callers release via
-    // CacheUtil.release on the result (Bench and the specs do).
-    val unseenLazy = delta
-      .withColumn("_fp", fp)
-      .join(spark.table(idx.fpTable), Seq("_fp"), "left_anti")
-    val unseen = if (materialize) unseenLazy.localCheckpoint(true) else unseenLazy
-    // NULL-text CONTRACT (batch-invariant, round-9 advice): a NULL text
-    // is never a duplicate of anything — not of the index (SQL anti-join
-    // semantics pass NULL fps through as unseen) and not of another
-    // NULL in the SAME delta. Grouping on `_fp` alone would collapse
-    // same-delta NULLs (groupBy treats NULLs as one group) while
-    // cross-delta NULLs both survive — a batching-dependent result. The
-    // secondary key is the row's own id exactly when `_fp` IS NULL, so
-    // each NULL-fp row forms its own keeper group and passes through
-    // untouched; for non-NULL fps the key is constant-NULL and the
-    // grouping is unchanged.
-    val keepers = unseen
-      .groupBy(col("_fp"), when(col("_fp").isNull, col(idCol)).as("_nullkey"))
-      .agg(min(col(idCol)).as(idCol))
-      .select(col(idCol))
-    unseen.drop("_fp").join(keepers, Seq(idCol), "left_semi")
-  }
+      idx: ExactDedupIndex
+  ): IndexFold.Family =
+    IndexFold.Family(delta, idCol, IndexFold.PerDoc(idCol), proven = false, () => Nil,
+      () => delta.withColumn("_fp", exactFp(textCol, idx.hash64)).localCheckpoint(true)) {
+      case (Seq(withFp), step) =>
+        // pinned: both the keeper aggregate and the emission's semi join
+        // read it, and the append writes into the table it reads
+        val unseen = step.pin(exactUnseen(withFp, idx))
+        // NULL-text CONTRACT (batch-invariant): a NULL text is never a
+        // duplicate of anything — not of the index (the anti join passes
+        // NULL fps through) and not of another NULL in the same delta.
+        // The secondary key is the row's own id exactly when `_fp` IS
+        // NULL, so each NULL-fp row is its own keeper group; for non-NULL
+        // fps it is constant-NULL and the grouping is unchanged.
+        val keepers = unseen
+          .groupBy(col("_fp"), when(col("_fp").isNull, col(idCol)).as("_nullkey"))
+          .agg(min(col(idCol)).as(idCol))
+          .select(col(idCol))
+        new IndexFold.Probe(
+          unseen.drop("_fp").join(keepers, Seq(idCol), "left_semi"),
+          () => writeBucketedTable(
+            unseen.select(col("_fp")).filter(col("_fp").isNotNull).distinct(),
+            idx.fpTable, idx.buckets, Seq("_fp"), org.apache.spark.sql.SaveMode.Append))
+    }
+
+  /** The `_fp`-tagged rows (`exactFp`) whose fingerprint the index does
+    * not hold — the exact family's membership probe, lazy: an anti join
+    * against the `_fp`-bucketed table, zero corpus-side Exchange.
+    */
+  private[graft] def exactUnseen(withFp: DataFrame, idx: ExactDedupIndex): DataFrame =
+    withFp.join(withFp.sparkSession.table(idx.fpTable), Seq("_fp"), "left_anti")
 
   // ---------------------------------------------------------- MinHash LSH
 

@@ -4,11 +4,14 @@ import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
-/** The one body of the MinHash, SimHash, vector-LSH, semDedup and passage
-  * index families. A family is one [[Family]] value; [[run]] folds it
-  * replay-safely, [[probeOnly]] runs its probe with the appends dropped
-  * and [[appendOnly]] its appends with the emission dropped. The order,
-  * the release contract and why the other fold families stay out are in
+/** The one body of the MinHash, SimHash, vector-LSH, semDedup, passage,
+  * line-catalogue and exact-dedup index families. A family is one
+  * [[Family]] value; [[run]] folds it replay-safely, [[probeOnly]] runs
+  * its probe with the appends dropped and [[appendOnly]] its appends
+  * with the emission dropped. A family may have no ledger tables (exact
+  * dedup: membership in its one table is the probe); the fold then reads
+  * no ledger and treats every call as a first attempt. The order, the
+  * release contract and why the IVF-SQ8 fold stays out are in
   * [[ReplaySafe]] ("One fold body").
   */
 private[graft] object IndexFold {
@@ -38,10 +41,11 @@ private[graft] object IndexFold {
   }
 
   /** One index family over one delta: its ledger `tables` (read by the
-    * fold alone, inside its overlapped ledger thunk), whether their keys
-    * prove a committed replay (`proven`, [[ReplaySafe.committed]]), its
-    * signature thunks, and its `probe`, which gets the signature results
-    * in order.
+    * fold alone, inside its overlapped ledger thunk; none for a family
+    * whose probe is its own membership test, which the fold runs as a
+    * first attempt every time), whether their keys prove a committed
+    * replay (`proven`, [[ReplaySafe.committed]]), its signature thunks,
+    * and its `probe`, which gets the signature results in order.
     */
   final case class Family(
       delta: DataFrame,
@@ -105,14 +109,17 @@ private[graft] object IndexFold {
     */
   def run(f: Family, sink: Option[DataFrame => Unit]): DataFrame = {
     var ledger: ReplaySafe.Ledger = null
-    var attempt: ReplaySafe.Attempt = null
+    var attempt: ReplaySafe.Attempt = ReplaySafe.FirstAttempt
     val sigs = Overlap.run[DataFrame]((() => {
       val ts = f.tables()
-      ledger = ReplaySafe.ledgerRead(f.delta, f.idCol, ts: _*)
-      attempt = ReplaySafe.classify(ledger, Option.when(f.proven)(ts.map(_.keys.map(_._2))))
-      ledger.tagged
-    }) +: f.signatures, graft.CacheUtil.release).tail
-    val pinned = mutable.ArrayBuffer(ledger.tagged) ++= sigs
+      // no ledger tables: no ledger read, every call a first attempt
+      if (ts.nonEmpty) {
+        ledger = ReplaySafe.ledgerRead(f.delta, f.idCol, ts: _*)
+        attempt = ReplaySafe.classify(ledger, Option.when(f.proven)(ts.map(_.keys.map(_._2))))
+      }
+      Option(ledger).map(_.tagged).orNull
+    }) +: f.signatures, Option(_).foreach(graft.CacheUtil.release)).tail
+    val pinned = mutable.ArrayBuffer[DataFrame]() ++= Option(ledger).map(_.tagged) ++= sigs
     var out: DataFrame = null
     try {
       val committed = attempt == ReplaySafe.Committed

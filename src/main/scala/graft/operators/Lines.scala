@@ -169,9 +169,10 @@ object Lines {
       .groupBy(col("_fp"))
       .agg(count(lit(1)).as("_ndocs"))
 
-  /** The rows the catalogue persists for one batch of `df` — THREE
-    * kinds in ONE bucketed table (schema `(_fp, _ndocs, _did, _bid)`):
-    * per-fingerprint distinct-doc COUNT rows (`_did` NULL), one LEDGER
+  /** The rows the catalogue persists for one batch of `df`, whose
+    * [[fpDocCounts]] are `counts` — THREE kinds in ONE bucketed table
+    * (schema `(_fp, _ndocs, _did, _bid)`): per-fingerprint
+    * distinct-doc COUNT rows (`_did` NULL), one LEDGER
     * row per doc (`_ndocs` NULL, `_did` = the doc id, `_fp` = a
     * bucket-spread surrogate — [[ledgerFp]]), and —
     * written separately by [[commitMarker]] — one COMMIT MARKER row per
@@ -198,10 +199,9 @@ object Lines {
     */
   private def catalogueRows(
       df: DataFrame,
-      textCol: String,
       idCol: String,
       hash64: Boolean,
-      delimiter: String,
+      counts: DataFrame,
       bid: Long
   ): DataFrame = {
     // `_did` keeps the id column's NATIVE type (the table is typed off
@@ -212,7 +212,7 @@ object Lines {
     // reference surface is type-dynamic throughout
     // (/root/reference/R/big.data.table.R:348-355 infers, never casts).
     val idType = df.schema(idCol).dataType
-    fpDocCounts(df, textCol, idCol, hash64, delimiter)
+    counts
       .select(
         col("_fp"), col("_ndocs"),
         lit(null).cast(idType).as("_did"), lit(bid).as("_bid"))
@@ -344,7 +344,7 @@ object Lines {
     // Overwrite (a torn build leaves no canonical table to corrupt —
     // the caller re-runs it)
     Dedup.writeBucketedTable(
-      catalogueRows(df, textCol, idCol, hash64, delimiter, bid = 0L)
+      catalogueRows(df, idCol, hash64, fpDocCounts(df, textCol, idCol, hash64, delimiter), bid = 0L)
         .unionByName(markerRow(df.sparkSession, hash64, df.schema(idCol).dataType, bid = 0L)),
       idx.fpTable,
       buckets,
@@ -356,7 +356,8 @@ object Lines {
 
   /** Fold a delta into an existing line catalogue (after it was cleaned
     * via [[dropDuplicatedLinesIncremental]]) so the NEXT delta cleans
-    * against corpus ∪ this delta.
+    * against corpus ∪ this delta: the line family's append without its
+    * emission ([[IndexFold.appendOnly]]).
     */
   def appendToLineIndex(
       delta: DataFrame,
@@ -365,16 +366,7 @@ object Lines {
       idx: LineIndex
   ): Unit = {
     requireLedgerIdType(delta, idCol, idx)
-    val bid = newBid()
-    Dedup.writeBucketedTable(
-      catalogueRows(delta, textCol, idCol, idx.hash64, idx.delimiter, bid),
-      idx.fpTable,
-      idx.buckets,
-      Seq("_fp"),
-      org.apache.spark.sql.SaveMode.Append
-    )
-    // rows first, marker last — the marker IS the batch's commit
-    commitMarker(idx, bid, delta.sparkSession)
+    IndexFold.appendOnly(lineFamily(delta, textCol, idCol, idx))
   }
 
   /** Clean a delta against the persisted catalogue: remove every delta
@@ -386,6 +378,8 @@ object Lines {
     * Exchange; only the delta's fingerprints shuffle, into the index's
     * partitioning. NOTE: a delta document must not already be in the
     * index (same contract as every incremental probe in the family).
+    * The line family's probe with its append dropped
+    * ([[IndexFold.probeOnly]]): the result is materialized.
     */
   def dropDuplicatedLinesIncremental(
       delta: DataFrame,
@@ -393,32 +387,14 @@ object Lines {
       idCol: String,
       idx: LineIndex,
       minDocs: Int = 2
-  ): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be ≥ 2, got $minDocs")
-    val deltaCounts = fpDocCounts(delta, textCol, idCol, idx.hash64, idx.delimiter)
-    cleanedAgainstCounts(
-      delta, textCol, idCol, idx, minDocs, deltaCounts,
-      committedBids(delta.sparkSession, idx))
-  }
+  ): DataFrame =
+    IndexFold.probeOnly(lineFamily(delta, textCol, idCol, idx, minDocs))
 
   /** Probe-then-append in ONE delta pass: clean the delta against the
     * catalogue as it stands, then fold the delta's line counts in — the
     * per-batch body of the unbounded-ingest loop (st02, and any
-    * foreachBatch caller). Semantically identical to
-    * [[dropDuplicatedLinesIncremental]] followed by
-    * [[appendToLineIndex]] (gated), but the delta's line
-    * fingerprint/doc-count pass runs ONCE: the same counts frame feeds
-    * the hot-line probe and the append.
-    *
-    * Cost note (measured at sf0.1): unlike the minhash/passage folds —
-    * whose probes checkpoint internally either way, so folding strictly
-    * saves work — this fold must ADD a checkpoint of the cleaned text
-    * to pin the probe-before-append ordering. Isolated A/B at sf0.1
-    * read both forms at 3.9-4.3 s (within the box noise floor): the
-    * saved fpDocCounts pass and the added text materialization roughly
-    * cancel at this scale. At ingest scale the fold still reads the
-    * delta text once instead of twice, which dominates when the corpus
-    * scan, not the block write, is the bottleneck.
+    * foreachBatch caller). One family, three ways: see [[ReplaySafe]]
+    * ("One fold body").
     */
   def dropDuplicatedLinesIncrementalFold(
       delta: DataFrame,
@@ -428,84 +404,49 @@ object Lines {
       minDocs: Int = 2,
       sink: Option[DataFrame => Unit] = None
   ): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be ≥ 2, got $minDocs")
     requireLedgerIdType(delta, idCol, idx)
+    IndexFold.run(lineFamily(delta, textCol, idCol, idx, minDocs), sink)
+  }
+
+  /** The line-catalogue index family ([[IndexFold]]). Signature: the
+    * delta's per-fingerprint doc counts, the one line pass that both the
+    * probe and the append read. Ledger: the ledger rows of COMMITTED
+    * batches (`_did`, one row per doc; the committed batch ids are read
+    * once per family value and reused by the probe). A torn attempt
+    * (rows landed, marker missing) is invisible, so its replay re-derives
+    * the identical full batch instead of double-counting the lines its
+    * orphan count rows share ([[catalogueRows]]). Committed proof: every
+    * delta id in a committed batch. A partial replay recounts over the
+    * docs no committed batch holds, and appends those as a new batch.
+    */
+  private[graft] def lineFamily(
+      delta: DataFrame,
+      textCol: String,
+      idCol: String,
+      idx: LineIndex,
+      minDocs: Int = 2
+  ): IndexFold.Family = {
+    require(minDocs >= 2, s"minDocs must be ≥ 2, got $minDocs")
     val spark = delta.sparkSession
-    // REPLAY SAFETY ([[graft.operators.ReplaySafe]] + the batch commit
-    // marker, [[catalogueRows]]): only docs in COMMITTED batches'
-    // ledgers are dropped up front — a torn attempt (rows landed,
-    // marker missing) is invisible, so the replay re-derives the
-    // IDENTICAL full batch instead of double-counting the lines its
-    // orphan count rows share with the "fresh" remainder. A full
-    // replay (marker landed) emits and appends nothing.
-    // the (bids → ledger) chain and the delta's line-count pass share no
-    // inputs on a FIRST attempt (fresh == delta there) — run the count
-    // pass optimistically in parallel with the ledger read ([[Overlap]],
-    // guide §2.6); a replay discards it and recomputes over `fresh`
-    // (replays re-derive everything anyway, and are the rare path)
-    var bids: Seq[Long] = Nil
-    val Seq(tagged, optimisticCounts) = Overlap.run[DataFrame](Seq(
-      () => {
-        bids = committedBids(spark, idx)
-        // one-job ledger read: committed ledger rows' seen set + delta ids
-        ReplaySafe.ledgerRead(delta, idCol, ReplaySafe.LedgerTable(
-          spark.table(idx.fpTable).filter(col("_did").isNotNull && col("_bid").isin(bids: _*)),
-          "_did")).tagged
-      },
-      () => fpDocCounts(delta, textCol, idCol, idx.hash64, idx.delimiter)
-        .localCheckpoint(true)), graft.CacheUtil.release)
-    val ledger = ReplaySafe.Ledger(tagged, 1)
-    var deltaCounts = optimisticCounts
-    var out: DataFrame = null
-    try {
-      val (rids, seen) = (ledger.rids, ledger.seen(0))
-      // first-attempt fast path (r19): no delta id in the committed
-      // ledger makes the dropSeen anti join a semantic no-op — skip it
-      val firstAttempt = ReplaySafe.noneSeen(seen)
-      val fresh =
-        if (firstAttempt) delta
-        else ReplaySafe.dropSeen(delta, idCol, seen)
-      if (!firstAttempt) {
-        graft.CacheUtil.release(optimisticCounts)
-        deltaCounts = fpDocCounts(fresh, textCol, idCol, idx.hash64, idx.delimiter)
-          .localCheckpoint(true)
-      }
-      // materializes the cleaned text BEFORE the append mutates the table
-      out = cleanedAgainstCounts(fresh, textCol, idCol, idx, minDocs, deltaCounts, bids)
-        .localCheckpoint(true)
-      sink.foreach(_(out)) // persist before the ledger append ([[graft.operators.IdempotentSink]])
-      // nothing fresh ⇒ nothing to commit (a marker-only append would
-      // grow the table once per replay for no visible rows); one
-      // take-style job over two materialized caches ([[ReplaySafe.anyUnseen]]
-      // — seen is no longer deduped, so row counts cannot be compared)
-      if (ReplaySafe.anyUnseen(rids, seen)) {
-        val bid = newBid()
-        Dedup.writeBucketedTable(
-          deltaCounts
-            .select(
-              col("_fp"), col("_ndocs"),
-              lit(null).cast(fresh.schema(idCol).dataType).as("_did"), lit(bid).as("_bid"))
-            .unionByName(fresh.select(
-              ledgerFp(col(idCol), idx.hash64).as("_fp"),
-              lit(null).cast("bigint").as("_ndocs"),
-              col(idCol).as("_did"),
-              lit(bid).as("_bid"))),
-          idx.fpTable, idx.buckets, Seq("_fp"),
-          org.apache.spark.sql.SaveMode.Append)
-        // rows first, marker last — the marker IS the batch's commit
-        commitMarker(idx, bid, spark)
-      }
-      out
-    } catch {
-      case e: Throwable =>
-        Option(out).foreach(graft.CacheUtil.release)
-        throw e
-    } finally {
-      // ONLY the internal checkpoints: the cleaned text's plan also reads
-      // the CALLER's delta blocks (lineFps and the re-admission join read
-      // the delta directly), which are the caller's to free. rids/seen are
-      // lazy views over the one ledger cache.
-      Seq(deltaCounts, ledger.tagged).foreach(graft.CacheUtil.release)
+    lazy val bids = committedBids(spark, idx)
+    def counts(df: DataFrame) = fpDocCounts(df, textCol, idCol, idx.hash64, idx.delimiter)
+    IndexFold.Family(delta, idCol, IndexFold.PerDoc(idCol), proven = true,
+      () => Seq(ReplaySafe.LedgerTable(
+        spark.table(idx.fpTable).filter(col("_did").isNotNull && col("_bid").isin(bids: _*)),
+        "_did")),
+      () => counts(delta).localCheckpoint(true)) { case (Seq(deltaCounts), step) =>
+      val fresh = step.fresh(delta, idCol)
+      val freshCounts = step.excl.fold(deltaCounts)(_ => step.pin(counts(fresh)))
+      new IndexFold.Probe(
+        cleanedAgainstCounts(fresh, textCol, idCol, idx, minDocs, freshCounts, bids),
+        () => {
+          val bid = newBid()
+          Dedup.writeBucketedTable(
+            catalogueRows(fresh, idCol, idx.hash64, freshCounts, bid),
+            idx.fpTable, idx.buckets, Seq("_fp"), org.apache.spark.sql.SaveMode.Append)
+          // rows first, marker last — the marker IS the batch's commit
+          commitMarker(idx, bid, spark)
+        })
     }
   }
 

@@ -110,19 +110,21 @@ import org.apache.spark.sql.functions._
   * canonical callback. A fold called without a sink keeps the
   * document-it-yourself contract above.
   *
-  * One fold body ([[IndexFold]]): the MinHash, SimHash, vector-LSH,
-  * semDedup and passage index families are each one
-  * [[IndexFold.Family]] value — ledger tables, signature thunks, and a
-  * probe whose emission is lazy and whose appends fold the delta in. It
-  * runs three ways:
-  *  - the replay-safe fold ([[IndexFold.run]], every `*IncrementalFold`);
+  * One fold body ([[IndexFold]]): seven index families — MinHash,
+  * SimHash, vector-LSH, semDedup, passages, the line catalogue and exact
+  * dedup — are each one [[IndexFold.Family]] value: ledger tables,
+  * signature thunks, and a probe whose emission is lazy and whose
+  * appends fold the delta in. It runs three ways:
+  *  - the replay-safe fold ([[IndexFold.run]], every `*IncrementalFold`
+  *    but IVF-SQ8's);
   *  - probe-only ([[IndexFold.probeOnly]], the `*Incremental` probes):
   *    the emission, checkpointed, with the appends dropped;
   *  - append-only ([[IndexFold.appendOnly]]: `appendToMinHashIndex`,
-  *    `appendToSimHashIndex`, `appendToLshIndex`): the appends, with the
-  *    emission never built, so nothing only the emission reads is
-  *    pinned. Passages appends through its index build's own write, and
-  *    semDedup through [[Similarity.ivfAppend]].
+  *    `appendToSimHashIndex`, `appendToLshIndex`, `appendToLineIndex`):
+  *    the appends, with the emission never built, so nothing only the
+  *    emission reads is pinned. Passages appends through its index
+  *    build's own write, semDedup through [[Similarity.ivfAppend]], and
+  *    exact dedup through `appendToExactDedupIndex`, one plain write.
   *
   * Probe-only and append-only read no ledger: their step is a first
   * attempt's (no `excl`, unfiltered appends) except for one fact. The
@@ -152,12 +154,16 @@ import org.apache.spark.sql.functions._
   * signature thunks, the lazy probe with its appends, and its emission
   * shape. Passages declines the committed proof: its row keys are
   * fingerprints, not `[0, n)`, so every replay takes the slow path,
-  * which heals a tear inside one doc. Three folds stay outside, each with
-  * its own release path: the exact fold has no ledger read (its
-  * fingerprint table is the ledger, and membership is the probe), the
-  * line catalogue gates on per-batch commit markers rather than per-id
-  * rows, and the IVF-SQ8 fold's ledger read depends on the centroids the
-  * delta touches, so it cannot overlap the signature compute.
+  * which heals a tear inside one doc. The line catalogue's ledger is
+  * the per-doc rows of its committed batches (a torn batch has no
+  * commit marker, so it stays invisible and its replay re-derives it
+  * whole), one row per id, so its committed proof is every delta id
+  * present. The exact family has no ledger tables: its fingerprint
+  * table is the ledger and membership is the probe, so the fold reads
+  * no ledger and every call is a first attempt. One fold stays outside,
+  * with its own release path: the IVF-SQ8 fold's ledger read depends on
+  * the centroids the delta touches, so it cannot overlap the signature
+  * compute.
   */
 private[graft] object ReplaySafe {
 
@@ -167,14 +173,6 @@ private[graft] object ReplaySafe {
     */
   def excludeIds(corpus: DataFrame, idColName: String, ids: DataFrame): DataFrame =
     corpus.join(broadcast(ids), corpus(idColName) === ids("_rid"), "left_anti")
-
-  /** True iff some delta id is NOT in `seen` — "does this batch carry
-    * anything new" in ONE take(1)-style job over two materialized
-    * frames (replaces the two-count comparison that broke under the
-    * ledger's duplicate seen rows, and is cheaper than either count).
-    */
-  def anyUnseen(ids: DataFrame, seen: DataFrame): Boolean =
-    !ids.join(broadcast(seen), Seq("_rid"), "left_anti").isEmpty
 
   /** Views over one [[ledgerRead]] checkpoint `tagged` (`_rid`, `_t`,
     * `_k`): `_t` is the index of the ledger table that already holds the

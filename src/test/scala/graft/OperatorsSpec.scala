@@ -1870,8 +1870,11 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val idx = Dedup.writeExactDedupIndex(corpus, "text", "exinc_plan", buckets = 8)
-      val out = Dedup.exactDedupIncrementalLazy(delta, "text", "doc_id", idx)
-      val plan = out.queryExecution.executedPlan.toString
+      // the public probe pins its membership probe (hiding the index
+      // scan): gate the plan of the anti join the family pins
+      val plan = Dedup.exactUnseen(delta.withColumn("_fp", Dedup.exactFp("text", idx.hash64)), idx)
+        .queryExecution.executedPlan.toString
+      val out = Dedup.exactDedupIncremental(delta, "text", "doc_id", idx)
       assert(plan.contains("Bucketed: true"),
         s"index scan did not use the bucket layout:\n${plan.take(3000)}")
       assert(!plan.contains("Bucketed: false"),
@@ -1951,9 +1954,9 @@ class OperatorsSpec extends AnyFunSuite {
       assert(spark.table(idx.fpTable).count() < rowsBefore, "count rows did not merge")
       assert(nFiles < filesBefore, s"file count did not shrink ($filesBefore -> $nFiles)")
       // the swapped-in table must still serve the zero-Exchange probe
-      val plan = Lines.dropDuplicatedLinesIncremental(
-        Seq(Doc(21, "common line\nx")).toDS.toDF, "text", "doc_id", idx)
-        .queryExecution.executedPlan.toString
+      val plan = IndexFold.withProbePlan(Lines.lineFamily(
+        Seq(Doc(21, "common line\nx")).toDS.toDF, "text", "doc_id", idx))(
+        _.queryExecution.executedPlan.toString)
       assert(plan.contains("Bucketed: true") && !plan.contains("Bucketed: false"),
         s"compacted table lost its bucket layout:\n${plan.take(2000)}")
     } finally spark.sql("DROP TABLE IF EXISTS cmp_line_linefps")
@@ -2168,15 +2171,18 @@ class OperatorsSpec extends AnyFunSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val idx = Lines.writeLineIndex(corpus, "text", "doc_id", "linc_plan", buckets = 8)
-      val out = Lines.dropDuplicatedLinesIncremental(delta, "text", "doc_id", idx)
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"catalogue scan did not use the bucket layout:\n${plan.take(3000)}")
-      assert(!plan.contains("Bucketed: false"),
-        s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
-      val cleaned = out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(cleaned.nonEmpty && cleaned.values.forall(_ === ""),
-        "every echoed doc must be fully cleaned — plan gate would be vacuous otherwise")
+      // the public probe is materialized — gate the family's lazy
+      // emission plan
+      IndexFold.withProbePlan(Lines.lineFamily(delta, "text", "doc_id", idx)) { out =>
+        val plan = out.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"),
+          s"catalogue scan did not use the bucket layout:\n${plan.take(3000)}")
+        assert(!plan.contains("Bucketed: false"),
+          s"planner disabled the bucketed read (corpus side would shuffle):\n${plan.take(3000)}")
+        val cleaned = out.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+        assert(cleaned.nonEmpty && cleaned.values.forall(_ === ""),
+          "every echoed doc must be fully cleaned — plan gate would be vacuous otherwise")
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
       spark.sql("DROP TABLE IF EXISTS linc_plan_linefps")
@@ -2524,6 +2530,50 @@ class OperatorsSpec extends AnyFunSuite {
       Seq(mh.bandTable, mh.shingleTable, sh.chunkTable, lsh.bandTable, lsh.vecTable, ps.fpTable)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
       Seq(delta, vDelta, ivf.assigned).foreach(graft.CacheUtil.release)
+    }
+  }
+
+  test("exact and line-catalogue fold, probe-only and append-only calls run a bounded number of Spark jobs") {
+    // The fixture of the job gate above (sf0.001 documents split %3);
+    // each fold is a first attempt on an index of its own. Each bound
+    // is the measured count.
+    val docs = Tables.documents(spark, SparkTestSession.sfDir).select($"doc_id", $"text")
+    val corpus = docs.filter($"doc_id" % 3 =!= 0)
+    val delta = docs.filter($"doc_id" % 3 === 0).localCheckpoint(true)
+    def emitJobs(call: => org.apache.spark.sql.DataFrame): Int = {
+      val (out, n) = JobCount.during(spark)(call)
+      assert(out.count() > 0, "call emitted nothing — the job count would gate an empty plan")
+      graft.CacheUtil.release(out)
+      n
+    }
+    val measured = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val Seq(exFold, exProbe) = Seq("jg_exf", "jg_exp").map(
+      Dedup.writeExactDedupIndex(corpus, "text", _, buckets = 4))
+    val Seq(lnFold, lnProbe) = Seq("jg_lnf", "jg_lnp").map(
+      Lines.writeLineIndex(corpus, "text", "doc_id", _, buckets = 4))
+    try {
+      measured("exact fold") = emitJobs(
+        Dedup.exactDedupIncrementalFold(delta, "text", "doc_id", exFold))
+      measured("exact probe") = emitJobs(Dedup.exactDedupIncremental(delta, "text", "doc_id", exProbe))
+      measured("lines fold") = emitJobs(
+        Lines.dropDuplicatedLinesIncrementalFold(delta, "text", "doc_id", lnFold))
+      measured("lines probe") = emitJobs(
+        Lines.dropDuplicatedLinesIncremental(delta, "text", "doc_id", lnProbe))
+      measured("lines append") =
+        JobCount.during(spark)(Lines.appendToLineIndex(delta, "text", "doc_id", lnProbe))._2
+      info(measured.map { case (k, v) => s"$k=$v" }.mkString("jobs: ", ", ", ""))
+      // the folds and probes return checkpoints, so each count includes
+      // the jobs that materialize the result
+      val bounds = Map(
+        "exact fold" -> 8, "exact probe" -> 6,
+        "lines fold" -> 16, "lines probe" -> 9, "lines append" -> 7)
+      measured.foreach { case (k, n) =>
+        assert(n <= bounds(k), s"$k ran $n Spark jobs, bound ${bounds(k)}: $measured")
+      }
+    } finally {
+      Seq(exFold, exProbe).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.fpTable}`"))
+      Seq(lnFold, lnProbe).foreach(i => spark.sql(s"DROP TABLE IF EXISTS `${i.fpTable}`"))
+      graft.CacheUtil.release(delta)
     }
   }
 

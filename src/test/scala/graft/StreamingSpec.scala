@@ -2295,6 +2295,25 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("committed replay short-circuits for the line catalogue: empty output, one sink call, no index change, a job bound below the slow path's") {
+    import graft.operators.Lines
+    // The bound is this fixture's measured replay count, below the slow
+    // path's (a probe, a recount and an append on every replay).
+    val corpus = Seq((1L, "shared banner line\nalpha"), (2L, "shared banner line\nbeta"))
+      .toDF("doc_id", "text")
+    val delta = Seq((10L, "shared banner line\ngamma"), (11L, "fresh words\nonly here"))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    val idx = Lines.writeLineIndex(corpus, "text", "doc_id", "cr_lines", buckets = 4)
+    try {
+      val jobs = committedReplayGate("lines", () => Seq(spark.table(idx.fpTable).count()), 8)(
+        Lines.dropDuplicatedLinesIncrementalFold(delta, "text", "doc_id", idx, 2, _))
+      info(s"committed replay: $jobs jobs")
+    } finally {
+      graft.CacheUtil.release(delta)
+      spark.sql(s"DROP TABLE IF EXISTS `${idx.fpTable}`")
+    }
+  }
+
   test("replay under an ACTIVE cap keeps the slow path and converges (a doc capped out of its bands / keys)") {
     import graft.operators.{Dedup, ReplaySafe}
     // maxBucket = 2 and two identical corpus docs fill every bucket the
